@@ -1,0 +1,168 @@
+"""The one commit protocol: every writer in the package that replaces
+data in place publishes through this module.
+
+`publish(spark, path, write, partitions=None, verify=None)`:
+
+  1. stage    `write(<path>.__stage_<token>)`, then `verify(stage)` if
+              given. A failure drops the stage and leaves `path` alone.
+  2. record   write `<path>.__commit`, listing the items to replace:
+              the whole path, or the named partition directories (a
+              named partition the stage does not hold is deleted —
+              it merged to empty). Writing the record is the commit
+              point.
+  3. publish  per item, move the live item to `<path>.__aside_<token>`,
+              then move the staged item in.
+  4. clean    drop the aside, then the stage, then the record.
+
+`recover(spark, path)` finishes an interrupted publish: with a record
+it rolls forward (step 3 skips items already moved), without one it
+rolls back by dropping stray stages. `publish` recovers first; a
+writer that reads `path` before publishing recovers before it reads.
+
+Invariant: after `recover`, a path is exactly its pre-publish or its
+post-publish state. It is never missing and never a mix.
+
+Stage, aside and record are siblings of `path`, never inside it: a
+`key=value` directory inside a partitioned root would be read as a
+partition column. Every rename targets an absent path, because a
+Hadoop rename onto an existing directory nests the source inside it.
+All file-system work goes through the Hadoop FileSystem API, so the
+protocol holds on any Hadoop filesystem whose renames are atomic
+(local, HDFS). One writer per path is assumed (streaming/ledger.py).
+"""
+
+from __future__ import annotations
+
+import functools
+import uuid
+
+from pyspark.sql import SparkSession
+
+_RECORD = ".__commit"
+_END = "end"  # last line of a complete record; a torn one lacks it
+
+
+@functools.lru_cache(maxsize=None)
+def _path_class(jvm):
+    # cached: resolving a class through the py4j view costs ~1.7 ms,
+    # more than the file-system call it serves
+    return jvm.org.apache.hadoop.fs.Path
+
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem that owns `path`, and `path` as a Path."""
+    hpath = _path_class(spark._jvm)(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _mutate(fs, op: str, *args):
+    """Every file-system change this module makes passes through here:
+    the one seam crash tests wrap to stop a commit at any step. `op` is
+    a FileSystem method name, or "write" (args: Path, text) to create
+    a small file."""
+    if op != "write":
+        return getattr(fs, op)(*args)
+    out = fs.create(args[0], True)
+    try:
+        out.write(bytearray(args[1].encode()))
+    finally:
+        out.close()
+
+
+def _under(root: str, name: str) -> str:
+    return root if name == "." else f"{root}/{name}"
+
+
+def publish(spark: SparkSession, path: str, write, partitions=None,
+            verify=None):
+    """Replace `path`, or only its `partitions` directories, with what
+    `write(stage)` writes to a staging path; returns write's result.
+    `verify(stage)` may raise to abort before the commit point."""
+    path = path.rstrip("/")
+    recover(spark, path)
+    fs, _ = _fs(spark, path)
+    Path = _path_class(spark._jvm)
+    token = uuid.uuid4().hex[:8]
+    stage = f"{path}.__stage_{token}"
+    try:
+        out = write(stage)
+        if verify is not None:
+            verify(stage)
+    except Exception:
+        _mutate(fs, "delete", Path(stage), True)
+        raise
+    items = [("+" if fs.exists(Path(_under(stage, n))) else "-") + n
+             for n in (["."] if partitions is None else partitions)]
+    _mutate(fs, "write", Path(path + _RECORD),
+            "\n".join([token, *items, _END]))
+    _roll_forward(fs, Path, path, token, items)
+    return out
+
+
+def _roll_forward(fs, Path, path: str, token: str,
+                  items: list[str]) -> None:
+    stage, aside = f"{path}.__stage_{token}", f"{path}.__aside_{token}"
+    if items not in (["+."], ["-."]):  # partitions: parents must exist
+        _mutate(fs, "mkdirs", Path(path))
+        _mutate(fs, "mkdirs", Path(aside))
+    for item in items:
+        add, name = item[0] == "+", item[1:]
+        live, new, old = (Path(_under(r, name)) for r in (path, stage, aside))
+        if add and not fs.exists(new):
+            continue  # moved in before the crash
+        if fs.exists(live):
+            _mutate(fs, "rename", live, old)
+        if add:
+            _mutate(fs, "rename", new, live)
+    _mutate(fs, "delete", Path(aside), True)
+    _mutate(fs, "delete", Path(stage), True)
+    _mutate(fs, "delete", Path(path + _RECORD), False)
+
+
+def recover(spark: SparkSession, path: str) -> None:
+    """Bring `path` to exactly its pre- or post-publish state after an
+    interrupted `publish` (a no-op when none was interrupted)."""
+    path = path.rstrip("/")
+    fs, record = _fs(spark, path + _RECORD)
+    Path = _path_class(spark._jvm)
+    lines = []
+    if fs.exists(record):
+        stream = fs.open(record)
+        try:
+            lines = bytes(stream.readAllBytes()).decode().split("\n")
+        finally:
+            stream.close()
+    if lines[-1:] == [_END]:
+        _roll_forward(fs, Path, path, lines[0], lines[1:-1])
+        return
+    for status in fs.globStatus(Path(path + ".__stage_*")) or []:
+        _mutate(fs, "delete", status.getPath(), True)
+    if lines:  # torn record: the crash came before the commit point
+        _mutate(fs, "delete", record, False)
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Replace the small file at `path` with `text` by `publish`; read
+    it after `recover(spark, path)`."""
+    fs, _ = _fs(spark, path)
+    Path = _path_class(spark._jvm)
+    publish(spark, path, lambda stage: _mutate(fs, "write", Path(stage), text))
+
+
+def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,
+                         move: bool = True) -> None:
+    """Move the data files of a finished temp write into the live target
+    directory, then drop the temp dir: the append path, which adds files
+    and replaces none. Part filenames embed the writing task's UUID, so
+    renames cannot collide with existing files. Uses the Hadoop FS API
+    (rename is a metadata op on HDFS/local; on S3A the committer would
+    own this) — nothing passes through the driver."""
+    Path = _path_class(spark._jvm)
+    fs, tmp_p = _fs(spark, tmp)
+    if move:
+        dst_p = Path(dst)
+        for status in fs.listStatus(tmp_p):
+            name = status.getPath().getName()
+            if name.endswith(".parquet"):
+                _mutate(fs, "rename", status.getPath(), Path(dst_p, name))
+    _mutate(fs, "delete", tmp_p, True)

@@ -12,10 +12,9 @@ the plain-parquet equivalent:
     how many output files the data actually needs,
   - for partitioned layouts, repartition BY the partition columns so
     each partition directory lands in one task -> one file,
-  - write to a temp dir, verify row count, then swap via
-    RENAME-ASIDE (live -> aside, tmp -> live, drop aside) — a failed
-    compaction never corrupts the live table, and a crash inside the
-    swap heals at the next compaction (_sweep_compact_debris).
+  - publish the rewrite with a row-count verify
+    (hummingbird_spark/commit.py owns the crash windows): a failed
+    compaction never touches the live table.
 
 The reference has no analogue (MongoDB storage compacts itself); this
 belongs to the Spark-first scale story.
@@ -25,14 +24,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+from hummingbird_spark.commit import _fs, publish, recover
 
 
 def table_bytes(spark: SparkSession, path: str) -> int:
@@ -43,31 +37,6 @@ def table_bytes(spark: SparkSession, path: str) -> int:
 
 def parquet_file_count(spark: SparkSession, path: str) -> int:
     return len(spark.read.parquet(path).inputFiles())
-
-
-def _read_count(spark: SparkSession, path: str) -> int:
-    """Seam for the swap-verification count (monkeypatched in tests to
-    exercise the failure path without corrupting real files)."""
-    return spark.read.parquet(path).count()
-
-
-def _sweep_compact_debris(spark: SparkSession, path: str) -> None:
-    """Heal a crashed compaction swap. Windows: tmp written but never
-    promoted (drop it); live renamed aside but tmp not renamed in
-    (restore the aside); tmp renamed in, aside not yet removed (drop
-    the aside). Aside/tmp are SIBLING paths — never inside a
-    partitioned root, where a key=value dir name would be read as a
-    partition column."""
-    fs, live = _fs(spark, path)
-    _, aside = _fs(spark, path.rstrip("/") + "__compact_aside")
-    _, tmp = _fs(spark, path.rstrip("/") + "__compact_tmp")
-    if fs.exists(aside):
-        if fs.exists(live):
-            fs.delete(aside, True)
-        else:
-            fs.rename(aside, live)
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
 
 
 def compact_table(spark: SparkSession, path: str,
@@ -87,7 +56,7 @@ def compact_table(spark: SparkSession, path: str,
 
     Returns a report dict (files/bytes before and after).
     """
-    _sweep_compact_debris(spark, path)
+    recover(spark, path)
     before_files = parquet_file_count(spark, path)
     before_bytes = table_bytes(spark, path)
     reader = spark.read
@@ -95,35 +64,24 @@ def compact_table(spark: SparkSession, path: str,
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(path)
     n_out = max(1, math.ceil(before_bytes / target_file_bytes))
-
-    tmp = path.rstrip("/") + "__compact_tmp"
     writer = (
         df.repartition(*([n_out] + list(partition_cols)))
         if partition_cols else df.repartition(n_out)
-    ).write.mode("overwrite")
+    ).write
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-
-    # verify before swapping — a bad rewrite must never replace the live
-    # table (compare counts, the cheapest full-coverage invariant)
     n_src = df.count()
-    n_tmp = _read_count(spark, tmp)
-    fs, live = _fs(spark, path)
-    _, tmp_p = _fs(spark, tmp)
-    if n_tmp != n_src:
-        fs.delete(tmp_p, True)
-        raise RuntimeError(
-            f"compaction row-count mismatch ({n_tmp} != {n_src}); "
-            f"live table untouched"
-        )
-    # rename-aside swap (never delete-then-rename: a crash between
-    # the two would lose the live table) — every window heals via
-    # _sweep_compact_debris on the next compaction
-    _, aside = _fs(spark, path.rstrip("/") + "__compact_aside")
-    fs.rename(live, aside)
-    fs.rename(tmp_p, live)
-    fs.delete(aside, True)
+
+    def verify(stage: str) -> None:
+        # a bad rewrite must never replace the live table (compare
+        # counts, the cheapest full-coverage invariant)
+        n_stage = spark.read.parquet(stage).count()
+        if n_stage != n_src:
+            raise RuntimeError(
+                f"compaction row-count mismatch ({n_stage} != {n_src}); "
+                f"live table untouched")
+
+    publish(spark, path, writer.parquet, verify=verify)
     return {
         "path": path,
         "files_before": before_files,

@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import _adopt_parquet_files
 from hummingbird_spark.config import Include, MigrationConfig
 from hummingbird_spark.filters import mongo_filter_to_column
 from hummingbird_spark.functions.masks import mask_dataframe
@@ -97,27 +98,6 @@ def list_source_namespaces(source: str) -> list[str]:
         for p in glob.glob(os.path.join(source, f"*{ext}")):
             names.add(os.path.basename(p)[: -len(ext)])
     return sorted(names)
-
-
-def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,
-                         move: bool = True) -> None:
-    """Move the data files of a finished temp write into the live target
-    directory, then drop the temp dir. Part filenames embed the writing
-    task's UUID, so renames cannot collide with existing files. Uses the
-    Hadoop FS API (rename is a metadata op on HDFS/local; on S3A the
-    committer would own this) — nothing passes through the driver."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = tmp_p.getFileSystem(conf)
-    if move:
-        dst_p = jvm.org.apache.hadoop.fs.Path(dst)
-        for status in fs.listStatus(tmp_p):
-            name = status.getPath().getName()
-            if name.endswith(".parquet"):
-                fs.rename(status.getPath(),
-                          jvm.org.apache.hadoop.fs.Path(dst_p, name))
-    fs.delete(tmp_p, True)
 
 
 def transform_for_include(df: DataFrame, include: Include) -> DataFrame:
@@ -211,8 +191,8 @@ def copy_table(
         # delta to a sibling temp dir executor-side (the job finishes —
         # and its reads of dst complete — before any file moves), then
         # move the data files in: the plain-parquet equivalent of MERGE
-        # whenNotMatchedInsert, same temp-swap discipline as
-        # operators/compact.py.
+        # whenNotMatchedInsert (the append path of
+        # hummingbird_spark/commit.py).
         tmp = dst_path.rstrip("/") + "__append_tmp"
         obs = Observation()
         _with_bloom(

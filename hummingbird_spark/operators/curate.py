@@ -29,14 +29,12 @@ masks/filters, generalized to the LLM-data surface.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import publish
 from hummingbird_spark.functions.text import (
     fingerprint,
     hashed_classifier_score,
@@ -194,14 +192,11 @@ def curate_corpus(
 
     from hummingbird_spark.sources.tables import read_source, write_sink
 
-    tmp = f"{out_path}.__tmp_{uuid.uuid4().hex[:8]}"
     # hive-partitioned layout (e.g. lang/source) so downstream scans
     # of one slice prune directories, not row groups; fmt=jsonl emits
     # the sharded-JSONL layout LLM training loaders consume
-    write_sink(out, tmp, fmt=fmt, partition_cols=partition_cols)
-    if os.path.exists(out_path):
-        shutil.rmtree(out_path)
-    os.rename(tmp, out_path)
+    publish(spark, out_path, lambda stage: write_sink(
+        out, stage, fmt=fmt, partition_cols=partition_cols))
 
     # accounting: filter reasons from the scored frame; the dedup drop
     # is the passing/kept difference (exact, no extra join)

@@ -5,8 +5,8 @@ Mongo capped collections drop the OLDEST documents once the collection
 exceeds its max document count or byte size. The reference passes these
 options through at create time; on parquet nothing enforces them — this
 module is the enforcement pass, run after appends (the batch analogue
-of Mongo's on-insert eviction), with the same temp-swap write
-discipline as operators/compact.py.
+of Mongo's on-insert eviction), published through
+hummingbird_spark/commit.py like operators/compact.py.
 
 Scale shape — global "keep newest N" WITHOUT a single-partition window
 or a driver-side TakeOrdered:
@@ -22,13 +22,15 @@ or a driver-side TakeOrdered:
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hummingbird_spark.operators.compact import _fs, table_bytes
+from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.operators.compact import table_bytes
 from hummingbird_spark.sources.ddl import read_table_properties
 
 
@@ -99,6 +101,7 @@ def enforce_retention(
     which is how storage engines reason about it too).
 
     Returns a report dict; a no-op when already under the caps."""
+    recover(spark, path)
     df = spark.read.parquet(path)
     total = df.count()
     bytes_now = table_bytes(spark, path)
@@ -114,26 +117,25 @@ def enforce_retention(
         return {"path": path, "rows_before": total, "rows_after": total,
                 "dropped": 0, "enforced": False}
 
-    props = read_table_properties(path)  # survives the swap
+    props = read_table_properties(path)
     kept = keep_newest(df, order_col, cap)
-    tmp = path.rstrip("/") + "__retention_tmp"
-    kept.write.mode("overwrite").parquet(tmp)
-    n_tmp = spark.read.parquet(tmp).count()
-    fs, live = _fs(spark, path)
-    _, tmp_p = _fs(spark, tmp)
-    if n_tmp != cap:
-        fs.delete(tmp_p, True)
-        raise RuntimeError(
-            f"retention rewrite kept {n_tmp} rows, expected {cap}; "
-            f"live table untouched"
-        )
-    fs.delete(live, True)
-    fs.rename(tmp_p, live)
-    if props:
-        import json
 
-        with open(os.path.join(path, "_table_properties.json"), "w") as f:
-            json.dump(props, f, indent=2, sort_keys=True)
+    def write(stage: str) -> None:
+        kept.write.parquet(stage)
+        if props:  # publishes together with the data
+            with open(os.path.join(stage, "_table_properties.json"),
+                      "w") as f:
+                json.dump(props, f, indent=2, sort_keys=True)
+
+    def verify(stage: str) -> None:
+        n_stage = spark.read.parquet(stage).count()
+        if n_stage != cap:
+            raise RuntimeError(
+                f"retention rewrite kept {n_stage} rows, expected {cap}; "
+                f"live table untouched"
+            )
+
+    publish(spark, path, write, verify=verify)
     return {"path": path, "rows_before": total, "rows_after": cap,
             "dropped": total - cap, "enforced": True}
 
@@ -145,8 +147,6 @@ def enforce_capped_from_properties(
     in the sidecar written by sources.ddl.create_table) and enforce
     them — the maintenance-job entry point for tables created from a
     capped source collection."""
-    import json
-
     props = read_table_properties(path)
     if not json.loads(props.get("mongo.option.capped", "false")):
         return {"path": path, "enforced": False, "dropped": 0,
@@ -162,8 +162,6 @@ def enforce_capped_from_properties(
 
 def retention_report(spark: SparkSession, path: str) -> dict:
     """Current size vs caps (no enforcement) — the monitoring side."""
-    import json
-
     props = read_table_properties(path)
     df = spark.read.parquet(path)
     return {

@@ -77,13 +77,12 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import publish, recover
 from hummingbird_spark.filters import mongo_filter_to_column
 
 _SEED = 3629  # the reference's web port — fixed seed for $sample
@@ -1595,8 +1594,9 @@ def run_pipeline(
     """Run a pipeline that may end in a terminal write stage — `$out`
     (replace a collection with the results) or `$merge` (upsert into
     one). Non-terminal stages translate via mongo_pipeline_to_df; the
-    write lands `{data_dir}/{coll}.parquet` with a temp-dir + rename
-    swap so a pipeline may safely read the table it replaces. Returns
+    write lands `{data_dir}/{coll}.parquet` through commit.publish
+    (stage, then swap) so a pipeline may safely read the table it
+    replaces. Returns
     the written (or final) frame.
 
     `$merge` options follow Mongo's: `on` key or key list (default
@@ -1653,18 +1653,15 @@ def run_pipeline(
             raise ValueError(f"unsupported whenNotMatched: {when_not!r}")
         out = out.dropDuplicates(keys)
         let_spec = (spec.get("let") if isinstance(spec, dict) else None)
-        result = _merge_into(spark, out,
-                             os.path.join(data_dir, f"{coll}.parquet"),
-                             keys, when_matched, when_not, let_spec)
+        target = os.path.join(data_dir, f"{coll}.parquet")
+        recover(spark, target)  # _merge_into reads the live target
+        result = _merge_into(spark, out, target, keys, when_matched,
+                             when_not, let_spec)
 
     if dry_run:
         return result
     path = os.path.join(data_dir, f"{coll}.parquet")
-    tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
-    result.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    publish(spark, path, result.write.parquet)
     return spark.read.parquet(path)
 
 

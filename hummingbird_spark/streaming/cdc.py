@@ -39,8 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from dataclasses import dataclass
 
@@ -50,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from hummingbird_spark.commit import _fs, publish, recover
 from hummingbird_spark.streaming.oplog import (
     namespace_match_column,
     skip_oplog,
@@ -334,70 +333,6 @@ def _retain_target_columns(
     return T.StructType(list(schema.fields) + extra) if extra else schema
 
 
-def _recover_swap(target_path: str) -> None:
-    """Crash-window recovery for the temp-write -> swap protocol (the
-    reference's resume guarantee, workspace.go:276-309 + resume.go:
-    13-82, transplanted to the parquet sink). Both apply variants
-    write the merged result to `<target>.__tmp_*` FIRST, then swap via
-    rename — so a kill at any instant leaves one of:
-
-      - target intact (crash before/during tmp write): nothing to do;
-        a partial tmp (no _SUCCESS) is garbage — remove it.
-      - target missing, complete tmp present (flat swap: crash between
-        moving target aside and renaming tmp in): ROLL FORWARD — the
-        tmp IS the post-batch state; checkpoint replay of the batch is
-        then an idempotent no-op (per-key fold replay, ST7).
-      - target missing, only `<target>.__old_*` present (flat swap
-        variant of the same window): ROLL BACK to the pre-batch state;
-        checkpoint replay re-applies the batch.
-      - bucketed: some `__bucket=N` dirs moved to the trash dir but
-        not yet replaced (crash between the two per-bucket renames):
-        restore each missing bucket from tmp (roll forward) or trash
-        (roll back) — see apply_cdc_batch_bucketed's swap loop.
-
-    Every path converges to the clean-run state after the streaming
-    engine replays the interrupted batch, because re-applying reduced
-    write models is idempotent (replace/delete/set/unset; patches on
-    absent keys are no-ops). Called at the top of both apply variants,
-    so recovery is part of normal restart, not an operator action."""
-    import glob
-
-    tmps = sorted(glob.glob(f"{target_path}.__tmp_*"))
-    olds = sorted(glob.glob(f"{target_path}.__old_*"))
-    complete = os.path.exists(os.path.join(target_path, "_SUCCESS"))
-
-    if not complete:
-        # flat-swap windows: roll forward to a COMPLETE tmp, else back
-        for t in tmps:
-            if os.path.exists(os.path.join(t, "_SUCCESS")):
-                if os.path.isdir(target_path):
-                    shutil.rmtree(target_path)
-                os.rename(t, target_path)
-                complete = True
-                break
-        if not complete:
-            for o in olds:
-                if os.path.exists(os.path.join(o, "_SUCCESS")):
-                    if os.path.isdir(target_path):
-                        shutil.rmtree(target_path)
-                    os.rename(o, target_path)
-                    break
-    else:
-        # bucketed mid-swap: restore any bucket that was moved aside
-        # (or already rewritten in tmp) but is missing from the target
-        for src_root in tmps + olds:
-            if not os.path.isdir(src_root):
-                continue
-            for entry in os.listdir(src_root):
-                if not entry.startswith("__bucket="):
-                    continue
-                dst = os.path.join(target_path, entry)
-                if not os.path.isdir(dst):
-                    os.rename(os.path.join(src_root, entry), dst)
-    for p in tmps + olds:
-        shutil.rmtree(p, ignore_errors=True)
-
-
 def apply_cdc_batch(
     spark: SparkSession,
     reduced: DataFrame,
@@ -421,7 +356,9 @@ def apply_cdc_batch(
     already carries are always retained, whatever this batch mentions
     (see _retain_target_columns).
     """
-    _recover_swap(target_path)
+    # a publish a crash interrupted lands whole or not at all before
+    # the read; the replayed batch then re-applies idempotently (ST7)
+    recover(spark, target_path)
     target = None
     if os.path.exists(os.path.join(target_path, "_SUCCESS")):
         target = spark.read.parquet(target_path)
@@ -444,22 +381,11 @@ def apply_cdc_batch(
     obs = Observation()
     result = _merge_survivors(target, m, key, schema, observation=obs)
 
-    tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    result.write.mode("overwrite").parquet(tmp)
-    stats = _stats_or_recompute(obs, m, target, key)  # pre-swap
-    # swap by rename-aside, never rmtree-then-rename: the target must
-    # stay recoverable at every instant (a kill between a destructive
-    # rmtree and the rename would orphan the whole table; here every
-    # window leaves either target, tmp, or old complete on disk —
-    # _recover_swap rolls forward/back on the next apply)
-    if os.path.exists(target_path):
-        old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(tmp, target_path)
-    return stats
+    def write(stage: str) -> ApplyStats:
+        result.write.parquet(stage)
+        return _stats_or_recompute(obs, m, target, key)  # pre-publish
+
+    return publish(spark, target_path, write)
 
 
 @dataclass(frozen=True)
@@ -633,7 +559,7 @@ def apply_cdc_batch_bucketed(
     or not this batch mentions them (see _retain_target_columns); the
     evolve widening runs AFTER retention so a field's established
     target type wins over this batch's re-inference."""
-    _recover_swap(target_path)
+    recover(spark, target_path)
     m = (
         reduced.withColumnRenamed("key", "__key")
         .withColumn("__bucket", _bucket_col(F.col("__key"), num_buckets))
@@ -655,8 +581,9 @@ def apply_cdc_batch_bucketed(
             # co-locate each bucket into one task: one file per bucket
             # dir instead of one per (upstream task x bucket) — tiny
             # files would otherwise compound every batch
-            result.repartition(num_buckets, "__bucket").write \
-                .mode("overwrite").partitionBy("__bucket").parquet(target_path)
+            publish(spark, target_path,
+                    result.repartition(num_buckets, "__bucket").write
+                    .partitionBy("__bucket").parquet)
             return _stats_or_recompute(
                 obs, m, _empty_target(spark, schema), key)
 
@@ -680,33 +607,19 @@ def apply_cdc_batch_bucketed(
         result = _merge_survivors(target, m, key, schema,
                                   observation=obs) \
             .withColumn("__bucket", _bucket_col(F.col(key), num_buckets))
-        # materialize to a temp dir (the plan READS the dirs we're about
-        # to replace), then swap exactly the touched partitions — incl.
-        # ones merging to empty, which partitionOverwriteMode=dynamic
-        # would leave stale (it only overwrites partitions present in
-        # the written data).
-        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-        # one write task per touched bucket (see the seed-write comment)
-        result.repartition(max(len(touched), 1), "__bucket").write \
-            .mode("overwrite").partitionBy("__bucket").parquet(tmp)
-        stats = _stats_or_recompute(obs, m, target, key)  # pre-swap
-        # per-bucket swap by rename-aside: the old bucket dir moves to
-        # a trash sibling BEFORE the new one renames in, so a kill
-        # between the two renames leaves the bucket recoverable (old
-        # in trash, new in tmp) instead of destroyed — _recover_swap
-        # restores any bucket missing from the target on next apply
-        trash = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
-        os.makedirs(trash, exist_ok=True)
-        for b in touched:
-            dst = os.path.join(target_path, f"__bucket={b}")
-            if os.path.isdir(dst):
-                os.rename(dst, os.path.join(trash, f"__bucket={b}"))
-            src = os.path.join(tmp, f"__bucket={b}")
-            if os.path.isdir(src):
-                os.rename(src, dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
-        return stats
+        # materialize to the stage (the plan READS the dirs we're about
+        # to replace), then publish exactly the touched partitions —
+        # incl. ones merging to empty, which partitionOverwriteMode=
+        # dynamic would leave stale (it only overwrites partitions
+        # present in the written data).
+        def write(stage: str) -> ApplyStats:
+            # one write task per touched bucket (see the seed write)
+            result.repartition(max(len(touched), 1), "__bucket").write \
+                .partitionBy("__bucket").parquet(stage)
+            return _stats_or_recompute(obs, m, target, key)  # pre-publish
+
+        return publish(spark, target_path, write,
+                       partitions=[f"__bucket={b}" for b in touched])
     finally:
         m.unpersist()
 
@@ -723,10 +636,23 @@ def read_cdc_target(
     try:
         df = spark.read.option("mergeSchema", "true").parquet(target_path)
     except Exception:
-        if schema is not None and os.path.isdir(target_path):
+        if schema is not None and _holds_no_data(spark, target_path):
             return _empty_target(spark, schema)
         raise
     return df.drop("__bucket") if "__bucket" in df.columns else df
+
+
+def _holds_no_data(spark: SparkSession, path: str) -> bool:
+    """True when `path` exists and no file under it is a data file
+    (Spark skips names starting with `_` or `.`) — one listing."""
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return False
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return False
+    return True
 
 
 def start_cdc_stream(

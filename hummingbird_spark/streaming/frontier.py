@@ -6,7 +6,7 @@ store (streaming/crawl.py — URLs crawled so far), and robots verdicts
 (operators/robots.py — disallowed URLs never enter the queue).
 
 Store shape: (host, curl, lastmod), swap-maintained
-(streaming/ledger.py::commit_swap) because entries RETRACT — a URL
+(hummingbird_spark/commit.py::publish) because entries RETRACT — a URL
 leaves the frontier the tick after the crawler lands it (the
 anti-join against the crawl store re-runs over the whole queue each
 tick, which is exactly the semantics a scheduler needs: the frontier
@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.functions.html import canonical_url, url_host
-from hummingbird_spark.streaming.ledger import BatchLedger, commit_swap
+from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.streaming.ledger import BatchLedger
 
 # sitemaps in the wild emit namespace-prefixed tags (<sm:url>,
 # <sitemap:loc>, ...) as freely as bare ones — every tag pattern
@@ -166,12 +167,14 @@ def start_streaming_frontier(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if led.seen(batch_id):
             return
+        recover(spark, frontier_path)
         robots = (spark.read.parquet(robots_path)
                   if robots_path else None)
         nxt = frontier_batch_merge(
             spark, batch_df, frontier_path, crawled_path, robots,
             robots_agent).localCheckpoint(eager=True)
-        commit_swap(nxt, frontier_path, led, batch_id)
+        publish(spark, frontier_path, nxt.write.parquet)
+        led.record(batch_id)
 
     return (
         stream.writeStream.foreachBatch(_apply)

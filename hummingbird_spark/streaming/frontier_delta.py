@@ -31,28 +31,23 @@ Per tick the work is bounded by the DELTA, not the queue:
                 maxmerge(old bucket rows ∪ entries) anti mirror-rows
               — every read partition-pruned to the touched buckets
 
-Touched buckets swap via per-bucket temp-dir renames (the
-commit_swap discipline at bucket grain). Correctness induction: a
-bucket's rows never contain a URL that was in the mirror at the
-bucket's last rebuild, and every tick's rebuild anti-joins the FULL
-mirrored set for its touched buckets — so a URL leaves the queue on
-the first tick after its crawl lands, and a sitemap re-advertising a
-long-crawled URL dies against the mirror (which is why the mirror
-exists: checking the batch against the unbucketed crawl store would
-cost O(crawled) per tick).
+Touched buckets publish as partitions (hummingbird_spark/commit.py).
+Correctness induction: a bucket's rows never contain a URL that was
+in the mirror at the bucket's last rebuild, and every tick's rebuild
+anti-joins the FULL mirrored set for its touched buckets — so a URL
+leaves the queue on the first tick after its crawl lands, and a
+sitemap re-advertising a long-crawled URL dies against the mirror
+(which is why the mirror exists: checking the batch against the
+unbucketed crawl store would cost O(crawled) per tick).
 
 Crash windows (ledger contract): mirror append lands FIRST
-(duplicates absorbed by distinct-on-read), bucket swaps next (a
-crash mid-loop leaves a prefix swapped; the replay recomputes every
-touched bucket from current state — maxmerge and anti are
-idempotent, so it converges), ledger then cursor last (a lost cursor
-update replays the same crawl files into the mirror as duplicates).
-Each bucket swap is itself crash-safe via rename-aside: the old dir
-moves to a sibling tree (`<queue>.__aside/bucket=<b>`, outside the
-queue so readers never see it) before the new dir renames in, and
-`_sweep_swap_debris` at the next tick start restores any aside whose
-replacement never landed — so no window loses a bucket's backlog —
-and drops orphaned temp trees.
+(duplicates absorbed by distinct-on-read), the bucket publish next
+(the replay recomputes every touched bucket from current state —
+maxmerge and anti are idempotent, so it converges), ledger then
+cursor last (a lost cursor update replays the same crawl files into
+the mirror as duplicates). The bucket publish is itself crash-safe:
+the tick start recovers it to exactly its pre- or post-publish
+state, so no window loses a bucket's backlog.
 Robots verdicts gate entries at ENQUEUE time (batch-bounded); the
 swap frontier re-gates the whole queue every tick. When robots can
 CHANGE, pass the current robots frame to read_fetch_schedule — it
@@ -73,12 +68,11 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import publish, recover, write_text
 from hummingbird_spark.streaming.frontier import parse_sitemap_entries
 from hummingbird_spark.streaming.ledger import BatchLedger
 
@@ -143,37 +137,14 @@ def _crawled_delta_files(crawled_path: str, cursor: str) -> list[str]:
         if os.path.basename(f) not in have)
 
 
-def _advance_cursor(cursor: str, files: list[str]) -> None:
+def _advance_cursor(spark: SparkSession, cursor: str,
+                    files: list[str]) -> None:
     have = set()
     if os.path.exists(cursor):
         with open(cursor) as fh:
             have = set(fh.read().split())
     have.update(os.path.basename(f) for f in files)
-    tmp = cursor + ".__tmp_" + uuid.uuid4().hex[:8]
-    with open(tmp, "w") as fh:
-        fh.write(" ".join(sorted(have)) + " ")
-    os.rename(tmp, cursor)
-
-
-def _sweep_swap_debris(queue: str) -> None:
-    """Recover from a crash inside the swap loop, BEFORE any read of
-    the queue this tick. Two kinds of debris: orphaned write temp
-    trees (`<queue>.__tmp_*` — always safe to drop, the replay
-    rewrites them) and aside dirs (`__old_bucket=<b>` inside the
-    queue). An aside whose bucket dir is missing means the crash hit
-    between the two renames — restore it, so the replay's rebuild
-    sees the bucket's pre-swap backlog. An aside whose bucket dir
-    exists is post-swap leftovers — drop it."""
-    for tmp in glob.glob(queue + ".__tmp_*"):
-        shutil.rmtree(tmp, ignore_errors=True)
-    for aside in glob.glob(
-            os.path.join(queue + ".__aside", "bucket=*")):
-        dst = os.path.join(queue, os.path.basename(aside))
-        if os.path.isdir(dst):
-            shutil.rmtree(aside, ignore_errors=True)
-        else:
-            os.rename(aside, dst)
-    shutil.rmtree(queue + ".__aside", ignore_errors=True)
+    write_text(spark, cursor, " ".join(sorted(have)) + " ")
 
 
 def frontier_delta_batch(
@@ -208,7 +179,8 @@ def frontier_delta_batch(
     led = BatchLedger(queue)
     if led.seen(batch_id):
         return
-    _sweep_swap_debris(queue)
+    for p in (queue, cursor):
+        recover(spark, p)
     n = _n_buckets(root, n_buckets)
 
     entries = parse_sitemap_entries(batch_sitemaps, xml_col)
@@ -250,7 +222,7 @@ def frontier_delta_batch(
     if not touched:
         led.record(batch_id)
         if delta_files:
-            _advance_cursor(cursor, delta_files)
+            _advance_cursor(spark, cursor, delta_files)
         return
 
     # 1. mirror append FIRST (duplicates absorbed on read).
@@ -312,40 +284,16 @@ def frontier_delta_batch(
     nxt = merged.select("bucket", "host", "curl", "lastmod") \
         .localCheckpoint(eager=True)
 
-    # 3. per-bucket swap: write to a temp dir, rename bucket dirs in.
-    # Rename-ASIDE discipline (never rmtree-then-rename): a crash
-    # between "rmtree(dst)" and "rename(src, dst)" would permanently
-    # lose the bucket's backlog from earlier batches — the replay's
-    # rebuild reads the (now empty) old side and can only re-derive
-    # the replayed batch's own rows. Instead the old dir moves to an
-    # aside name first; _sweep_swap_debris restores it at the next
-    # tick start if the replacement rename never landed. Asides live
-    # in a SIBLING tree (<queue>.__aside/bucket=<b>), never inside
-    # the queue dir — Spark's partition discovery would treat any
-    # in-tree key=value dir name as a conflicting partition column.
-    tmp = queue + ".__tmp_" + uuid.uuid4().hex[:8]
-    aside_root = queue + ".__aside"
-    nxt.repartition("bucket").write.mode("overwrite") \
-        .partitionBy("bucket").parquet(tmp)
-    os.makedirs(queue, exist_ok=True)
-    os.makedirs(aside_root, exist_ok=True)
-    for b in touched:
-        src = os.path.join(tmp, f"bucket={b}")
-        dst = os.path.join(queue, f"bucket={b}")
-        aside = os.path.join(aside_root, f"bucket={b}")
-        if os.path.isdir(dst):
-            os.rename(dst, aside)
-        if os.path.isdir(src):
-            os.rename(src, dst)
-        # a touched bucket with nothing left simply disappears
-        shutil.rmtree(aside, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(aside_root, ignore_errors=True)
+    # 3. publish the touched buckets (a touched bucket with nothing
+    # left disappears)
+    publish(spark, queue,
+            nxt.repartition("bucket").write.partitionBy("bucket").parquet,
+            partitions=[f"bucket={b}" for b in touched])
 
     # 4. ledger, then cursor
     led.record(batch_id)
     if delta_files:
-        _advance_cursor(cursor, delta_files)
+        _advance_cursor(spark, cursor, delta_files)
     if (compact_every and batch_id is not None
             and len(led.applied()) % compact_every == 0
             and os.path.isdir(mirror)):

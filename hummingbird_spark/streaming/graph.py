@@ -17,7 +17,7 @@ The design that makes both exact AND cheap:
   * edge store (g, a, b): per-SHINGLE pair triples, rare shingles
     only. Bounded at C(max_df, 2) triples per shingle by the df cap,
     so the store scales with the rare-edge count, not the corpus.
-    Maintained by swap (streaming/ledger.py::commit_swap) because
+    Maintained by swap (hummingbird_spark/commit.py::publish) because
     retraction is a delete.
 
 Per batch, the delta recomputes ONLY the touched shingles' pair sets:
@@ -45,7 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.functions.text import doc_trigrams
-from hummingbird_spark.streaming.ledger import BatchLedger, commit_swap
+from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.streaming.ledger import BatchLedger
 
 
 def link_graph_batch_delta(
@@ -132,13 +133,15 @@ def apply_link_graph_batch(
     led = BatchLedger(edges_path)
     if led.seen(batch_id):
         return
+    recover(spark, edges_path)
     bp, new_edges = link_graph_batch_delta(
         spark, batch_docs, postings_path, edges_path,
         text_col, id_col, min_df, max_df)
     bp = bp.localCheckpoint(eager=True)
     new_edges = new_edges.localCheckpoint(eager=True)
     bp.write.mode("append").parquet(postings_path)
-    commit_swap(new_edges, edges_path, led, batch_id)
+    publish(spark, edges_path, new_edges.write.parquet)
+    led.record(batch_id)
     if (compact_every and batch_id is not None
             and len(led.applied()) % compact_every == 0):
         from hummingbird_spark.operators.compact import compact_table

@@ -8,31 +8,30 @@ by the ONE driver that owns the availableNow stream. That is exactly
 the deployment every CLI subcommand, registry query, and test in this
 repo runs (one driver, local or cluster, per maintained store).
 Multiple concurrent drivers maintaining the SAME store would race
-both the ledger file and the store swap/append; that deployment needs
-a transactional table format (Delta/Iceberg) or an external
+both the ledger file and the store publish/append; that deployment
+needs a transactional table format (Delta/Iceberg) or an external
 coordinator, not this file.
 
 Crash-window semantics, shared by all consumers: the store mutation
-lands BEFORE the ledger rename, so a crash between the two replays
-the batch on restart. Swap-style stores (sketch/reservoir/rollup)
-either absorb the replay as a no-op (idempotent merges: HLL max,
-reservoir max-key) or as a coherent double-count (additive merges:
-the replayed batch reads as having occurred twice — counts and their
-interpreting totals move together). Append-style stores (dedup/
-media_dedup) accept duplicated out rows as the recoverable failure —
-the reverse ordering would DROP a batch instead, and loss is not
-recoverable. Each rename is atomic on POSIX filesystems; the
-non-atomic window is the two adjacent renames, which a transactional
-sink would close for real.
+lands BEFORE the ledger write, so a crash between the two replays the
+batch on restart. Swap-style stores (sketch/reservoir/rollup) either
+absorb the replay as a no-op (idempotent merges: HLL max, reservoir
+max-key) or as a coherent double-count (additive merges: the replayed
+batch reads as having occurred twice — counts and their interpreting
+totals move together). Append-style stores (dedup/media_dedup) accept
+duplicated out rows as the recoverable failure — the reverse ordering
+would DROP a batch instead, and loss is not recoverable. The store
+swap and the ledger write are each one publish (hummingbird_spark/
+commit.py), which owns the crash windows inside each.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
+
+from hummingbird_spark.commit import recover, write_text
 
 
 class BatchLedger:
@@ -41,9 +40,9 @@ class BatchLedger:
 
     def __init__(self, store_path: str):
         self.path = store_path + ".ledger"
-        self._staged: str | None = None
 
     def applied(self) -> list[str]:
+        recover(SparkSession.active(), self.path)
         if os.path.exists(self.path):
             with open(self.path) as fh:
                 return fh.read().split()
@@ -55,40 +54,9 @@ class BatchLedger:
         and never recorded."""
         return batch_id is not None and str(batch_id) in self.applied()
 
-    def stage(self, batch_id: int | None, token: str) -> None:
-        """Write applied+[batch_id] to a temp file next to the ledger;
-        commit() renames it into place. Staging BEFORE the store swap
-        keeps the non-atomic window to two adjacent renames."""
-        if batch_id is None:
-            return
-        tmp = f"{self.path}.__tmp_{token}"
-        with open(tmp, "w") as fh:
-            fh.write(" ".join([*self.applied(), str(batch_id)]) + " ")
-        self._staged = tmp
-
-    def commit(self) -> None:
-        if self._staged is not None:
-            os.rename(self._staged, self.path)
-            self._staged = None
-
     def record(self, batch_id: int | None) -> None:
-        """stage + commit in one step — for append-style stores where
-        no other rename interleaves (the append already landed)."""
-        self.stage(batch_id, uuid.uuid4().hex[:8])
-        self.commit()
-
-
-def commit_swap(out: DataFrame, store_path: str, ledger: BatchLedger,
-                batch_id: int | None) -> None:
-    """The double-rename store swap every swap-style merge uses: write
-    `out` to a temp dir, stage the ledger, swap the store directory
-    into place, commit the ledger. See the module docstring for the
-    crash-window semantics this ordering buys."""
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{store_path}.__tmp_{token}"
-    out.write.mode("overwrite").parquet(tmp)
-    ledger.stage(batch_id, token)
-    if os.path.exists(store_path):
-        shutil.rmtree(store_path)
-    os.rename(tmp, store_path)
-    ledger.commit()
+        """Add batch_id to the ledger — after the store mutation has
+        landed (see the module docstring)."""
+        if batch_id is not None:
+            write_text(SparkSession.active(), self.path,
+                       " ".join([*self.applied(), str(batch_id)]) + " ")

@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from hummingbird_spark.streaming.ledger import BatchLedger, commit_swap
+from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.streaming.ledger import BatchLedger
 
 
 def merge_reservoir_batch(
@@ -31,7 +32,7 @@ def merge_reservoir_batch(
 ) -> None:
     """Merge a batch's (strata, id, __key) candidates into the
     persistent per-stratum top-k. Union + one window over <= strata *
-    2k rows; same ledger + double-rename swap discipline as the
+    2k rows; same ledger + publish discipline as the
     continuous sketches (see streaming/ledger.py for the shared
     crash-window semantics and the single-driver assumption)."""
     from pyspark.sql import Window
@@ -39,6 +40,7 @@ def merge_reservoir_batch(
     led = BatchLedger(store_path)
     if led.seen(batch_id):
         return
+    recover(spark, store_path)
 
     cols = batch_keyed.columns
     if os.path.exists(os.path.join(store_path, "_SUCCESS")):
@@ -48,7 +50,7 @@ def merge_reservoir_batch(
         merged = batch_keyed
     # Full idempotency for free: the E-S priority is a pure function
     # of (seed, id, weight), so a batch re-applied after a crash in
-    # the window between the data-dir rename and the ledger rename
+    # the window between the store publish and the ledger write
     # contributes byte-identical (strata, id, __key) rows, and the
     # per-(strata, id) max below collapses them to one. When the SAME
     # id re-arrives later with a DIFFERENT weight, the survivor must
@@ -74,7 +76,8 @@ def merge_reservoir_batch(
         .drop("rk")
     )
 
-    commit_swap(topk, store_path, led, batch_id)
+    publish(spark, store_path, topk.write.parquet)
+    led.record(batch_id)
 
 
 def start_continuous_reservoir(

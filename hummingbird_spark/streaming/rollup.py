@@ -29,14 +29,13 @@ per batch is the rollup's size, not the stream's.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from hummingbird_spark.streaming.ledger import BatchLedger, commit_swap
+from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.streaming.ledger import BatchLedger
 
 
 def window_rollup_partials(
@@ -117,9 +116,9 @@ def merge_rollup_batch(
 
     `batch_id` (from foreachBatch) is recorded in a ledger file; an
     already-applied id is skipped, making checkpoint-recovery replays
-    idempotent even though += is not (the staged-ledger double-rename
-    swap and its crash window are documented once in
-    streaming/ledger.py, with the single-driver assumption).
+    idempotent even though += is not (the publish-then-ledger order
+    and its crash window are documented once in streaming/ledger.py,
+    with the single-driver assumption).
 
     Null keys merge too: the join matches on null-safe equality, so a
     null key (or a null window_start from an unparseable timestamp)
@@ -128,6 +127,7 @@ def merge_rollup_batch(
     led = BatchLedger(rollup_path)
     if led.seen(batch_id):
         return
+    recover(spark, rollup_path)
 
     from hummingbird_spark.functions.sketch import merge_sketches
 
@@ -173,7 +173,8 @@ def merge_rollup_batch(
             *(["hll"] if "hll" in p.columns else []),
         )
 
-    commit_swap(merged, rollup_path, led, batch_id)
+    publish(spark, rollup_path, merged.write.parquet)
+    led.record(batch_id)
 
 
 def start_continuous_rollup(
@@ -248,17 +249,14 @@ def refresh_rollup(
         value_col=value_col, hist_range=hist_range,
         hist_bins=hist_bins, distinct_col=distinct_col,
     )
+    recover(spark, rollup_path)
     cur = spark.read.parquet(rollup_path)
     kept = cur.filter(
         (F.col("window_start") < lo) | (F.col("window_start") >= hi))
     merged = kept.unionByName(
         recomputed.select(*cur.columns), allowMissingColumns=False)
 
-    tmp = f"{rollup_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(rollup_path):
-        shutil.rmtree(rollup_path)
-    os.rename(tmp, rollup_path)
+    publish(spark, rollup_path, merged.write.parquet)
 
 
 def read_rollup(spark: SparkSession, rollup_path: str,

@@ -18,13 +18,13 @@ always-on ingest pipeline can afford at any scale.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from hummingbird_spark.streaming.ledger import BatchLedger, commit_swap
+from hummingbird_spark.commit import publish, recover, write_text
+from hummingbird_spark.streaming.ledger import BatchLedger
 
 
 def _merge_additive(
@@ -41,13 +41,14 @@ def _merge_additive(
     histogram buckets), combine='max' for max-semilattice registers
     (HLL rho values — max is idempotent/commutative/associative, so
     the maintained registers are bit-identical to a from-scratch build
-    just like the additive case). Same ledger + double-rename swap
-    discipline as merge_rollup_batch (streaming/rollup.py); see
+    just like the additive case). Same ledger + publish discipline
+    as merge_rollup_batch (streaming/rollup.py); see
     streaming/ledger.py for the shared crash-window semantics and the
     single-driver assumption."""
     led = BatchLedger(path)
     if led.seen(batch_id):
         return
+    recover(spark, path)
 
     p = partial.select(*keys, "cnt")
     for c in [*keys, "cnt"]:
@@ -73,7 +74,8 @@ def _merge_additive(
         merged = p.select(
             *[F.col(f"__{c}").alias(c) for c in [*keys, "cnt"]])
 
-    commit_swap(merged, path, led, batch_id)
+    publish(spark, path, merged.write.parquet)
+    led.record(batch_id)
 
 
 def merge_cms_batch(
@@ -261,12 +263,12 @@ def merge_topk_batch(
     batch_id: int | None = None,
 ) -> None:
     """Merge a batch's (tok, cnt) vocabulary-grain counts into the
-    persistent <= k-row MG summary. Same ledger + double-rename swap
-    discipline as merge_cms_batch. The total stream weight n that
+    persistent <= k-row MG summary. Same ledger + publish discipline
+    as merge_cms_batch. The total stream weight n that
     interprets the n/(k+1) guarantee rides INSIDE the summary parquet
     as a tok=NULL sentinel row (the mg_candidates convention), so n
-    and the counters swap in one atomic rename: a crash between the
-    summary rename and the ledger rename replays the batch into BOTH
+    and the counters publish together: a crash between the summary
+    publish and the ledger write replays the batch into BOTH
     counts and n together — the advertised [c, c + n/(k+1)] bound on
     true counts stays coherent (the replayed batch just reads as
     having occurred twice in the stream). Only the static k lives in
@@ -280,6 +282,7 @@ def merge_topk_batch(
     led = BatchLedger(summary_path)
     if led.seen(batch_id):
         return
+    recover(spark, summary_path)
 
     batch_tc = batch_tc.select("tok", "cnt")
     n_batch = batch_tc.agg(F.sum("cnt")).collect()[0][0] or 0
@@ -328,11 +331,9 @@ def merge_topk_batch(
     if not os.path.exists(meta_path):
         # static k only: idempotent, no crash window, so it can land
         # before the swap
-        meta_tmp = f"{meta_path}.__tmp_{uuid.uuid4().hex[:8]}"
-        with open(meta_tmp, "w") as fh:
-            json.dump({"k": k}, fh)
-        os.rename(meta_tmp, meta_path)
-    commit_swap(out, summary_path, led, batch_id)
+        write_text(spark, meta_path, json.dumps({"k": k}))
+    publish(spark, summary_path, out.write.parquet)
+    led.record(batch_id)
 
 
 def start_continuous_topk(

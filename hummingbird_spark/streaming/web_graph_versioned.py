@@ -63,14 +63,13 @@ LOGICAL tick — below a replay-safe watermark it keeps only the
 winning op per direction (dropping -1 winners outright) and only
 each page's latest version's link rows, so the history the
 max-seq-wins read scans stays proportional to the live graph, not
-to total recrawl churn. Every swap is rename-aside crash-safe
-(_swap_store / _sweep_gc_debris — the frontier-delta discipline).
+to total recrawl churn. Every GC rewrite is one publish
+(hummingbird_spark/commit.py), recovered at the next batch start.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
@@ -79,6 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.functions.html import canonical_url, extract_links
+from hummingbird_spark.commit import publish, recover
 from hummingbird_spark.operators.dedup import ensure_kernel_parallelism
 from hummingbird_spark.streaming.ledger import BatchLedger
 
@@ -304,10 +304,10 @@ def web_graph_versioned_batch(
 ) -> None:
     """One maintenance round over (id, base, html) rows — new pages
     AND new versions of known pages. See the module docstring."""
-    # a crashed logical-GC swap must heal before anything reads the
-    # stores (the window can leave a live dir renamed aside)
+    # a crashed logical-GC publish must recover before anything reads
+    # the stores (the window can leave a live dir moved aside)
     for p in (links_path, vers_path, pages_path, edges_path):
-        _sweep_gc_debris(p)
+        recover(spark, p)
     led = BatchLedger(edges_path)
     if led.seen(batch_id):
         return
@@ -348,36 +348,10 @@ def web_graph_versioned_batch(
             compact_table(spark, p)
 
 
-def _sweep_gc_debris(path: str) -> None:
-    """Restore a crashed logical-GC swap for one store. Windows:
-    tmp written but never swapped (rm tmp); live renamed aside but
-    tmp not yet renamed in (restore aside, rm tmp); tmp renamed in
-    but aside not yet removed (rm aside). The aside is a SIBLING
-    path (never inside a partitioned root — the frontier lesson:
-    in-tree key=value names break partition discovery)."""
-    aside, tmp = path + ".__gc_aside", path + ".__gc_tmp"
-    if os.path.exists(aside):
-        if os.path.exists(path):
-            shutil.rmtree(aside, ignore_errors=True)
-        else:
-            os.rename(aside, path)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _swap_store(df: DataFrame, path: str) -> None:
-    """Crash-safe store rewrite: write tmp, verify non-emptiness of
-    the _SUCCESS marker, rename live aside, rename tmp in, drop the
-    aside. Any crash window replays via _sweep_gc_debris."""
-    tmp = path + ".__gc_tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(f"gc rewrite of {path} produced no "
-                           "_SUCCESS marker; live store untouched")
-    aside = path + ".__gc_aside"
-    os.rename(path, aside)
-    os.rename(tmp, path)
-    shutil.rmtree(aside, ignore_errors=True)
+def _require_success(stage: str) -> None:
+    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
+        raise RuntimeError(f"gc rewrite {stage} produced no _SUCCESS "
+                           "marker; live store untouched")
 
 
 def gc_web_graph_versioned(
@@ -409,14 +383,13 @@ def gc_web_graph_versioned(
 
     Safe watermark: any batch id at or below the ledger's max
     recorded id (recorded batches never replay; an in-flight crash
-    replay has a HIGHER seq). Each store swaps independently via
-    rename-aside (_swap_store) — a crash between stores leaves each
-    store individually consistent (orphaned link rows whose version
-    was GC'd never join: every links read goes through a vers-derived
-    seq), and the per-store windows replay via _sweep_gc_debris at
-    the next tick/batch start."""
+    replay has a HIGHER seq). Each store publishes independently — a
+    crash between stores leaves each store individually consistent
+    (orphaned link rows whose version was GC'd never join: every
+    links read goes through a vers-derived seq), and each store's
+    publish recovers at the next tick/batch start."""
     for p in (links_path, vers_path, pages_path, edges_path):
-        _sweep_gc_debris(p)
+        recover(spark, p)
     if not all(os.path.exists(os.path.join(p, "_SUCCESS"))
                for p in (links_path, vers_path, edges_path)):
         return
@@ -433,8 +406,8 @@ def gc_web_graph_versioned(
     )
     # lazy checkpoints throughout the GC: each frame's RDD is pinned
     # against the pre-swap file listing at call time and materializes
-    # inside its own _swap_store tmp write (which always completes
-    # before the live dir it read is renamed away). new_ops and
+    # inside its own publish's stage write (which always completes
+    # before the live dir it read is moved away). new_ops and
     # keep_v are independent — overlap their call-time stage
     # execution (the change-12 pattern); keep_l joins keep_v, so it
     # builds after.
@@ -455,15 +428,16 @@ def gc_web_graph_versioned(
     keep_l = links.join(
         keep_v.select(F.col("tgt").alias("src"), "seq"),
         ["src", "seq"], "left_semi").localCheckpoint(eager=False)
-    # every read is pinned above, and each store's swap window is
+    # every read is pinned above, and each store's publish is
     # independently crash-safe in EITHER completion order (links
     # GC'd before vers is as safe as the reverse: prev_seq takes a
     # MAX over vers, which is insensitive to the dominated rows GC
     # drops) — so the three rewrites can overlap on the cluster
     # instead of running their write jobs back to back (guide §2.6)
     with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = [ex.submit(inheritable_thread_target(spark)(_swap_store),
-                          df, p)
+        futs = [ex.submit(inheritable_thread_target(spark)(publish),
+                          spark, p, df.write.parquet,
+                          verify=_require_success)
                 for df, p in ((new_ops, edges_path),
                               (keep_v, vers_path),
                               (keep_l, links_path))]

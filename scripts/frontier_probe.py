@@ -34,10 +34,7 @@ from hummingbird_spark.streaming.frontier_delta import (  # noqa: E402
     frontier_delta_batch,
     read_delta_frontier,
 )
-from hummingbird_spark.streaming.ledger import (  # noqa: E402
-    BatchLedger,
-    commit_swap,
-)
+from hummingbird_spark.commit import publish  # noqa: E402
 
 ROOT = "/tmp/hummingbird_frontier_probe"
 N_ENTRIES = 50
@@ -93,7 +90,7 @@ def _swap_tick(spark, batch, store, crawled):
     t0 = time.time()
     nxt = frontier_batch_merge(spark, batch, store, crawled) \
         .localCheckpoint(eager=True)
-    commit_swap(nxt, store, BatchLedger(store), None)
+    publish(spark, store, nxt.write.parquet)
     return time.time() - t0
 
 

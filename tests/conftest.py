@@ -14,6 +14,37 @@ def spark():
     yield s
 
 
+class InjectedCrash(RuntimeError):
+    """The kill crash_publish injects into hummingbird_spark.commit."""
+
+
+def crash_publish(monkeypatch, after_commit: bool, under: str | None = None):
+    """Kill the next publish (of a path starting with `under`, if given)
+    once, through commit.py's file-system seam: before its commit point
+    (in place of writing the commit record), or after it (right after
+    the first live item moves aside, before its replacement moves in).
+    Later publishes run untouched."""
+    from hummingbird_spark import commit
+
+    real, fired = commit._mutate, []
+
+    def seam(fs, op, *args):
+        if fired or (under and not str(args[0]).startswith(under)):
+            return real(fs, op, *args)
+        if (not after_commit and op == "write"
+                and str(args[0]).endswith(".__commit")):
+            fired.append(op)
+            raise InjectedCrash("injected crash before the commit point")
+        out = real(fs, op, *args)
+        if after_commit and op == "rename" and "__aside_" in str(args[1]):
+            fired.append(op)
+            raise InjectedCrash("injected crash after the commit point")
+        return out
+
+    monkeypatch.setattr(commit, "_mutate", seam)
+    return fired
+
+
 # The Spark-heavy long tail, measured with --durations=0 on the full
 # suite (every entry >= 8 s; together ~1,414 s of the ~2,477 s total).
 # Marked `slow` and DESELECTED BY DEFAULT (pytest.ini addopts) so the
@@ -35,7 +66,6 @@ SLOW_NODE_IDS = {
     "test_cdc.py::test_bucketed_apply_matches_flat",
     "test_cdc.py::test_bucketed_evolved_column_survives_bucket_rewrite",
     "test_cdc.py::test_evolved_column_survives_later_batches",
-    "test_cdc_chaos.py::test_bucketed_swap_crash_every_window_converges",
     "test_cdc_fold_properties.py::test_reduced_model_equals_ordered_replay",
     "test_cli.py::test_cli_frontier",
     "test_crawl_loop_e2e.py::test_crawl_loop_end_to_end",

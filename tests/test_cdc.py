@@ -446,6 +446,32 @@ def test_bucketed_apply_clears_emptied_bucket(spark, tmp_path):
     assert state == {}
 
 
+def test_read_cdc_target_raises_on_corrupt_target(spark, tmp_path):
+    """Only an existing target with no data files reads as the empty
+    table; a truncated part file (or a missing target) must raise, not
+    read as empty."""
+    import glob
+
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    assert read_cdc_target(spark, str(empty), TARGET_SCHEMA).count() == 0
+    with pytest.raises(Exception):
+        read_cdc_target(spark, str(tmp_path / "missing"), TARGET_SCHEMA)
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a", 1)], TARGET_SCHEMA).write.parquet(path)
+    part = glob.glob(os.path.join(path, "part-*.parquet"))[0]
+    with open(part, "r+b") as fh:
+        fh.truncate(16)
+    for crc in glob.glob(os.path.join(path, ".*.crc")):
+        os.remove(crc)
+    with pytest.raises(Exception):
+        read_cdc_target(spark, path, TARGET_SCHEMA).collect()
+
+
 # --- schema evolution (schemaless-source parity, SURVEY §1.2) ---
 
 def test_apply_evolves_schema_with_new_fields(spark, tmp_path):

@@ -1,16 +1,18 @@
 """CDC sink crash-window chaos tests (VERDICT r4 #5): kill the apply
-at every rename inside the temp-write -> swap protocol, restart, and
-prove the target converges to the clean-run state with no double-apply
-— the reference's resume guarantee (workspace.go:276-309 +
-resume.go:13-82) transplanted to the parquet sink.
+inside its publish, restart, and prove the target converges to the
+clean-run state with no double-apply — the reference's resume guarantee
+(workspace.go:276-309 + resume.go:13-82) transplanted to the parquet
+sink.
 
-Failure injection is deterministic: os.rename is wrapped to raise at
-the N-th call, which lands the kill exactly between the two renames of
-a swap (flat: target moved aside but tmp not yet renamed in; bucketed:
-a bucket moved to trash but its replacement not yet in place). Recovery
-is _recover_swap, which both apply variants run on entry — so
-"restart" is simply the next apply (or the checkpoint-replayed batch
-in the streaming test).
+Each sink (flat, and bucketed with num_buckets=8) is killed once before
+the commit point and once after it, through commit.py's file-system
+seam (tests/conftest.py::crash_publish). That every other kill point
+recovers to exactly the pre- or the post-publish state is proven once,
+for whole-directory and partition publishes, by tests/test_commit.py;
+these tests check the sink on top of that: the replayed batch converges
+from either state. Recovery runs on entry to both apply variants, so
+"restart" is simply the next apply (or the checkpoint-replayed batch in
+the streaming test).
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from hummingbird_spark.streaming.cdc import (
     reduce_write_models,
     start_cdc_stream,
 )
+from tests.conftest import InjectedCrash, crash_publish
 
 TARGET_SCHEMA = T.StructType([
     T.StructField("_id", T.LongType()),
@@ -53,7 +56,7 @@ def _ev(seq, op, o, o2=None, ns="db.c", ts=None):
 
 
 # inserts, updates, a delete, a patch — touches several buckets at
-# num_buckets=8 so the bucketed swap loop has multiple rename windows
+# num_buckets=8 so the bucketed publish replaces several partitions
 BATCH = [
     _ev(1, "i", {"_id": 10, "x": "ten", "n": 100}),
     _ev(2, "u", {"$set": {"x": "TWO"}}, {"_id": 2}),
@@ -64,6 +67,12 @@ BATCH = [
 ]
 
 SEED = [(i, f"v{i}", i * 10) for i in range(1, 6)]
+
+# the clean run of BATCH over SEED
+WANT = sorted([
+    (1, "v1", 10), (2, "TWO", 20), (4, "v4", None),
+    (5, "five!", 55), (10, "ten", 100), (11, "eleven", 110),
+])
 
 
 def _models(spark, rows):
@@ -89,103 +98,45 @@ def _state(spark, path):
                   df.select("_id", "x", "n").collect())
 
 
-class _RenameBomb:
-    """os.rename wrapper that raises at the n-th call (1-indexed)."""
-
-    def __init__(self, monkeypatch, explode_at):
-        self.calls = 0
-        self.explode_at = explode_at
-        self._real = os.rename
-
-        def boom(src, dst, *a, **kw):
-            self.calls += 1
-            if self.calls == self.explode_at:
-                raise RuntimeError("injected crash (chaos test)")
-            return self._real(src, dst, *a, **kw)
-
-        monkeypatch.setattr(os, "rename", boom)
+def _leftovers(path):
+    return [d for d in os.listdir(os.path.dirname(path))
+            if d.startswith(os.path.basename(path) + ".")]
 
 
-def _clean_run_flat(spark, tmp_path):
-    ref = str(tmp_path / "ref.parquet")
-    _seed_flat(spark, ref)
-    apply_cdc_batch(spark, _models(spark, BATCH), ref, "_id",
-                    TARGET_SCHEMA)
-    return _state(spark, ref)
-
-
-@pytest.mark.parametrize("explode_at", [1, 2])
-def test_flat_swap_crash_then_replay_converges(spark, tmp_path,
-                                               monkeypatch, explode_at):
-    """Kill at each rename of the flat swap (1: target->old moved
-    aside; 2: tmp->target roll-in), then 'restart' by re-applying the
-    same batch. explode_at=1 leaves the target intact (rollback case);
-    explode_at=2 leaves target missing with complete tmp+old siblings
-    (the roll-forward case). Both must converge to the clean state."""
-    want = _clean_run_flat(spark, tmp_path)
-    path = str(tmp_path / "t.parquet")
-    _seed_flat(spark, path)
-
-    bomb = _RenameBomb(monkeypatch, explode_at)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        apply_cdc_batch(spark, _models(spark, BATCH), path, "_id",
-                        TARGET_SCHEMA)
-    assert bomb.calls == explode_at
-    monkeypatch.undo()
-
-    # checkpoint-replay equivalent: the same reduced batch re-applies
-    apply_cdc_batch(spark, _models(spark, BATCH), path, "_id",
-                    TARGET_SCHEMA)
-    assert _state(spark, path) == want
-    # no leftover tmp/old siblings after recovery + clean swap
-    parent = os.path.dirname(path)
-    leftovers = [d for d in os.listdir(parent)
-                 if "__tmp_" in d or "__old_" in d]
-    assert leftovers == []
-
-
-def test_bucketed_swap_crash_every_window_converges(spark, tmp_path,
-                                                    monkeypatch):
-    """Kill at EVERY rename of the bucketed per-bucket swap loop in
-    turn: an odd window leaves a bucket moved to trash but not
-    replaced (the bucket is MISSING from the target — plain data loss
-    before the rename-aside rework); an even window leaves a partial
-    mix of old and new buckets. Every window must replay-converge.
-    The window count is measured from a clean reference apply rather
-    than hardcoded (it depends on how the batch keys hash across
-    buckets)."""
-    num_buckets = 8
+@pytest.mark.parametrize("after_commit", [False, True],
+                         ids=["before_commit", "after_commit"])
+@pytest.mark.parametrize("num_buckets", [None, 8], ids=["flat", "bucketed"])
+def test_swap_crash_then_replay_converges(spark, tmp_path, monkeypatch,
+                                          num_buckets, after_commit):
+    """Kill the batch's publish before its commit point (the target
+    keeps its pre-batch state) or after it (the first live item is
+    moved aside: the flat target, or one touched bucket, is missing
+    until recovery rolls forward), then 'restart' by re-applying the
+    same batch. Both must converge to the clean state and leave no
+    sibling behind."""
+    path = str(tmp_path / "t")
+    if num_buckets:
+        _seed_bucketed(spark, path, num_buckets)
+    else:
+        _seed_flat(spark, path)
     models = _models(spark, BATCH).cache()
 
-    # clean reference run, counting the swap's rename windows
-    ref = str(tmp_path / "ref")
-    _seed_bucketed(spark, ref, num_buckets)
-    counter = _RenameBomb(monkeypatch, explode_at=0)  # 0 = never fires
-    apply_cdc_batch_bucketed(spark, models, ref, "_id", TARGET_SCHEMA,
-                             num_buckets=num_buckets)
-    total = counter.calls
-    monkeypatch.undo()
-    want = _state(spark, ref)
-    assert total >= 3  # several buckets touched -> several windows
-
-    for explode_at in range(1, total + 1):
-        path = str(tmp_path / f"t{explode_at}")
-        _seed_bucketed(spark, path, num_buckets)
-        bomb = _RenameBomb(monkeypatch, explode_at)
-        with pytest.raises(RuntimeError, match="injected crash"):
+    def apply():
+        if num_buckets:
             apply_cdc_batch_bucketed(spark, models, path, "_id",
-                                     TARGET_SCHEMA,
-                                     num_buckets=num_buckets)
-        assert bomb.calls == explode_at
-        monkeypatch.undo()
+                                     TARGET_SCHEMA, num_buckets=num_buckets)
+        else:
+            apply_cdc_batch(spark, models, path, "_id", TARGET_SCHEMA)
 
-        # checkpoint-replay equivalent: same reduced batch re-applies
-        apply_cdc_batch_bucketed(spark, models, path, "_id",
-                                 TARGET_SCHEMA, num_buckets=num_buckets)
-        assert _state(spark, path) == want, f"window {explode_at}"
-        leftovers = [d for d in os.listdir(os.path.dirname(path))
-                     if d.startswith(os.path.basename(path) + ".__")]
-        assert leftovers == [], f"window {explode_at}: {leftovers}"
+    fired = crash_publish(monkeypatch, after_commit)
+    with pytest.raises(InjectedCrash):
+        apply()
+    assert fired
+
+    # checkpoint-replay equivalent: the same reduced batch re-applies
+    apply()
+    assert _state(spark, path) == WANT
+    assert _leftovers(path) == []
     models.unpersist()
 
 
@@ -202,8 +153,8 @@ def _write_oplog_file(oplog_dir, name, rows):
 def test_stream_crash_mid_swap_restarts_from_checkpoint(
         spark, tmp_path, monkeypatch, num_buckets):
     """End-to-end streaming version: batch 0 seeds the target
-    cleanly, batch 1's swap crashes at its first rename (so the merge
-    path with a real swap window is exercised, not the seed write),
+    cleanly, batch 1's publish crashes right after its commit point
+    (the merge path with a real swap window, not the seed write),
     the query dies, and a RESTART from the same checkpoint replays the
     batch and converges — the reference's resume guarantee driven
     through the real foreachBatch + checkpoint machinery."""
@@ -226,9 +177,9 @@ def test_stream_crash_mid_swap_restarts_from_checkpoint(
     ])
     run_stream().awaitTermination()
 
-    # batch 1: the mutation batch, crashed at its first swap rename
+    # batch 1: the mutation batch, crashed inside its publish
     _write_oplog_file(oplog_dir, "b1.json", BATCH)
-    _RenameBomb(monkeypatch, 1)
+    crash_publish(monkeypatch, after_commit=True)
     q = run_stream()
     with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination()
@@ -237,8 +188,4 @@ def test_stream_crash_mid_swap_restarts_from_checkpoint(
     # restart from the same checkpoint: batch 1 replays and converges
     run_stream().awaitTermination()
 
-    got = _state(spark, os.path.join(target_root, "c.parquet"))
-    assert got == sorted([
-        (1, "v1", 10), (2, "TWO", 20), (4, "v4", None),
-        (5, "five!", 55), (10, "ten", 100), (11, "eleven", 110),
-    ])
+    assert _state(spark, os.path.join(target_root, "c.parquet")) == WANT

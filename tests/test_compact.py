@@ -8,12 +8,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import publish
 from hummingbird_spark.operators.compact import (
     compact_table,
     parquet_file_count,
 )
 from hummingbird_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, InjectedCrash, crash_publish
 
 
 def test_compact_flat_table(spark, tmp_path):
@@ -54,21 +55,30 @@ def test_compact_preserves_partition_layout(spark, tmp_path):
 
 
 def test_compact_failure_leaves_live_table(spark, tmp_path, monkeypatch):
-    """A rewrite whose verification fails must raise, delete its temp
-    dir, and leave the live table byte-for-byte readable."""
+    """A rewrite whose verification fails must raise, delete its stage,
+    and leave the live table byte-for-byte readable."""
+    import glob
+    import shutil
+
     import hummingbird_spark.operators.compact as mod
 
     target = str(tmp_path / "f")
     load_table(spark, SF_SMOKE, "nation").write.parquet(target)
     rows = spark.read.parquet(target).count()
 
-    monkeypatch.setattr(mod, "_read_count", lambda s, p: -1)
+    def bad_rewrite(spark, path, write, **kw):
+        def duplicating(stage):  # a rewrite that gains rows
+            write(stage)
+            part = sorted(glob.glob(os.path.join(stage, "part-*")))[0]
+            shutil.copy(part, part.replace("part-", "part-dup-"))
+        return publish(spark, path, duplicating, **kw)
+
+    monkeypatch.setattr(mod, "publish", bad_rewrite)
     with pytest.raises(RuntimeError, match="row-count mismatch"):
         compact_table(spark, target)
 
     assert spark.read.parquet(target).count() == rows
-    import os
-    assert not os.path.exists(target + "__compact_tmp")
+    assert os.listdir(tmp_path) == ["f"]
 
 
 def test_bucketed_cdc_then_compact_lifecycle(spark, tmp_path):
@@ -115,33 +125,26 @@ def test_bucketed_cdc_then_compact_lifecycle(spark, tmp_path):
     assert spark.read.parquet(table).count() == 39
 
 
-def test_compact_swap_crash_windows_heal(spark, tmp_path):
-    """Chaos over the rename-aside swap: for each crash window (tmp
-    written / live renamed aside / tmp renamed in, aside left), the
-    debris sweep at the next compact_table call restores a readable,
-    content-identical live table."""
+def test_compact_swap_crash_windows_heal(spark, tmp_path, monkeypatch):
+    """Chaos over the compaction publish: killed before its commit
+    point or right after it (live table moved aside), the next
+    compact_table call recovers a readable, content-identical live
+    table and leaves no sibling behind."""
     import shutil
 
     src = str(tmp_path / "t")
-    spark.range(100).selectExpr("id", "id * 2 AS v") \
-        .repartition(8).write.parquet(src)
-    want = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-
-    for window in ("tmp", "aside", "in"):
-        tmp, aside = src + "__compact_tmp", src + "__compact_aside"
-        # a would-be rewrite the crash stranded
-        spark.read.parquet(src).repartition(1).write \
-            .mode("overwrite").parquet(tmp)
-        if window in ("aside", "in"):
-            os.rename(src, aside)
-        if window == "in":
-            os.rename(tmp, src)
-        report = compact_table(spark, src)
-        assert report["rows"] == 100, window
-        got = sorted(tuple(r) for r in spark.read.parquet(src)
-                     .select("id", "v").collect())
-        assert got == want, window
-        assert not os.path.exists(tmp) and not os.path.exists(aside)
-        shutil.rmtree(src)
+    for after_commit in (False, True):
         spark.range(100).selectExpr("id", "id * 2 AS v") \
             .repartition(8).write.parquet(src)
+        want = sorted(tuple(r) for r in spark.read.parquet(src).collect())
+        crash_publish(monkeypatch, after_commit)
+        with pytest.raises(InjectedCrash):
+            compact_table(spark, src)
+        monkeypatch.undo()
+        report = compact_table(spark, src)
+        assert report["rows"] == 100, after_commit
+        got = sorted(tuple(r) for r in spark.read.parquet(src)
+                     .select("id", "v").collect())
+        assert got == want, after_commit
+        assert os.listdir(tmp_path) == ["t"]
+        shutil.rmtree(src)

@@ -14,7 +14,7 @@ from hummingbird_spark.streaming.crawl import (
     crawl_ingest_batch_against_store,
 )
 from hummingbird_spark.streaming.frontier import frontier_batch_merge
-from hummingbird_spark.streaming.ledger import BatchLedger, commit_swap
+from hummingbird_spark.commit import publish
 
 
 def _page(body):
@@ -77,16 +77,15 @@ def test_frontier_double_apply_is_value_noop(spark, tmp_path):
         '<url><loc>https://b.example/q1</loc>'
         '<lastmod>2026-01-06</lastmod></url></urlset>'))])
 
-    led = BatchLedger(frontier)
     nxt = frontier_batch_merge(spark, batch, frontier) \
         .localCheckpoint(eager=True)
-    commit_swap(nxt, frontier, led, None)
+    publish(spark, frontier, nxt.write.parquet)
     first = sorted(map(tuple, spark.read.parquet(frontier).collect()))
 
     # replay: the merge re-reads its own output; max-merge makes the
     # swap a value-level no-op
     nxt2 = frontier_batch_merge(spark, batch, frontier) \
         .localCheckpoint(eager=True)
-    commit_swap(nxt2, frontier, led, None)
+    publish(spark, frontier, nxt2.write.parquet)
     second = sorted(map(tuple, spark.read.parquet(frontier).collect()))
     assert first == second

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -18,6 +19,7 @@ from hummingbird_spark.streaming.frontier_delta import (
     frontier_delta_batch,
     read_delta_frontier,
 )
+from tests.conftest import InjectedCrash, crash_publish
 
 
 def _xml(entries):
@@ -182,13 +184,13 @@ def test_partial_bucket_swap_replay_converges(spark, tmp_path):
     assert _state(spark, root) == want
 
 
-def test_crash_between_swap_renames_restores_backlog(spark, tmp_path):
-    """The worst swap window: the old bucket dir was moved aside but
-    the new dir never renamed in (and the write temp tree survived).
-    The lost bucket holds BACKLOG rows from an earlier batch that the
-    replayed batch cannot re-derive — rmtree-then-rename would lose
-    them permanently; the rename-aside discipline + tick-start sweep
-    must restore them."""
+def test_crash_between_swap_renames_restores_backlog(spark, tmp_path,
+                                                    monkeypatch):
+    """The worst swap window: batch 1's publish is killed right after a
+    populated bucket dir moved aside, before its replacement moved in.
+    The bucket holds BACKLOG rows from batch 0 that the replayed batch
+    cannot re-derive — rmtree-then-rename would lose them permanently;
+    the tick-start recovery must keep them."""
     from hummingbird_spark.streaming.frontier_delta import _paths
 
     root = str(tmp_path / "fd")
@@ -201,29 +203,26 @@ def test_crash_between_swap_renames_restores_backlog(spark, tmp_path):
     want0 = _state(spark, root)
     queue = _paths(root)[0]
 
-    # simulate batch 1 crashing between the two renames on one
-    # populated bucket: old content sits ONLY in the aside dir; a
-    # junk temp tree is left behind; the ledger never recorded it
-    victim = sorted(os.listdir(queue))[0]
-    assert victim.startswith("bucket=")
-    os.makedirs(queue + ".__aside", exist_ok=True)
-    os.rename(os.path.join(queue, victim),
-              os.path.join(queue + ".__aside", victim))
-    os.makedirs(queue + ".__tmp_deadbeef/bucket=99", exist_ok=True)
-    # the damaged store under-reports (aside is outside the queue)
+    # batch 1 adds a new URL of a backlog host, so it touches that
+    # host's populated bucket; the backlog URL itself is not in it
+    b1 = [("https://h0.example/new", "2026-02-01")]
+    crash_publish(monkeypatch, after_commit=True, under=queue + "/")
+    with pytest.raises(InjectedCrash):
+        frontier_delta_batch(spark, _sm(spark, b1), root,
+                             crawled_path=crawled, n_buckets=8,
+                             batch_id=1)
+    monkeypatch.undo()
+    # the damaged store under-reports (the bucket is moved aside)
     assert len(_state(spark, root)) < len(want0)
 
-    # replay batch 1 — an unrelated host, so the victim bucket's
-    # rows are NOT derivable from the batch itself
-    b1 = [("https://other.example/new", "2026-02-01")]
+    # replay batch 1 (the ledger never recorded it)
     frontier_delta_batch(spark, _sm(spark, b1), root,
                          crawled_path=crawled, n_buckets=8,
                          batch_id=1)
     assert _state(spark, root) == _expected(
         spark, b0 + b1, set())
-    # debris gone: no aside tree, no temp trees
-    assert not os.path.isdir(queue + ".__aside")
-    assert not os.path.isdir(queue + ".__tmp_deadbeef")
+    # debris gone: no stage, aside or commit record
+    assert [d for d in os.listdir(root) if ".__" in d] == []
 
 
 def test_mirror_compacts_on_cadence(spark, tmp_path):

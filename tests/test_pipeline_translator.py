@@ -4,6 +4,8 @@ surface, checked against hand-written DataFrame results."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -231,6 +233,35 @@ def test_out_stage_can_replace_its_own_input(spark, tmp_path):
     ], data_dir=str(tmp_path))
     assert got.count() == 4
     assert spark.read.parquet(str(tmp_path / "t.parquet")).count() == 4
+
+
+def test_out_stage_crash_keeps_collection(spark, tmp_path, monkeypatch):
+    """Kill $out right after the live collection is moved aside (with
+    rmtree-then-rename it would be gone): after recovery it holds the
+    old or the new rows, never nothing, and a rerun converges to the
+    clean-run result."""
+    from hummingbird_spark.commit import recover
+    from hummingbird_spark.pipeline import run_pipeline
+    from tests.conftest import InjectedCrash, crash_publish
+
+    path = str(tmp_path / "hot.parquet")
+    spark.createDataFrame([(9, "z", 1)], "k long, g string, v long") \
+        .write.parquet(path)
+    src = spark.createDataFrame(
+        [(1, "a", 5), (2, "b", 9), (3, "a", 2)], "k long, g string, v long")
+    stages = [{"$match": {"v": {"$gte": 3}}}, {"$out": "hot"}]
+
+    crash_publish(monkeypatch, after_commit=True)
+    with pytest.raises(InjectedCrash):
+        run_pipeline(spark, src, stages, data_dir=str(tmp_path))
+    monkeypatch.undo()
+    recover(spark, path)
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) \
+        in ([9], [1, 2])
+
+    got = run_pipeline(spark, src, stages, data_dir=str(tmp_path))
+    assert sorted(r.k for r in got.collect()) == [1, 2]
+    assert [d for d in os.listdir(tmp_path) if ".__" in d] == []
 
 
 def test_merge_stage_upserts(spark, tmp_path):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import types as T
 
 from hummingbird_spark.operators.dsir import stratified_reservoir
@@ -151,6 +152,50 @@ def test_merge_double_apply_is_noop(spark, tmp_path):
     for r in twice:
         per[r[0]] = per.get(r[0], 0) + 1
     assert per == {"s0": 5, "s1": 5}
+
+
+def test_merge_crash_after_commit_keeps_store(spark, tmp_path,
+                                              monkeypatch):
+    """Kill a store merge right after the live reservoir is moved aside
+    (with rmtree-then-rename it would be gone, and the replay would
+    rebuild the reservoir from its own batch alone): the replay
+    recovers the store first and converges to the clean run."""
+    from pyspark.sql import functions as F
+
+    from hummingbird_spark.operators.dsir import aes_key
+    from hummingbird_spark.streaming.reservoir import (
+        merge_reservoir_batch,
+        read_reservoir,
+    )
+    from tests.conftest import InjectedCrash, crash_publish
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [(i, f"s{i % 2}", 1.0 + i % 5) for i in range(lo, hi)],
+            "doc_id long, source string, w double",
+        ).select("source", "doc_id", "w",
+                 aes_key(F.col("doc_id"), F.col("w"), "t").alias("__key"))
+
+    def state(store):
+        return sorted(tuple(r) for r in read_reservoir(spark, store)
+                      .collect())
+
+    ref, store = str(tmp_path / "ref"), str(tmp_path / "rsv")
+    for path in (ref, store):
+        merge_reservoir_batch(spark, batch(0, 40), path, "source",
+                              "doc_id", 5, batch_id=0)
+    merge_reservoir_batch(spark, batch(40, 80), ref, "source", "doc_id",
+                          5, batch_id=1)
+
+    crash_publish(monkeypatch, after_commit=True, under=store)
+    with pytest.raises(InjectedCrash):
+        merge_reservoir_batch(spark, batch(40, 80), store, "source",
+                              "doc_id", 5, batch_id=1)
+    monkeypatch.undo()
+    merge_reservoir_batch(spark, batch(40, 80), store, "source",
+                          "doc_id", 5, batch_id=1)
+    assert state(store) == state(ref)
+    assert [d for d in os.listdir(tmp_path) if ".__" in d] == []
 
 
 def test_rearrival_with_changed_weight_is_deterministic(spark, tmp_path):

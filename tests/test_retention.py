@@ -10,6 +10,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import recover
 from hummingbird_spark.operators.retention import (
     enforce_capped_from_properties,
     enforce_retention,
@@ -17,6 +18,7 @@ from hummingbird_spark.operators.retention import (
     retention_report,
 )
 from hummingbird_spark.sources.ddl import TableSpec, create_table
+from tests.conftest import InjectedCrash, crash_publish
 
 
 def test_keep_newest_matches_sort_limit(spark):
@@ -77,7 +79,7 @@ def test_enforce_retention_bytes(spark, tmp_path):
     assert after.agg(F.min("seq")).first()[0] == 2000 - n
 
 
-def test_capped_properties_roundtrip(spark, tmp_path):
+def test_capped_properties_roundtrip(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "from_props.parquet")
     df = spark.range(500).select(F.col("id").alias("seq"))
     spec = TableSpec(
@@ -89,6 +91,19 @@ def test_capped_properties_roundtrip(spark, tmp_path):
     assert report["enforced"] and report["rows_after"] == 100
     assert spark.read.parquet(path).agg(F.min("seq")).first()[0] == 400
     rep = retention_report(spark, path)
+    assert rep["capped"] is True and rep["max_rows"] == 100
+
+    # kill a second table's enforcement right after the commit point:
+    # the properties publish with the data, so recovery keeps them
+    path2 = str(tmp_path / "killed.parquet")
+    create_table(spark, df, path2, spec, mode="overwrite")
+    crash_publish(monkeypatch, after_commit=True)
+    with pytest.raises(InjectedCrash):
+        enforce_capped_from_properties(spark, path2, "seq")
+    monkeypatch.undo()
+    recover(spark, path2)
+    assert spark.read.parquet(path2).agg(F.min("seq")).first()[0] == 400
+    rep = retention_report(spark, path2)
     assert rep["capped"] is True and rep["max_rows"] == 100
 
 

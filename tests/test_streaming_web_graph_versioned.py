@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from hummingbird_spark.operators.graph import web_link_edges
@@ -306,17 +307,16 @@ class TestLogicalGc:
         h.check()
         assert h.maintained() == []
 
-    def test_chaos_kill_in_every_gc_window(self, spark, tmp_path):
-        """Kill the GC inside each per-store swap window (tmp
-        written / live aside / tmp in, aside left); the debris sweep
-        at the next batch start must heal, and the next batch must
-        produce the clean twin's state."""
-        import os
-        import shutil
-
+    def test_chaos_kill_in_every_gc_window(self, spark, tmp_path,
+                                           monkeypatch):
+        """Kill the GC inside each store's publish, before its commit
+        point and right after it (live store moved aside); the
+        recovery at the next batch start must heal, and the next batch
+        must produce the clean twin's state."""
         from hummingbird_spark.streaming.web_graph_versioned import (
             gc_web_graph_versioned,
         )
+        from tests.conftest import InjectedCrash, crash_publish
 
         b3 = [_row(0, []), _row(2, [_url(1)])]
         clean = _apply_fixture_batches(Harness(spark, tmp_path / "c"))
@@ -326,26 +326,14 @@ class TestLogicalGc:
         assert want == [(1, 2)]
 
         for store_i in (0, 1, 3):  # links, vers, edges
-            for window in ("tmp", "aside", "in"):
-                h = _apply_fixture_batches(
-                    Harness(spark, tmp_path / f"w{store_i}{window}"))
-                path = h.paths[store_i]
-                tmp, aside = path + ".__gc_tmp", path + ".__gc_aside"
-                # a rewrite that would have been the GC's (content
-                # irrelevant for crash healing — the sweep never
-                # promotes a tmp)
-                spark.read.parquet(path).limit(0).write.parquet(tmp)
-                if window in ("aside", "in"):
-                    os.rename(path, aside)
-                if window == "in":
-                    # promote tmp by hand the way _swap_store does,
-                    # but KEEP the aside (crash before cleanup);
-                    # promote the real GC result? the healed state
-                    # only needs the live dir present — reuse aside
-                    # content for a faithful "renamed in" window
-                    shutil.rmtree(tmp)
-                    shutil.copytree(aside, path)
+            for after_commit in (False, True):
+                root = tmp_path / f"w{store_i}{int(after_commit)}"
+                h = _apply_fixture_batches(Harness(spark, root))
+                crash_publish(monkeypatch, after_commit,
+                              under=h.paths[store_i])
+                with pytest.raises(InjectedCrash):
+                    gc_web_graph_versioned(spark, *h.paths, watermark=2)
+                monkeypatch.undo()
                 h.apply(b3, batch_id=3)
-                assert h.maintained() == want, (store_i, window)
-                assert not os.path.exists(tmp)
-                assert not os.path.exists(aside)
+                assert h.maintained() == want, (store_i, after_commit)
+                assert [d for d in os.listdir(root) if ".__" in d] == []
