@@ -1,4 +1,4 @@
-from hummingbird_spark.operators.compare import compare_tables, sampled_hash_compare
+from hummingbird_spark.operators.compare import compare_tables
 from hummingbird_spark.operators.copy import copy_table, run_migration
 from hummingbird_spark.operators.curate import CurationReport, curate_corpus
 from hummingbird_spark.operators.cluster import (
@@ -20,7 +20,6 @@ __all__ = [
     "copy_table",
     "run_migration",
     "compare_tables",
-    "sampled_hash_compare",
     "block_boundaries",
     "partition_for_copy",
     "curate_corpus",

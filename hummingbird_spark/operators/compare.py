@@ -1,18 +1,29 @@
 """Validation compare — the reference's `-compare` command (SURVEY §2.12
 V1, compare.go:13-31, delegated there to the keyhole comparator:
-doc counts + sampled doc-level compare).
+doc counts + doc-level compare).
 
-Spark-native: per namespace, (a) count equality, (b) bidirectional
-exceptAll diff counts (exact, distributed — no driver materialization),
-(c) optional sampled row-hash compare for wide-value spot checks.
-All three are single declarative plans; at scale the exceptAll is a
-shuffle on the full row which is exactly what a full-fidelity diff
-costs anywhere.
+One shuffle per namespace, one Spark action per `-compare`. Both sides
+are projected onto the source's sorted columns, tagged by side, unioned,
+and grouped by every column; each distinct row gets its count on each
+side (n_s, n_t). Summing over the groups gives
+
+  source_count = Σ n_s            target_count = Σ n_t
+  missing      = Σ max(n_s − n_t, 0)   (= |source EXCEPT ALL target|)
+  extra        = Σ max(n_t − n_s, 0)   (= |target EXCEPT ALL source|)
+
+This is the multiset difference exactly: Spark plans `exceptAll` the same
+way (RewriteExceptAll: tagged union + aggregate on every column), so NULLs
+group together, NaN and −0.0 are normalised and the union widens types as
+`exceptAll` does. Only the counts are needed, so the row replication that
+`exceptAll` adds on top is skipped. `compare_migration` unions every
+namespace's per-row counts, sums them per namespace and collects once, so
+AQE runs all the namespaces' shuffles at the same time.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,20 +46,41 @@ class CompareResult:
         )
 
 
+def _row_counts(source: DataFrame, target: DataFrame, i: int) -> DataFrame:
+    """(i, n_s, n_t) per distinct row of `source` ∪ `target`, over the
+    source's columns: how often the row occurs on each side."""
+    cols = sorted(source.columns)
+    s = source.select(*cols, F.lit(1).alias("__n_s"), F.lit(0).alias("__n_t"))
+    t = target.select(*cols, F.lit(0).alias("__n_s"), F.lit(1).alias("__n_t"))
+    return (s.union(t).groupBy(*cols)
+            .agg(F.sum("__n_s").alias("__n_s"), F.sum("__n_t").alias("__n_t"))
+            .select(F.lit(i).alias("i"), "__n_s", "__n_t"))
+
+
+def _compare_all(pairs: list[tuple[str, DataFrame, DataFrame]]
+                 ) -> list[CompareResult]:
+    """Compare every (namespace, source, target) pair in one action."""
+    if not pairs:
+        return []
+    n_s, n_t = F.col("__n_s"), F.col("__n_t")
+    rows = reduce(DataFrame.union, [
+        _row_counts(s, t, i) for i, (_, s, t) in enumerate(pairs)
+    ]).groupBy("i").agg(
+        F.sum(n_s), F.sum(n_t),
+        F.sum(F.greatest(n_s - n_t, F.lit(0))),
+        F.sum(F.greatest(n_t - n_s, F.lit(0))),
+    ).collect()
+    # a pair with both sides empty has no rows, hence no group
+    totals = {r[0]: tuple(r[1:]) for r in rows}
+    return [CompareResult(ns, *totals.get(i, (0, 0, 0, 0)))
+            for i, (ns, _, _) in enumerate(pairs)]
+
+
 def compare_tables(
     source: DataFrame, target: DataFrame, namespace: str = ""
 ) -> CompareResult:
-    """Full-fidelity compare: counts + bidirectional exceptAll."""
-    cols = sorted(source.columns)
-    s = source.select(*cols)
-    t = target.select(*cols)
-    return CompareResult(
-        namespace=namespace,
-        source_count=s.count(),
-        target_count=t.count(),
-        missing_in_target=s.exceptAll(t).count(),
-        extra_in_target=t.exceptAll(s).count(),
-    )
+    """Full-fidelity multiset compare of two frames, in one action."""
+    return _compare_all([(namespace, source, target)])[0]
 
 
 def compare_migration(spark, cfg) -> list[CompareResult]:
@@ -59,17 +91,13 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
     from hummingbird_spark.operators.copy import (
         _SOURCE_EXTS,
         _table_path,
-        list_source_namespaces,
+        resolve_includes,
         transform_for_include,
     )
-    from hummingbird_spark.config import Include
     from hummingbird_spark.sources.tables import read_source
 
-    includes = cfg.includes or [
-        Include(namespace=ns) for ns in list_source_namespaces(cfg.source)
-    ]
-    out = []
-    for inc in includes:
+    pairs = []
+    for inc in resolve_includes(cfg):
         src = transform_for_include(
             read_source(
                 spark, _table_path(cfg.source, inc.namespace, _SOURCE_EXTS)
@@ -78,68 +106,5 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
         tgt = spark.read.parquet(
             _table_path(cfg.target, inc.target_namespace)
         )
-        out.append(compare_tables(src, tgt, inc.namespace))
-    return out
-
-
-def row_hash(df: DataFrame) -> DataFrame:
-    """Stable per-row fingerprint: sha2 over the canonical JSON of the
-    full row (column-name order fixed). The sampled-compare primitive."""
-    cols = sorted(df.columns)
-    return df.withColumn(
-        "__row_hash",
-        F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256),
-    )
-
-
-def sampled_hash_compare(
-    source: DataFrame,
-    target: DataFrame,
-    key: str,
-    fraction: float = 0.1,
-    seed: int = 42,
-) -> DataFrame:
-    """Sample source keys, join to target on key, compare row hashes.
-    Returns the mismatched keys (empty DataFrame = converged). This is
-    the keyhole 'sample docs and deep-compare' step, broadcast-friendly:
-    the sample is small by construction, so the join broadcasts it."""
-    s = row_hash(source).select(key, F.col("__row_hash").alias("__src_hash"))
-    t = row_hash(target).select(key, F.col("__row_hash").alias("__tgt_hash"))
-    sample = s.sample(fraction=fraction, seed=seed)
-    return (
-        F.broadcast(sample)
-        .join(t, key, "left")
-        .filter(
-            F.col("__tgt_hash").isNull()
-            | (F.col("__src_hash") != F.col("__tgt_hash"))
-        )
-        .select(key, "__src_hash", "__tgt_hash")
-    )
-
-
-def column_diff_report(source: DataFrame, target: DataFrame,
-                       key: str) -> dict:
-    """Key-matched per-COLUMN mismatch census — the triage layer on
-    top of compare_tables' row-level verdict: once a compare fails,
-    this answers "which columns diverge, and how often" in one join +
-    one aggregate (V1 depth; the reference stops at doc counts,
-    compare.go:13-31).
-
-    Returns {column: mismatch_count} over keys present on BOTH sides
-    (missing/extra keys are compare_tables' row-level business),
-    plus '__keys_compared'. Null-safe: NULL==NULL counts as a match."""
-    shared = [c for c in source.columns
-              if c in target.columns and c != key]
-    s = source.select(key, *shared).alias("s")
-    t = target.select(key, *shared).alias("t")
-    joined = s.join(t, F.col(f"s.{key}").eqNullSafe(F.col(f"t.{key}")))
-    aggs = [
-        F.sum(
-            (~F.col(f"s.{c}").eqNullSafe(F.col(f"t.{c}"))).cast("int")
-        ).alias(c)
-        for c in shared
-    ] + [F.count(F.lit(1)).alias("__keys_compared")]
-    row = joined.agg(*aggs).collect()[0]
-    return {c: int(row[c] or 0) for c in shared} | {
-        "__keys_compared": int(row["__keys_compared"])
-    }
+        pairs.append((inc.namespace, src, tgt))
+    return _compare_all(pairs)

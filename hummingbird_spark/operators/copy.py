@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hummingbird_spark.commit import _adopt_parquet_files
-from hummingbird_spark.config import Include, MigrationConfig
+from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.filters import mongo_filter_to_column
 from hummingbird_spark.functions.masks import mask_dataframe
 from hummingbird_spark.operators.split import partition_for_copy
@@ -100,6 +100,35 @@ def list_source_namespaces(source: str) -> list[str]:
     return sorted(names)
 
 
+def resolve_includes(cfg: MigrationConfig) -> list[Include]:
+    """The includes to copy or compare, wildcards expanded against the
+    source's collections (data_copier.go:78-102). File sources name bare
+    collections, so a pattern's collection part is matched against them
+    and its db, when concrete, is kept. An empty include list means every
+    collection (minimum.json); a pattern that matches nothing raises."""
+    available = list_source_namespaces(cfg.source)
+    if not cfg.includes:
+        return [Include(namespace=ns) for ns in available]
+    out: list[Include] = []
+    for inc in cfg.includes:
+        if "*" not in inc.namespace:
+            out.append(inc)
+            continue
+        db, coll = split_namespace(inc.namespace)
+        if coll and "*" not in db:
+            found = expand_namespaces([f"{db}.{c}" for c in available],
+                                      [inc.namespace])
+        else:  # `*`, `*.coll`: bare collection names carry no db
+            found = expand_namespaces(available, [coll or db])
+        if not found:
+            raise ConfigError(
+                f"{inc.namespace} matches no collection in {cfg.source}")
+        out += [Include(namespace=ns, filter=inc.filter, limit=inc.limit,
+                        masks=inc.masks, method=inc.method)
+                for ns in found]
+    return out
+
+
 def transform_for_include(df: DataFrame, include: Include) -> DataFrame:
     """The per-namespace dataflow: filter ∧ mask ∧ limit
     (task.go:54-61 + mask.go:23-28 + includes.go:16)."""
@@ -160,8 +189,8 @@ def copy_table(
 
     key_in_schema = cfg.key in df.columns
     if key_in_schema:
-        # unfiltered copy: size partitions from parquet footers instead
-        # of a count scan
+        # unfiltered copy: size partitions from parquet footers; anything
+        # else is left to AQE (no count scan either way)
         rows = None
         if src_path is not None and not include.filter \
                 and not include.limit and mode == "overwrite":
@@ -221,34 +250,16 @@ def run_migration(
     stages of each in parallel across the cluster; at 100 TB per-table
     parallelism (partitions) dominates, not table count.
     """
+    expanded = resolve_includes(cfg)
     if cfg.drop and os.path.isdir(cfg.target) and not resume:
         # Drop target namespaces (migrator.go:155-193), scoped to tables
         # we are about to write.
-        for inc in cfg.includes or []:
+        for inc in expanded:
             p = _table_path(cfg.target, inc.target_namespace)
             if os.path.isdir(p):
                 shutil.rmtree(p)
 
-    available = list_source_namespaces(cfg.source)
     report = MigrationReport()
-
-    if cfg.includes:
-        expanded: list[Include] = []
-        for inc in cfg.includes:
-            db, coll = split_namespace(inc.namespace)
-            if "*" in inc.namespace:
-                for ns in expand_namespaces(available, [inc.namespace]):
-                    expanded.append(
-                        Include(namespace=ns, filter=inc.filter,
-                                limit=inc.limit, masks=inc.masks,
-                                method=inc.method)
-                    )
-            else:
-                expanded.append(inc)
-    else:
-        # empty include list copies everything qualified (minimum.json)
-        expanded = [Include(namespace=ns) for ns in available]
-
     os.makedirs(cfg.target, exist_ok=True)
     if tracker is not None:  # web.ProgressTracker status feed (A4)
         tracker.add(*[inc.namespace for inc in expanded])

@@ -8,6 +8,8 @@ equivalents, used for different purposes:
     samples the key distribution and produces contiguous, balanced ranges
     without a global sort. This is what the copy pipeline uses: at 100 TB
     it costs one shuffle whose partitioning is then reused by the write.
+    It never counts rows first: footer stats size an unfiltered parquet
+    copy, and AQE sizes everything else.
 
   - `block_boundaries` (exact parity path): reproduces the reference's
     "boundary every Nth row" semantics declaratively with
@@ -47,10 +49,13 @@ def block_boundaries(df: DataFrame, key: str, block: int = 10_000) -> DataFrame:
 
 def partition_for_copy(df: DataFrame, key: str, rows: int | None = None,
                        block: int = 10_000, max_partitions: int = 4096) -> DataFrame:
-    """Range-partition `df` on `key` into ~`block`-row partitions —
-    the scale-path splitter. `rows` (if known) avoids a count scan;
-    parquet counts are metadata-only so the default is cheap.
+    """Range-partition `df` on `key` — the scale-path splitter. With
+    `rows` known (parquet footers of an unfiltered copy), into
+    ~`block`-row partitions. Otherwise no count scan: the range shuffle
+    gets no partition number, so AQE sizes it at run time, coalescing
+    the `spark.sql.shuffle.partitions` ranges toward its advisory size.
     """
-    n = rows if rows is not None else df.count()
-    num = max(1, min(max_partitions, math.ceil(n / block)))
+    if rows is None:
+        return df.repartitionByRange(F.col(key))
+    num = max(1, min(max_partitions, math.ceil(rows / block)))
     return df.repartitionByRange(num, F.col(key))

@@ -11,10 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
-from hummingbird_spark.operators.compare import (
-    compare_tables,
-    sampled_hash_compare,
-)
+from hummingbird_spark.operators.compare import compare_tables
 from hummingbird_spark.operators.copy import copy_table, run_migration
 from hummingbird_spark.operators.split import block_boundaries
 from tests.conftest import SF_SMOKE
@@ -143,17 +140,6 @@ def test_compare_converged_and_diverged(spark, target_dir):
     assert res2.extra_in_target == 0
 
 
-def test_sampled_hash_compare(spark, target_dir):
-    src = spark.read.parquet(f"{SF_SMOKE}/customer.parquet")
-    assert sampled_hash_compare(src, src, "c_custkey").count() == 0
-    tampered = src.withColumn(
-        "c_acctbal",
-        F.when(F.col("c_custkey") == 1, 9.99).otherwise(F.col("c_acctbal")),
-    )
-    diff = sampled_hash_compare(src, tampered, "c_custkey", fraction=1.0)
-    assert [r.c_custkey for r in diff.collect()] == [1]
-
-
 def test_compare_migration_with_includes(spark, target_dir):
     """-compare semantics: filter+mask+rename-aware per-namespace check
     (compare.go:13-31)."""
@@ -254,18 +240,3 @@ def test_copy_writes_bloom_filters(spark, tmp_path):
     a = spark.read.parquet(f"{plain_t}/orders.parquet").count()
     b = spark.read.parquet(f"{bloom_t}/orders.parquet").count()
     assert a == b > 0
-
-
-def test_column_diff_report(spark):
-    from hummingbird_spark.operators.compare import column_diff_report
-
-    src = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, None, 30.0)],
-        "k int, s string, v double")
-    dst = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "X", 20.0), (3, None, 99.0), (4, "e", 0.0)],
-        "k int, s string, v double")
-    rep = column_diff_report(src, dst, "k")
-    assert rep["__keys_compared"] == 3  # key 4 is extra, not compared
-    assert rep["s"] == 1   # row 2 differs
-    assert rep["v"] == 1   # row 3 differs; NULL==NULL matched in s
