@@ -66,7 +66,6 @@ SLOW_NODE_IDS = {
     "test_cdc.py::test_bucketed_apply_matches_flat",
     "test_cdc.py::test_bucketed_evolved_column_survives_bucket_rewrite",
     "test_cdc.py::test_evolved_column_survives_later_batches",
-    "test_cdc_fold_properties.py::test_reduced_model_equals_ordered_replay",
     "test_cli.py::test_cli_frontier",
     "test_crawl_loop_e2e.py::test_crawl_loop_end_to_end",
     "test_crawl_loop_e2e.py::test_recrawl_loop_updates_curated",

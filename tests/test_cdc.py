@@ -217,6 +217,19 @@ def test_fold_same_event_set_and_unset_nets_to_unset(spark):
     assert json.loads(r.unset_json) == {"x": 1}
 
 
+def test_fold_orders_same_key_transaction_members(spark):
+    # members of one applyOps share the outer event's (ts, seq): their
+    # position in the transaction is the only order between them
+    tx = {"applyOps": [
+        {"op": "u", "ns": "db.c", "o": {"$set": {"x": f"v{i}"}},
+         "o2": {"_id": 8}}
+        for i in range(12)
+    ]}
+    red = _reduce(spark, [_ev(1, "c", tx, ns="db.$cmd")])
+    assert red["8"].action == "patch"
+    assert json.loads(red["8"].set_json) == {"x": "v11"}
+
+
 def test_fold_delete_then_reinsert(spark):
     red = _reduce(spark, [
         _ev(1, "d", {"_id": 4}),
