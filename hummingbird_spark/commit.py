@@ -29,6 +29,9 @@ Hadoop rename onto an existing directory nests the source inside it.
 All file-system work goes through the Hadoop FileSystem API, so the
 protocol holds on any Hadoop filesystem whose renames are atomic
 (local, HDFS). One writer per path is assumed (streaming/ledger.py).
+Small files (ledgers, cursors, schema records) go through the same API:
+`write_text` publishes one, `put_text` writes one into a stage,
+`read_text` reads one.
 """
 
 from __future__ import annotations
@@ -125,13 +128,8 @@ def recover(spark: SparkSession, path: str) -> None:
     path = path.rstrip("/")
     fs, record = _fs(spark, path + _RECORD)
     Path = _path_class(spark._jvm)
-    lines = []
-    if fs.exists(record):
-        stream = fs.open(record)
-        try:
-            lines = bytes(stream.readAllBytes()).decode().split("\n")
-        finally:
-            stream.close()
+    text = _read(fs, record)
+    lines = [] if text is None else text.split("\n")
     if lines[-1:] == [_END]:
         _roll_forward(fs, Path, path, lines[0], lines[1:-1])
         return
@@ -144,9 +142,29 @@ def recover(spark: SparkSession, path: str) -> None:
 def write_text(spark: SparkSession, path: str, text: str) -> None:
     """Replace the small file at `path` with `text` by `publish`; read
     it after `recover(spark, path)`."""
-    fs, _ = _fs(spark, path)
-    Path = _path_class(spark._jvm)
-    publish(spark, path, lambda stage: _mutate(fs, "write", Path(stage), text))
+    publish(spark, path, lambda stage: put_text(spark, stage, text))
+
+
+def put_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write the small file at `path` in place, with no publish: for a
+    file inside a stage, which lands with the stage's publish."""
+    fs, hpath = _fs(spark, path)
+    _mutate(fs, "write", hpath, text)
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    """The text of the small file at `path`, or None when it is absent."""
+    return _read(*_fs(spark, path))
+
+
+def _read(fs, hpath) -> str | None:
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        return bytes(stream.readAllBytes()).decode()
+    finally:
+        stream.close()
 
 
 def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,

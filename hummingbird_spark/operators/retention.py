@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.commit import publish, put_text, recover
 from hummingbird_spark.operators.compact import table_bytes
 from hummingbird_spark.sources.ddl import read_table_properties
 
@@ -123,9 +123,8 @@ def enforce_retention(
     def write(stage: str) -> None:
         kept.write.parquet(stage)
         if props:  # publishes together with the data
-            with open(os.path.join(stage, "_table_properties.json"),
-                      "w") as f:
-                json.dump(props, f, indent=2, sort_keys=True)
+            put_text(spark, f"{stage}/_table_properties.json",
+                     json.dumps(props, indent=2, sort_keys=True))
 
     def verify(stage: str) -> None:
         n_stage = spark.read.parquet(stage).count()

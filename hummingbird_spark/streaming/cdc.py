@@ -20,10 +20,12 @@ Write-model semantics (GetWriteModels, oplog_utils.go:208-281):
 
 Ordering discipline (ST6): the reference preserves per-document mutation
 order with ordered bulks. Here each micro-batch is folded per key in
-(ts, seq) order — an `applyInPandas` grouped fold, the one genuinely
-stateful custom operator in the engine (everything around it is Column
-expressions). Batches are serialized by the streaming engine, so
-intra-batch fold + inter-batch serialization reproduces converged state.
+(ts, seq, idx) order — idx being an op's position inside its applyOps
+transaction — by a declarative `aggregate` over the key's collected
+events. Decode, fold and merge are all Column expressions: a batch
+scans its source once, parses each event's o/o2 once, and never leaves
+the JVM. Batches are serialized by the streaming engine, so intra-batch
+fold + inter-batch serialization reproduces converged state.
 A patch whose key is absent from the target is a no-op (Mongo UpdateOne
 without upsert), and re-applying any prefix of the log is idempotent —
 replays after checkpoint recovery are safe (ST7).
@@ -42,13 +44,14 @@ import os
 
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from hummingbird_spark.commit import _fs, publish, recover
+from hummingbird_spark.commit import (
+    _fs, publish, put_text, read_text, recover,
+)
 from hummingbird_spark.streaming.oplog import (
     namespace_match_column,
     skip_oplog,
@@ -66,37 +69,66 @@ OPLOG_SCHEMA = T.StructType([
     T.StructField("o2", T.StringType()),   # JSON: update match key
 ])
 
-_MODEL_SCHEMA = T.StructType([
-    T.StructField("ns", T.StringType()),
-    T.StructField("key", T.StringType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("seq", T.LongType()),
-    T.StructField("kind", T.StringType()),       # replace|patch|delete
-    T.StructField("doc", T.StringType()),        # JSON for replace
-    T.StructField("set_json", T.StringType()),   # JSON for patch sets
-    T.StructField("unset_json", T.StringType()),  # JSON for patch unsets
-])
+_DOC = "map<string,variant>"  # a parsed JSON object
+_NO_DOC = f"CAST(map() AS {_DOC})"
+_NO_NAMES = "CAST(array() AS array<string>)"
 
-_REDUCED_SCHEMA = T.StructType([
-    T.StructField("ns", T.StringType()),
-    T.StructField("key", T.StringType()),
-    T.StructField("action", T.StringType()),      # replace|patch|delete
-    T.StructField("doc", T.StringType()),
-    T.StructField("set_json", T.StringType()),
-    T.StructField("unset_json", T.StringType()),
-])
+
+def _as_doc(variant: str, path: str = "$") -> str:
+    """SQL: the value at `path` in `variant` as a map when it is a JSON
+    object, else null."""
+    return f"try_variant_get({variant}, '{path}', '{_DOC}')"
+
+
+# The decode and the fold are SQL text: one py4j call per projection
+# instead of one per Column-builder call, which cost a micro-batch about
+# 0.3 s of driver time before any task ran.
+_DECODE_STEPS = [
+    # parse o and o2, once each
+    ["resolved_ns AS ns", "ts", "seq", "idx", "op",
+     f"from_json(o, '{_DOC}') AS o", f"from_json(o2, '{_DOC}') AS o2"],
+    # the key and the update forms, read from the parsed maps; a v2
+    # diff applies only the FIRST of u/i, else d (oplog_utils.go:250-263)
+    ["ns", "ts", "seq", "idx", "op", "o",
+     "coalesce(CAST(o2['_id'] AS STRING), CAST(o['_id'] AS STRING)) AS key",
+     _as_doc("o['diff']") + " AS diff",
+     "coalesce(" + _as_doc("o['diff']", "$.u") + ", "
+     + _as_doc("o['diff']", "$.i") + ") AS diff_set",
+     _as_doc("o['diff']", "$.d") + " AS diff_unset",
+     _as_doc("o['$set']") + " AS v4_set",
+     _as_doc("o['$unset']") + " AS v4_unset"],
+    ["ns", "key", "ts", "seq", "idx", "o",
+     """CASE WHEN op = 'd' THEN 'delete' WHEN op = 'i' THEN 'replace'
+             WHEN diff IS NOT NULL OR v4_set IS NOT NULL
+                  OR v4_unset IS NOT NULL THEN 'patch'
+             ELSE 'replace' END AS kind""",  # else: a full-document u
+     "IF(diff IS NULL, v4_set, diff_set) AS patch_set",
+     """IF(diff IS NULL, v4_unset, IF(diff_set IS NULL, diff_unset, NULL))
+        AS patch_unset"""],
+    ["ns", "key", "ts", "seq", "idx", "kind",
+     "IF(kind = 'replace', o, NULL) AS doc",
+     "IF(kind = 'patch', patch_set, NULL) AS sets",
+     "IF(kind = 'patch', map_keys(patch_unset), NULL) AS unsets"],
+]
 
 
 def decode_write_models(
     oplogs: DataFrame, includes: list[str] | None = None,
     ejson: bool = False,
 ) -> DataFrame:
-    """Oplog frame -> write-model frame. Pure Column expressions
-    (filters, JSON path extraction) — streaming-safe, no state.
+    """Oplog frame -> write-model frame: one row per member op with
+    ns, key, ts, seq, idx (position inside an applyOps transaction),
+    kind (replace|patch|delete), doc (the replace document), sets and
+    unsets (the patch's `$set`/diff fields and its `$unset`/diff.d
+    names). Pure Column expressions — streaming-safe, no state.
+
+    o and o2 are parsed once each into `map<string,variant>`; the key,
+    the update form and every payload are read from those maps, and doc
+    and sets stay parsed for the fold.
 
     `ejson=True` normalizes MongoDB extended-JSON type wrappers
     ({"$numberLong": ...}, {"$date": ...}, {"$oid": ...}) in o/o2
-    before extraction — the transport shape a JSON-encoded oplog or
+    before the parse — the transport shape a JSON-encoded oplog or
     change stream produces (the reference consumes native BSON and
     never sees wrappers; see functions/ejson.py)."""
     df = unnest_apply_ops(skip_oplog(oplogs, includes))
@@ -109,144 +141,71 @@ def decode_write_models(
     # re-apply include routing to them (outer $cmd ns already passed)
     df = df.filter(
         namespace_match_column(F.col("resolved_ns"), includes)
-    ).filter(F.col("op").isin("i", "u", "d"))
-
-    # Extract every needed fragment with json_tuple: ONE parse of o (and
-    # of o2 / diff when present) per event. The same logic written as
-    # get_json_object expressions re-parses o ~10x per update event
-    # (each CASE branch re-evaluates its own parse) — measured ~45 µs/row
-    # in the decode projection; this is the CDC hot path at scale.
-    # json_tuple is a generator, one per select, hence the chain.
-    df = df.select(
-        "resolved_ns", "ts", "seq", "op", "o", "o2",
-        F.json_tuple("o", "_id", "diff", "$set", "$unset")
-        .alias("__o_id", "__diff", "__v4_set", "__v4_unset"),
-    ).select(
-        "*", F.json_tuple("o2", "_id").alias("__o2_id")
-    ).select(
-        "*", F.json_tuple("__diff", "u", "i", "d")
-        .alias("__diff_u", "__diff_i", "__diff_d"),
+        & F.col("op").isin("i", "u", "d")
     )
-
-    key = F.coalesce("__o2_id", "__o_id")
-    diff_set = F.coalesce("__diff_u", "__diff_i")
-    diff_unset = F.col("__diff_d")
-    v4_set = F.col("__v4_set")
-    v4_unset = F.col("__v4_unset")
-    has_diff = F.col("__diff").isNotNull()
-    has_v4 = v4_set.isNotNull() | v4_unset.isNotNull()
-
-    # v2 diff applies only the FIRST of u/i, else d (oplog_utils.go:250-263)
-    patch_set = F.when(has_diff, diff_set).otherwise(v4_set)
-    patch_unset = F.when(
-        has_diff, F.when(diff_set.isNull(), diff_unset)
-    ).otherwise(v4_unset)
-
-    kind = (
-        F.when(F.col("op") == "d", F.lit("delete"))
-        .when(F.col("op") == "i", F.lit("replace"))
-        .when(has_diff | has_v4, F.lit("patch"))
-        .otherwise(F.lit("replace"))  # full-document replace (u)
-    )
-    return df.select(
-        F.col("resolved_ns").alias("ns"),
-        key.alias("key"),
-        F.col("ts"),
-        F.col("seq"),
-        kind.alias("kind"),
-        F.when(kind == "replace", F.col("o")).alias("doc"),
-        F.when(kind == "patch", patch_set).alias("set_json"),
-        F.when(kind == "patch", patch_unset).alias("unset_json"),
-    ).filter(F.col("key").isNotNull())
+    for step in _DECODE_STEPS:
+        df = df.selectExpr(*step)
+    return df.filter("key IS NOT NULL")
 
 
-class _KeyFold:
-    """Sequential fold state for one (ns, key)'s ordered events —
-    GetWriteModels + ordered-bulk semantics collapsed to one effective
-    action per key."""
+# One key's events, ordered by (ts, seq, idx), folded into a state
+# (mode, doc, unsets) with `aggregate`. mode null is a patch on the
+# existing row, with doc holding its sets; after a replace, doc is the
+# replacement document and later patches merge into it. A patch sets
+# before it unsets, so a same-event set + unset of one field nets to the
+# unset; a patch after a delete matches nothing.
+_FOLD = f"""aggregate(
+  array_sort(
+    collect_list(struct(
+      struct(ts, seq, idx) AS at, kind, doc,
+      coalesce(sets, {_NO_DOC}) AS sets,
+      coalesce(unsets, {_NO_NAMES}) AS unsets)),
+    (a, b) -> CASE WHEN a.at < b.at THEN -1 WHEN a.at > b.at THEN 1
+                   ELSE 0 END),
+  named_struct('mode', CAST(NULL AS STRING), 'doc', {_NO_DOC},
+               'unsets', {_NO_NAMES}),
+  (s, e) -> CASE
+    WHEN e.kind = 'delete' THEN
+      named_struct('mode', 'delete', 'doc', {_NO_DOC}, 'unsets', {_NO_NAMES})
+    WHEN e.kind = 'replace' THEN
+      named_struct('mode', 'replace', 'doc', e.doc, 'unsets', {_NO_NAMES})
+    WHEN s.mode = 'delete' THEN s
+    ELSE named_struct(
+      'mode', s.mode,
+      'doc', map_concat(
+        map_filter(s.doc, (k, v) -> NOT array_contains(map_keys(e.sets), k)
+                                    AND NOT array_contains(e.unsets, k)),
+        map_filter(e.sets, (k, v) -> NOT array_contains(e.unsets, k))),
+      'unsets', array_union(array_except(s.unsets, map_keys(e.sets)),
+                            e.unsets))
+  END)"""
 
-    __slots__ = ("ns", "key", "mode", "doc", "sets", "unsets")
-
-    def __init__(self, ns: str, key: str):
-        self.ns, self.key = ns, key
-        self.mode: str | None = None  # None = patch-on-existing
-        self.doc: dict = {}
-        self.sets: dict = {}
-        self.unsets: list[str] = []
-
-    def step(self, kind, doc, set_json, unset_json) -> None:
-        if kind == "delete":
-            self.mode, self.doc, self.sets, self.unsets = "delete", {}, {}, []
-        elif kind == "replace":
-            self.mode, self.doc = "replace", json.loads(doc)
-            self.sets, self.unsets = {}, []
-        else:  # patch
-            s = json.loads(set_json) if set_json else {}
-            u = list(json.loads(unset_json)) if unset_json else []
-            if self.mode == "delete":
-                return  # UpdateOne matches nothing -> no-op
-            if self.mode == "replace":
-                self.doc.update(s)
-                for k in u:
-                    self.doc.pop(k, None)
-            else:
-                self.sets.update(s)
-                # Prior unsets overridden by this event's sets; then this
-                # event's unsets apply LAST (within one event the declared
-                # order is sets-then-unsets, matching apply_cdc_batch and
-                # the ordered replayer), so a same-event set+unset of one
-                # field nets to the unset, not a cancel.
-                self.unsets = [k for k in self.unsets if k not in s]
-                for k in u:
-                    self.sets.pop(k, None)
-                    if k not in self.unsets:
-                        self.unsets.append(k)
-
-    def finish(self) -> tuple:
-        if self.mode == "delete":
-            return (self.ns, self.key, "delete", None, None, None)
-        if self.mode == "replace":
-            return (self.ns, self.key, "replace", json.dumps(self.doc),
-                    None, None)
-        return (self.ns, self.key, "patch", None,
-                json.dumps(self.sets) if self.sets else None,
-                json.dumps(dict.fromkeys(self.unsets, 1))
-                if self.unsets else None)
-
-
-_REDUCED_COLS = ["ns", "key", "action", "doc", "set_json", "unset_json"]
-
-
-def _fold_partition(batches):
-    """mapInPandas kernel: fold a whole hash partition in one pass.
-    The partition is repartitioned on (ns, key) and sorted by
-    (ns, key, ts, seq), so each key's events are contiguous — but may
-    SPAN Arrow batches, hence the carry across the iterator."""
-    carry: _KeyFold | None = None
-    for pdf in batches:
-        out = []
-        for r in pdf.itertuples(index=False):
-            if carry is None or (r.ns, r.key) != (carry.ns, carry.key):
-                if carry is not None:
-                    out.append(carry.finish())
-                carry = _KeyFold(r.ns, r.key)
-            carry.step(r.kind, r.doc, r.set_json, r.unset_json)
-        if out:
-            yield pd.DataFrame(out, columns=_REDUCED_COLS)
-    if carry is not None:
-        yield pd.DataFrame([carry.finish()], columns=_REDUCED_COLS)
+_FOLD_OUT = [
+    "ns", "key", "action",
+    "IF(action = 'replace', to_json(s.doc), NULL) AS doc",
+    "IF(action = 'patch' AND size(s.doc) > 0, to_json(s.doc), NULL)"
+    " AS set_json",
+    """IF(action = 'patch' AND size(s.unsets) > 0,
+          to_json(map_from_arrays(
+            s.unsets, array_repeat(1, size(s.unsets)))), NULL)
+       AS unset_json""",
+]
 
 
 def reduce_write_models(models: DataFrame) -> DataFrame:
     """Per-key ordered fold (ST6): many events per key -> one effective
-    write model. One shuffle on (ns, key), a partition-local sort, then
-    a single Arrow-batched pass per partition (NOT per-group
-    applyInPandas — per-key pandas invocations cost ~1-2 ms each, which
-    dominated the apply path at 5k keys/batch; the partition fold is one
-    Python pass total)."""
-    sorted_models = models.repartition(F.col("ns"), F.col("key")) \
-        .sortWithinPartitions("ns", "key", "ts", "seq")
-    return sorted_models.mapInPandas(_fold_partition, schema=_REDUCED_SCHEMA)
+    write model (ns, key, action, doc, set_json, unset_json; the payloads
+    as JSON text). One shuffle on (ns, key); each key's events are
+    ordered by (ts, seq, idx) and folded with `aggregate` (see _FOLD) —
+    the last replace or delete is a barrier, later patches fold field by
+    field, patches after a delete are dropped, patches after a replace
+    merge into its document. Everything runs in the JVM; the state is
+    serialized once, at the output."""
+    return (
+        models.groupBy("ns", "key").agg(F.expr(_FOLD).alias("s"))
+        .selectExpr("*", "coalesce(s.mode, 'patch') AS action")
+        .selectExpr(*_FOLD_OUT)
+    )
 
 
 def _empty_target(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -355,13 +314,16 @@ def apply_cdc_batch(
     target rows carry NULL for the new columns. Columns the target
     already carries are always retained, whatever this batch mentions
     (see _retain_target_columns).
+
+    Each publish records the target's schema in `_schema.json`, beside
+    the data files, and the next batch reads the target with it instead
+    of inferring it (see _read_flat_target).
     """
     # a publish a crash interrupted lands whole or not at all before
     # the read; the replayed batch then re-applies idempotently (ST7)
     recover(spark, target_path)
-    target = None
-    if os.path.exists(os.path.join(target_path, "_SUCCESS")):
-        target = spark.read.parquet(target_path)
+    target = _read_flat_target(spark, target_path)
+    if target is not None:
         schema = _retain_target_columns(schema, target)
     if evolve:
         schema = evolve_schema(reduced, schema)
@@ -383,9 +345,27 @@ def apply_cdc_batch(
 
     def write(stage: str) -> ApplyStats:
         result.write.parquet(stage)
+        # publishes together with the data; the next batch reads by it
+        put_text(spark, f"{stage}/{_SCHEMA_FILE}", result.schema.json())
         return _stats_or_recompute(obs, m, target, key)  # pre-publish
 
     return publish(spark, target_path, write)
+
+
+_SCHEMA_FILE = "_schema.json"
+
+
+def _read_flat_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """The flat target as last published, or None before its first
+    batch. Read with the schema its publish recorded, which spares the
+    footer-reading job of schema inference; a target written without
+    the record infers its schema."""
+    recorded = read_text(spark, f"{path}/{_SCHEMA_FILE}")
+    if recorded is not None:
+        schema = T.StructType.fromJson(json.loads(recorded))
+        return spark.read.schema(schema).parquet(path)
+    fs, success = _fs(spark, f"{path}/_SUCCESS")
+    return spark.read.parquet(path) if fs.exists(success) else None
 
 
 @dataclass(frozen=True)
@@ -566,7 +546,8 @@ def apply_cdc_batch_bucketed(
         .cache()
     )
     try:
-        if not os.path.exists(os.path.join(target_path, "_SUCCESS")):
+        fs, success = _fs(spark, f"{target_path}/_SUCCESS")
+        if not fs.exists(success):
             # first batch: initialize the bucketed layout from scratch.
             # __bucket is derived from the MERGED rows' key (computing it
             # from the pre-merge join columns reads the null target side

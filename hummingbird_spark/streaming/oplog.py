@@ -23,6 +23,31 @@ from pyspark.sql import functions as F
 _CMD_KEYS = ("drop", "create", "createIndexes", "renameCollection",
              "dropDatabase")
 
+# The predicates and the unnest are SQL text: one py4j call each instead
+# of one per Column-builder call, which adds up to a noticeable share of
+# a small micro-batch's driver time.
+_DB = "substring_index(ns, '.', 1)"
+_CMD_COLL = "coalesce(" + ", ".join(
+    f"get_json_object(o, '$.{k}')" for k in _CMD_KEYS) + ")"
+_RESOLVED_NS = (f"CASE WHEN endswith(ns, '.$cmd') AND {_CMD_COLL} IS NOT NULL"
+                f" THEN concat({_DB}, '.', {_CMD_COLL}) ELSE ns END")
+_IS_APPLY_OPS = "op = 'c' AND get_json_object(o, '$.applyOps') IS NOT NULL"
+
+# an applyOps member; o/o2 stay JSON text until decode parses them
+_MEMBER = "struct<op:string,ns:string,o:string,o2:string>"
+
+
+def _members(o: str) -> str:
+    """SQL: the applyOps members of the command document `o`, or null."""
+    return f"from_json({o}, 'struct<applyOps:array<{_MEMBER}>>').applyOps"
+
+
+# one event's ops: its applyOps members, a member transaction flattened
+# one level into its own members, or else the event itself
+_OPS = (f"IF(op = 'c', flatten(transform({_members('o')}, m -> IF(m.op = 'c',"
+        f" coalesce({_members('m.o')}, CAST(array() AS array<{_MEMBER}>)),"
+        " array(m)))), array(struct(op, ns, o, o2)))")
+
 
 def namespace_match_column(ns_col: Column, patterns: list[str] | None) -> Column:
     """Column-level SkipNamespace (migrator.go:237-251): does the event's
@@ -49,75 +74,44 @@ def skip_oplog(df: DataFrame, includes: list[str] | None = None) -> DataFrame:
       - resolve `db.$cmd` command events to their affected namespace
         (from the command body's collection argument),
       - keep only events whose resolved namespace matches `includes`.
+    applyOps transactions pass regardless of the include match: each
+    member carries its own namespace and is routed after unnesting
+    (oplog_utils.go:212-236).
     """
-    db = F.split(F.col("ns"), r"\.", 2).getItem(0)
-    is_cmd = F.col("ns").endswith(".$cmd")
-
-    # resolved collection for $cmd events: first present command key's value
-    cmd_coll = F.coalesce(
-        *[F.get_json_object(F.col("o"), f"$.{k}") for k in _CMD_KEYS]
-    )
-    resolved_ns = F.when(
-        is_cmd & cmd_coll.isNotNull(), F.concat(db, F.lit("."), cmd_coll)
-    ).otherwise(F.col("ns"))
-
-    out = df.withColumn("resolved_ns", resolved_ns)
-    out = out.filter(
-        (F.col("resolved_ns") != "")
-        & (~db.isin("local", "config"))
-        & F.col("resolved_ns").isNotNull()
-    )
-    # applyOps transactions pass through here regardless of include match:
-    # each member carries its own namespace and is routed after unnesting
-    # (oplog_utils.go:212-236).
-    is_apply_ops = (F.col("op") == "c") & F.get_json_object(
-        F.col("o"), "$.applyOps"
-    ).isNotNull()
+    out = df.selectExpr("*", f"{_RESOLVED_NS} AS resolved_ns")
     return out.filter(
-        namespace_match_column(F.col("resolved_ns"), includes) | is_apply_ops
+        F.expr(f"resolved_ns != '' AND {_DB} NOT IN ('local', 'config')")
+        & (namespace_match_column(F.col("resolved_ns"), includes)
+           | F.expr(_IS_APPLY_OPS))
     )
 
 
-def unnest_apply_ops(df: DataFrame, max_depth: int = 2) -> DataFrame:
+def unnest_apply_ops(df: DataFrame) -> DataFrame:
     """Expand `c`/applyOps transaction events into their member oplogs
-    (oplog_utils.go:212-236) and pass every other op through unchanged.
+    (oplog_utils.go:212-236) and pass every other op through unchanged;
+    a `c` event that carries no applyOps yields no row.
 
     The nested ops live in o as JSON: {"applyOps": [{op,ns,o,o2}, ...]}.
-    Uses explode over from_json — streaming-safe, no state. The
-    reference recurses for applyOps-inside-applyOps (GetWriteModels
-    calls itself, oplog_utils.go:232); a plan cannot recurse unboundedly,
-    so unnesting is applied `max_depth` times (nested transactions
-    deeper than that are not a thing MongoDB emits).
+    Each event becomes one array — itself, or its members — and a single
+    `posexplode` unnests the frame: one pass over the source, no union,
+    no state. Members inherit the event's ts and seq; `idx` is their
+    position in the transaction (0 for a plain event), the only order
+    between same-key members, and they route by their own namespace
+    (oplog_utils.go:223-232). The reference recurses for
+    applyOps-inside-applyOps (GetWriteModels calls itself,
+    oplog_utils.go:232); a plan cannot recurse, so a member transaction
+    is flattened one level (nested transactions deeper than that are not
+    a thing MongoDB emits).
     """
-    nested_schema = (
-        "array<struct<op:string,ns:string,o:string,o2:string>>"
-    )
+    member = ("op", "ns", "o", "o2")
 
-    def one_level(frame: DataFrame) -> DataFrame:
-        plain = frame.filter(F.col("op") != "c")
-        cmds = (
-            frame.filter(F.col("op") == "c")
-            .withColumn(
-                "__ops",
-                F.from_json(
-                    F.get_json_object(F.col("o"), "$.applyOps"),
-                    nested_schema,
-                ),
-            )
-            .filter(F.col("__ops").isNotNull())
-            .withColumn("__e", F.explode(F.col("__ops")))
-            .withColumn("op", F.col("__e.op"))
-            .withColumn("ns", F.col("__e.ns"))
-            .withColumn("o", F.col("__e.o"))
-            .withColumn("o2", F.col("__e.o2"))
-            .drop("__ops", "__e")
-        )
-        if "resolved_ns" in frame.columns:
-            # members carry their own namespace (oplog_utils.go:223-232)
-            cmds = cmds.withColumn("resolved_ns", F.col("ns"))
-        return plain.unionByName(cmds)
+    def col(c: str) -> str:
+        if c in member:
+            return f"__e.{c} AS {c}"
+        return "IF(__txn, __e.ns, resolved_ns) AS resolved_ns" \
+            if c == "resolved_ns" else c
 
-    out = df
-    for _ in range(max_depth):
-        out = one_level(out)
-    return out
+    return df.selectExpr(
+        *[c for c in df.columns if c not in member],
+        "op = 'c' AS __txn", f"posexplode({_OPS}) AS (idx, __e)",
+    ).selectExpr(*[col(c) for c in df.columns], "idx")

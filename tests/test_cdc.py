@@ -49,6 +49,11 @@ def _decode(spark, rows, includes=None):
     return decode_write_models(_oplog_df(spark, rows), includes).collect()
 
 
+def _py(doc):
+    """A decoded map<string,variant> payload as plain Python values."""
+    return {k: v.toPython() for k, v in doc.items()}
+
+
 # --- decode semantics (GetWriteModels, oplog_utils.go:208-281) ---
 
 def test_decode_insert_delete_noop(spark):
@@ -68,10 +73,10 @@ def test_decode_v2_diff_update(spark):
         _ev(3, "u", {"$v": 2, "diff": {"d": {"x": True}}}, {"_id": 7}),
     ])
     assert [r.kind for r in out] == ["patch"] * 3
-    assert json.loads(out[0].set_json) == {"x": "b"}
-    assert json.loads(out[1].set_json) == {"n": 9}
-    assert out[2].set_json is None
-    assert json.loads(out[2].unset_json) == {"x": True}
+    assert _py(out[0].sets) == {"x": "b"}
+    assert _py(out[1].sets) == {"n": 9}
+    assert out[2].sets is None
+    assert out[2].unsets == ["x"]
 
 
 def test_decode_v4_set_and_replace(spark):
@@ -81,9 +86,9 @@ def test_decode_v4_set_and_replace(spark):
         _ev(3, "u", {"_id": 3, "x": "whole", "n": 1}, {"_id": 3}),
     ])
     assert [r.kind for r in out] == ["patch", "patch", "replace"]
-    assert json.loads(out[0].set_json) == {"x": "c"}
-    assert json.loads(out[1].unset_json) == {"n": 1}
-    assert json.loads(out[2].doc)["x"] == "whole"
+    assert _py(out[0].sets) == {"x": "c"}
+    assert out[1].unsets == ["n"]
+    assert _py(out[2].doc)["x"] == "whole"
 
 
 def test_decode_applyops_unnest(spark):
@@ -766,3 +771,60 @@ def test_stream_reports_apply_stats(spark, tmp_path):
     assert ns == "db.c"
     # the fold collapses i+u on _id 1 to one replace-with-patch model
     assert (s.inserted, s.deleted, s.noops) == (2, 0, 1)
+
+
+# --- one scan, one JVM fold per micro-batch ---
+
+# Spark jobs of one decode -> fold -> apply_cdc_batch onto an existing flat
+# target: measured 4 (the query stages of the merge write) once the fold
+# ran in the JVM and each publish recorded the target's schema; 5 before,
+# the extra one being the schema-inference read of the target's footers.
+FLAT_BATCH_JOBS = 4
+
+
+def test_batch_scans_once_and_folds_in_the_jvm(spark, tmp_path):
+    rows = [
+        _ev(1, "i", {"_id": 1, "x": "a", "n": 1}),
+        _ev(2, "c", {"applyOps": [
+            {"op": "u", "ns": "db.c", "o": {"$set": {"x": "t"}},
+             "o2": {"_id": 1}},
+            {"op": "i", "ns": "db.c", "o": {"_id": 2, "x": "b", "n": 2}},
+        ]}, ns="db.$cmd"),
+        _ev(3, "u", {"$v": 2, "diff": {"u": {"n": 5}}}, {"_id": 2}),
+        _ev(4, "d", {"_id": 9}),
+    ]
+    oplog_dir = tmp_path / "oplog"
+    oplog_dir.mkdir()
+    with open(oplog_dir / "b1.json", "w") as fh:
+        for ts, seq, ns, op, o, o2 in rows:
+            fh.write(json.dumps({
+                "ts": ts.isoformat(), "seq": seq, "ns": ns,
+                "op": op, "o": o, "o2": o2,
+            }) + "\n")
+    q = start_cdc_stream(spark, str(oplog_dir), str(tmp_path / "tgt"),
+                         {"db.c": TARGET_SCHEMA})
+    q.awaitTermination(120)
+    # the file source is scanned once per batch: one input row per line
+    progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert progress
+    assert all(p["numInputRows"] == len(rows) for p in progress)
+
+    def reduced():
+        return reduce_write_models(
+            decode_write_models(_oplog_df(spark, rows)))
+
+    plan = reduced()._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+    path = str(tmp_path / "flat.parquet")
+    apply_cdc_batch(spark, reduced(), path, "_id", TARGET_SCHEMA)
+    sc = spark.sparkContext
+    group = f"cdc-batch-job-guard-{tmp_path.name}"
+    sc.setJobGroup(group, "decode -> fold -> apply_cdc_batch")
+    try:
+        apply_cdc_batch(spark, reduced(), path, "_id", TARGET_SCHEMA)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= FLAT_BATCH_JOBS, jobs

@@ -103,8 +103,8 @@ def test_cdc_decode_with_ejson_wrappers(spark, tmp_path):
 
 
 def test_cdc_decode_without_ejson_leaves_wrappers(spark):
-    """Default path is unchanged: the wrapper arrives as a struct-ish
-    JSON fragment, exactly what json_tuple extracts."""
+    """Default path is unchanged: the wrapper arrives as a JSON object,
+    and the key is that object's JSON text."""
     import datetime as dt
 
     from hummingbird_spark.streaming.cdc import (
