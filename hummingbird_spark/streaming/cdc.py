@@ -22,7 +22,7 @@ Ordering discipline (ST6): the reference preserves per-document mutation
 order with ordered bulks. Here each micro-batch is folded per key in
 (ts, seq, idx) order — idx being an op's position inside its applyOps
 transaction — by a declarative `aggregate` over the key's collected
-events. Decode, fold and merge are all Column expressions: a batch
+events. Decode, fold and merge are all Catalyst expressions: a batch
 scans its source once, parses each event's o/o2 once, and never leaves
 the JVM. Batches are serialized by the streaming engine, so intra-batch
 fold + inter-batch serialization reproduces converged state.
@@ -81,8 +81,9 @@ def _as_doc(variant: str, path: str = "$") -> str:
 
 
 # The decode and the fold are SQL text: one py4j call per projection
-# instead of one per Column-builder call, which cost a micro-batch about
-# 0.3 s of driver time before any task ran.
+# instead of one per Column-builder call. Built with Column calls, they
+# cost about 0.3 s of driver time per micro-batch before any task ran
+# (4-vCPU host, C1-only JVM).
 _DECODE_STEPS = [
     # parse o and o2, once each
     ["resolved_ns AS ns", "ts", "seq", "idx", "op",
@@ -120,7 +121,7 @@ def decode_write_models(
     ns, key, ts, seq, idx (position inside an applyOps transaction),
     kind (replace|patch|delete), doc (the replace document), sets and
     unsets (the patch's `$set`/diff fields and its `$unset`/diff.d
-    names). Pure Column expressions — streaming-safe, no state.
+    names). Pure SQL expressions — streaming-safe, no state.
 
     o and o2 are parsed once each into `map<string,variant>`; the key,
     the update form and every payload are read from those maps, and doc
@@ -148,37 +149,37 @@ def decode_write_models(
     return df.filter("key IS NOT NULL")
 
 
-# One key's events, ordered by (ts, seq, idx), folded into a state
-# (mode, doc, unsets) with `aggregate`. mode null is a patch on the
-# existing row, with doc holding its sets; after a replace, doc is the
-# replacement document and later patches merge into it. A patch sets
-# before it unsets, so a same-event set + unset of one field nets to the
-# unset; a patch after a delete matches nothing.
-_FOLD = f"""aggregate(
+_AT = "struct(ts, seq, idx)"  # an event's place in the log
+
+# Per key: the last replace or delete — the barrier no earlier event gets
+# past — and every patch with its place in the log.
+_FOLD_AGGS = [
+    f"max_by(struct(kind, doc), IF(kind = 'patch', NULL, {_AT})) AS barrier",
+    f"max(IF(kind = 'patch', NULL, {_AT})) AS barrier_at",
+    f"""collect_list(IF(kind = 'patch', struct(
+          {_AT} AS at, coalesce(sets, {_NO_DOC}) AS sets,
+          coalesce(unsets, {_NO_NAMES}) AS unsets), NULL)) AS patches""",
+]
+
+# The patches after the barrier, in log order, folded into the barrier's
+# document, or with no barrier into one patch: each field's last set or
+# unset wins, and a patch sets before it unsets, so a same-event set +
+# unset of one field nets to the unset. After a delete, patches match
+# nothing.
+_FOLD = f"""IF(barrier.kind = 'delete', NULL, aggregate(
   array_sort(
-    collect_list(struct(
-      struct(ts, seq, idx) AS at, kind, doc,
-      coalesce(sets, {_NO_DOC}) AS sets,
-      coalesce(unsets, {_NO_NAMES}) AS unsets)),
+    filter(patches, p -> barrier_at IS NULL OR p.at > barrier_at),
     (a, b) -> CASE WHEN a.at < b.at THEN -1 WHEN a.at > b.at THEN 1
                    ELSE 0 END),
-  named_struct('mode', CAST(NULL AS STRING), 'doc', {_NO_DOC},
+  named_struct('doc', coalesce(barrier.doc, {_NO_DOC}),
                'unsets', {_NO_NAMES}),
-  (s, e) -> CASE
-    WHEN e.kind = 'delete' THEN
-      named_struct('mode', 'delete', 'doc', {_NO_DOC}, 'unsets', {_NO_NAMES})
-    WHEN e.kind = 'replace' THEN
-      named_struct('mode', 'replace', 'doc', e.doc, 'unsets', {_NO_NAMES})
-    WHEN s.mode = 'delete' THEN s
-    ELSE named_struct(
-      'mode', s.mode,
-      'doc', map_concat(
-        map_filter(s.doc, (k, v) -> NOT array_contains(map_keys(e.sets), k)
-                                    AND NOT array_contains(e.unsets, k)),
-        map_filter(e.sets, (k, v) -> NOT array_contains(e.unsets, k))),
-      'unsets', array_union(array_except(s.unsets, map_keys(e.sets)),
-                            e.unsets))
-  END)"""
+  (s, p) -> named_struct(
+    'doc', map_concat(
+      map_filter(s.doc, (k, v) -> NOT array_contains(map_keys(p.sets), k)
+                                  AND NOT array_contains(p.unsets, k)),
+      map_filter(p.sets, (k, v) -> NOT array_contains(p.unsets, k))),
+    'unsets', array_union(array_except(s.unsets, map_keys(p.sets)),
+                          p.unsets))))"""
 
 _FOLD_OUT = [
     "ns", "key", "action",
@@ -195,15 +196,16 @@ _FOLD_OUT = [
 def reduce_write_models(models: DataFrame) -> DataFrame:
     """Per-key ordered fold (ST6): many events per key -> one effective
     write model (ns, key, action, doc, set_json, unset_json; the payloads
-    as JSON text). One shuffle on (ns, key); each key's events are
-    ordered by (ts, seq, idx) and folded with `aggregate` (see _FOLD) —
-    the last replace or delete is a barrier, later patches fold field by
-    field, patches after a delete are dropped, patches after a replace
-    merge into its document. Everything runs in the JVM; the state is
-    serialized once, at the output."""
+    as JSON text). One shuffle on (ns, key). Events are ordered by
+    (ts, seq, idx): the last replace or delete is a barrier, patches
+    after a delete are dropped, and patches after a replace, or with no
+    barrier, fold field by field with `aggregate` (see _FOLD). Everything
+    runs in the JVM; the state is serialized once, at the output."""
     return (
-        models.groupBy("ns", "key").agg(F.expr(_FOLD).alias("s"))
-        .selectExpr("*", "coalesce(s.mode, 'patch') AS action")
+        models.groupBy("ns", "key")
+        .agg(*[F.expr(agg) for agg in _FOLD_AGGS])
+        .selectExpr("ns", "key", "coalesce(barrier.kind, 'patch') AS action",
+                    f"{_FOLD} AS s")
         .selectExpr(*_FOLD_OUT)
     )
 

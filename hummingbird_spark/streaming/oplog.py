@@ -6,9 +6,9 @@ create, createIndexes, drop, renameCollection) to the namespace they
 affect, and applies the include-namespace match. `applyOps` transaction
 events carry nested oplogs to unnest (oplog_utils.go:212-236).
 
-Here those become Column predicates / explode over the oplog frame —
-fully streamable (no state), applied before any stateful stage so
-filtered events never reach the shuffle.
+Here those become SQL predicates and one posexplode over the oplog
+frame — fully streamable (no state), applied before any stateful stage
+so filtered events never reach the shuffle.
 """
 
 from __future__ import annotations
@@ -109,9 +109,9 @@ def unnest_apply_ops(df: DataFrame) -> DataFrame:
         if c in member:
             return f"__e.{c} AS {c}"
         return "IF(__txn, __e.ns, resolved_ns) AS resolved_ns" \
-            if c == "resolved_ns" else c
+            if c == "resolved_ns" else f"`{c}`"
 
     return df.selectExpr(
-        *[c for c in df.columns if c not in member],
+        *[f"`{c}`" for c in df.columns if c not in member],
         "op = 'c' AS __txn", f"posexplode({_OPS}) AS (idx, __e)",
     ).selectExpr(*[col(c) for c in df.columns], "idx")
