@@ -231,8 +231,9 @@ def evolve_schema(
     reference copies BSON verbatim, so a document may carry fields the
     target has never seen. Scan the batch's models for JSON keys
     outside `schema` and append them as nullable columns (type
-    inferred from a bounded driver-side sample of values; conflicting
-    or nested types degrade to string — the documented escape hatch).
+    inferred from a bounded driver-side sample of values; long and
+    double widen to double; other conflicting or nested types degrade
+    to string — the documented escape hatch).
 
     Cost shape: one distinct-keys aggregation over the micro-batch
     (bounded), plus `sample` rows collected for typing; never touches
@@ -269,7 +270,12 @@ def evolve_schema(
                 if prev is None:
                     inferred[k] = t
                 elif prev != t:
-                    inferred[k] = T.StringType()  # conflict -> string
+                    # decode parses 10.0 as the number 10, so whole and
+                    # fractional values of one field widen to double; any
+                    # other conflict degrades to string
+                    numbers = {prev, t} == {T.LongType(), T.DoubleType()}
+                    inferred[k] = T.DoubleType() if numbers \
+                        else T.StringType()
     fields = list(schema.fields) + [
         T.StructField(k, inferred.get(k, T.StringType()), True)
         for k in new_keys

@@ -534,6 +534,19 @@ def test_evolve_type_conflict_degrades_to_string(spark):
                 for f in out.fields)["mixed"] == "string"
 
 
+def test_evolve_whole_and_fractional_numbers_infer_double(spark):
+    # a whole-valued double such as 10.0 reaches the fold as the number 10
+    from hummingbird_spark.streaming.cdc import evolve_schema
+
+    models = reduce_write_models(decode_write_models(_oplog_df(spark, [
+        _ev(1, "i", {"_id": 1, "price": 10.0}),
+        _ev(2, "i", {"_id": 2, "price": 10.5}),
+    ])))
+    out = evolve_schema(models, TARGET_SCHEMA)
+    assert dict((f.name, f.dataType.simpleString())
+                for f in out.fields)["price"] == "double"
+
+
 def test_evolve_no_new_fields_is_identity(spark):
     from hummingbird_spark.streaming.cdc import evolve_schema
 
