@@ -154,8 +154,8 @@ _AT = "struct(ts, seq, idx)"  # an event's place in the log
 # Per key: the last replace or delete — the barrier no earlier event gets
 # past — and every patch with its place in the log.
 _FOLD_AGGS = [
-    f"max_by(struct(kind, doc), IF(kind = 'patch', NULL, {_AT})) AS barrier",
-    f"max(IF(kind = 'patch', NULL, {_AT})) AS barrier_at",
+    f"""max_by(struct(kind, doc, {_AT} AS at),
+              IF(kind = 'patch', NULL, {_AT})) AS barrier""",
     f"""collect_list(IF(kind = 'patch', struct(
           {_AT} AS at, coalesce(sets, {_NO_DOC}) AS sets,
           coalesce(unsets, {_NO_NAMES}) AS unsets), NULL)) AS patches""",
@@ -168,7 +168,7 @@ _FOLD_AGGS = [
 # nothing.
 _FOLD = f"""IF(barrier.kind = 'delete', NULL, aggregate(
   array_sort(
-    filter(patches, p -> barrier_at IS NULL OR p.at > barrier_at),
+    filter(patches, p -> barrier IS NULL OR p.at > barrier.at),
     (a, b) -> CASE WHEN a.at < b.at THEN -1 WHEN a.at > b.at THEN 1
                    ELSE 0 END),
   named_struct('doc', coalesce(barrier.doc, {_NO_DOC}),
