@@ -81,7 +81,7 @@ def _as_doc(variant: str, path: str = "$") -> str:
 
 
 # The decode and the fold are SQL text: one py4j call per projection
-# instead of one per Column-builder call. Built with Column calls, they
+# instead of one per Column-API call. Built with Column calls, they
 # cost about 0.3 s of driver time per micro-batch before any task ran
 # (4-vCPU host, C1-only JVM).
 _DECODE_STEPS = [

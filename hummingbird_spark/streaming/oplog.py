@@ -24,7 +24,7 @@ _CMD_KEYS = ("drop", "create", "createIndexes", "renameCollection",
              "dropDatabase")
 
 # The predicates and the unnest are SQL text: one py4j call each instead
-# of one per Column-builder call, which adds up to a noticeable share of
+# of one per Column-API call, which adds up to a noticeable share of
 # a small micro-batch's driver time.
 _DB = "substring_index(ns, '.', 1)"
 _CMD_COLL = "coalesce(" + ", ".join(
