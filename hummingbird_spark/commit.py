@@ -43,6 +43,9 @@ from pyspark.sql import SparkSession
 
 _RECORD = ".__commit"
 _END = "end"  # last line of a complete record; a torn one lacks it
+# a table's schema, published with its data files (streaming/cdc.py);
+# it describes exactly those files
+SCHEMA_RECORD = "_schema.json"
 
 
 @functools.lru_cache(maxsize=None)
@@ -174,11 +177,13 @@ def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,
     and replaces none. Part filenames embed the writing task's UUID, so
     renames cannot collide with existing files. Uses the Hadoop FS API
     (rename is a metadata op on HDFS/local; on S3A the committer would
-    own this) — nothing passes through the driver."""
+    own this) — nothing passes through the driver. The adopted files
+    outdate the target's schema record, which is dropped first."""
     Path = _path_class(spark._jvm)
     fs, tmp_p = _fs(spark, tmp)
     if move:
         dst_p = Path(dst)
+        _mutate(fs, "delete", Path(dst_p, SCHEMA_RECORD), False)
         for status in fs.listStatus(tmp_p):
             name = status.getPath().getName()
             if name.endswith(".parquet"):

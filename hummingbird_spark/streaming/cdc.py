@@ -44,13 +44,13 @@ import os
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.commit import (
-    _fs, publish, put_text, read_text, recover,
+    SCHEMA_RECORD, _fs, publish, put_text, read_text, recover,
 )
 from hummingbird_spark.streaming.oplog import (
     namespace_match_column,
@@ -80,25 +80,35 @@ def _as_doc(variant: str, path: str = "$") -> str:
     return f"try_variant_get({variant}, '{path}', '{_DOC}')"
 
 
+def _fraction_as_double(v: str) -> str:
+    """SQL: the variant `v`, a DECIMAL made a double. Variant keeps a
+    JSON number with a fraction (a MongoDB double) as a DECIMAL without
+    trailing zeros: 10.0 would print as 10, not as a double's 10.0."""
+    return (f"IF(schema_of_variant({v}) LIKE 'DECIMAL%',"
+            f" CAST(CAST({v} AS DOUBLE) AS VARIANT), {v})")
+
+
 # The decode and the fold are SQL text: one py4j call per projection
 # instead of one per Column-API call. Built with Column calls, they
 # cost about 0.3 s of driver time per micro-batch before any task ran
 # (4-vCPU host, C1-only JVM).
 _DECODE_STEPS = [
-    # parse o and o2, once each
-    ["resolved_ns AS ns", "ts", "seq", "idx", "op",
+    # parse o and o2, once each; o's text stays, to pass a replace
+    # document on verbatim
+    ["resolved_ns AS ns", "ts", "seq", "idx", "op", "o AS doc_json",
      f"from_json(o, '{_DOC}') AS o", f"from_json(o2, '{_DOC}') AS o2"],
     # the key and the update forms, read from the parsed maps; a v2
     # diff applies only the FIRST of u/i, else d (oplog_utils.go:250-263)
-    ["ns", "ts", "seq", "idx", "op", "o",
-     "coalesce(CAST(o2['_id'] AS STRING), CAST(o['_id'] AS STRING)) AS key",
+    ["ns", "ts", "seq", "idx", "op", "o", "doc_json",
+     "coalesce(o2['_id'], o['_id']) AS id",
      _as_doc("o['diff']") + " AS diff",
      "coalesce(" + _as_doc("o['diff']", "$.u") + ", "
      + _as_doc("o['diff']", "$.i") + ") AS diff_set",
      _as_doc("o['diff']", "$.d") + " AS diff_unset",
      _as_doc("o['$set']") + " AS v4_set",
      _as_doc("o['$unset']") + " AS v4_unset"],
-    ["ns", "key", "ts", "seq", "idx", "o",
+    ["ns", f"CAST({_fraction_as_double('id')} AS STRING) AS key",
+     "ts", "seq", "idx", "o", "doc_json",
      """CASE WHEN op = 'd' THEN 'delete' WHEN op = 'i' THEN 'replace'
              WHEN diff IS NOT NULL OR v4_set IS NOT NULL
                   OR v4_unset IS NOT NULL THEN 'patch'
@@ -108,6 +118,7 @@ _DECODE_STEPS = [
         AS patch_unset"""],
     ["ns", "key", "ts", "seq", "idx", "kind",
      "IF(kind = 'replace', o, NULL) AS doc",
+     "IF(kind = 'replace', doc_json, NULL) AS doc_json",
      "IF(kind = 'patch', patch_set, NULL) AS sets",
      "IF(kind = 'patch', map_keys(patch_unset), NULL) AS unsets"],
 ]
@@ -119,13 +130,16 @@ def decode_write_models(
 ) -> DataFrame:
     """Oplog frame -> write-model frame: one row per member op with
     ns, key, ts, seq, idx (position inside an applyOps transaction),
-    kind (replace|patch|delete), doc (the replace document), sets and
-    unsets (the patch's `$set`/diff fields and its `$unset`/diff.d
-    names). Pure SQL expressions — streaming-safe, no state.
+    kind (replace|patch|delete), doc (the replace document) and
+    doc_json (its source text), sets and unsets (the patch's `$set`/diff
+    fields and its `$unset`/diff.d names). Pure SQL expressions —
+    streaming-safe, no state.
 
     o and o2 are parsed once each into `map<string,variant>`; the key,
     the update form and every payload are read from those maps, and doc
-    and sets stay parsed for the fold.
+    and sets stay parsed for the fold. The key is the `_id`'s text as
+    `CAST(_id AS STRING)` gives it for the type a JSON reader infers
+    (see _fraction_as_double).
 
     `ejson=True` normalizes MongoDB extended-JSON type wrappers
     ({"$numberLong": ...}, {"$date": ...}, {"$oid": ...}) in o/o2
@@ -154,7 +168,7 @@ _AT = "struct(ts, seq, idx)"  # an event's place in the log
 # Per key: the last replace or delete — the barrier no earlier event gets
 # past — and every patch with its place in the log.
 _FOLD_AGGS = [
-    f"""max_by(struct(kind, doc, {_AT} AS at),
+    f"""max_by(struct(kind, doc, doc_json, {_AT} AS at),
               IF(kind = 'patch', NULL, {_AT})) AS barrier""",
     f"""collect_list(IF(kind = 'patch', struct(
           {_AT} AS at, coalesce(sets, {_NO_DOC}) AS sets,
@@ -165,26 +179,32 @@ _FOLD_AGGS = [
 # document, or with no barrier into one patch: each field's last set or
 # unset wins, and a patch sets before it unsets, so a same-event set +
 # unset of one field nets to the unset. After a delete, patches match
-# nothing.
+# nothing. A replace no patch follows (not `patched`) passes its source
+# text on.
 _FOLD = f"""IF(barrier.kind = 'delete', NULL, aggregate(
   array_sort(
     filter(patches, p -> barrier IS NULL OR p.at > barrier.at),
     (a, b) -> CASE WHEN a.at < b.at THEN -1 WHEN a.at > b.at THEN 1
                    ELSE 0 END),
   named_struct('doc', coalesce(barrier.doc, {_NO_DOC}),
-               'unsets', {_NO_NAMES}),
+               'unsets', {_NO_NAMES}, 'patched', false),
   (s, p) -> named_struct(
     'doc', map_concat(
       map_filter(s.doc, (k, v) -> NOT array_contains(map_keys(p.sets), k)
                                   AND NOT array_contains(p.unsets, k)),
       map_filter(p.sets, (k, v) -> NOT array_contains(p.unsets, k))),
     'unsets', array_union(array_except(s.unsets, map_keys(p.sets)),
-                          p.unsets))))"""
+                          p.unsets),
+    'patched', true)))"""
+
+_FOLDED_JSON = ("to_json(transform_values(s.doc, (k, v) -> "
+                + _fraction_as_double("v") + "))")
 
 _FOLD_OUT = [
     "ns", "key", "action",
-    "IF(action = 'replace', to_json(s.doc), NULL) AS doc",
-    "IF(action = 'patch' AND size(s.doc) > 0, to_json(s.doc), NULL)"
+    f"IF(action = 'replace', IF(s.patched, {_FOLDED_JSON}, doc_json), NULL)"
+    " AS doc",
+    f"IF(action = 'patch' AND size(s.doc) > 0, {_FOLDED_JSON}, NULL)"
     " AS set_json",
     """IF(action = 'patch' AND size(s.unsets) > 0,
           to_json(map_from_arrays(
@@ -200,12 +220,13 @@ def reduce_write_models(models: DataFrame) -> DataFrame:
     (ts, seq, idx): the last replace or delete is a barrier, patches
     after a delete are dropped, and patches after a replace, or with no
     barrier, fold field by field with `aggregate` (see _FOLD). Everything
-    runs in the JVM; the state is serialized once, at the output."""
+    runs in the JVM; the state is serialized once, at the output. A
+    replace no patch follows keeps its source text."""
     return (
         models.groupBy("ns", "key")
         .agg(*[F.expr(agg) for agg in _FOLD_AGGS])
         .selectExpr("ns", "key", "coalesce(barrier.kind, 'patch') AS action",
-                    f"{_FOLD} AS s")
+                    "barrier.doc_json", f"{_FOLD} AS s")
         .selectExpr(*_FOLD_OUT)
     )
 
@@ -231,9 +252,8 @@ def evolve_schema(
     reference copies BSON verbatim, so a document may carry fields the
     target has never seen. Scan the batch's models for JSON keys
     outside `schema` and append them as nullable columns (type
-    inferred from a bounded driver-side sample of values; long and
-    double widen to double; other conflicting or nested types degrade
-    to string — the documented escape hatch).
+    inferred from a bounded driver-side sample of values; conflicting
+    or nested types degrade to string — the documented escape hatch).
 
     Cost shape: one distinct-keys aggregation over the micro-batch
     (bounded), plus `sample` rows collected for typing; never touches
@@ -270,12 +290,7 @@ def evolve_schema(
                 if prev is None:
                     inferred[k] = t
                 elif prev != t:
-                    # decode parses 10.0 as the number 10, so whole and
-                    # fractional values of one field widen to double; any
-                    # other conflict degrades to string
-                    numbers = {prev, t} == {T.LongType(), T.DoubleType()}
-                    inferred[k] = T.DoubleType() if numbers \
-                        else T.StringType()
+                    inferred[k] = T.StringType()  # conflict -> string
     fields = list(schema.fields) + [
         T.StructField(k, inferred.get(k, T.StringType()), True)
         for k in new_keys
@@ -323,9 +338,9 @@ def apply_cdc_batch(
     already carries are always retained, whatever this batch mentions
     (see _retain_target_columns).
 
-    Each publish records the target's schema in `_schema.json`, beside
-    the data files, and the next batch reads the target with it instead
-    of inferring it (see _read_flat_target).
+    Each publish records the target's schema in `_schema.json`
+    (SCHEMA_RECORD), beside the data files, and the next batch reads
+    the target with it instead of inferring it (see _read_flat_target).
     """
     # a publish a crash interrupted lands whole or not at all before
     # the read; the replayed batch then re-applies idempotently (ST7)
@@ -354,26 +369,27 @@ def apply_cdc_batch(
     def write(stage: str) -> ApplyStats:
         result.write.parquet(stage)
         # publishes together with the data; the next batch reads by it
-        put_text(spark, f"{stage}/{_SCHEMA_FILE}", result.schema.json())
+        put_text(spark, f"{stage}/{SCHEMA_RECORD}", result.schema.json())
         return _stats_or_recompute(obs, m, target, key)  # pre-publish
 
     return publish(spark, target_path, write)
 
 
-_SCHEMA_FILE = "_schema.json"
-
-
 def _read_flat_target(spark: SparkSession, path: str) -> DataFrame | None:
     """The flat target as last published, or None before its first
     batch. Read with the schema its publish recorded, which spares the
-    footer-reading job of schema inference; a target written without
-    the record infers its schema."""
-    recorded = read_text(spark, f"{path}/{_SCHEMA_FILE}")
+    footer-reading job of schema inference. A target without the record
+    (written by another writer, or with files appended since, which
+    drops the record: see commit._adopt_parquet_files) unions its
+    files' schemas, so no column of an appended file is lost."""
+    recorded = read_text(spark, f"{path}/{SCHEMA_RECORD}")
     if recorded is not None:
         schema = T.StructType.fromJson(json.loads(recorded))
         return spark.read.schema(schema).parquet(path)
     fs, success = _fs(spark, f"{path}/_SUCCESS")
-    return spark.read.parquet(path) if fs.exists(success) else None
+    if not fs.exists(success):
+        return None
+    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 @dataclass(frozen=True)
@@ -392,21 +408,18 @@ class ApplyStats:
         return self.inserted + self.updated + self.deleted + self.noops
 
 
-def _observe_merge(joined: DataFrame, obs, tkey) -> DataFrame:
-    """Attach apply counters to the merge join — a CollectMetrics node
-    on rows already flowing through the plan, not an extra pass."""
-    is_hit = tkey.isNotNull()
+def _counters(hit: Column) -> list[Column]:
+    """ApplyStats' counters over merge-join rows; `hit` marks a row whose
+    key the target holds."""
     cnt = lambda c: F.coalesce(  # noqa: E731
         F.sum(F.when(c, 1).otherwise(0)), F.lit(0))
-    return joined.observe(
-        obs,
-        cnt((F.col("action") == "replace") & ~is_hit).alias("inserted"),
-        cnt(F.col("action").isin("replace", "patch")
-            & is_hit).alias("updated"),
-        cnt((F.col("action") == "delete") & is_hit).alias("deleted"),
-        cnt(F.col("action").isin("patch", "delete")
-            & ~is_hit).alias("noops"),
-    )
+    action = F.col("action")
+    return [
+        cnt((action == "replace") & ~hit).alias("inserted"),
+        cnt(action.isin("replace", "patch") & hit).alias("updated"),
+        cnt((action == "delete") & hit).alias("deleted"),
+        cnt(action.isin("patch", "delete") & ~hit).alias("noops"),
+    ]
 
 
 def _stats_or_recompute(
@@ -421,27 +434,13 @@ def _stats_or_recompute(
     try:
         return ApplyStats(**obs.get)
     except Exception:
-        hit = F.col("__tk").isNotNull()
         row = (
             m.select("__key", "action")
             .join(
                 target.select(F.col(key).cast("string").alias("__tk")),
                 F.col("__key") == F.col("__tk"), "left",
             )
-            .agg(
-                F.coalesce(F.sum(F.when(
-                    (F.col("action") == "replace") & ~hit, 1
-                ).otherwise(0)), F.lit(0)).alias("inserted"),
-                F.coalesce(F.sum(F.when(
-                    F.col("action").isin("replace", "patch") & hit, 1
-                ).otherwise(0)), F.lit(0)).alias("updated"),
-                F.coalesce(F.sum(F.when(
-                    (F.col("action") == "delete") & hit, 1
-                ).otherwise(0)), F.lit(0)).alias("deleted"),
-                F.coalesce(F.sum(F.when(
-                    F.col("action").isin("patch", "delete") & ~hit, 1
-                ).otherwise(0)), F.lit(0)).alias("noops"),
-            )
+            .agg(*_counters(F.col("__tk").isNotNull()))
             .first()
         )
         return ApplyStats(row.inserted, row.updated, row.deleted, row.noops)
@@ -472,7 +471,9 @@ def _merge_survivors(
         F.from_json(F.col("set_json"), schema).alias("__set"),
     )
     if observation is not None:
-        joined = _observe_merge(joined, observation, tkey)
+        # a CollectMetrics node on rows already flowing through the
+        # plan, not an extra pass
+        joined = joined.observe(observation, *_counters(tkey.isNotNull()))
 
     # survivor rows: everything except deletes; patches on missing keys
     # are no-ops (dropped); replaces win over existing rows.

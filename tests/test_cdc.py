@@ -322,6 +322,49 @@ def test_apply_is_idempotent(spark, target):
     }
 
 
+DOUBLE_KEY_SCHEMA = T.StructType([
+    T.StructField("_id", T.DoubleType()),
+    T.StructField("x", T.StringType()),
+    T.StructField("n", T.LongType()),
+])
+
+
+@pytest.mark.parametrize("num_buckets", [None, 8])
+def test_apply_whole_valued_double_key(spark, tmp_path, num_buckets):
+    """A double _id such as 10.0 — plain, or as the canonical extended
+    JSON {"$numberDouble": "10.0"} — keys its row as
+    CAST(_id AS STRING) does, "10.0": an insert of the key, a replace,
+    a patch and a delete each act on the one row."""
+    from hummingbird_spark.streaming.cdc import (
+        apply_cdc_batch_bucketed, read_cdc_target,
+    )
+    path = str(tmp_path / "t.parquet")
+    wrapped = {"_id": {"$numberDouble": "10.0"}}
+
+    def batch(rows):
+        models = reduce_write_models(decode_write_models(
+            _oplog_df(spark, rows), ejson=True))
+        if num_buckets:
+            apply_cdc_batch_bucketed(spark, models, path, "_id",
+                                     DOUBLE_KEY_SCHEMA,
+                                     num_buckets=num_buckets)
+        else:
+            apply_cdc_batch(spark, models, path, "_id", DOUBLE_KEY_SCHEMA)
+        return sorted((r._id, r.x, r.n) for r in read_cdc_target(
+            spark, path, DOUBLE_KEY_SCHEMA).collect())
+
+    assert batch([_ev(1, "i", {"_id": 10.0, "x": "a", "n": 1}),
+                  _ev(2, "i", {"_id": 11, "x": "k", "n": 0})]) \
+        == [(10.0, "a", 1), (11.0, "k", 0)]
+    assert batch([_ev(3, "u", {"_id": 10.0, "x": "b", "n": 2}, wrapped)]) \
+        == [(10.0, "b", 2), (11.0, "k", 0)]
+    assert batch([_ev(4, "u", {"$set": {"n": 3}}, wrapped)]) \
+        == [(10.0, "b", 3), (11.0, "k", 0)]
+    assert batch([_ev(5, "i", {"_id": 10.0, "x": "c", "n": 4})]) \
+        == [(10.0, "c", 4), (11.0, "k", 0)]
+    assert batch([_ev(6, "d", wrapped)]) == [(11.0, "k", 0)]
+
+
 # --- end-to-end streaming convergence (oplog_streamer_test.go analogue) ---
 
 @pytest.mark.parametrize("num_buckets", [None, 8])
@@ -535,7 +578,7 @@ def test_evolve_type_conflict_degrades_to_string(spark):
 
 
 def test_evolve_whole_and_fractional_numbers_infer_double(spark):
-    # a whole-valued double such as 10.0 reaches the fold as the number 10
+    # a whole-valued double such as 10.0 stays a double through the fold
     from hummingbird_spark.streaming.cdc import evolve_schema
 
     models = reduce_write_models(decode_write_models(_oplog_df(spark, [
@@ -545,6 +588,54 @@ def test_evolve_whole_and_fractional_numbers_infer_double(spark):
     out = evolve_schema(models, TARGET_SCHEMA)
     assert dict((f.name, f.dataType.simpleString())
                 for f in out.fields)["price"] == "double"
+
+
+def test_evolve_whole_valued_doubles_then_fractions(spark, tmp_path):
+    """New fields whose first values are whole-valued doubles, carried
+    by a replace and by a $set on an existing row, evolve as double, so
+    the fractions a later batch brings are kept."""
+    path = str(tmp_path / "t.parquet")
+
+    def batch(rows):
+        models = reduce_write_models(
+            decode_write_models(_oplog_df(spark, rows)))
+        apply_cdc_batch(spark, models, path, "_id", TARGET_SCHEMA,
+                        evolve=True)
+        return {r._id: r for r in spark.read.parquet(path).collect()}
+
+    batch([_ev(1, "i", {"_id": 1, "x": "a", "n": 1}),
+           _ev(2, "i", {"_id": 2, "x": "b", "n": 2})])
+    batch([_ev(3, "u", {"_id": 1, "x": "a", "n": 1, "price": 10.0},
+               {"_id": 1}),
+           _ev(4, "u", {"$set": {"rate": 20.0}}, {"_id": 2})])
+    assert dict(spark.read.parquet(path).dtypes)["price"] == "double"
+    assert dict(spark.read.parquet(path).dtypes)["rate"] == "double"
+    got = batch([_ev(5, "u", {"$set": {"price": 10.5}}, {"_id": 1}),
+                 _ev(6, "u", {"_id": 2, "x": "b", "n": 2, "rate": 20.5},
+                     {"_id": 2})])
+    assert (got[1].price, got[2].rate) == (10.5, 20.5)
+
+
+def test_string_column_text_of_nested_values(spark, tmp_path):
+    """A nested object landing in a string column. A replace passes its
+    source text on, so the column reads what a full load of the same
+    document reads. A patch's value is re-serialized from its parsed
+    form: the same JSON value, with keys in name order and a nested
+    whole-valued double's trailing .0 dropped."""
+    path = str(tmp_path / "t.parquet")
+    nested = {"b": 1, "a": 10.0}
+    doc = {"_id": 1, "x": nested, "n": 1}
+    for rows in ([_ev(1, "i", doc), _ev(2, "i", {"_id": 2, "x": "s"})],
+                 [_ev(3, "u", {"$set": {"x": nested}}, {"_id": 2})]):
+        models = reduce_write_models(
+            decode_write_models(_oplog_df(spark, rows)))
+        apply_cdc_batch(spark, models, path, "_id", TARGET_SCHEMA)
+    got = {r._id: r.x for r in spark.read.parquet(path).collect()}
+    full_load = spark.range(1).select(
+        F.from_json(F.lit(json.dumps(doc)), TARGET_SCHEMA)["x"]).first()[0]
+    assert got[1] == full_load == '{"b":1,"a":10.0}'
+    assert got[2] == '{"a":10,"b":1}'
+    assert json.loads(got[2]) == nested
 
 
 def test_evolve_no_new_fields_is_identity(spark):
@@ -673,6 +764,36 @@ def test_evolved_column_survives_later_batches(spark, tmp_path):
     batch([_ev(4, "i", {"_id": 4, "x": "d", "n": 4})], evolve=False)
     got = {r._id: r for r in spark.read.parquet(path).collect()}
     assert got[2].tag == "new" and got[4].tag is None
+
+
+def test_copy_append_keeps_its_column_through_cdc(spark, tmp_path):
+    """A top-up copy appends files carrying a column the CDC target
+    lacks. The append drops the schema record the earlier CDC batch
+    published, so the next batch reads the appended column and keeps
+    it in every row it rewrites."""
+    from hummingbird_spark.config import Include, MigrationConfig
+    from hummingbird_spark.operators.copy import copy_table
+
+    src, tgt = tmp_path / "src", tmp_path / "tgt"
+    path = str(tgt / "c.parquet")
+
+    def batch(rows):
+        models = reduce_write_models(
+            decode_write_models(_oplog_df(spark, rows)))
+        apply_cdc_batch(spark, models, path, "_id", TARGET_SCHEMA)
+
+    batch([_ev(1, "i", {"_id": 1, "x": "a", "n": 1})])
+    spark.createDataFrame(
+        [(2, "b", 2, "e")], "_id long, x string, n long, extra string",
+    ).write.parquet(str(src / "c.parquet"))
+    cfg = MigrationConfig(command="data-only", source=str(src),
+                          target=str(tgt), key="_id")
+    assert copy_table(spark, cfg, Include(namespace="c")).rows_copied == 1
+    batch([_ev(2, "u", {"$set": {"x": "B"}}, {"_id": 2}),
+           _ev(3, "i", {"_id": 3, "x": "c", "n": 3})])
+    got = {r._id: r for r in spark.read.parquet(path).collect()}
+    assert (got[2].x, got[2].extra) == ("B", "e")
+    assert got[1].extra is None and got[3].extra is None
 
 
 def test_bucketed_evolved_column_survives_bucket_rewrite(spark, tmp_path):
