@@ -31,20 +31,23 @@ protocol holds on any Hadoop filesystem whose renames are atomic
 (local, HDFS). One writer per path is assumed (streaming/ledger.py).
 Small files (ledgers, cursors, schema records) go through the same API:
 `write_text` publishes one, `put_text` writes one into a stage,
-`read_text` reads one.
+`read_text` reads one. `read_published` reads a published parquet
+table by its schema record.
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _RECORD = ".__commit"
 _END = "end"  # last line of a complete record; a torn one lacks it
-# a table's schema, published with its data files (streaming/cdc.py);
-# it describes exactly those files
+# a table's schema without its partition columns, published with its
+# data files (streaming/cdc.py); it describes exactly those files
 SCHEMA_RECORD = "_schema.json"
 
 
@@ -168,6 +171,24 @@ def _read(fs, hpath) -> str | None:
         return bytes(stream.readAllBytes()).decode()
     finally:
         stream.close()
+
+
+def read_published(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at `path` as last published, or None before its
+    first publish (no `_SUCCESS`). Read with the schema its publish
+    recorded in SCHEMA_RECORD, which spares the footer-reading job of
+    schema inference; partition directories are still discovered and
+    pruned. A table without the record (written by another writer, or
+    with files appended since: see _adopt_parquet_files) unions its
+    files' schemas, so no column of any file is lost."""
+    recorded = read_text(spark, f"{path}/{SCHEMA_RECORD}")
+    if recorded is not None:
+        schema = T.StructType.fromJson(json.loads(recorded))
+        return spark.read.schema(schema).parquet(path)
+    fs, success = _fs(spark, f"{path}/_SUCCESS")
+    if not fs.exists(success):
+        return None
+    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,

@@ -14,13 +14,12 @@ from hummingbird_spark.operators.search import (
     kn_trigram_perplexity,
     rrf_fuse,
 )
-from hummingbird_spark.operators.split import block_boundaries, partition_for_copy
+from hummingbird_spark.operators.split import partition_for_copy
 
 __all__ = [
     "copy_table",
     "run_migration",
     "compare_tables",
-    "block_boundaries",
     "partition_for_copy",
     "curate_corpus",
     "CurationReport",

@@ -1,13 +1,16 @@
 """Small-file compaction for parquet targets.
 
-The bucketed CDC sink (streaming/cdc.py::apply_cdc_batch_bucketed)
-rewrites only the buckets each micro-batch touches — the right write
-amplification, but after thousands of batches every bucket directory
-accumulates many small files, and at 100 TB the NameNode/listing and
-per-file open costs dominate reads. Compaction is the standard
+The bucketed CDC layout (streaming/cdc.py::apply_cdc_batch with
+`num_buckets`) rewrites only the buckets each micro-batch touches — the
+right write amplification, but after thousands of batches every bucket
+directory accumulates many small files, and at 100 TB the NameNode/listing
+and per-file open costs dominate reads. Compaction is the standard
 maintenance pass (Delta OPTIMIZE / Iceberg rewrite_data_files); this is
 the plain-parquet equivalent:
 
+  - read the table the way every reader does (commit.read_published):
+    by its schema record, else by the union of its files' schemas, so
+    a column only some files carry survives the rewrite,
   - size the output by BYTES, not file count: target_file_bytes decides
     how many output files the data actually needs,
   - for partitioned layouts, repartition BY the partition columns so
@@ -26,7 +29,10 @@ import math
 
 from pyspark.sql import SparkSession
 
-from hummingbird_spark.commit import _fs, publish, recover
+from hummingbird_spark.commit import (
+    SCHEMA_RECORD, _fs, publish, put_text, read_published, read_text,
+    recover,
+)
 
 
 def table_bytes(spark: SparkSession, path: str) -> int:
@@ -41,28 +47,27 @@ def parquet_file_count(spark: SparkSession, path: str) -> int:
 
 def compact_table(spark: SparkSession, path: str,
                   target_file_bytes: int = 128 * 1024 * 1024,
-                  partition_cols: list[str] | None = None,
-                  merge_schema: bool = False) -> dict:
+                  partition_cols: list[str] | None = None) -> dict:
     """Rewrite a parquet table into ~size/target_file_bytes files.
 
     partition_cols: hive-style partition columns of the layout (e.g.
-    ["__bucket"] for the CDC sink); preserved in the rewritten table,
-    one file per partition directory.
+    ["__bucket"] for the bucketed CDC target); preserved in the
+    rewritten table, one file per partition directory.
 
-    merge_schema: read with parquet schema merging — required when
-    the table's files mix schema versions (a column added by a later
-    writer), else the rewrite silently drops the new column whenever
-    the picked footer predates it.
+    The table is read by commit.read_published, or with mergeSchema
+    when it has no `_SUCCESS`: files of different widths union, never
+    narrow to one footer's columns. A table with a schema record gets
+    it back with the rewrite, so its next reader need not infer one.
 
     Returns a report dict (files/bytes before and after).
     """
     recover(spark, path)
     before_files = parquet_file_count(spark, path)
     before_bytes = table_bytes(spark, path)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(path)
+    df = read_published(spark, path)
+    if df is None:
+        df = spark.read.option("mergeSchema", "true").parquet(path)
+    record = read_text(spark, f"{path}/{SCHEMA_RECORD}")
     n_out = max(1, math.ceil(before_bytes / target_file_bytes))
     writer = (
         df.repartition(*([n_out] + list(partition_cols)))
@@ -81,7 +86,12 @@ def compact_table(spark: SparkSession, path: str,
                 f"compaction row-count mismatch ({n_stage} != {n_src}); "
                 f"live table untouched")
 
-    publish(spark, path, writer.parquet, verify=verify)
+    def write(stage: str) -> None:
+        writer.parquet(stage)
+        if record is not None:
+            put_text(spark, f"{stage}/{SCHEMA_RECORD}", record)
+
+    publish(spark, path, write, verify=verify)
     return {
         "path": path,
         "files_before": before_files,

@@ -1,37 +1,15 @@
-"""Progress / metrics operators (SURVEY §2.4 A4, §2.9 ST8, A6).
+"""Progress arithmetic (SURVEY §2.4 A4).
 
 Reference: percent-complete + ETA extrapolation over task-status counts
-(data_copier.go:146-175, web_server.go:60-84), apply counters per bulk
-batch (oplog_utils.go:79-85), and the replication-lag log line
-(oplog_streamer.go:190,261,317).
-
-Spark-native: `df.observe()` attaches named aggregates to a plan that
-surface on the driver with zero extra passes; streaming progress comes
-from StreamingQuery.lastProgress (rows/sec, batch durations, watermark)
-— the engine exposes small helpers over both, plus the driver-side ETA
-arithmetic.
+(data_copier.go:146-175, web_server.go:60-84). The driver-side arithmetic
+is all the engine needs here: per-batch apply counters are
+streaming/cdc.py's ApplyStats.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-
-def observed_copy(df: DataFrame, name: str = "copy") -> tuple[DataFrame, Observation]:
-    """Attach insert counters (A6) to a copy plan: rows + bytes-ish
-    metrics materialize during the write action, no second scan."""
-    obs = Observation(name)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.expr("length(to_json(struct(*)))")).alias("approx_bytes"),
-    )
-    return observed, obs
 
 
 @dataclass
@@ -52,30 +30,3 @@ class Progress:
             return None
         elapsed = (now or time.time()) - self.started_at
         return elapsed / self.completed * (self.total - self.completed)
-
-
-def streaming_lag_seconds(query: StreamingQuery) -> float | None:
-    """ST8: now - newest processed event time, from the streaming
-    progress (no extra queries)."""
-    p = query.lastProgress
-    if not p:
-        return None
-    event_time = (p.get("eventTime") or {}).get("max")
-    if not event_time:
-        return None
-    from datetime import datetime, timezone
-
-    ts = datetime.fromisoformat(event_time.replace("Z", "+00:00"))
-    return (datetime.now(timezone.utc) - ts).total_seconds()
-
-
-def apply_counters(progress: dict) -> dict:
-    """A6: per-micro-batch apply counters from StreamingQueryProgress."""
-    sink = progress.get("sink", {}) if progress else {}
-    return {
-        "batch_id": progress.get("batchId") if progress else None,
-        "input_rows": progress.get("numInputRows") if progress else 0,
-        "rows_per_second": progress.get("processedRowsPerSecond")
-        if progress else 0.0,
-        "sink_description": sink.get("description", ""),
-    }

@@ -32,9 +32,11 @@ replays after checkpoint recovery are safe (ST7).
 
 Scale note: the fold shuffles only the micro-batch (bounded, e.g. 1k-100k
 events), never the target; the merge joins models against the target on
-its key. On plain parquet the merged table is rewritten per batch (tests);
-on a production lakehouse the identical models frame feeds Delta/Iceberg
-MERGE INTO, which prunes to matching files.
+its key. There is one merge, `apply_cdc_batch`, with two layouts: a flat
+target is rewritten per batch (tests, small targets); a bucketed one
+(`num_buckets`) reads and rewrites only the hash buckets the batch's keys
+fall in. On a production lakehouse the identical models frame feeds
+Delta/Iceberg MERGE INTO, which prunes to matching files.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.commit import (
-    SCHEMA_RECORD, _fs, publish, put_text, read_text, recover,
+    SCHEMA_RECORD, _fs, publish, put_text, read_published, recover,
 )
 from hummingbird_spark.streaming.oplog import (
     namespace_match_column,
@@ -310,8 +312,7 @@ def _retain_target_columns(
     it away; deliberate column removal is a DDL operation, not a merge
     side effect."""
     known = {f.name for f in schema.fields}
-    extra = [f for f in target.schema.fields
-             if f.name not in known and f.name != "__bucket"]
+    extra = [f for f in target.schema.fields if f.name not in known]
     return T.StructType(list(schema.fields) + extra) if extra else schema
 
 
@@ -322,6 +323,7 @@ def apply_cdc_batch(
     key: str,
     schema: T.StructType,
     evolve: bool = False,
+    num_buckets: int | None = None,
 ) -> ApplyStats:
     """Merge one micro-batch's reduced write models into a parquet
     target — the plain-parquet equivalent of
@@ -332,64 +334,85 @@ def apply_cdc_batch(
        WHEN NOT MATCHED AND action IN ('replace','patch-as-noop') THEN INSERT`
     (BulkWriteOplogs semantics, oplog_utils.go:110-197).
 
+    `num_buckets` chooses the layout. Without it the target is flat and
+    each batch rewrites all of it. With it the target is laid out as
+    `__bucket=<pmod(xxhash64(key), N)>/` directories (hive-style
+    partitioning); a batch reads ONLY the buckets its keys hash into
+    (Catalyst partition pruning on the scan) and publishes ONLY those
+    directories, so untouched buckets' files are never read or written:
+    O(k/N of the table) per batch for k keys, the file-pruning shape
+    Delta/Iceberg MERGE INTO gets from min/max stats.
+
     `evolve=True` widens the schema with fields first seen in this
     batch (schemaless-source parity — see evolve_schema); pre-existing
     target rows carry NULL for the new columns. Columns the target
     already carries are always retained, whatever this batch mentions
-    (see _retain_target_columns).
+    (see _retain_target_columns); the widening runs after retention, so
+    a field's established target type wins over this batch's inference.
 
     Each publish records the target's schema in `_schema.json`
     (SCHEMA_RECORD), beside the data files, and the next batch reads
-    the target with it instead of inferring it (see _read_flat_target).
+    the target with it (commit.read_published). On the bucketed layout
+    untouched buckets keep files of older, narrower widths; the record
+    is the union schema, so reads fill their gaps with NULL.
     """
     # a publish a crash interrupted lands whole or not at all before
     # the read; the replayed batch then re-applies idempotently (ST7)
     recover(spark, target_path)
-    target = _read_flat_target(spark, target_path)
-    if target is not None:
-        schema = _retain_target_columns(schema, target)
-    if evolve:
-        schema = evolve_schema(reduced, schema)
-
-    if target is not None:
-        missing = [f for f in schema.fields if f.name not in target.columns]
-        for f in missing:
-            target = target.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    else:
-        target = _empty_target(spark, schema)
-
-    # no cache: the flat merge reads the models exactly once (the
-    # bucketed variant caches because it reuses them for bucket listing)
+    target = read_published(spark, target_path)
     m = reduced.withColumnRenamed("key", "__key")
-    obs = Observation()
-    result = _merge_survivors(target, m, key, schema, observation=obs)
+    # on an existing bucketed target, read and publish the touched
+    # buckets only; the first batch publishes the whole layout
+    pruned = bool(num_buckets) and target is not None
+    try:
+        if pruned:
+            # cached: the models serve the bucket listing, the merge and
+            # the stats recompute
+            m = m.withColumn("__bucket",
+                             _bucket_col(F.col("__key"), num_buckets)).cache()
+            touched = [r[0] for r in
+                       m.select("__bucket").distinct().collect()]
+            target = (target.filter(F.col("__bucket").isin(touched))
+                      .drop("__bucket"))  # partition pruning on the scan
+        if target is not None:
+            schema = _retain_target_columns(schema, target)
+        if evolve:
+            schema = evolve_schema(reduced, schema)
+        if target is None:
+            target = _empty_target(spark, schema)
+        for f in schema.fields:
+            if f.name not in target.columns:
+                target = target.withColumn(
+                    f.name, F.lit(None).cast(f.dataType))
+        obs = Observation()
+        result = _merge_survivors(target, m, key, schema, observation=obs)
 
-    def write(stage: str) -> ApplyStats:
-        result.write.parquet(stage)
-        # publishes together with the data; the next batch reads by it
-        put_text(spark, f"{stage}/{SCHEMA_RECORD}", result.schema.json())
-        return _stats_or_recompute(obs, m, target, key)  # pre-publish
+        def write(stage: str) -> ApplyStats:
+            if num_buckets:
+                # __bucket comes from the MERGED row's key (the pre-merge
+                # join's target side is null for inserts); one write task
+                # per bucket, so one file per bucket directory instead of
+                # one per (upstream task x bucket)
+                (result.withColumn("__bucket",
+                                   _bucket_col(F.col(key), num_buckets))
+                 .repartition(max(len(touched), 1) if pruned
+                              else num_buckets, "__bucket")
+                 .write.partitionBy("__bucket").parquet(stage))
+            else:
+                result.write.parquet(stage)
+            # publishes together with the data; the next batch reads by it
+            put_text(spark, f"{stage}/{SCHEMA_RECORD}", result.schema.json())
+            return _stats_or_recompute(obs, m, target, key)  # pre-publish
 
-    return publish(spark, target_path, write)
-
-
-def _read_flat_target(spark: SparkSession, path: str) -> DataFrame | None:
-    """The flat target as last published, or None before its first
-    batch. Read with the schema its publish recorded, which spares the
-    footer-reading job of schema inference. A target without the record
-    (written by another writer, or with files appended since, which
-    drops the record: see commit._adopt_parquet_files) unions its
-    files' schemas, so no column of an appended file is lost."""
-    recorded = read_text(spark, f"{path}/{SCHEMA_RECORD}")
-    if recorded is not None:
-        schema = T.StructType.fromJson(json.loads(recorded))
-        return spark.read.schema(schema).parquet(path)
-    fs, success = _fs(spark, f"{path}/_SUCCESS")
-    if not fs.exists(success):
-        return None
-    return spark.read.option("mergeSchema", "true").parquet(path)
+        # the touched buckets are published by name, incl. ones merging
+        # to empty, which a dynamic partition overwrite would leave stale
+        return publish(
+            spark, target_path, write,
+            partitions=[*(f"__bucket={b}" for b in touched),
+                        SCHEMA_RECORD] if pruned else None)
+    finally:
+        if pruned:
+            m.unpersist()
 
 
 @dataclass(frozen=True)
@@ -450,7 +473,7 @@ def _merge_survivors(
     target: DataFrame, m: DataFrame, key: str, schema: T.StructType,
     observation=None,
 ) -> DataFrame:
-    """The MERGE body shared by flat and bucketed apply: full-outer join
+    """The MERGE body of both layouts: full-outer join
     target rows with models (`m`: __key/action/doc/set_json/unset_json),
     emit surviving rows with patch/replace semantics applied.
 
@@ -522,109 +545,25 @@ def apply_cdc_batch_bucketed(
     num_buckets: int = 64,
     evolve: bool = False,
 ) -> ApplyStats:
-    """Partition-pruned MERGE on plain parquet — the scale path the flat
-    `apply_cdc_batch` docstring promises from a lakehouse, built with
-    nothing but hash-bucket partitioning:
-
-      - the target is laid out as `__bucket=<pmod(xxhash64(key), N)>/`
-        directories (hive-style partitioning),
-      - each batch computes the buckets its keys hash into, reads ONLY
-        those partitions (Catalyst partition pruning on the scan),
-      - and rewrites ONLY those directories (dynamic partition
-        overwrite) — untouched buckets' files are never read or written.
-
-    A batch touching k keys costs O(k/N of the table) instead of O(table)
-    per batch — the same file-pruning shape Delta/Iceberg MERGE INTO
-    achieves with min/max stats (oplog_utils.go:110-197 is the semantics
-    source; this is its 100-TB-viable parquet form).
-
-    `evolve=True`: new fields widen the schema additively. Because only
-    TOUCHED buckets are rewritten, bucket directories legitimately hold
-    files of different (compatible) widths afterwards — reads go
-    through parquet mergeSchema, which unions them and nulls the gaps
-    (`read_cdc_target` does this; a production lakehouse would carry
-    the union schema in table metadata instead of re-reading footers).
-    Columns already present in the touched buckets are retained whether
-    or not this batch mentions them (see _retain_target_columns); the
-    evolve widening runs AFTER retention so a field's established
-    target type wins over this batch's re-inference."""
-    recover(spark, target_path)
-    m = (
-        reduced.withColumnRenamed("key", "__key")
-        .withColumn("__bucket", _bucket_col(F.col("__key"), num_buckets))
-        .cache()
-    )
-    try:
-        fs, success = _fs(spark, f"{target_path}/_SUCCESS")
-        if not fs.exists(success):
-            # first batch: initialize the bucketed layout from scratch.
-            # __bucket is derived from the MERGED rows' key (computing it
-            # from the pre-merge join columns reads the null target side
-            # for inserts -> every insert lands in one bucket).
-            if evolve:
-                schema = evolve_schema(reduced, schema)
-            obs = Observation()
-            result = _merge_survivors(
-                _empty_target(spark, schema), m, key, schema,
-                observation=obs,
-            ).withColumn("__bucket", _bucket_col(F.col(key), num_buckets))
-            # co-locate each bucket into one task: one file per bucket
-            # dir instead of one per (upstream task x bucket) — tiny
-            # files would otherwise compound every batch
-            publish(spark, target_path,
-                    result.repartition(num_buckets, "__bucket").write
-                    .partitionBy("__bucket").parquet)
-            return _stats_or_recompute(
-                obs, m, _empty_target(spark, schema), key)
-
-        touched = [r[0] for r in m.select("__bucket").distinct().collect()]
-        if not touched:
-            return ApplyStats(0, 0, 0, 0)
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            .filter(F.col("__bucket").isin(touched))  # partition pruning
-            .drop("__bucket")
-        )
-        schema = _retain_target_columns(schema, target)
-        if evolve:
-            schema = evolve_schema(reduced, schema)
-        for f in schema.fields:
-            if f.name not in target.columns:
-                target = target.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
-                )
-        obs = Observation()
-        result = _merge_survivors(target, m, key, schema,
-                                  observation=obs) \
-            .withColumn("__bucket", _bucket_col(F.col(key), num_buckets))
-        # materialize to the stage (the plan READS the dirs we're about
-        # to replace), then publish exactly the touched partitions —
-        # incl. ones merging to empty, which partitionOverwriteMode=
-        # dynamic would leave stale (it only overwrites partitions
-        # present in the written data).
-        def write(stage: str) -> ApplyStats:
-            # one write task per touched bucket (see the seed write)
-            result.repartition(max(len(touched), 1), "__bucket").write \
-                .partitionBy("__bucket").parquet(stage)
-            return _stats_or_recompute(obs, m, target, key)  # pre-publish
-
-        return publish(spark, target_path, write,
-                       partitions=[f"__bucket={b}" for b in touched])
-    finally:
-        m.unpersist()
+    """`apply_cdc_batch` on the bucketed layout."""
+    return apply_cdc_batch(spark, reduced, target_path, key, schema,
+                           evolve=evolve, num_buckets=num_buckets)
 
 
 def read_cdc_target(
     spark: SparkSession, target_path: str,
     schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Read a CDC target written by either apply variant, hiding the
-    bucketing layout column. `schema` covers the fully-emptied bucketed
-    table (every partition dir removed -> nothing to infer from).
-    mergeSchema unions file schemas across buckets rewritten before vs
-    after a schema evolution (nulls fill the gaps)."""
+    """Read a CDC target of either layout by its schema record
+    (commit.read_published), hiding the bucketing layout column. A
+    bucketed target whose every bucket was emptied reads as empty with
+    its recorded schema. A target without the record reads with
+    mergeSchema; if it holds no data file at all, `schema` gives the
+    empty table."""
     try:
-        df = spark.read.option("mergeSchema", "true").parquet(target_path)
+        df = read_published(spark, target_path)
+        if df is None:
+            df = spark.read.option("mergeSchema", "true").parquet(target_path)
     except Exception:
         if schema is not None and _holds_no_data(spark, target_path):
             return _empty_target(spark, schema)
@@ -666,9 +605,10 @@ def start_cdc_stream(
     timestamps (ST1); `startingOffsets` semantics come free from the file
     source reading only unprocessed files.
 
-    `num_buckets` switches the sink to the partition-pruned bucketed
-    merge (`apply_cdc_batch_bucketed`) — the layout to use when the
-    target is large relative to each micro-batch. `evolve` lets
+    `num_buckets` lays the target out in that many hash buckets, each
+    batch reading and rewriting only the buckets it touches (see
+    apply_cdc_batch) — the layout to use when the target is large
+    relative to each micro-batch. `evolve` lets
     documents carrying never-seen fields widen the target additively
     per batch (schemaless-source parity — see evolve_schema). `ejson`
     strips extended-JSON type wrappers during decode (JSON-encoded
@@ -691,15 +631,9 @@ def start_cdc_stream(
                     continue  # DDL-only / unconfigured namespace (ST9: log, don't replay)
                 coll = ns.split(".", 1)[-1]
                 path = os.path.join(target_root, f"{coll}.parquet")
-                ns_models = reduced.filter(F.col("ns") == ns)
-                if num_buckets:
-                    stats = apply_cdc_batch_bucketed(
-                        spark, ns_models, path, key, schemas[ns],
-                        num_buckets=num_buckets, evolve=evolve,
-                    )
-                else:
-                    stats = apply_cdc_batch(spark, ns_models, path, key,
-                                            schemas[ns], evolve=evolve)
+                stats = apply_cdc_batch(
+                    spark, reduced.filter(F.col("ns") == ns), path, key,
+                    schemas[ns], evolve=evolve, num_buckets=num_buckets)
                 if on_stats is not None:
                     on_stats(ns, batch_id, stats)
         finally:

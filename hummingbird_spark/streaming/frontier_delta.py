@@ -299,11 +299,9 @@ def frontier_delta_batch(
             and os.path.isdir(mirror)):
         from hummingbird_spark.operators.compact import compact_table
 
-        # merge_schema: the mirror may mix pre- and post-lastmod
-        # files; a plain read could pick an old footer and silently
-        # drop the crawl-version column in the rewrite
-        compact_table(spark, mirror, partition_cols=["bucket"],
-                      merge_schema=True)
+        # the mirror may mix pre- and post-lastmod files; compaction
+        # reads their union, so the crawl-version column survives
+        compact_table(spark, mirror, partition_cols=["bucket"])
 
 
 def start_streaming_frontier_delta(

@@ -62,10 +62,6 @@ SLOW_NODE_IDS = {
     "test_analytics_properties.py::test_gap_sessionization_matches_naive",
     "test_bpe.py::test_bpe_matches_reference",
     "test_cc_properties.py::test_cc_matches_union_find",
-    "test_cdc.py::test_bucketed_apply_evolves_across_buckets",
-    "test_cdc.py::test_bucketed_apply_matches_flat",
-    "test_cdc.py::test_bucketed_evolved_column_survives_bucket_rewrite",
-    "test_cdc.py::test_evolved_column_survives_later_batches",
     "test_cli.py::test_cli_frontier",
     "test_crawl_loop_e2e.py::test_crawl_loop_end_to_end",
     "test_crawl_loop_e2e.py::test_recrawl_loop_updates_curated",

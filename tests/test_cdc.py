@@ -648,10 +648,10 @@ def test_evolve_no_new_fields_is_identity(spark):
 
 
 def test_bucketed_apply_evolves_across_buckets(spark, tmp_path):
-    """Schema evolution on the bucketed sink: only touched buckets are
-    rewritten, so old- and new-width files coexist; mergeSchema reads
-    union them with NULL gaps. Keys are spread so batch 2 touches a
-    strict subset of buckets."""
+    """Schema evolution on the bucketed layout: only touched buckets are
+    rewritten, so old- and new-width files coexist; reads by the schema
+    record, which holds the union, fill the gaps with NULL. Keys are
+    spread so batch 2 touches a strict subset of buckets."""
     from hummingbird_spark.streaming.cdc import (
         apply_cdc_batch_bucketed, read_cdc_target,
     )
@@ -962,3 +962,62 @@ def test_batch_scans_once_and_folds_in_the_jvm(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= FLAT_BATCH_JOBS, jobs
+
+
+
+# Spark jobs of one decode -> fold -> bucketed apply_cdc_batch (16
+# buckets, 200 keys, a 5-key patch batch) onto an existing target:
+# measured 8 (the bucket listing, then the query stages of the merge
+# write) once the bucketed layout read its target by the schema record;
+# 9 before, the extra one being the mergeSchema read of every bucket's
+# footers.
+BUCKETED_BATCH_JOBS = 8
+
+
+def test_bucketed_batch_reads_by_its_schema_record(spark, tmp_path):
+    """Every bucketed publish records the target's schema beside the
+    bucket directories, and the next batch and read_cdc_target read by
+    it: no schema-inference job, and a target whose every key was
+    deleted still reads as empty, with its schema."""
+    from hummingbird_spark.commit import SCHEMA_RECORD
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    path = str(tmp_path / "bt.parquet")
+
+    def batch(rows, evolve=False):
+        apply_cdc_batch(spark, reduce_write_models(decode_write_models(
+            _oplog_df(spark, rows))), path, "_id", TARGET_SCHEMA,
+            evolve=evolve, num_buckets=16)
+
+    def read():
+        with open(os.path.join(path, SCHEMA_RECORD)) as fh:
+            recorded = T.StructType.fromJson(json.load(fh))
+        got = read_cdc_target(spark, path)
+        assert got.schema == recorded
+        return got
+
+    batch([_ev(i, "i", {"_id": i, "x": f"v{i}", "n": i})
+           for i in range(200)])
+    assert read().count() == 200
+    batch([_ev(300, "u", {"$set": {"grade": "A"}}, {"_id": 7})],
+          evolve=True)
+    assert read().columns == ["_id", "x", "n", "grade"]
+
+    sc = spark.sparkContext
+    group = f"cdc-bucketed-job-guard-{tmp_path.name}"
+    sc.setJobGroup(group, "decode -> fold -> bucketed apply_cdc_batch")
+    try:
+        batch([_ev(400 + i, "u", {"$set": {"n": -i}}, {"_id": i * 37})
+               for i in range(5)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= BUCKETED_BATCH_JOBS, jobs
+    got = {r._id: r for r in read().collect()}
+    assert (got[37].n, got[7].grade, got[8].grade) == (-1, "A", None)
+
+    batch([_ev(500 + i, "d", {"_id": i}) for i in range(200)])
+    emptied = read()
+    assert emptied.count() == 0
+    assert emptied.columns == ["_id", "x", "n", "grade"]

@@ -78,6 +78,13 @@ CASES = {
     "partitions": (PRE, lambda spark, path: commit.publish(
         spark, path, lambda s: _put(s, {"b=0/g": "new0", "b=3/g": "new3"}),
         partitions=["b=0", "b=1", "b=3"])),
+    # the same with a file item beside the directories: a schema record
+    "partitions_record": (
+        {**PRE, "t/_schema.json": "old"},
+        lambda spark, path: commit.publish(
+            spark, path, lambda s: _put(s, {
+                "b=0/g": "new0", "b=3/g": "new3", "_schema.json": "new"}),
+            partitions=["b=0", "b=1", "b=3", "_schema.json"])),
     "text": ({"t": "1 2 "}, lambda spark, path: commit.write_text(
         spark, path, "1 2 3 ")),
 }

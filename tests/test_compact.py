@@ -148,3 +148,35 @@ def test_compact_swap_crash_windows_heal(spark, tmp_path, monkeypatch):
         assert got == want, after_commit
         assert os.listdir(tmp_path) == ["t"]
         shutil.rmtree(src)
+
+
+def test_compact_keeps_a_column_only_one_bucket_carries(spark, tmp_path):
+    """An evolved column lands only in the touched bucket's files; the
+    other buckets keep the narrower footers. Compaction reads by the
+    table's schema record, so the column and its value survive, and
+    the rewrite keeps the record."""
+    from hummingbird_spark.streaming.cdc import (
+        apply_cdc_batch_bucketed, decode_write_models, read_cdc_target,
+        reduce_write_models,
+    )
+    from tests.test_cdc import TARGET_SCHEMA, _ev, _oplog_df
+
+    path = str(tmp_path / "bt.parquet")
+
+    def batch(rows):
+        apply_cdc_batch_bucketed(
+            spark, reduce_write_models(decode_write_models(
+                _oplog_df(spark, rows))),
+            path, "_id", TARGET_SCHEMA, num_buckets=4, evolve=True)
+
+    batch([_ev(i, "i", {"_id": i, "x": f"x{i}", "n": i})
+           for i in range(1, 9)])
+    # _id 2 hashes to __bucket=1; __bucket=0 holds _ids 1 and 8
+    batch([_ev(100, "u", {"$set": {"grade": "A"}}, {"_id": 2})])
+
+    compact_table(spark, path, partition_cols=["__bucket"])
+    got = {r._id: r for r in read_cdc_target(spark, path).collect()}
+    assert set(got) == set(range(1, 9))
+    assert got[2].grade == "A"
+    assert all(got[i].grade is None for i in got if i != 2)
+    assert os.path.exists(os.path.join(path, "_schema.json"))

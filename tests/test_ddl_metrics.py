@@ -1,4 +1,4 @@
-"""DDL passthrough (D1-D4) and progress/metrics (A4/A6/ST8) tests."""
+"""DDL passthrough (D1-D4) and progress (A4) tests."""
 
 from __future__ import annotations
 
@@ -7,11 +7,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from hummingbird_spark.operators.metrics import (
-    Progress,
-    apply_counters,
-    observed_copy,
-)
+from hummingbird_spark.operators.metrics import Progress
 from hummingbird_spark.sources.ddl import (
     TableSpec,
     create_table,
@@ -64,16 +60,6 @@ def test_create_table_refuses_existing(spark, tmp_path):
         create_table(spark, df, path, TableSpec("db.r"))
 
 
-def test_observed_copy_counters(spark, tmp_path):
-    # A6: counters materialize during the action, no second scan
-    df = spark.read.parquet(f"{SF_SMOKE}/nation.parquet")
-    observed, obs = observed_copy(df)
-    observed.write.mode("overwrite").parquet(str(tmp_path / "n.parquet"))
-    got = obs.get
-    assert got["rows"] == 25
-    assert got["approx_bytes"] > 0
-
-
 def test_progress_eta():
     # A4 (data_copier.go:146-175)
     p = Progress(completed=25, total=100, started_at=time.time() - 50)
@@ -82,14 +68,3 @@ def test_progress_eta():
     assert 140 < eta < 160  # 50s for 25 => ~150s for remaining 75
     assert Progress(0, 100, time.time()).eta_seconds() is None
     assert Progress(0, 0, time.time()).percent == 100.0
-
-
-def test_apply_counters_shape():
-    fake = {"batchId": 7, "numInputRows": 123,
-            "processedRowsPerSecond": 45.6,
-            "sink": {"description": "ForeachBatchSink"}}
-    c = apply_counters(fake)
-    assert c == {"batch_id": 7, "input_rows": 123,
-                 "rows_per_second": 45.6,
-                 "sink_description": "ForeachBatchSink"}
-    assert apply_counters({})["input_rows"] == 0

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.operators.compare import compare_tables
 from hummingbird_spark.operators.copy import copy_table, run_migration
-from hummingbird_spark.operators.split import block_boundaries
 from tests.conftest import SF_SMOKE
 
 
@@ -167,15 +166,6 @@ def test_compare_migration_with_includes(spark, target_dir):
                 key="c_custkey")
     bad = compare_migration(spark, cfg2)
     assert not bad[0].equal
-
-
-def test_block_boundaries_semantics(spark):
-    """splitter.go:76-102: boundary every Nth row, inclusive [lo,hi]."""
-    df = spark.range(25).withColumnRenamed("id", "_id")
-    blocks = block_boundaries(df, "_id", block=10).collect()
-    assert [(b.block_id, b.lo, b.hi, b.rows) for b in blocks] == [
-        (0, 0, 9, 10), (1, 10, 19, 10), (2, 20, 24, 5),
-    ]
 
 
 def test_config_validation():
