@@ -124,6 +124,7 @@ def _cmd_pipeline(args: argparse.Namespace) -> int:
     $lookup foreign tables resolve against the same --data directory;
     terminal $out/$merge stages write back into it."""
     from hummingbird_spark.pipeline import run_pipeline
+    from hummingbird_spark.sources.tables import read_source
 
     spark = get_spark(app_name="hummingbird_pipeline")
     spark.sparkContext.setLogLevel("ERROR")
@@ -137,8 +138,7 @@ def _cmd_pipeline(args: argparse.Namespace) -> int:
     import os
 
     tables = {
-        os.path.basename(f).removesuffix(".parquet"):
-            spark.read.parquet(f)
+        os.path.basename(f).removesuffix(".parquet"): read_source(spark, f)
         for f in glob.glob(os.path.join(args.data, "*.parquet"))
     }
     if args.table not in tables:

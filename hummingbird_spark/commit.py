@@ -29,10 +29,15 @@ Hadoop rename onto an existing directory nests the source inside it.
 All file-system work goes through the Hadoop FileSystem API, so the
 protocol holds on any Hadoop filesystem whose renames are atomic
 (local, HDFS). One writer per path is assumed (streaming/ledger.py).
-Small files (ledgers, cursors, schema records) go through the same API:
-`write_text` publishes one, `put_text` writes one into a stage,
-`read_text` reads one. `read_published` reads a published parquet
-table by its schema record.
+Small files (ledgers, cursors) go through the same API: `write_text`
+publishes one, `put_text` writes one into a stage, `read_text` reads
+one.
+
+Every parquet table the migration path publishes (the copy, the CDC
+sink, compaction, pipeline `$out`/`$merge`) carries a schema record:
+`put_schema` writes it into the stage, `recorded_schema` parses it,
+and `read_published` reads the table by it. Its file name and encoding
+live here alone.
 """
 
 from __future__ import annotations
@@ -47,7 +52,7 @@ from pyspark.sql import types as T
 _RECORD = ".__commit"
 _END = "end"  # last line of a complete record; a torn one lacks it
 # a table's schema without its partition columns, published with its
-# data files (streaming/cdc.py); it describes exactly those files
+# data files by every migration writer; it describes exactly those files
 SCHEMA_RECORD = "_schema.json"
 
 
@@ -173,17 +178,32 @@ def _read(fs, hpath) -> str | None:
         stream.close()
 
 
+def put_schema(spark: SparkSession, stage: str,
+               schema: T.StructType) -> None:
+    """Record `schema` (without partition columns) beside the data files
+    in `stage`, to publish with them."""
+    put_text(spark, f"{stage}/{SCHEMA_RECORD}", schema.json())
+
+
+def recorded_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema the last publish of the table at `path` recorded, or
+    None when it has no record."""
+    recorded = read_text(spark, f"{path}/{SCHEMA_RECORD}")
+    if recorded is None:
+        return None
+    return T.StructType.fromJson(json.loads(recorded))
+
+
 def read_published(spark: SparkSession, path: str) -> DataFrame | None:
     """The parquet table at `path` as last published, or None before its
     first publish (no `_SUCCESS`). Read with the schema its publish
-    recorded in SCHEMA_RECORD, which spares the footer-reading job of
+    recorded (recorded_schema), which spares the footer-reading job of
     schema inference; partition directories are still discovered and
     pruned. A table without the record (written by another writer, or
     with files appended since: see _adopt_parquet_files) unions its
     files' schemas, so no column of any file is lost."""
-    recorded = read_text(spark, f"{path}/{SCHEMA_RECORD}")
-    if recorded is not None:
-        schema = T.StructType.fromJson(json.loads(recorded))
+    schema = recorded_schema(spark, path)
+    if schema is not None:
         return spark.read.schema(schema).parquet(path)
     fs, success = _fs(spark, f"{path}/_SUCCESS")
     if not fs.exists(success):

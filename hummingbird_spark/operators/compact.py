@@ -30,8 +30,7 @@ import math
 from pyspark.sql import SparkSession
 
 from hummingbird_spark.commit import (
-    SCHEMA_RECORD, _fs, publish, put_text, read_published, read_text,
-    recover,
+    _fs, publish, put_schema, read_published, recorded_schema, recover,
 )
 
 
@@ -42,7 +41,10 @@ def table_bytes(spark: SparkSession, path: str) -> int:
 
 
 def parquet_file_count(spark: SparkSession, path: str) -> int:
-    return len(spark.read.parquet(path).inputFiles())
+    df = read_published(spark, path)
+    if df is None:
+        df = spark.read.parquet(path)
+    return len(df.inputFiles())
 
 
 def compact_table(spark: SparkSession, path: str,
@@ -57,17 +59,21 @@ def compact_table(spark: SparkSession, path: str,
     The table is read by commit.read_published, or with mergeSchema
     when it has no `_SUCCESS`: files of different widths union, never
     narrow to one footer's columns. A table with a schema record gets
-    it back with the rewrite, so its next reader need not infer one.
+    it back with the rewrite, so its next reader need not infer one. A
+    table without one gets none: its writers append with Spark's own
+    append mode (the streaming stores), and a record would not
+    describe their next files, so the next read would drop a column
+    only those files carry.
 
     Returns a report dict (files/bytes before and after).
     """
     recover(spark, path)
-    before_files = parquet_file_count(spark, path)
     before_bytes = table_bytes(spark, path)
+    record = recorded_schema(spark, path)
     df = read_published(spark, path)
     if df is None:
         df = spark.read.option("mergeSchema", "true").parquet(path)
-    record = read_text(spark, f"{path}/{SCHEMA_RECORD}")
+    before_files = len(df.inputFiles())
     n_out = max(1, math.ceil(before_bytes / target_file_bytes))
     writer = (
         df.repartition(*([n_out] + list(partition_cols)))
@@ -89,7 +95,7 @@ def compact_table(spark: SparkSession, path: str,
     def write(stage: str) -> None:
         writer.parquet(stage)
         if record is not None:
-            put_text(spark, f"{stage}/{SCHEMA_RECORD}", record)
+            put_schema(spark, stage, record)
 
     publish(spark, path, write, verify=verify)
     return {

@@ -87,9 +87,10 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
     """The `-compare` command (compare.go:13-31): per included namespace
     — with its filter, mask, limit, and rename applied to the source —
     verify the migrated target matches. Returns one CompareResult per
-    namespace."""
+    namespace. Both sides are read by `read_source`: a target the copy
+    published reads by its schema record, with no schema-inference job."""
     from hummingbird_spark.operators.copy import (
-        _SOURCE_EXTS,
+        _source_path,
         _table_path,
         resolve_includes,
         transform_for_include,
@@ -97,14 +98,11 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
     from hummingbird_spark.sources.tables import read_source
 
     pairs = []
-    for inc in resolve_includes(cfg):
+    for inc in resolve_includes(spark, cfg):
         src = transform_for_include(
-            read_source(
-                spark, _table_path(cfg.source, inc.namespace, _SOURCE_EXTS)
-            ), inc
-        )
-        tgt = spark.read.parquet(
-            _table_path(cfg.target, inc.target_namespace)
-        )
+            read_source(spark, _source_path(spark, cfg.source,
+                                            inc.namespace)), inc)
+        tgt = read_source(spark, _table_path(cfg.target,
+                                             inc.target_namespace))
         pairs.append((inc.namespace, src, tgt))
     return _compare_all(pairs)

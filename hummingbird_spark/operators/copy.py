@@ -8,6 +8,14 @@ workers cursor-copy each range with the include filter conjoined
 The task queue, workers, stragglers, and resume bookkeeping collapse into
 Spark's scheduler + an idempotent write; what remains is this thin layer.
 
+Every table the copy writes is published through the commit protocol
+(hummingbird_spark/commit.py) with its schema record, so a killed copy
+leaves the target exactly as it was or exactly copied, and every later
+reader (resume, top-up, compare, CDC, pipelines) reads it by the record
+instead of inferring a schema. Listing, existence checks and the drop
+go through the Hadoop FileSystem API, so source and target may be any
+Hadoop filesystem URI.
+
 Scale notes:
   - filter/projection reach the parquet scan (Catalyst pushdown);
   - the only shuffle is the optional repartitionByRange that reproduces
@@ -20,15 +28,15 @@ Scale notes:
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from hummingbird_spark.commit import _adopt_parquet_files
+from hummingbird_spark.commit import (
+    _adopt_parquet_files, _fs, publish, put_schema, read_published, recover,
+)
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.filters import mongo_filter_to_column
 from hummingbird_spark.functions.masks import mask_dataframe
@@ -61,14 +69,20 @@ _SOURCE_EXTS = (".parquet", ".jsonl", ".jsonl.gz", ".ndjson", ".json",
                 ".csv", ".csv.gz", ".tsv", ".tsv.gz")
 
 
-def _table_path(root: str, namespace: str,
-                exts: tuple[str, ...] = (".parquet",)) -> str:
-    # namespace "db.coll" -> {root}/{coll}.<ext> ; bare "coll" likewise.
-    # First existing extension wins; parquet when nothing exists yet.
+def _table_path(root: str, namespace: str) -> str:
+    """namespace "db.coll" (or bare "coll") -> {root}/{coll}.parquet:
+    where the copy writes it."""
     db, coll = split_namespace(namespace)
-    base = os.path.join(root, coll or db)
-    for ext in exts:
-        if os.path.exists(base + ext):
+    return f"{root.rstrip('/')}/{coll or db}.parquet"
+
+
+def _source_path(spark: SparkSession, root: str, namespace: str) -> str:
+    """The source table of `namespace` under `root`: the first of
+    _SOURCE_EXTS that exists, else the parquet path."""
+    base = _table_path(root, namespace)[: -len(".parquet")]
+    for ext in _SOURCE_EXTS:
+        fs, hpath = _fs(spark, base + ext)
+        if fs.exists(hpath):
             return base + ext
     return base + ".parquet"
 
@@ -76,44 +90,58 @@ def _table_path(root: str, namespace: str,
 def _parquet_row_count(path: str) -> int | None:
     """Row count from parquet footers (driver-side metadata read, no
     Spark job) — the analogue of the reference's collstats-based task
-    sizing. Valid only for an unfiltered, unlimited copy. Row-format
-    sources carry no footer stats -> None (caller falls back to a
-    count-free partitioning)."""
-    if not path.endswith(".parquet"):
+    sizing. Valid only for an unfiltered, unlimited copy. pyarrow reads
+    the footers from the local disk, so a path that is not there (a
+    Hadoop filesystem URI) gives None, as a row-format source without
+    footer stats does: the caller then leaves the split to AQE."""
+    if not path.endswith(".parquet") or not os.path.exists(path):
         return None
     try:
         import pyarrow.parquet as pq
 
-        parts = glob.glob(os.path.join(path, "*.parquet")) or [path]
+        parts = ([os.path.join(path, n) for n in os.listdir(path)
+                  if n.endswith(".parquet")]
+                 if os.path.isdir(path) else [path])
         return sum(pq.read_metadata(p).num_rows for p in parts)
     except Exception:
         return None
 
 
-def list_source_namespaces(source: str) -> list[str]:
+def list_source_namespaces(spark: SparkSession, source: str) -> list[str]:
     """Enumerate copyable namespaces in a source directory — the catalog
-    scan (S5) for file-based sources, any supported format."""
+    scan (S5) for file-based sources, any supported format, on any
+    Hadoop filesystem. A missing directory holds none."""
+    fs, root = _fs(spark, source)
+    if not fs.exists(root):
+        return []
     names = set()
-    for ext in _SOURCE_EXTS:
-        for p in glob.glob(os.path.join(source, f"*{ext}")):
-            names.add(os.path.basename(p)[: -len(ext)])
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        ext = next((e for e in _SOURCE_EXTS if name.endswith(e)), None)
+        if ext is not None and not name.startswith("."):
+            names.add(name[: -len(ext)])
     return sorted(names)
 
 
-def resolve_includes(cfg: MigrationConfig) -> list[Include]:
+def resolve_includes(spark: SparkSession,
+                     cfg: MigrationConfig) -> list[Include]:
     """The includes to copy or compare, wildcards expanded against the
     source's collections (data_copier.go:78-102). File sources name bare
     collections, so a pattern's collection part is matched against them
     and its db, when concrete, is kept. An empty include list means every
-    collection (minimum.json); a pattern that matches nothing raises."""
-    available = list_source_namespaces(cfg.source)
+    collection (minimum.json); a pattern that matches nothing raises.
+    The source is listed only when an include needs it."""
     if not cfg.includes:
-        return [Include(namespace=ns) for ns in available]
+        return [Include(namespace=ns)
+                for ns in list_source_namespaces(spark, cfg.source)]
     out: list[Include] = []
+    available = None
     for inc in cfg.includes:
         if "*" not in inc.namespace:
             out.append(inc)
             continue
+        if available is None:
+            available = list_source_namespaces(spark, cfg.source)
         db, coll = split_namespace(inc.namespace)
         if coll and "*" not in db:
             found = expand_namespaces([f"{db}.{c}" for c in available],
@@ -147,10 +175,15 @@ def copy_table(
     resume: bool = False,
 ) -> CopyResult:
     """Copy one namespace source->target. Modes:
-      - cfg.drop: overwrite target (DropCollections, migrator.go:155-193)
+      - no target, or cfg.drop: publish the copy with its schema record
+        (commit.publish), replacing any target (DropCollections,
+        migrator.go:155-193)
       - resume + target exists: skip (completed-task skip, splitter.go:33-35)
       - target exists, no drop: idempotent top-up — append only rows whose
         key is missing (dup-key reconciliation J1, task.go:88-101)
+    The target exists when commit.read_published finds it, after
+    `recover` has settled an interrupted publish: a copy killed before
+    its commit point left no target, one killed after it a whole one.
     """
     if cfg.source.startswith(("mongodb://", "mongodb+srv://")):
         # the reference's native source: dispatch through the
@@ -166,26 +199,23 @@ def copy_table(
                              **mongodb_read_options(cfg, include))
         src_path = None   # no parquet footers to count from
     else:
-        src_path = _table_path(cfg.source, include.namespace,
-                               _SOURCE_EXTS)
+        src_path = _source_path(spark, cfg.source, include.namespace)
         src_df = read_source(spark, src_path)
     dst_path = _table_path(cfg.target, include.target_namespace)
     df = transform_for_include(src_df, include)
 
-    target_exists = os.path.exists(os.path.join(dst_path, "_SUCCESS"))
-    if resume and target_exists:
+    recover(spark, dst_path)
+    existing = read_published(spark, dst_path)
+    if resume and existing is not None:
         return CopyResult(include.namespace, include.target_namespace, 0,
                           skipped=True)
 
-    mode = "overwrite"
-    if target_exists and not cfg.drop:
-        existing = spark.read.parquet(dst_path).select(
-            F.col(cfg.key).alias("__existing_key")
-        )
+    top_up = existing is not None and not cfg.drop
+    if top_up:
+        existing = existing.select(F.col(cfg.key).alias("__existing_key"))
         df = df.join(
             existing, df[cfg.key] == existing["__existing_key"], "left_anti"
         )
-        mode = "append"
 
     key_in_schema = cfg.key in df.columns
     if key_in_schema:
@@ -193,7 +223,7 @@ def copy_table(
         # else is left to AQE (no count scan either way)
         rows = None
         if src_path is not None and not include.filter \
-                and not include.limit and mode == "overwrite":
+                and not include.limit and not top_up:
             rows = _parquet_row_count(src_path)
         df = partition_for_copy(df, cfg.key, rows=rows, block=cfg.block)
 
@@ -213,7 +243,11 @@ def copy_table(
                 )
         return writer
 
-    if mode == "append":
+    # count during the write (observed metric, A6-style) — not with a
+    # read-back scan of the target
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    if top_up:
         # Appending to the path the anti-join is also reading (self-read)
         # is unsafe on plain parquet, but materializing the delta on the
         # driver caps the top-up at driver memory. Instead write the
@@ -222,20 +256,16 @@ def copy_table(
         # move the data files in: the plain-parquet equivalent of MERGE
         # whenNotMatchedInsert (the append path of
         # hummingbird_spark/commit.py).
-        tmp = dst_path.rstrip("/") + "__append_tmp"
-        obs = Observation()
-        _with_bloom(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write
-        ).mode("overwrite").parquet(tmp)
+        tmp = dst_path + "__append_tmp"
+        _with_bloom(out.write).mode("overwrite").parquet(tmp)
         n = obs.get["rows"]
         _adopt_parquet_files(spark, tmp, dst_path, move=n > 0)
     else:
-        # count during the write (observed metric, A6-style) — not with a
-        # read-back scan of the target
-        obs = Observation()
-        _with_bloom(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write
-        ).mode("overwrite").parquet(dst_path)
+        def write(stage: str) -> None:
+            _with_bloom(out.write).parquet(stage)
+            put_schema(spark, stage, out.schema)
+
+        publish(spark, dst_path, write)
         n = obs.get["rows"]
     return CopyResult(include.namespace, include.target_namespace, n)
 
@@ -250,17 +280,18 @@ def run_migration(
     stages of each in parallel across the cluster; at 100 TB per-table
     parallelism (partitions) dominates, not table count.
     """
-    expanded = resolve_includes(cfg)
-    if cfg.drop and os.path.isdir(cfg.target) and not resume:
-        # Drop target namespaces (migrator.go:155-193), scoped to tables
-        # we are about to write.
+    expanded = resolve_includes(spark, cfg)
+    if cfg.drop and not resume:
+        # Drop target namespaces first (migrator.go:155-193), scoped to
+        # tables we are about to write: a drop run killed midway leaves
+        # its uncopied tables absent, so `resume` recopies them instead
+        # of skipping stale ones.
         for inc in expanded:
-            p = _table_path(cfg.target, inc.target_namespace)
-            if os.path.isdir(p):
-                shutil.rmtree(p)
+            fs, hpath = _fs(spark, _table_path(cfg.target,
+                                               inc.target_namespace))
+            fs.delete(hpath, True)
 
     report = MigrationReport()
-    os.makedirs(cfg.target, exist_ok=True)
     if tracker is not None:  # web.ProgressTracker status feed (A4)
         tracker.add(*[inc.namespace for inc in expanded])
     for inc in expanded:

@@ -82,7 +82,9 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hummingbird_spark.commit import publish, recover
+from hummingbird_spark.commit import (
+    publish, put_schema, read_published, recover,
+)
 from hummingbird_spark.filters import mongo_filter_to_column
 
 _SEED = 3629  # the reference's web port — fixed seed for $sample
@@ -1595,9 +1597,9 @@ def run_pipeline(
     (replace a collection with the results) or `$merge` (upsert into
     one). Non-terminal stages translate via mongo_pipeline_to_df; the
     write lands `{data_dir}/{coll}.parquet` through commit.publish
-    (stage, then swap) so a pipeline may safely read the table it
-    replaces. Returns
-    the written (or final) frame.
+    (stage, then swap) with its schema record, so a pipeline may safely
+    read the table it replaces. Returns the written table, read by its
+    record (commit.read_published), or the final frame.
 
     `$merge` options follow Mongo's: `on` key or key list (default
     `_id`), `whenMatched` in replace|merge|keepExisting, and
@@ -1661,8 +1663,13 @@ def run_pipeline(
     if dry_run:
         return result
     path = os.path.join(data_dir, f"{coll}.parquet")
-    publish(spark, path, result.write.parquet)
-    return spark.read.parquet(path)
+
+    def write(stage: str) -> None:
+        result.write.parquet(stage)
+        put_schema(spark, stage, result.schema)
+
+    publish(spark, path, write)
+    return read_published(spark, path)
 
 
 def _merge_into(spark, out: DataFrame, path: str, keys: list[str],
@@ -1677,14 +1684,18 @@ def _merge_into(spark, out: DataFrame, path: str, keys: list[str],
     against the incoming doc; default {new: "$$ROOT"}). Supported
     stages: $addFields/$set, $unset, $project (include form), and
     $replaceRoot/$replaceWith with an embedded-document newRoot.
+
+    The live target is read by commit.read_published (by its schema
+    record, on any Hadoop filesystem); None means there is no target
+    yet.
     """
-    if not os.path.exists(path):
+    target = read_published(spark, path)
+    if target is None:
         if when_not == "fail" and out.limit(1).count() > 0:
             raise RuntimeError(
                 "$merge whenNotMatched: fail — unmatched documents "
                 "exist (empty target)")
         return out if when_not == "insert" else out.limit(0)
-    target = spark.read.parquet(path)
     # union schema: target fields (their established types win for
     # shared names) + pipeline-only fields appended
     tnames = {f.name for f in target.schema.fields}

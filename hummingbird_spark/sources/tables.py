@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hummingbird_spark.commit import recorded_schema
+
 TABLES = (
     "region",
     "nation",
@@ -73,7 +75,12 @@ def read_source(spark: SparkSession, path: str,
     scans get pushdown, pruning, and row-group stats. JSON/CSV scans
     still stream and split (gzip members aside), but carry no column
     statistics — schema inference alone costs a full read, so prefer
-    an explicit schema= option on big row-format inputs."""
+    an explicit schema= option on big row-format inputs.
+
+    A parquet table published with a schema record (every table the
+    migration path writes: commit.put_schema) reads by that record when
+    no `schema` is given, with no footer-reading inference job; a
+    parquet path without one reads as Spark infers it."""
     if fmt is None:
         if path.startswith(("mongodb://", "mongodb+srv://")):
             fmt = "mongodb"
@@ -89,6 +96,8 @@ def read_source(spark: SparkSession, path: str,
 
         return read_mongodb(spark, path, **options)
     schema = options.pop("schema", None)
+    if schema is None and fmt == "parquet":
+        schema = recorded_schema(spark, path)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)

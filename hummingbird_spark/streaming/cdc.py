@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.commit import (
-    SCHEMA_RECORD, _fs, publish, put_text, read_published, recover,
+    SCHEMA_RECORD, _fs, publish, put_schema, read_published, recover,
 )
 from hummingbird_spark.streaming.oplog import (
     namespace_match_column,
@@ -350,11 +350,11 @@ def apply_cdc_batch(
     (see _retain_target_columns); the widening runs after retention, so
     a field's established target type wins over this batch's inference.
 
-    Each publish records the target's schema in `_schema.json`
-    (SCHEMA_RECORD), beside the data files, and the next batch reads
-    the target with it (commit.read_published). On the bucketed layout
-    untouched buckets keep files of older, narrower widths; the record
-    is the union schema, so reads fill their gaps with NULL.
+    Each publish records the target's schema beside the data files
+    (commit.put_schema), and the next batch reads the target by it
+    (commit.read_published). On the bucketed layout untouched buckets
+    keep files of older, narrower widths; the record is the union
+    schema, so reads fill their gaps with NULL.
     """
     # a publish a crash interrupted lands whole or not at all before
     # the read; the replayed batch then re-applies idempotently (ST7)
@@ -401,7 +401,7 @@ def apply_cdc_batch(
             else:
                 result.write.parquet(stage)
             # publishes together with the data; the next batch reads by it
-            put_text(spark, f"{stage}/{SCHEMA_RECORD}", result.schema.json())
+            put_schema(spark, stage, result.schema)
             return _stats_or_recompute(obs, m, target, key)  # pre-publish
 
         # the touched buckets are published by name, incl. ones merging

@@ -65,7 +65,6 @@ SLOW_NODE_IDS = {
     "test_cli.py::test_cli_frontier",
     "test_crawl_loop_e2e.py::test_crawl_loop_end_to_end",
     "test_crawl_loop_e2e.py::test_recrawl_loop_updates_curated",
-    "test_filter_properties.py::test_translator_matches_reference_semantics",
     "test_frontier_delta.py::test_delta_equals_from_scratch_every_tick",
     "test_frontier_delta.py::test_mirror_compacts_on_cadence",
     "test_frontier_delta.py::test_recrawl_on_update_requeues_strictly_newer",

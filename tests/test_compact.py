@@ -180,3 +180,24 @@ def test_compact_keeps_a_column_only_one_bucket_carries(spark, tmp_path):
     assert got[2].grade == "A"
     assert all(got[i].grade is None for i in got if i != 2)
     assert os.path.exists(os.path.join(path, "_schema.json"))
+
+
+def test_compact_of_an_append_store_adds_no_schema_record(spark, tmp_path):
+    """A table its writers append to with Spark's own append mode has no
+    schema record, and compaction adds none: a record would not describe
+    the next appended files, and the next compaction would read by it
+    and drop a column only those files carry."""
+    from hummingbird_spark.commit import recorded_schema
+
+    store = str(tmp_path / "store")
+    for k in (1, 2):
+        spark.createDataFrame([(k, "a")], "k long, v string") \
+            .write.mode("append").parquet(store)
+    compact_table(spark, store)
+    assert recorded_schema(spark, store) is None
+    spark.createDataFrame([(3, "c", 9)], "k long, v string, w long") \
+        .write.mode("append").parquet(store)
+    compact_table(spark, store)
+    back = spark.read.option("mergeSchema", "true").parquet(store)
+    assert sorted((r.k, r.w) for r in back.collect()) == [
+        (1, None), (2, None), (3, 9)]

@@ -1,7 +1,8 @@
 """The `-compare` validation (operators/compare.py): its one-pass
 multiset counts checked against DuckDB's EXCEPT ALL and against the
-two-`exceptAll` formula, wildcard includes through migrate + compare,
-and the number of Spark jobs one `compare_migration` may run."""
+two-`exceptAll` formula, wildcard includes through migrate + compare
+(on local paths and on `file://` URIs), and the number of Spark jobs
+one `compare_migration` may run."""
 
 from __future__ import annotations
 
@@ -11,12 +12,14 @@ import duckdb
 import pyarrow as pa
 import pytest
 
+from hummingbird_spark.commit import recorded_schema
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.operators.compare import (
     compare_migration,
     compare_tables,
 )
 from hummingbird_spark.operators.copy import run_migration
+from hummingbird_spark.sources.tables import read_source
 
 FLAT = ("k int, s string",
         pa.schema([("k", pa.int32()), ("s", pa.string())]))
@@ -122,12 +125,50 @@ def test_wildcard_include_migrates_and_compares(spark, tmp_path):
         compare_migration(spark, cfg)
 
 
-# Spark jobs of one compare_migration over three namespaces, measured when
-# the one-pass compare landed (Spark 4.1.2, local mode, AQE on): 11 = 6
-# parquet schema-inference jobs (one per read) + 3 per-namespace shuffle
-# stages + 1 per-namespace sum stage + 1 result stage. The compare it
-# replaced (two counts and two exceptAll counts per namespace) ran 36.
-COMPARE_JOBS_THREE_NAMESPACES = 11
+def test_migration_over_file_uris(spark, tmp_path):
+    """Source and target given as `file://` URIs: `db.*` lists a parquet
+    and a `.jsonl` collection on the Hadoop filesystem, both copy and
+    compare equal, and `resume` skips both."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    _write_collections(spark, str(src), ["a"])
+    with open(src / "b.jsonl", "w") as fh:
+        for i in range(12):
+            fh.write(f'{{"_id": {i}, "tag": "b-{i % 3}"}}\n')
+    cfg = MigrationConfig(command="data-only", source=src.as_uri(),
+                          target=dst.as_uri(),
+                          includes=[Include(namespace="db.*")], key="_id",
+                          drop=True)
+    report = run_migration(spark, cfg)
+    assert [(r.namespace, r.rows_copied) for r in report.results] == [
+        ("db.a", 30), ("db.b", 12)]
+    assert sorted(p.name for p in dst.iterdir()) == ["a.parquet",
+                                                     "b.parquet"]
+    assert [(r.namespace, r.equal) for r in compare_migration(spark, cfg)
+            ] == [("db.a", True), ("db.b", True)]
+    resumed = run_migration(spark, cfg, resume=True)
+    assert [(r.namespace, r.skipped) for r in resumed.results] == [
+        ("db.a", True), ("db.b", True)]
+
+
+# Spark jobs of one compare_migration over three namespaces (Spark 4.1.2,
+# local mode, AQE on): 8 = 3 source schema-inference jobs (the targets
+# read by their schema records, with none) + 3 per-namespace shuffle
+# stages + 1 per-namespace sum stage + 1 result stage. The one-pass
+# compare ran 11 while it inferred the targets' schemas too; the compare
+# before it (two counts and two exceptAll counts per namespace) ran 36.
+COMPARE_JOBS_THREE_NAMESPACES = 8
+
+
+def _jobs_of(spark, group: str, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_compare_migration_job_count(spark, tmp_path):
@@ -139,14 +180,15 @@ def test_compare_migration_job_count(spark, tmp_path):
                   Include(namespace="b", filter={"v": {"$gte": 10}}),
                   Include(namespace="c", to="c2")])
     run_migration(spark, cfg)
-    sc = spark.sparkContext
-    group = f"compare-job-guard-{tmp_path.name}"
-    sc.setJobGroup(group, "compare_migration job count")
-    try:
-        results = compare_migration(spark, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    targets = [f"{dst}/{n}.parquet" for n in ("a", "b", "c2")]
+    # each copied target carries its schema record, and reads by it
+    # with no Spark job
+    assert all(recorded_schema(spark, t) is not None for t in targets)
+    _, read_jobs = _jobs_of(
+        spark, f"target-read-guard-{tmp_path.name}",
+        lambda: [read_source(spark, t) for t in targets])
+    assert read_jobs == 0, read_jobs
+    results, jobs = _jobs_of(spark, f"compare-job-guard-{tmp_path.name}",
+                             lambda: compare_migration(spark, cfg))
     assert [r.equal for r in results] == [True, True, True]
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= COMPARE_JOBS_THREE_NAMESPACES, jobs

@@ -8,6 +8,12 @@ deviation, SURVEY §1.2).
 The reference corpus only exercises a handful of literal filters
 (quickstart.json, data-only.json); this is the exhaustive version the
 Go reference gets for free by passing filters to MongoDB's own server.
+
+All Hypothesis examples are gathered first and then filtered together in
+one DataFrame: each example's rows carry its index, one CASE branch per
+example applies that example's filter, and one collect returns every
+example's matching row ids, so the property costs one Spark job instead
+of one per example.
 """
 
 from __future__ import annotations
@@ -16,11 +22,13 @@ import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hummingbird_spark.filters import mongo_filter_to_column
 
 SCHEMA = T.StructType([
+    T.StructField("example", T.LongType(), False),
     T.StructField("row_id", T.LongType(), False),
     T.StructField("i", T.LongType(), True),
     T.StructField("s", T.StringType(), True),
@@ -176,16 +184,36 @@ filters = st.recursive(
 )
 
 
-@settings(max_examples=30, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(data=rows, doc=filters)
-def test_translator_matches_reference_semantics(spark, data, doc):
+def test_translator_matches_reference_semantics(spark):
+    examples = []
+
+    @settings(max_examples=30, deadline=None, database=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(data=rows, doc=filters)
+    def gather(data, doc):
+        examples.append((data, doc))
+
+    gather()
     tagged = [
-        {"row_id": idx, **row} for idx, row in enumerate(data)
+        [{"example": ex, "row_id": idx, **row}
+         for idx, row in enumerate(data)]
+        for ex, (data, _) in enumerate(examples)
     ]
-    df = spark.createDataFrame(tagged, SCHEMA)
-    got = {r.row_id for r in
-           df.filter(mongo_filter_to_column(doc)).select("row_id").collect()}
-    want = {row["row_id"] for row in tagged
-            if eval_filter(doc, row) is True}
-    assert got == want, f"filter {doc!r}: spark={sorted(got)} ref={sorted(want)}"
+    df = spark.createDataFrame([r for t in tagged for r in t], SCHEMA)
+    case = None
+    for ex, (_, doc) in enumerate(examples):
+        branch = F.col("example") == ex
+        case = (F.when(branch, mongo_filter_to_column(doc)) if case is None
+                else case.when(branch, mongo_filter_to_column(doc)))
+    got = {ex: set() for ex in range(len(examples))}
+    for r in df.filter(case).select("example", "row_id").collect():
+        got[r.example].add(r.row_id)
+
+    failures = []
+    for ex, (_, doc) in enumerate(examples):
+        want = {row["row_id"] for row in tagged[ex]
+                if eval_filter(doc, row) is True}
+        if got[ex] != want:
+            failures.append(f"filter {doc!r}: spark={sorted(got[ex])} "
+                            f"ref={sorted(want)}")
+    assert not failures, "\n".join(failures[:5])

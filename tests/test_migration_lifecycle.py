@@ -19,13 +19,18 @@ import datetime as dt
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hummingbird_spark.config import Include, MigrationConfig
-from hummingbird_spark.operators.compare import compare_tables
+from hummingbird_spark.operators.compare import (
+    compare_migration,
+    compare_tables,
+)
 from hummingbird_spark.operators.copy import run_migration
 from hummingbird_spark.streaming.cdc import start_cdc_stream
+from tests.conftest import InjectedCrash, crash_publish
 
 SCHEMA = T.StructType([
     T.StructField("_id", T.LongType()),
@@ -142,3 +147,38 @@ def test_migration_then_compare_detects_divergence(spark, tmp_path):
     res = compare_tables(src, tampered)
     assert not res.equal
     assert res.missing_in_target == 1 and res.extra_in_target == 1
+
+
+def test_resume_recopies_exactly_the_killed_copy(spark, tmp_path,
+                                                 monkeypatch):
+    """A `start --drop` killed inside the last table's publish, before
+    its commit point: the tables copied before it stand, the killed one
+    is absent (dropped first, never published), so `resume` recopies
+    exactly it, from the source as it is now, and skips the others."""
+    src_dir, tgt_dir = str(tmp_path / "s"), str(tmp_path / "t")
+    names = ("a", "b", "c")
+
+    def write_sources(qty):
+        for name in names:
+            spark.createDataFrame([(i, name, i * qty) for i in range(20)],
+                                  SCHEMA).write.mode("overwrite").parquet(
+                f"{src_dir}/{name}.parquet")
+
+    write_sources(1)
+    cfg = MigrationConfig(command="data-only", source=src_dir,
+                          target=tgt_dir, key="_id", drop=True,
+                          includes=[Include(namespace=n) for n in names])
+    run_migration(spark, cfg)
+    write_sources(2)  # a table the killed run leaves stale would differ
+    fired = crash_publish(monkeypatch, after_commit=False,
+                          under=f"{tgt_dir}/c.parquet")
+    with pytest.raises(InjectedCrash):
+        run_migration(spark, cfg)
+    assert fired
+    report = run_migration(spark, cfg, resume=True)
+    assert [(r.namespace, r.skipped, r.rows_copied)
+            for r in report.results] == [
+        ("a", True, 0), ("b", True, 0), ("c", False, 20)]
+    assert [(r.namespace, r.equal) for r in compare_migration(spark, cfg)
+            ] == [("a", True), ("b", True), ("c", True)]
+    assert sorted(os.listdir(tgt_dir)) == [f"{n}.parquet" for n in names]

@@ -118,7 +118,7 @@ def test_migration_from_jsonl_source(spark, tmp_path):
                 {"_id": i, "email": f"user{i}@example.com",
                  "score": i % 7}) + "\n")
 
-    assert list_source_namespaces(str(src_dir)) == ["users"]
+    assert list_source_namespaces(spark, str(src_dir)) == ["users"]
 
     cfg = MigrationConfig.from_dict({
         "command": "data-only",
