@@ -83,9 +83,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hummingbird_spark.commit import (
-    publish, put_schema, read_published, recover,
+    _fs, publish, put_schema, read_published, recover,
 )
 from hummingbird_spark.filters import mongo_filter_to_column
+from hummingbird_spark.sources.tables import read_source
 
 _SEED = 3629  # the reference's web port — fixed seed for $sample
 
@@ -1685,17 +1686,19 @@ def _merge_into(spark, out: DataFrame, path: str, keys: list[str],
     stages: $addFields/$set, $unset, $project (include form), and
     $replaceRoot/$replaceWith with an embedded-document newRoot.
 
-    The live target is read by commit.read_published (by its schema
-    record, on any Hadoop filesystem); None means there is no target
-    yet.
+    The live target is read by `read_source`: by its schema record when
+    a publish left one, else as Spark infers it, so a table another
+    writer left (one parquet file, no `_SUCCESS`) is merged into, not
+    replaced. Its existence is probed on the Hadoop filesystem.
     """
-    target = read_published(spark, path)
-    if target is None:
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
         if when_not == "fail" and out.limit(1).count() > 0:
             raise RuntimeError(
                 "$merge whenNotMatched: fail — unmatched documents "
                 "exist (empty target)")
         return out if when_not == "insert" else out.limit(0)
+    target = read_source(spark, path)
     # union schema: target fields (their established types win for
     # shared names) + pipeline-only fields appended
     tnames = {f.name for f in target.schema.fields}

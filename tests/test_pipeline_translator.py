@@ -283,6 +283,24 @@ def test_merge_stage_upserts(spark, tmp_path):
     assert got[3].tag == "new"          # inserted
 
 
+def test_merge_into_a_table_another_writer_left(spark, tmp_path):
+    """A target written outside Spark (one parquet file, no `_SUCCESS`,
+    no schema record) is still the live target: `$merge` upserts into
+    it instead of replacing it with the incoming rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hummingbird_spark.pipeline import run_pipeline
+
+    pq.write_table(pa.table({"_id": [1, 2], "v": [1, 2]}),
+                   str(tmp_path / "ext.parquet"))
+    src = spark.createDataFrame([(2, 20), (3, 30)], "_id long, v long")
+    got = {r._id: r.v for r in run_pipeline(spark, src, [
+        {"$merge": {"into": "ext", "whenMatched": "replace"}},
+    ], data_dir=str(tmp_path)).collect()}
+    assert got == {1: 1, 2: 20, 3: 30}
+
+
 def test_merge_keep_existing_and_discard(spark, tmp_path):
     from hummingbird_spark.pipeline import run_pipeline
 
