@@ -30,6 +30,16 @@ A patch whose key is absent from the target is a no-op (Mongo UpdateOne
 without upsert), and re-applying any prefix of the log is idempotent —
 replays after checkpoint recovery are safe (ST7).
 
+A micro-batch's shape (start_cdc_stream): decode is part of the
+streaming plan, analysed once per query, and `foreachBatch` receives the
+decoded models; only the fold and the merge are built per batch. With
+one target the merge's write job chain scans the source, decodes, folds
+and merges: a flat batch is 3 Spark jobs in 5 stages, with no listing
+job and no cache, and the fold's shuffle on the key serves the merge's
+join. With more than one target the folded models are
+cached and their namespaces listed once, so idle targets are never
+rewritten.
+
 Scale note: the fold shuffles only the micro-batch (bounded, e.g. 1k-100k
 events), never the target; the merge joins models against the target on
 its key. There is one merge, `apply_cdc_batch`, with two layouts: a flat
@@ -74,6 +84,16 @@ OPLOG_SCHEMA = T.StructType([
 _DOC = "map<string,variant>"  # a parsed JSON object
 _NO_DOC = f"CAST(map() AS {_DOC})"
 _NO_NAMES = "CAST(array() AS array<string>)"
+
+
+def _q(name: str) -> str:
+    """SQL: the column name `name` as a quoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(text: str) -> str:
+    """SQL: `text` as a string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _as_doc(variant: str, path: str = "$") -> str:
@@ -218,14 +238,16 @@ _FOLD_OUT = [
 def reduce_write_models(models: DataFrame) -> DataFrame:
     """Per-key ordered fold (ST6): many events per key -> one effective
     write model (ns, key, action, doc, set_json, unset_json; the payloads
-    as JSON text). One shuffle on (ns, key). Events are ordered by
+    as JSON text). One shuffle, on key alone: the (ns, key) groups
+    need no other, and the merge's join on the key reuses it instead of
+    shuffling the models again. Events are ordered by
     (ts, seq, idx): the last replace or delete is a barrier, patches
     after a delete are dropped, and patches after a replace, or with no
     barrier, fold field by field with `aggregate` (see _FOLD). Everything
     runs in the JVM; the state is serialized once, at the output. A
     replace no patch follows keeps its source text."""
     return (
-        models.groupBy("ns", "key")
+        models.repartition("key").groupBy("ns", "key")
         .agg(*[F.expr(agg) for agg in _FOLD_AGGS])
         .selectExpr("ns", "key", "coalesce(barrier.kind, 'patch') AS action",
                     "barrier.doc_json", f"{_FOLD} AS s")
@@ -354,22 +376,34 @@ def apply_cdc_batch(
     (commit.put_schema), and the next batch reads the target by it
     (commit.read_published). On the bucketed layout untouched buckets
     keep files of older, narrower widths; the record is the union
-    schema, so reads fill their gaps with NULL.
+    schema, so reads fill their gaps with NULL. A target another writer
+    left (data files, but no `_SUCCESS` and no record) is read with
+    mergeSchema and merged into, not replaced.
+
+    The models are cached only where they are read more than once (the
+    touched-bucket listing, evolve=True); otherwise the merge's write
+    job is their only reader, so a stream's source is scanned once.
     """
     # a publish a crash interrupted lands whole or not at all before
     # the read; the replayed batch then re-applies idempotently (ST7)
     recover(spark, target_path)
-    target = read_published(spark, target_path)
-    m = reduced.withColumnRenamed("key", "__key")
+    target = _read_target(spark, target_path)
+    # the model columns travel under reserved names, clear of the
+    # target's own columns in the merge join
+    m = reduced.selectExpr(
+        "key AS __key", "struct(action, doc, set_json, unset_json) AS __m")
     # on an existing bucketed target, read and publish the touched
-    # buckets only; the first batch publishes the whole layout
-    pruned = bool(num_buckets) and target is not None
+    # buckets only; the first batch publishes the whole layout, as
+    # does the first batch over a flat target another writer left
+    pruned = (bool(num_buckets) and target is not None
+              and "__bucket" in target.columns)
+    if pruned:
+        m = m.withColumn("__bucket", _bucket_col(F.col("__key"), num_buckets))
+    cached = pruned or evolve
+    if cached:
+        m = m.cache()
     try:
         if pruned:
-            # cached: the models serve the bucket listing, the merge and
-            # the stats recompute
-            m = m.withColumn("__bucket",
-                             _bucket_col(F.col("__key"), num_buckets)).cache()
             touched = [r[0] for r in
                        m.select("__bucket").distinct().collect()]
             target = (target.filter(F.col("__bucket").isin(touched))
@@ -377,7 +411,7 @@ def apply_cdc_batch(
         if target is not None:
             schema = _retain_target_columns(schema, target)
         if evolve:
-            schema = evolve_schema(reduced, schema)
+            schema = evolve_schema(m.select("__m.*"), schema)
         if target is None:
             target = _empty_target(spark, schema)
         for f in schema.fields:
@@ -411,8 +445,19 @@ def apply_cdc_batch(
             partitions=[*(f"__bucket={b}" for b in touched),
                         SCHEMA_RECORD] if pruned else None)
     finally:
-        if pruned:
+        if cached:
             m.unpersist()
+
+
+def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """The merge target as last published (commit.read_published); one
+    another writer left, with data files but no `_SUCCESS`, read with
+    mergeSchema as read_cdc_target reads it; None when `path` holds no
+    data file."""
+    target = read_published(spark, path)
+    if target is None and _holds_data(spark, path):
+        target = spark.read.option("mergeSchema", "true").parquet(path)
+    return target
 
 
 @dataclass(frozen=True)
@@ -431,18 +476,16 @@ class ApplyStats:
         return self.inserted + self.updated + self.deleted + self.noops
 
 
-def _counters(hit: Column) -> list[Column]:
-    """ApplyStats' counters over merge-join rows; `hit` marks a row whose
+def _counters(hit: str) -> list[Column]:
+    """ApplyStats' counters over merge-join rows (`__m.action` a model's
+    action, null on a target-only row); `hit`, SQL, marks a row whose
     key the target holds."""
-    cnt = lambda c: F.coalesce(  # noqa: E731
-        F.sum(F.when(c, 1).otherwise(0)), F.lit(0))
-    action = F.col("action")
-    return [
-        cnt((action == "replace") & ~hit).alias("inserted"),
-        cnt(action.isin("replace", "patch") & hit).alias("updated"),
-        cnt((action == "delete") & hit).alias("deleted"),
-        cnt(action.isin("patch", "delete") & ~hit).alias("noops"),
-    ]
+    return [F.expr(f"count_if({cond}) AS {name}") for name, cond in (
+        ("inserted", f"__m.action = 'replace' AND NOT {hit}"),
+        ("updated", f"__m.action IN ('replace', 'patch') AND {hit}"),
+        ("deleted", f"__m.action = 'delete' AND {hit}"),
+        ("noops", f"__m.action IN ('patch', 'delete') AND NOT {hit}"),
+    )]
 
 
 def _stats_or_recompute(
@@ -458,12 +501,9 @@ def _stats_or_recompute(
         return ApplyStats(**obs.get)
     except Exception:
         row = (
-            m.select("__key", "action")
-            .join(
-                target.select(F.col(key).cast("string").alias("__tk")),
-                F.col("__key") == F.col("__tk"), "left",
-            )
-            .agg(*_counters(F.col("__tk").isNotNull()))
+            m.join(target.selectExpr(f"CAST({_q(key)} AS STRING) AS __tk"),
+                   F.expr("__key = __tk"), "left")
+            .agg(*_counters("__tk IS NOT NULL"))
             .first()
         )
         return ApplyStats(row.inserted, row.updated, row.deleted, row.noops)
@@ -473,63 +513,51 @@ def _merge_survivors(
     target: DataFrame, m: DataFrame, key: str, schema: T.StructType,
     observation=None,
 ) -> DataFrame:
-    """The MERGE body of both layouts: full-outer join
-    target rows with models (`m`: __key/action/doc/set_json/unset_json),
-    emit surviving rows with patch/replace semantics applied.
+    """The MERGE body of both layouts: full-outer join target rows with
+    models (`m`: __key and the __m struct of action, doc, set_json and
+    unset_json), emit surviving rows with patch/replace semantics
+    applied. SQL text throughout: one join, a filter and two
+    projections, a handful of py4j calls whatever the schema's width.
 
-    Parse each model's JSON exactly once per row: the key arrays and
-    the typed structs are materialized in their own select (a separate
-    Project referenced by every field expression below — CollapseProject
-    keeps multi-referenced aliases, so nothing re-parses per field; the
-    naive per-field get_json_object form costs ~4 parses x n_fields
-    per row, which dominates merge CPU on wide schemas)."""
-    tkey = F.col(key).cast("string")
+    The first projection parses each model's JSON exactly once per row:
+    doc and set_json through from_json into the schema's struct, the
+    set and unset key lists through json_object_keys. The second is
+    one CASE per field over those; CollapseProject keeps the parsed
+    aliases in their own Project because every field references them,
+    so nothing re-parses per field (the naive per-field
+    get_json_object form costs ~4 parses x n_fields per row, which
+    dominates merge CPU on wide schemas). The model columns stay under
+    `__`-prefixed names, so any target field name but those is free."""
+    hit = f"CAST({_q(key)} AS STRING) IS NOT NULL"
     joined = target.join(
-        m, tkey == F.col("__key"), "full_outer"
-    ).select(
-        "*",
-        F.json_object_keys("set_json").alias("__set_keys"),
-        F.json_object_keys("unset_json").alias("__unset_keys"),
-        F.from_json(F.col("doc"), schema).alias("__doc"),
-        F.from_json(F.col("set_json"), schema).alias("__set"),
-    )
+        m, F.expr(f"CAST({_q(key)} AS STRING) = __key"), "full_outer")
     if observation is not None:
         # a CollectMetrics node on rows already flowing through the
         # plan, not an extra pass
-        joined = joined.observe(observation, *_counters(tkey.isNotNull()))
-
-    # survivor rows: everything except deletes; patches on missing keys
-    # are no-ops (dropped); replaces win over existing rows.
-    patched_cols = []
-    for f in schema.fields:
-        c = f.name
-        set_has = F.coalesce(
-            F.array_contains("__set_keys", c), F.lit(False)
-        )
-        unset_has = F.coalesce(
-            F.array_contains("__unset_keys", c), F.lit(False)
-        )
-        patched = (
-            F.when(unset_has, F.lit(None).cast(f.dataType))
-            .when(set_has, F.col("__set")[c])
-            .otherwise(F.col(c))
-        )
-        value = (
-            F.when(F.col("action") == "replace", F.col("__doc")[c])
-            .when(F.col("action") == "patch", patched)
-            .otherwise(F.col(c))
-        )
-        patched_cols.append(value.alias(c))
-
-    return (
-        joined.filter(
-            # keep: untouched target rows, replaced rows, patched existing
-            (F.col("action").isNull())
-            | (F.col("action") == "replace")
-            | ((F.col("action") == "patch") & tkey.isNotNull())
-        )
-        .select(*patched_cols)
+        joined = joined.observe(observation, *_counters(hit))
+    fields = [(_q(f.name), _lit(f.name)) for f in schema.fields]
+    as_schema = _lit(schema.json())
+    parsed = joined.where(
+        # keep: untouched target rows, replaced rows, patched existing;
+        # deletes go, and patches on missing keys are no-ops
+        f"""__m.action IS NULL OR __m.action = 'replace'
+            OR (__m.action = 'patch' AND {hit})"""
+    ).selectExpr(
+        *(c for c, _ in fields),
+        "__m.action AS __action",
+        "json_object_keys(__m.set_json) AS __set_keys",
+        "json_object_keys(__m.unset_json) AS __unset_keys",
+        f"from_json(__m.doc, {as_schema}) AS __doc",
+        f"from_json(__m.set_json, {as_schema}) AS __set",
     )
+    return parsed.selectExpr(*(
+        f"""CASE __action WHEN 'replace' THEN __doc.{c}
+              WHEN 'patch' THEN CASE
+                WHEN array_contains(__unset_keys, {name}) THEN NULL
+                WHEN array_contains(__set_keys, {name}) THEN __set.{c}
+                ELSE {c} END
+              ELSE {c} END AS {c}"""
+        for c, name in fields))
 
 
 def _bucket_col(key_col: F.Column, num_buckets: int) -> F.Column:
@@ -565,23 +593,24 @@ def read_cdc_target(
         if df is None:
             df = spark.read.option("mergeSchema", "true").parquet(target_path)
     except Exception:
-        if schema is not None and _holds_no_data(spark, target_path):
+        if schema is not None and _holds_data(spark, target_path) is False:
             return _empty_target(spark, schema)
         raise
     return df.drop("__bucket") if "__bucket" in df.columns else df
 
 
-def _holds_no_data(spark: SparkSession, path: str) -> bool:
-    """True when `path` exists and no file under it is a data file
-    (Spark skips names starting with `_` or `.`) — one listing."""
+def _holds_data(spark: SparkSession, path: str) -> bool | None:
+    """Whether a file under `path` is a data file (Spark skips names
+    starting with `_` or `.`), or None when `path` does not exist — one
+    listing."""
     fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
-        return False
+        return None
     files = fs.listFiles(hpath, True)
     while files.hasNext():
         if not files.next().getPath().getName().startswith(("_", ".")):
-            return False
-    return True
+            return True
+    return False
 
 
 def start_cdc_stream(
@@ -613,34 +642,49 @@ def start_cdc_stream(
     per batch (schemaless-source parity — see evolve_schema). `ejson`
     strips extended-JSON type wrappers during decode (JSON-encoded
     change streams; see functions/ejson.py). `on_stats(ns, batch_id,
-    stats)` receives each namespace's ApplyStats per micro-batch — the
-    reference's per-bulk-write counter log line (A6/ST8).
+    stats)` receives each namespace's ApplyStats per micro-batch in
+    which the batch held a model for it — the reference's
+    per-bulk-write counter log line (A6/ST8).
+
+    Decode runs in the streaming plan, so `foreachBatch` receives the
+    decoded models and builds only the fold and the merge. With one
+    namespace in `schemas` a batch is one job chain: the merge's write
+    scans the source, decodes, folds and merges, with no cache and no
+    listing (a batch with no model for the namespace rewrites its
+    target unchanged). With more than one, the folded models are cached
+    and their namespaces listed once, and only targets the batch
+    touches are merged.
     """
-    stream = (
+    models = decode_write_models(
         spark.readStream.schema(OPLOG_SCHEMA)
         .option("maxFilesPerTrigger", 10)
-        .json(oplog_dir)
-    )
+        .json(oplog_dir),
+        includes, ejson=ejson)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        models = decode_write_models(batch_df, includes, ejson=ejson)
-        reduced = reduce_write_models(models).cache()
+    def _merge(reduced: DataFrame, ns: str, batch_id: int) -> None:
+        coll = ns.split(".", 1)[-1]
+        stats = apply_cdc_batch(
+            spark, reduced, os.path.join(target_root, f"{coll}.parquet"),
+            key, schemas[ns], evolve=evolve, num_buckets=num_buckets)
+        if on_stats is not None and stats.total > 0:
+            on_stats(ns, batch_id, stats)
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        if len(schemas) == 1:
+            (ns,) = schemas
+            _merge(reduce_write_models(batch.where(F.col("ns") == ns)),
+                   ns, batch_id)
+            return
+        reduced = reduce_write_models(batch).cache()
         try:
             for ns in [r.ns for r in reduced.select("ns").distinct().collect()]:
-                if ns not in schemas:
-                    continue  # DDL-only / unconfigured namespace (ST9: log, don't replay)
-                coll = ns.split(".", 1)[-1]
-                path = os.path.join(target_root, f"{coll}.parquet")
-                stats = apply_cdc_batch(
-                    spark, reduced.filter(F.col("ns") == ns), path, key,
-                    schemas[ns], evolve=evolve, num_buckets=num_buckets)
-                if on_stats is not None:
-                    on_stats(ns, batch_id, stats)
+                if ns in schemas:  # else DDL-only / unconfigured (ST9: log, don't replay)
+                    _merge(reduced.where(F.col("ns") == ns), ns, batch_id)
         finally:
             reduced.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
+    return (
+        models.writeStream.foreachBatch(_apply)
         .option(
             "checkpointLocation",
             checkpoint or os.path.join(target_root, "_checkpoint"),
@@ -648,4 +692,3 @@ def start_cdc_stream(
         .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
-    return q

@@ -910,10 +910,11 @@ def test_stream_reports_apply_stats(spark, tmp_path):
 # --- one scan, one JVM fold per micro-batch ---
 
 # Spark jobs of one decode -> fold -> apply_cdc_batch onto an existing flat
-# target: measured 4 (the query stages of the merge write) once the fold
-# ran in the JVM and each publish recorded the target's schema; 5 before,
-# the extra one being the schema-inference read of the target's footers.
-FLAT_BATCH_JOBS = 4
+# target: measured 3 (the query stages of the merge write) once the fold
+# shuffled on the key alone, which the merge's join reuses; 4 before, and
+# 5 before each publish recorded the target's schema (the extra one being
+# the schema-inference read of the target's footers).
+FLAT_BATCH_JOBS = 3
 
 
 def test_batch_scans_once_and_folds_in_the_jvm(spark, tmp_path):
@@ -967,11 +968,11 @@ def test_batch_scans_once_and_folds_in_the_jvm(spark, tmp_path):
 
 # Spark jobs of one decode -> fold -> bucketed apply_cdc_batch (16
 # buckets, 200 keys, a 5-key patch batch) onto an existing target:
-# measured 8 (the bucket listing, then the query stages of the merge
-# write) once the bucketed layout read its target by the schema record;
-# 9 before, the extra one being the mergeSchema read of every bucket's
-# footers.
-BUCKETED_BATCH_JOBS = 8
+# measured 7 (the bucket listing, then the query stages of the merge
+# write) once the fold shuffled on the key alone; 8 before, and 9 before
+# the bucketed layout read its target by the schema record (the extra
+# one being the mergeSchema read of every bucket's footers).
+BUCKETED_BATCH_JOBS = 7
 
 
 def test_bucketed_batch_reads_by_its_schema_record(spark, tmp_path):
@@ -1021,3 +1022,167 @@ def test_bucketed_batch_reads_by_its_schema_record(spark, tmp_path):
     emptied = read()
     assert emptied.count() == 0
     assert emptied.columns == ["_id", "x", "n", "grade"]
+
+
+# --- one job chain per single-target micro-batch ---
+
+def _write_oplog(oplog_dir, name, rows):
+    os.makedirs(oplog_dir, exist_ok=True)
+    with open(os.path.join(oplog_dir, name), "w") as fh:
+        for ts, seq, ns, op, o, o2 in rows:
+            fh.write(json.dumps({
+                "ts": ts.isoformat(), "seq": seq, "ns": ns,
+                "op": op, "o": o, "o2": o2,
+            }) + "\n")
+
+
+def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
+    """A single-target flat stream runs each micro-batch as one job
+    chain — decode in the streaming plan, no namespace listing, no
+    cache — reading each event once. A batch whose events all belong to
+    another namespace rewrites the target unchanged and reports no
+    stats."""
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    oplog_dir, root = str(tmp_path / "oplog"), str(tmp_path / "tgt")
+    seen = []
+
+    def run():
+        q = start_cdc_stream(
+            spark, oplog_dir, root, {"db.c": TARGET_SCHEMA},
+            checkpoint=str(tmp_path / "ckpt"),
+            on_stats=lambda ns, bid, s: seen.append((ns, bid, s)))
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return q
+
+    _write_oplog(oplog_dir, "0.json", [
+        _ev(i, "i", {"_id": i, "x": f"v{i}", "n": i}) for i in range(20)])
+    run()
+    batch = [_ev(100, "u", {"$set": {"x": "p"}}, {"_id": 1}),
+             _ev(101, "d", {"_id": 2}),
+             _ev(102, "i", {"_id": 50, "x": "new", "n": 50}),
+             _ev(103, "u", {"$v": 2, "diff": {"u": {"n": 7}}}, {"_id": 3})]
+    _write_oplog(oplog_dir, "1.json", batch)
+    q = run()
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= FLAT_BATCH_JOBS, len(jobs)
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"] > 0] == [len(batch)]
+    state = {r._id: (r.x, r.n) for r in
+             read_cdc_target(spark, f"{root}/c.parquet").collect()}
+    assert len(state) == 20 and state[1] == ("p", 1) and state[3][1] == 7
+    assert [(ns, s.total) for ns, _, s in seen] == [("db.c", 20),
+                                                    ("db.c", 4)]
+
+    _write_oplog(oplog_dir, "2.json", [
+        _ev(200, "i", {"_id": 1, "x": "elsewhere", "n": 0}, ns="db.other"),
+        _ev(201, "d", {"_id": 3}, ns="db.other")])
+    run()
+    assert len(seen) == 2
+    assert {r._id: (r.x, r.n) for r in read_cdc_target(
+        spark, f"{root}/c.parquet").collect()} == state
+
+
+@pytest.mark.parametrize("shape", ["evolve", "two_targets"])
+def test_stream_reads_each_event_once(spark, tmp_path, shape):
+    """Where a micro-batch's models are read more than once (evolve's
+    key scan and sample, the namespace listing of a two-target stream)
+    they are cached, so the source is still scanned once per batch."""
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    oplog_dir, root = str(tmp_path / "oplog"), str(tmp_path / "tgt")
+    rows = [_ev(1, "i", {"_id": 1, "x": "a", "n": 1}),
+            _ev(2, "i", {"_id": 2, "x": "b", "n": 2, "tag": "t"}),
+            _ev(3, "u", {"$set": {"x": "B"}}, {"_id": 2}),
+            _ev(4, "i", {"_id": 9, "x": "i", "n": 9}, ns="db.d")]
+    _write_oplog(oplog_dir, "0.json", rows)
+    schemas = {"db.c": TARGET_SCHEMA}
+    if shape == "two_targets":
+        schemas["db.d"] = TARGET_SCHEMA
+    q = start_cdc_stream(spark, oplog_dir, root, schemas,
+                         checkpoint=str(tmp_path / "ckpt"),
+                         evolve=shape == "evolve")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"] > 0] == [len(rows)]
+    got = {r._id: r for r in
+           read_cdc_target(spark, f"{root}/c.parquet").collect()}
+    assert sorted(got) == [1, 2] and got[2].x == "B"
+    if shape == "evolve":
+        assert got[2].tag == "t"
+    else:
+        assert [r._id for r in read_cdc_target(
+            spark, f"{root}/d.parquet").collect()] == [9]
+
+
+# --- model columns never meet the target's columns ---
+
+MODEL_NAMES_SCHEMA = T.StructType([
+    T.StructField("_id", T.LongType()),
+    *(T.StructField(n, T.StringType())
+      for n in ("action", "doc", "ns", "set_json", "unset_json", "key")),
+])
+
+
+@pytest.mark.parametrize("num_buckets", [None, 8])
+def test_target_fields_named_like_model_columns(spark, tmp_path,
+                                                num_buckets):
+    """Target fields named `action`, `doc`, `ns`, `set_json`,
+    `unset_json` or `key` merge like any other: an insert, a `$set`, a
+    replace, an `$unset` and a delete each land on the right row."""
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    path = str(tmp_path / "t.parquet")
+    names = [f.name for f in MODEL_NAMES_SCHEMA.fields][1:]
+
+    def batch(rows):
+        apply_cdc_batch(spark, reduce_write_models(decode_write_models(
+            _oplog_df(spark, rows))), path, "_id", MODEL_NAMES_SCHEMA,
+            num_buckets=num_buckets)
+        return {r._id: r.asDict() for r in read_cdc_target(
+            spark, path, MODEL_NAMES_SCHEMA).collect()}
+
+    state = batch([
+        _ev(i, "i", {"_id": i, **{n: f"{n}{i}" for n in names}})
+        for i in range(1, 4)])
+    assert state[2] == {"_id": 2, **{n: f"{n}2" for n in names}}
+    state = batch([
+        _ev(10, "u", {"$set": {"action": "S", "doc": "D"}}, {"_id": 1}),
+        _ev(11, "u", {"_id": 2, "ns": "R", "key": "K"}, {"_id": 2}),
+        _ev(12, "u", {"$unset": {"set_json": 1}}, {"_id": 3}),
+        _ev(13, "d", {"_id": 3}),
+        _ev(14, "i", {"_id": 4, "unset_json": "U"}),
+    ])
+    assert sorted(state) == [1, 2, 4]
+    assert state[1] == {"_id": 1, "action": "S", "doc": "D", "ns": "ns1",
+                        "set_json": "set_json1",
+                        "unset_json": "unset_json1", "key": "key1"}
+    assert state[2] == {"_id": 2, "action": None, "doc": None, "ns": "R",
+                        "set_json": None, "unset_json": None, "key": "K"}
+    assert state[4]["unset_json"] == "U" and state[4]["action"] is None
+    state = batch([_ev(20, "u", {"$unset": {"doc": 1}}, {"_id": 1})])
+    assert state[1]["doc"] is None and state[1]["action"] == "S"
+
+
+@pytest.mark.parametrize("num_buckets", [None, 8])
+def test_apply_merges_into_a_target_another_writer_left(spark, tmp_path,
+                                                        num_buckets):
+    """A target written outside Spark (one parquet file, no `_SUCCESS`,
+    no schema record) is merged into, not replaced: 3 rows plus one
+    CDC insert give 4 rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    path = str(tmp_path / "items.parquet")
+    pq.write_table(pa.table({"_id": [1, 2, 3], "x": ["a", "b", "c"],
+                             "n": [1, 2, 3]}), path)
+    apply_cdc_batch(spark, reduce_write_models(decode_write_models(
+        _oplog_df(spark, [_ev(1, "i", {"_id": 4, "x": "d", "n": 4})]))),
+        path, "_id", TARGET_SCHEMA, num_buckets=num_buckets)
+    assert sorted((r._id, r.x, r.n) for r in read_cdc_target(
+        spark, path).collect()) == [(1, "a", 1), (2, "b", 2), (3, "c", 3),
+                                    (4, "d", 4)]

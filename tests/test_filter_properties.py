@@ -140,18 +140,25 @@ rows = st.lists(
 
 cmp_ops = st.sampled_from(["$eq", "$ne", "$gt", "$gte", "$lt", "$lte"])
 
-leaf_i = st.one_of(
-    st.builds(lambda v: {"i": v}, ints),
-    st.builds(lambda op, v: {"i": {op: v}}, cmp_ops, ints),
-    st.builds(lambda vs: {"i": {"$in": vs}},
-              st.lists(ints, min_size=1, max_size=5)),
-    st.builds(lambda vs: {"i": {"$nin": vs}},
-              st.lists(ints, min_size=1, max_size=5)),
-    st.builds(lambda b: {"i": {"$exists": b}}, st.booleans()),
-    st.builds(lambda d, r: {"i": {"$mod": [d, r]}},
-              st.integers(1, 7), st.integers(0, 6)),
-    st.builds(lambda lo, hi: {"i": {"$gte": lo, "$lte": hi}}, ints, ints),
-)
+
+def leaf_i(own: list[int]):
+    """Leaves over `i`; their operands come from the free range and, as
+    often, from `own`, the example's own `i` values."""
+    vals = st.one_of(ints, st.sampled_from(own)) if own else ints
+    return st.one_of(
+        st.builds(lambda v: {"i": v}, vals),
+        st.builds(lambda op, v: {"i": {op: v}}, cmp_ops, vals),
+        st.builds(lambda vs: {"i": {"$in": vs}},
+                  st.lists(vals, min_size=1, max_size=5)),
+        st.builds(lambda vs: {"i": {"$nin": vs}},
+                  st.lists(vals, min_size=1, max_size=5)),
+        st.builds(lambda b: {"i": {"$exists": b}}, st.booleans()),
+        st.builds(lambda d, r: {"i": {"$mod": [d, r]}},
+                  st.integers(1, 7), st.integers(0, 6)),
+        st.builds(lambda lo, hi: {"i": {"$gte": lo, "$lte": hi}}, vals, vals),
+    )
+
+
 leaf_s = st.one_of(
     st.builds(lambda v: {"s": v}, strs),
     st.builds(lambda v: {"s": {"$regex": v}},
@@ -167,21 +174,40 @@ leaf_a = st.one_of(
     st.builds(lambda op, v: {"a": {"$elemMatch": {op: v}}},
               cmp_ops, st.integers(0, 5)),
 )
-leaf = st.one_of(leaf_i, leaf_s, leaf_a)
 
-filters = st.recursive(
-    leaf,
-    lambda children: st.one_of(
-        st.builds(lambda fs: {"$and": fs},
-                  st.lists(children, min_size=1, max_size=3)),
-        st.builds(lambda fs: {"$or": fs},
-                  st.lists(children, min_size=1, max_size=3)),
-        st.builds(lambda fs: {"$nor": fs},
-                  st.lists(children, min_size=1, max_size=3)),
-        st.builds(lambda a, b: {**a, **b}, leaf_i, leaf_s),  # top-level AND
-    ),
-    max_leaves=4,
-)
+
+def filters(own: list[int]):
+    """Filter documents of up to four leaves; `i` operands as leaf_i."""
+    li = leaf_i(own)
+    return st.recursive(
+        st.one_of(li, leaf_s, leaf_a),
+        lambda children: st.one_of(
+            st.builds(lambda fs: {"$and": fs},
+                      st.lists(children, min_size=1, max_size=3)),
+            st.builds(lambda fs: {"$or": fs},
+                      st.lists(children, min_size=1, max_size=3)),
+            st.builds(lambda fs: {"$nor": fs},
+                      st.lists(children, min_size=1, max_size=3)),
+            st.builds(lambda a, b: {**a, **b}, li, leaf_s),  # top-level AND
+        ),
+        max_leaves=4,
+    )
+
+
+@st.composite
+def examples_of(draw):
+    """An example: rows, and filters over them. One filter is drawn; if
+    some row has an `i`, two comparisons at one of those values join
+    it, so comparisons meet their bounds (`$gt` translated as `>=` differs
+    only there, and a free-range operand rarely lands on it)."""
+    data = draw(rows)
+    own = sorted({r["i"] for r in data if r["i"] is not None})
+    docs = [draw(filters(own))]
+    if own:
+        v = draw(st.sampled_from(own))
+        docs += [{"i": {op: v}} for op in draw(
+            st.lists(cmp_ops, min_size=2, max_size=2, unique=True))]
+    return [(data, doc) for doc in docs]
 
 
 def test_translator_matches_reference_semantics(spark):
@@ -189,9 +215,9 @@ def test_translator_matches_reference_semantics(spark):
 
     @settings(max_examples=30, deadline=None, database=None,
               suppress_health_check=[HealthCheck.too_slow])
-    @given(data=rows, doc=filters)
-    def gather(data, doc):
-        examples.append((data, doc))
+    @given(example=examples_of())
+    def gather(example):
+        examples.extend(example)
 
     gather()
     tagged = [
