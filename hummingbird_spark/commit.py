@@ -195,20 +195,35 @@ def recorded_schema(spark: SparkSession, path: str) -> T.StructType | None:
 
 
 def read_published(spark: SparkSession, path: str) -> DataFrame | None:
-    """The parquet table at `path` as last published, or None before its
-    first publish (no `_SUCCESS`). Read with the schema its publish
-    recorded (recorded_schema), which spares the footer-reading job of
-    schema inference; partition directories are still discovered and
-    pruned. A table without the record (written by another writer, or
-    with files appended since: see _adopt_parquet_files) unions its
-    files' schemas, so no column of any file is lost."""
+    """The parquet table at `path`, or None when it holds no data file
+    (it does not exist, or holds `_SUCCESS` alone). Read with the schema
+    its publish recorded (recorded_schema), which spares the
+    footer-reading job of schema inference; partition directories are
+    still discovered and pruned. A table without the record (written by
+    another writer, or with files appended since: see
+    _adopt_parquet_files) unions its files' schemas, so no column of
+    any file is lost. This is the one rule by which the migration path
+    reads a table it may merge into, copy onto or compact."""
     schema = recorded_schema(spark, path)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
-    fs, success = _fs(spark, f"{path}/_SUCCESS")
-    if not fs.exists(success):
+    if not _holds_data(spark, path):
         return None
     return spark.read.option("mergeSchema", "true").parquet(path)
+
+
+def _holds_data(spark: SparkSession, path: str) -> bool:
+    """Whether `path` is or holds a data file: a file whose name does
+    not start with `_` or `.`, which Spark skips. One listing, stopped
+    at the first data file."""
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return False
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return True
+    return False
 
 
 def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,

@@ -42,9 +42,7 @@ def table_bytes(spark: SparkSession, path: str) -> int:
 
 def parquet_file_count(spark: SparkSession, path: str) -> int:
     df = read_published(spark, path)
-    if df is None:
-        df = spark.read.parquet(path)
-    return len(df.inputFiles())
+    return 0 if df is None else len(df.inputFiles())
 
 
 def compact_table(spark: SparkSession, path: str,
@@ -56,9 +54,9 @@ def compact_table(spark: SparkSession, path: str,
     ["__bucket"] for the bucketed CDC target); preserved in the
     rewritten table, one file per partition directory.
 
-    The table is read by commit.read_published, or with mergeSchema
-    when it has no `_SUCCESS`: files of different widths union, never
-    narrow to one footer's columns. A table with a schema record gets
+    The table is read by commit.read_published: without a schema
+    record, files of different widths union, never narrow to one
+    footer's columns. A table with a schema record gets
     it back with the rewrite, so its next reader need not infer one. A
     table without one gets none: its writers append with Spark's own
     append mode (the streaming stores), and a record would not
@@ -72,7 +70,7 @@ def compact_table(spark: SparkSession, path: str,
     record = recorded_schema(spark, path)
     df = read_published(spark, path)
     if df is None:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+        raise FileNotFoundError(f"no parquet data file under {path}")
     before_files = len(df.inputFiles())
     n_out = max(1, math.ceil(before_bytes / target_file_bytes))
     writer = (

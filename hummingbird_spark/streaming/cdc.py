@@ -36,9 +36,9 @@ decoded models; only the fold and the merge are built per batch. With
 one target the merge's write job chain scans the source, decodes, folds
 and merges: a flat batch is 3 Spark jobs in 5 stages, with no listing
 job and no cache, and the fold's shuffle on the key serves the merge's
-join. With more than one target the folded models are
-cached and their namespaces listed once, so idle targets are never
-rewritten.
+join; a batch that holds no model for the target publishes nothing.
+With more than one target the folded models are cached and their
+namespaces listed once, so idle targets are not even read.
 
 Scale note: the fold shuffles only the micro-batch (bounded, e.g. 1k-100k
 events), never the target; the merge joins models against the target on
@@ -380,14 +380,35 @@ def apply_cdc_batch(
     left (data files, but no `_SUCCESS` and no record) is read with
     mergeSchema and merged into, not replaced.
 
+    A batch with no model changes nothing: the merge's observed
+    counters are all zero, so its stage is dropped and the target is
+    left as it was (none is created).
+
     The models are cached only where they are read more than once (the
     touched-bucket listing, evolve=True); otherwise the merge's write
     job is their only reader, so a stream's source is scanned once.
     """
+    return _merge_batch(spark, reduced, target_path, key, schema, evolve,
+                        num_buckets, models_cached=False)
+
+
+class _NoModels(Exception):
+    """Raised in a merge's stage write when the batch held no model, so
+    that publish drops the stage."""
+
+
+def _merge_batch(
+    spark: SparkSession, reduced: DataFrame, target_path: str, key: str,
+    schema: T.StructType, evolve: bool, num_buckets: int | None,
+    models_cached: bool,
+) -> ApplyStats:
+    """apply_cdc_batch; `models_cached` says `reduced` is read from a
+    cache already, so a second read of it rescans nothing and it is not
+    cached again."""
     # a publish a crash interrupted lands whole or not at all before
     # the read; the replayed batch then re-applies idempotently (ST7)
     recover(spark, target_path)
-    target = _read_target(spark, target_path)
+    target = read_published(spark, target_path)
     # the model columns travel under reserved names, clear of the
     # target's own columns in the merge join
     m = reduced.selectExpr(
@@ -399,7 +420,7 @@ def apply_cdc_batch(
               and "__bucket" in target.columns)
     if pruned:
         m = m.withColumn("__bucket", _bucket_col(F.col("__key"), num_buckets))
-    cached = pruned or evolve
+    cached = (pruned or evolve) and not models_cached
     if cached:
         m = m.cache()
     try:
@@ -436,28 +457,23 @@ def apply_cdc_batch(
                 result.write.parquet(stage)
             # publishes together with the data; the next batch reads by it
             put_schema(spark, stage, result.schema)
-            return _stats_or_recompute(obs, m, target, key)  # pre-publish
+            stats = _stats_or_recompute(obs, m, target, key)  # pre-publish
+            if stats.total == 0:
+                raise _NoModels
+            return stats
 
         # the touched buckets are published by name, incl. ones merging
         # to empty, which a dynamic partition overwrite would leave stale
-        return publish(
-            spark, target_path, write,
-            partitions=[*(f"__bucket={b}" for b in touched),
-                        SCHEMA_RECORD] if pruned else None)
+        try:
+            return publish(
+                spark, target_path, write,
+                partitions=[*(f"__bucket={b}" for b in touched),
+                            SCHEMA_RECORD] if pruned else None)
+        except _NoModels:
+            return ApplyStats(0, 0, 0, 0)
     finally:
         if cached:
             m.unpersist()
-
-
-def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
-    """The merge target as last published (commit.read_published); one
-    another writer left, with data files but no `_SUCCESS`, read with
-    mergeSchema as read_cdc_target reads it; None when `path` holds no
-    data file."""
-    target = read_published(spark, path)
-    if target is None and _holds_data(spark, path):
-        target = spark.read.option("mergeSchema", "true").parquet(path)
-    return target
 
 
 @dataclass(frozen=True)
@@ -582,35 +598,19 @@ def read_cdc_target(
     spark: SparkSession, target_path: str,
     schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Read a CDC target of either layout by its schema record
-    (commit.read_published), hiding the bucketing layout column. A
-    bucketed target whose every bucket was emptied reads as empty with
-    its recorded schema. A target without the record reads with
-    mergeSchema; if it holds no data file at all, `schema` gives the
-    empty table."""
-    try:
-        df = read_published(spark, target_path)
-        if df is None:
-            df = spark.read.option("mergeSchema", "true").parquet(target_path)
-    except Exception:
-        if schema is not None and _holds_data(spark, target_path) is False:
-            return _empty_target(spark, schema)
-        raise
+    """Read a CDC target of either layout as commit.read_published reads
+    it, hiding the bucketing layout column. A bucketed target whose
+    every bucket was emptied reads as empty with its recorded schema. A
+    target without the record reads with mergeSchema; if it holds no
+    data file at all, `schema` gives the empty table. A missing target
+    raises."""
+    df = read_published(spark, target_path)
+    if df is None:
+        fs, hpath = _fs(spark, target_path)
+        if schema is None or not fs.exists(hpath):
+            raise FileNotFoundError(f"no CDC target at {target_path}")
+        return _empty_target(spark, schema)
     return df.drop("__bucket") if "__bucket" in df.columns else df
-
-
-def _holds_data(spark: SparkSession, path: str) -> bool | None:
-    """Whether a file under `path` is a data file (Spark skips names
-    starting with `_` or `.`), or None when `path` does not exist — one
-    listing."""
-    fs, hpath = _fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    files = fs.listFiles(hpath, True)
-    while files.hasNext():
-        if not files.next().getPath().getName().startswith(("_", ".")):
-            return True
-    return False
 
 
 def start_cdc_stream(
@@ -650,10 +650,11 @@ def start_cdc_stream(
     decoded models and builds only the fold and the merge. With one
     namespace in `schemas` a batch is one job chain: the merge's write
     scans the source, decodes, folds and merges, with no cache and no
-    listing (a batch with no model for the namespace rewrites its
-    target unchanged). With more than one, the folded models are cached
-    and their namespaces listed once, and only targets the batch
-    touches are merged.
+    listing (a batch with no model for the namespace writes a stage
+    that is dropped unpublished, so its target's files stay as they
+    were). With more than one, the folded models are cached and their
+    namespaces listed once, and only targets the batch touches are
+    merged.
     """
     models = decode_write_models(
         spark.readStream.schema(OPLOG_SCHEMA)
@@ -661,11 +662,12 @@ def start_cdc_stream(
         .json(oplog_dir),
         includes, ejson=ejson)
 
-    def _merge(reduced: DataFrame, ns: str, batch_id: int) -> None:
+    def _merge(reduced: DataFrame, ns: str, batch_id: int,
+               models_cached: bool) -> None:
         coll = ns.split(".", 1)[-1]
-        stats = apply_cdc_batch(
+        stats = _merge_batch(
             spark, reduced, os.path.join(target_root, f"{coll}.parquet"),
-            key, schemas[ns], evolve=evolve, num_buckets=num_buckets)
+            key, schemas[ns], evolve, num_buckets, models_cached)
         if on_stats is not None and stats.total > 0:
             on_stats(ns, batch_id, stats)
 
@@ -673,13 +675,14 @@ def start_cdc_stream(
         if len(schemas) == 1:
             (ns,) = schemas
             _merge(reduce_write_models(batch.where(F.col("ns") == ns)),
-                   ns, batch_id)
+                   ns, batch_id, models_cached=False)
             return
         reduced = reduce_write_models(batch).cache()
         try:
             for ns in [r.ns for r in reduced.select("ns").distinct().collect()]:
                 if ns in schemas:  # else DDL-only / unconfigured (ST9: log, don't replay)
-                    _merge(reduced.where(F.col("ns") == ns), ns, batch_id)
+                    _merge(reduced.where(F.col("ns") == ns), ns, batch_id,
+                           models_cached=True)
         finally:
             reduced.unpersist()
 

@@ -1039,9 +1039,9 @@ def _write_oplog(oplog_dir, name, rows):
 def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
     """A single-target flat stream runs each micro-batch as one job
     chain — decode in the streaming plan, no namespace listing, no
-    cache — reading each event once. A batch whose events all belong to
-    another namespace rewrites the target unchanged and reports no
-    stats."""
+    cache — reading each event once. A batch that holds no model for
+    the target (events of another namespace, or no-ops only) leaves the
+    target's files as they were and reports no stats."""
     from hummingbird_spark.streaming.cdc import read_cdc_target
 
     oplog_dir, root = str(tmp_path / "oplog"), str(tmp_path / "tgt")
@@ -1075,21 +1075,43 @@ def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
     assert [(ns, s.total) for ns, _, s in seen] == [("db.c", 20),
                                                     ("db.c", 4)]
 
+    def files():
+        return sorted((d, f, os.path.getmtime(os.path.join(d, f)))
+                      for d, _, fs in os.walk(f"{root}/c.parquet")
+                      for f in fs)
+
+    published = files()
     _write_oplog(oplog_dir, "2.json", [
         _ev(200, "i", {"_id": 1, "x": "elsewhere", "n": 0}, ns="db.other"),
         _ev(201, "d", {"_id": 3}, ns="db.other")])
     run()
+    _write_oplog(oplog_dir, "3.json", [
+        _ev(300, "n", {"msg": "periodic noop"}),
+        _ev(301, "n", {"msg": "periodic noop"})])
+    q = run()
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"] > 0] == [2]
     assert len(seen) == 2
+    assert files() == published
     assert {r._id: (r.x, r.n) for r in read_cdc_target(
         spark, f"{root}/c.parquet").collect()} == state
 
 
-@pytest.mark.parametrize("shape", ["evolve", "two_targets"])
-def test_stream_reads_each_event_once(spark, tmp_path, shape):
+@pytest.mark.parametrize("shape", ["evolve", "two_targets",
+                                   "two_targets_evolve"])
+def test_stream_reads_each_event_once(spark, tmp_path, shape,
+                                      monkeypatch):
     """Where a micro-batch's models are read more than once (evolve's
     key scan and sample, the namespace listing of a two-target stream)
-    they are cached, so the source is still scanned once per batch."""
+    they are cached, so the source is still scanned once per batch; a
+    two-target batch caches its models once, not again per target."""
     from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    caches = []
+    frame = type(spark.range(1))
+    cache = frame.cache
+    monkeypatch.setattr(frame, "cache",
+                        lambda df: caches.append(1) or cache(df))
 
     oplog_dir, root = str(tmp_path / "oplog"), str(tmp_path / "tgt")
     rows = [_ev(1, "i", {"_id": 1, "x": "a", "n": 1}),
@@ -1098,21 +1120,22 @@ def test_stream_reads_each_event_once(spark, tmp_path, shape):
             _ev(4, "i", {"_id": 9, "x": "i", "n": 9}, ns="db.d")]
     _write_oplog(oplog_dir, "0.json", rows)
     schemas = {"db.c": TARGET_SCHEMA}
-    if shape == "two_targets":
+    if shape.startswith("two_targets"):
         schemas["db.d"] = TARGET_SCHEMA
+    evolve = shape.endswith("evolve")
     q = start_cdc_stream(spark, oplog_dir, root, schemas,
-                         checkpoint=str(tmp_path / "ckpt"),
-                         evolve=shape == "evolve")
+                         checkpoint=str(tmp_path / "ckpt"), evolve=evolve)
     q.awaitTermination(120)
     assert q.exception() is None
     assert [p["numInputRows"] for p in q.recentProgress
             if p["numInputRows"] > 0] == [len(rows)]
+    assert len(caches) == 1
     got = {r._id: r for r in
            read_cdc_target(spark, f"{root}/c.parquet").collect()}
     assert sorted(got) == [1, 2] and got[2].x == "B"
-    if shape == "evolve":
+    if evolve:
         assert got[2].tag == "t"
-    else:
+    if shape.startswith("two_targets"):
         assert [r._id for r in read_cdc_target(
             spark, f"{root}/d.parquet").collect()] == [9]
 
@@ -1186,3 +1209,40 @@ def test_apply_merges_into_a_target_another_writer_left(spark, tmp_path,
     assert sorted((r._id, r.x, r.n) for r in read_cdc_target(
         spark, path).collect()) == [(1, "a", 1), (2, "b", 2), (3, "c", 3),
                                     (4, "d", 4)]
+
+
+def test_apply_without_models_publishes_nothing(spark, tmp_path):
+    """A batch with no model creates no target and publishes nothing
+    over an existing one; its counters are all zero."""
+    path = str(tmp_path / "t.parquet")
+    none = reduce_write_models(decode_write_models(_oplog_df(spark, [
+        _ev(1, "n", {"msg": "periodic noop"})])))
+    stats = apply_cdc_batch(spark, none, path, "_id", TARGET_SCHEMA)
+    assert stats.total == 0 and not os.path.exists(path)
+    for num_buckets in (None, 4):
+        bpath = f"{path}-{num_buckets}"
+        apply_cdc_batch(spark, reduce_write_models(decode_write_models(
+            _oplog_df(spark, [_ev(1, "i", {"_id": 1, "x": "a", "n": 1})]))),
+            bpath, "_id", TARGET_SCHEMA, num_buckets=num_buckets)
+        before = sorted(os.walk(bpath))
+        stats = apply_cdc_batch(spark, none, bpath, "_id", TARGET_SCHEMA,
+                                num_buckets=num_buckets)
+        assert stats.total == 0 and sorted(os.walk(bpath)) == before
+
+
+@pytest.mark.parametrize("num_buckets", [None, 8])
+def test_apply_onto_a_target_with_no_data_file(spark, tmp_path,
+                                               num_buckets):
+    """A target directory holding `_SUCCESS` alone is an empty target,
+    for the sink as for read_cdc_target."""
+    from hummingbird_spark.streaming.cdc import read_cdc_target
+
+    path = tmp_path / "t.parquet"
+    path.mkdir()
+    (path / "_SUCCESS").write_text("")
+    assert read_cdc_target(spark, str(path), TARGET_SCHEMA).count() == 0
+    apply_cdc_batch(spark, reduce_write_models(decode_write_models(
+        _oplog_df(spark, [_ev(1, "i", {"_id": 1, "x": "a", "n": 1})]))),
+        str(path), "_id", TARGET_SCHEMA, num_buckets=num_buckets)
+    assert [(r._id, r.x, r.n) for r in read_cdc_target(
+        spark, str(path)).collect()] == [(1, "a", 1)]

@@ -114,6 +114,25 @@ def test_idempotent_recopy(spark, target_dir):
     assert spark.read.parquet(f"{target_dir}/supplier.parquet").count() == 10
 
 
+def test_recopy_tops_up_a_target_another_writer_left(spark, target_dir):
+    """A target another writer left (one parquet file in a directory,
+    no `_SUCCESS`, no schema record) is topped up like any target: its
+    rows stay and only the missing keys are copied."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(f"{target_dir}/supplier.parquet")
+    pq.write_table(pa.table({"s_suppkey": [1, 2], "s_name": ["x1", "x2"]}),
+                   f"{target_dir}/supplier.parquet/part-0.parquet")
+    inc = Include(namespace="supplier")
+    res = copy_table(spark, _cfg(target_dir, [inc], key="s_suppkey"), inc)
+    assert res.rows_copied == 8
+    out = {r.s_suppkey: r.s_name for r in spark.read.option(
+        "mergeSchema", "true").parquet(f"{target_dir}/supplier.parquet")
+        .collect()}
+    assert len(out) == 10 and (out[1], out[2]) == ("x1", "x2")
+
+
 def test_resume_skips_completed(spark, target_dir):
     # resume.go:13-82 / splitter.go:33-35: completed namespaces skipped
     inc = Include(namespace="region")

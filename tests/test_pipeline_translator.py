@@ -301,6 +301,20 @@ def test_merge_into_a_table_another_writer_left(spark, tmp_path):
     assert got == {1: 1, 2: 20, 3: 30}
 
 
+def test_merge_into_a_target_with_no_data_file(spark, tmp_path):
+    """A target directory holding `_SUCCESS` alone is an empty target:
+    `$merge` inserts into it."""
+    from hummingbird_spark.pipeline import run_pipeline
+
+    (tmp_path / "e.parquet").mkdir()
+    (tmp_path / "e.parquet" / "_SUCCESS").write_text("")
+    src = spark.createDataFrame([(2, 20), (3, 30)], "_id long, v long")
+    got = {r._id: r.v for r in run_pipeline(spark, src, [
+        {"$merge": {"into": "e"}},
+    ], data_dir=str(tmp_path)).collect()}
+    assert got == {2: 20, 3: 30}
+
+
 def test_merge_keep_existing_and_discard(spark, tmp_path):
     from hummingbird_spark.pipeline import run_pipeline
 
