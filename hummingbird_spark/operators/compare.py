@@ -15,9 +15,11 @@ This is the multiset difference exactly: Spark plans `exceptAll` the same
 way (RewriteExceptAll: tagged union + aggregate on every column), so NULLs
 group together, NaN and −0.0 are normalised and the union widens types as
 `exceptAll` does. Only the counts are needed, so the row replication that
-`exceptAll` adds on top is skipped. `compare_migration` unions every
-namespace's per-row counts, sums them per namespace and collects once, so
-AQE runs all the namespaces' shuffles at the same time.
+`exceptAll` adds on top is skipped. `compare_migration` builds each
+namespace's per-row counts on up to `cfg.workers` driver threads at once
+(reading and inferring the source, transforming it, reading the target),
+then unions them, sums them per namespace and collects once, so AQE runs
+all the namespaces' shuffles at the same time.
 """
 
 from __future__ import annotations
@@ -57,15 +59,14 @@ def _row_counts(source: DataFrame, target: DataFrame, i: int) -> DataFrame:
             .select(F.lit(i).alias("i"), "__n_s", "__n_t"))
 
 
-def _compare_all(pairs: list[tuple[str, DataFrame, DataFrame]]
+def _compare_all(namespaces: list[str], counts: list[DataFrame]
                  ) -> list[CompareResult]:
-    """Compare every (namespace, source, target) pair in one action."""
-    if not pairs:
+    """Sum every namespace's `_row_counts` (counts[i], tagged i) in one
+    action."""
+    if not counts:
         return []
     n_s, n_t = F.col("__n_s"), F.col("__n_t")
-    rows = reduce(DataFrame.union, [
-        _row_counts(s, t, i) for i, (_, s, t) in enumerate(pairs)
-    ]).groupBy("i").agg(
+    rows = reduce(DataFrame.union, counts).groupBy("i").agg(
         F.sum(n_s), F.sum(n_t),
         F.sum(F.greatest(n_s - n_t, F.lit(0))),
         F.sum(F.greatest(n_t - n_s, F.lit(0))),
@@ -73,36 +74,49 @@ def _compare_all(pairs: list[tuple[str, DataFrame, DataFrame]]
     # a pair with both sides empty has no rows, hence no group
     totals = {r[0]: tuple(r[1:]) for r in rows}
     return [CompareResult(ns, *totals.get(i, (0, 0, 0, 0)))
-            for i, (ns, _, _) in enumerate(pairs)]
+            for i, ns in enumerate(namespaces)]
 
 
 def compare_tables(
     source: DataFrame, target: DataFrame, namespace: str = ""
 ) -> CompareResult:
     """Full-fidelity multiset compare of two frames, in one action."""
-    return _compare_all([(namespace, source, target)])[0]
+    return _compare_all([namespace], [_row_counts(source, target, 0)])[0]
 
 
 def compare_migration(spark, cfg) -> list[CompareResult]:
     """The `-compare` command (compare.go:13-31): per included namespace
     — with its filter, mask, limit, and rename applied to the source —
     verify the migrated target matches. Returns one CompareResult per
-    namespace. Both sides are read by `read_source`: a target the copy
-    published reads by its schema record, with no schema-inference job."""
+    namespace, in include order. Both sides are read by `read_source`: a
+    target the copy published reads by its schema record, with no
+    schema-inference job. Up to `cfg.workers` namespaces build their
+    sides at once (`copy.side_by_side`: source read and inference, the
+    include's transform, target read), each in the caller's job group;
+    then one action compares them all. A namespace whose side cannot be
+    built raises, the first in include order, after every started one
+    has ended."""
     from hummingbird_spark.operators.copy import (
         _source_path,
         _table_path,
         resolve_includes,
+        side_by_side,
         transform_for_include,
     )
     from hummingbird_spark.sources.tables import read_source
 
-    pairs = []
-    for inc in resolve_includes(spark, cfg):
+    includes = resolve_includes(spark, cfg)
+
+    def counts(item):
+        i, inc = item
         src = transform_for_include(
             read_source(spark, _source_path(spark, cfg.source,
                                             inc.namespace)), inc)
         tgt = read_source(spark, _table_path(cfg.target,
                                              inc.target_namespace))
-        pairs.append((inc.namespace, src, tgt))
-    return _compare_all(pairs)
+        return _row_counts(src, tgt, i)
+
+    built = list(side_by_side(spark, cfg.workers, list(enumerate(includes)),
+                              counts))
+    return _compare_all([inc.namespace for inc in includes],
+                        [done.result() for _, done in built])

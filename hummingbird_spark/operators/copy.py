@@ -5,8 +5,12 @@ Reference flow: enumerate includes -> split into _id-range tasks ->
 workers cursor-copy each range with the include filter conjoined
 (data_copier.go:66-113, task.go:54-105). Spark flow: per table,
 `read -> filter -> mask -> limit -> rename -> range-partitioned write`.
-The task queue, workers, stragglers, and resume bookkeeping collapse into
-Spark's scheduler + an idempotent write; what remains is this thin layer.
+The per-range tasks, stragglers and resume bookkeeping collapse into
+Spark's scheduler + an idempotent write. The reference's pool of
+`workers` (data_copier.go:109-113) becomes `side_by_side`: up to
+`cfg.workers` namespaces are copied (and compared) at once, each from
+its own driver thread, so one namespace's driver latency (planning,
+listing, publishing) overlaps another's Spark jobs.
 
 Every table the copy writes is published through the commit protocol
 (hummingbird_spark/commit.py) with its schema record, so a killed copy
@@ -29,8 +33,12 @@ Scale notes:
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import closing
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -168,6 +176,60 @@ def transform_for_include(df: DataFrame, include: Include) -> DataFrame:
     return out
 
 
+def side_by_side(spark: SparkSession, workers: int, items: list, fn,
+                 lane=None):
+    """Run fn(item) for every item on a pool of at most `workers` driver
+    threads, and yield (item, Future of fn(item)) for each item that
+    starts, in item order, once it has started. Items with the same
+    `lane(item)` run one after another, in item order, in one thread;
+    without `lane` each item is its own lane. Each thread runs with the
+    caller's Spark local properties (job group, scheduler pool) as they
+    were when the iteration began. After a failure no item that has not
+    started starts (nor is yielded); the iteration ends only after every
+    started item has ended."""
+    lanes: dict = {}
+    for i, item in enumerate(items):
+        lanes.setdefault(i if lane is None else lane(item), []).append(i)
+    if not lanes:
+        return
+    futures = [Future() for _ in items]
+    decided = [threading.Event() for _ in items]
+    stop = threading.Event()
+
+    def run(indices):
+        for i in indices:
+            if stop.is_set():
+                futures[i].cancel()
+            else:
+                futures[i].set_running_or_notify_cancel()
+            decided[i].set()
+            if futures[i].cancelled():
+                continue
+            try:
+                futures[i].set_result(fn(items[i]))
+            except BaseException as e:  # noqa: BLE001 -- handed to the caller
+                stop.set()
+                futures[i].set_exception(e)
+
+    with ThreadPoolExecutor(min(workers, len(lanes))) as pool:
+        try:
+            for indices in lanes.values():
+                # one wrap per lane: each gets its own copy of the
+                # caller's local properties, which its SQL executions
+                # then mutate. Without pinned threads
+                # (PYSPARK_PIN_THREAD=false) local properties do not
+                # follow Python threads, and the call returns the
+                # session itself: run as is.
+                wrap = inheritable_thread_target(spark)
+                pool.submit(run if wrap is spark else wrap(run), indices)
+            for i, item in enumerate(items):
+                decided[i].wait()
+                if not futures[i].cancelled():
+                    yield item, futures[i]
+        finally:
+            stop.set()
+
+
 def copy_table(
     spark: SparkSession,
     cfg: MigrationConfig,
@@ -212,6 +274,13 @@ def copy_table(
 
     top_up = existing is not None and not cfg.drop
     if top_up:
+        fs, hpath = _fs(spark, dst_path)
+        if fs.getFileStatus(hpath).isFile():
+            # the top-up adds part files to a directory; a target that
+            # is one parquet file has none to add to
+            raise ValueError(
+                f"cannot top up {dst_path}: it is one parquet file, not a "
+                f"directory; copy with drop to replace it")
         existing = existing.select(F.col(cfg.key).alias("__existing_key"))
         df = df.join(
             existing, df[cfg.key] == existing["__existing_key"], "left_anti"
@@ -276,9 +345,20 @@ def run_migration(
 ) -> MigrationReport:
     """The `-start` data phase (start.go:78-82): resolve includes against
     the source catalog (wildcards expand, data_copier.go:78-102), then
-    copy each namespace. Tables are independent jobs — Spark runs the
-    stages of each in parallel across the cluster; at 100 TB per-table
-    parallelism (partitions) dominates, not table count.
+    copy each namespace, up to `cfg.workers` at once (`side_by_side`;
+    the reference's copy workers, data_copier.go:109-113). Each copy's
+    Spark jobs run in the caller's job group. Includes that resolve to
+    the same target table are copied one after another, in include
+    order, so each target has one writer at a time (commit.py) and the
+    result is the serial one.
+
+    The report lists the results in include order. The tracker hears of
+    each namespace from the calling thread only, one at a time, in
+    include order: `start(ns)` when the call begins waiting on that
+    copy, then `complete(ns, rows)` or `fail(ns)`. After a failure no
+    copy that has not started starts (its namespace stays `added`), and
+    the copies already running finish and publish; once every started
+    copy has ended, the first failure in include order is raised.
     """
     expanded = resolve_includes(spark, cfg)
     if cfg.drop and not resume:
@@ -291,19 +371,27 @@ def run_migration(
                                                inc.target_namespace))
             fs.delete(hpath, True)
 
-    report = MigrationReport()
+    report, failure = MigrationReport(), None
     if tracker is not None:  # web.ProgressTracker status feed (A4)
         tracker.add(*[inc.namespace for inc in expanded])
-    for inc in expanded:
-        if tracker is not None:
-            tracker.start(inc.namespace)
-        try:
-            result = copy_table(spark, cfg, inc, resume=resume)
-        except Exception:
+    copies = side_by_side(
+        spark, cfg.workers, expanded,
+        lambda inc: copy_table(spark, cfg, inc, resume=resume),
+        lane=lambda inc: _table_path(cfg.target, inc.target_namespace))
+    with closing(copies):
+        for inc, done in copies:
             if tracker is not None:
-                tracker.fail(inc.namespace)
-            raise
-        report.results.append(result)
-        if tracker is not None:
-            tracker.complete(inc.namespace, result.rows_copied)
+                tracker.start(inc.namespace)
+            try:
+                result = done.result()
+            except Exception as e:  # noqa: BLE001 -- raised below
+                if tracker is not None:
+                    tracker.fail(inc.namespace)
+                failure = failure or e
+                continue
+            report.results.append(result)
+            if tracker is not None:
+                tracker.complete(inc.namespace, result.rows_copied)
+    if failure is not None:
+        raise failure
     return report

@@ -33,7 +33,8 @@ Supported stages:
   $sample   -> deterministic-seed shuffle-sample (size semantics;
                NONDETERMINISTIC in Mongo — seeded here for testability)
   $lookup   -> pre-aggregated left join (array-of-docs semantics);
-               foreign frames passed via the `tables` argument
+               foreign frames passed via the `tables` argument; with
+               an $unwind of `as` right after it, one plain join
   $sortByCount -> group + count + desc sort (Mongo's exact contract)
   $setWindowFields -> Spark window functions (running/rank/shift; the
                stage IS Spark's window operator, translated 1:1)
@@ -739,7 +740,8 @@ def _apply_unwind(df: DataFrame, spec: Any) -> DataFrame:
 
 
 def _apply_lookup(df: DataFrame, spec: dict,
-                  tables: dict[str, DataFrame] | None) -> DataFrame:
+                  tables: dict[str, DataFrame] | None,
+                  unwind: bool | None = None) -> DataFrame:
     """$lookup (equality form): left outer join where each left row
     gains an ARRAY of matching foreign docs under `as` — expressed as
     pre-aggregate-then-join so the join carries one row per foreign
@@ -762,7 +764,13 @@ def _apply_lookup(df: DataFrame, spec: dict,
     ($group/$sort/$limit/$skip and anything still referencing $$vars)
     are refused with a clear error — a correlated subquery per row is
     exactly the shape that cannot scale, so the translator won't
-    silently build it."""
+    silently build it.
+
+    `unwind` is the preserveNullAndEmptyArrays of an $unwind of `as`
+    that follows the equality form (see _unwind_of_lookup): the pair is
+    then one null-safe join, left when preserving and inner otherwise,
+    with `as` a struct of the foreign columns: a row per (row, match),
+    no roll-up and no explode, as MongoDB coalesces the pair itself."""
     if not tables or spec["from"] not in tables:
         raise ValueError(
             f"$lookup from {spec.get('from')!r}: pass the foreign frame "
@@ -772,6 +780,12 @@ def _apply_lookup(df: DataFrame, spec: dict,
     if "pipeline" in spec:
         return _apply_lookup_pipeline(df, spec, foreign)
     local, fkey, alias = spec["localField"], spec["foreignField"], spec["as"]
+    if unwind is not None:
+        docs = foreign.select(F.col(fkey).alias("__lk"),
+                              F.struct(*foreign.columns).alias("__doc"))
+        joined = df.join(docs, df[local].eqNullSafe(docs["__lk"]),
+                         "left" if unwind else "inner")
+        return joined.withColumn(alias, F.col("__doc")).drop("__lk", "__doc")
     rolled = (
         foreign.groupBy(F.col(fkey).alias("__lk"))
         .agg(F.collect_list(F.struct(*foreign.columns)).alias("__docs"))
@@ -783,6 +797,23 @@ def _apply_lookup(df: DataFrame, spec: dict,
     return joined.withColumn(
         alias, F.coalesce(F.col("__docs"), empty)
     ).drop("__lk", "__docs")
+
+
+def _unwind_of_lookup(lookup: dict, following: list[dict]) -> bool | None:
+    """preserveNullAndEmptyArrays of the stage in `following` (the one
+    after an equality-form $lookup) when it is an $unwind of exactly the
+    lookup's `as` without includeArrayIndex; None when it is not."""
+    nxt = following[0] if following else None
+    if "pipeline" in lookup or not (isinstance(nxt, dict)
+                                    and list(nxt) == ["$unwind"]):
+        return None
+    spec = nxt["$unwind"]
+    if isinstance(spec, str):
+        spec = {"path": spec}
+    if not isinstance(spec, dict) or "includeArrayIndex" in spec \
+            or spec.get("path") != f"${lookup.get('as')}":
+        return None
+    return bool(spec.get("preserveNullAndEmptyArrays"))
 
 
 def _window_frame(base, sort_by: dict | None, window_spec: dict | None):
@@ -1270,7 +1301,10 @@ def mongo_pipeline_to_df(
     """Apply an aggregation pipeline to a DataFrame, stage by stage.
     `tables` names the foreign frames $lookup may reference."""
     out = df
+    coalesced = -1  # an $unwind applied with the $lookup before it
     for i, stage in enumerate(stages):
+        if i == coalesced:
+            continue
         if not (isinstance(stage, dict) and len(stage) == 1):
             raise ValueError(f"each stage must have exactly one key: {stage!r}")
         op, spec = next(iter(stage.items()))
@@ -1331,7 +1365,10 @@ def mongo_pipeline_to_df(
             n = int(spec["size"])
             out = out.orderBy(F.xxhash64(F.rand(_SEED))).limit(n)
         elif op == "$lookup":
-            out = _apply_lookup(out, spec, tables)
+            unwind = _unwind_of_lookup(spec, stages[i + 1:i + 2])
+            out = _apply_lookup(out, spec, tables, unwind)
+            if unwind is not None:
+                coalesced = i + 1
         elif op == "$sortByCount":
             out = (
                 out.withColumn("_id", _ref(spec))

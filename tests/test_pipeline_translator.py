@@ -609,6 +609,56 @@ def test_lookup_matches_null_local_field(spark):
     assert [d.v for d in rows[2]] == [99]
 
 
+_UNWINDS = {
+    "inner": "$docs",
+    "inner_doc": {"path": "$docs", "preserveNullAndEmptyArrays": False},
+    "preserve": {"path": "$docs", "preserveNullAndEmptyArrays": True},
+    "index": {"path": "$docs", "includeArrayIndex": "i"},
+    "index_preserve": {"path": "$docs", "includeArrayIndex": "i",
+                       "preserveNullAndEmptyArrays": True},
+}
+
+
+@pytest.mark.parametrize("name", list(_UNWINDS))
+@pytest.mark.parametrize("alias", ["docs", "tag"])
+def test_lookup_then_unwind_equals_the_uncoalesced_pair(spark, name, alias):
+    """$lookup directly followed by an $unwind of its `as` (without
+    includeArrayIndex) is translated to one join; it gives the rows and
+    columns of the two stages translated one by one (a `$match: {}`
+    between them keeps them apart): a null local key matching a null
+    foreign key, a key with two matches, a row with no match, with and
+    without preserveNullAndEmptyArrays, and an `as` that replaces a
+    local column."""
+    left = spark.createDataFrame(
+        [(1, "a", "t1"), (2, None, "t2"), (3, "zz", "t3"), (4, "b", None)],
+        "k int, fk string, tag string")
+    foreign = spark.createDataFrame(
+        [("a", 10), ("a", 11), (None, 99), ("b", 20), ("c", 30)],
+        "fkey string, v int")
+    unwind = _UNWINDS[name]
+    if isinstance(unwind, str):
+        unwind = "$" + alias
+    else:
+        unwind = {**unwind, "path": "$" + alias}
+    lookup = {"$lookup": {"from": "f", "localField": "fk",
+                          "foreignField": "fkey", "as": alias}}
+
+    def run(*between):
+        out = mongo_pipeline_to_df(
+            left, [lookup, *between, {"$unwind": unwind}],
+            tables={"f": foreign})
+        rows = sorted((repr(r.asDict(recursive=True)) for r in out.collect()))
+        return out, out.columns, rows
+
+    out, cols, rows = run()
+    _, want_cols, want_rows = run({"$match": {}})
+    assert (cols, rows) == (want_cols, want_rows)
+    coalesced = "includeArrayIndex" not in unwind
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert ("Generate" not in plan) == coalesced, plan
+    assert len(rows) == (5 if "preserve" in name else 4)
+
+
 # ---------------------------------------------------------------------------
 # Round-3 stages: $setWindowFields, $graphLookup, $densify, $fill
 # ---------------------------------------------------------------------------
