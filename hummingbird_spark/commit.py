@@ -35,9 +35,9 @@ one.
 
 Every parquet table the migration path publishes (the copy, the CDC
 sink, compaction, pipeline `$out`/`$merge`) carries a schema record:
-`put_schema` writes it into the stage, `recorded_schema` parses it,
-and `read_published` reads the table by it. Its file name and encoding
-live here alone.
+`put_schema` writes it into the stage, `replace_schema` replaces it
+after a top-up, `recorded_schema` parses it, and `read_published`
+reads the table by it. Its file name and encoding live here alone.
 """
 
 from __future__ import annotations
@@ -185,6 +185,14 @@ def put_schema(spark: SparkSession, stage: str,
     put_text(spark, f"{stage}/{SCHEMA_RECORD}", schema.json())
 
 
+def replace_schema(spark: SparkSession, path: str,
+                   schema: T.StructType) -> None:
+    """Replace the schema record of the live table at `path` by
+    `write_text`: a crash leaves the old record, none, or the new one
+    whole, never a torn one."""
+    write_text(spark, f"{path}/{SCHEMA_RECORD}", schema.json())
+
+
 def recorded_schema(spark: SparkSession, path: str) -> T.StructType | None:
     """The schema the last publish of the table at `path` recorded, or
     None when it has no record."""
@@ -200,10 +208,11 @@ def read_published(spark: SparkSession, path: str) -> DataFrame | None:
     its publish recorded (recorded_schema), which spares the
     footer-reading job of schema inference; partition directories are
     still discovered and pruned. A table without the record (written by
-    another writer, or with files appended since: see
-    _adopt_parquet_files) unions its files' schemas, so no column of
-    any file is lost. This is the one rule by which the migration path
-    reads a table it may merge into, copy onto or compact."""
+    another writer, or whose top-up stopped between its file moves and
+    its new record: see _adopt_parquet_files) unions its files'
+    schemas, so no column of any file is lost. This is the one rule by
+    which the migration path reads a table it may merge into, copy onto
+    or compact."""
     schema = recorded_schema(spark, path)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -234,7 +243,8 @@ def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,
     renames cannot collide with existing files. Uses the Hadoop FS API
     (rename is a metadata op on HDFS/local; on S3A the committer would
     own this) — nothing passes through the driver. The adopted files
-    outdate the target's schema record, which is dropped first."""
+    outdate the target's schema record, which is dropped first; the
+    caller records the widened schema after (replace_schema)."""
     Path = _path_class(spark._jvm)
     fs, tmp_p = _fs(spark, tmp)
     if move:

@@ -468,9 +468,8 @@ def canonical_url(url: Column) -> Column:
     ('xn--mnchen-3ya.example') spellings of the same host are
     DISTINCT canonical identities. Bootstring decoding has no sane
     fixed-depth Column-expression form, and keeping the forms apart
-    is lossless. Pipelines that need DNS-form identity normalize
-    first via functions/idn.py::normalize_idn_hosts (an opt-in
-    Arrow-batched kernel with an ASCII fast path)."""
+    is lossless. Pipelines that need DNS-form identity must normalize
+    hosts to one spelling before this."""
     q = url_query_canonical(url)
     return F.concat(
         url_scheme(url), F.lit("://"), url_host(url), url_port(url),

@@ -21,11 +21,6 @@ def redacted_uri(uri: str) -> str:
     return _URI_CRED.sub("//XXX:xxxxxx@", uri)
 
 
-def redacted_uri_col(col: Column) -> Column:
-    """Column form of F13 for data-plane redaction of URI columns."""
-    return F.regexp_replace(col, r"//[^@/]+@", "//XXX:xxxxxx@")
-
-
 def to_float64(col: Column) -> Column:
     """ToFloat64 (utils.go:35-40) — lossy numeric coercion -> double."""
     return col.cast("double")
@@ -45,13 +40,3 @@ def extended_json(*cols: str) -> Column:
     """Stringify (utils.go:17-23): document -> canonical JSON string.
     `to_json(struct(...))` keeps it JVM-side."""
     return F.to_json(F.struct(*[F.col(c) for c in cols]))
-
-
-def epoch_seconds(col: Column) -> Column:
-    """BSON-Timestamp style seconds (oplog_streamer.go:121,190)."""
-    return F.unix_timestamp(col)
-
-
-def date_string(col: Column, fmt: str = "yyyy-MM-dd'T'HH:mm:ss") -> Column:
-    """GetDateTime (utils.go:64-70)."""
-    return F.date_format(col, fmt)

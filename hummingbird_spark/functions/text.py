@@ -68,15 +68,6 @@ def word_ngrams(col: Column, n: int = 3, sep: str = " ") -> Column:
     return ngrams_from_tokens(tokens(col), n, sep)
 
 
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Character n-gram shingles (deduplicated)."""
-    s = F.trim(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1)))
-    grams = F.transform(idx, lambda i: F.substring(s, i.cast("int"), n))
-    return F.when(F.length(s) < n, F.array().cast("array<string>")) \
-        .otherwise(F.array_distinct(grams))
-
-
 # GPT-2-ish pre-tokenizer shape, restricted to constructs with identical
 # semantics in Java regex (Spark) and RE2 (DuckDB): letter runs, single
 # digits, punctuation runs.
@@ -160,18 +151,6 @@ def fingerprint(col: Column) -> Column:
     text — the exact-dup key that survives formatting noise."""
     normalized = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
     return F.md5(normalized)
-
-
-def hamming_bits(a: Column, b: Column) -> Column:
-    """Hamming distance between two equal-length bit strings: count of
-    differing positions, computed as a fold over the index range."""
-    return F.size(
-        F.filter(
-            F.sequence(F.lit(1), F.length(a)),
-            lambda i: F.substring(a, i.cast("int"), 1)
-            != F.substring(b, i.cast("int"), 1),
-        )
-    )
 
 
 # PII patterns for redaction (training-data hygiene). Deliberately

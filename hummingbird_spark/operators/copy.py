@@ -41,9 +41,11 @@ from dataclasses import dataclass, field
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hummingbird_spark.commit import (
     _adopt_parquet_files, _fs, publish, put_schema, read_published, recover,
+    replace_schema,
 )
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.filters import mongo_filter_to_column
@@ -237,15 +239,23 @@ def copy_table(
     resume: bool = False,
 ) -> CopyResult:
     """Copy one namespace source->target. Modes:
-      - no target, or cfg.drop: publish the copy with its schema record
-        (commit.publish), replacing any target (DropCollections,
-        migrator.go:155-193)
+      - no target: publish the copy with its schema record
+        (commit.publish)
       - resume + target exists: skip (completed-task skip, splitter.go:33-35)
-      - target exists, no drop: idempotent top-up — append only rows whose
-        key is missing (dup-key reconciliation J1, task.go:88-101)
+      - target exists: idempotent top-up — append only rows whose key is
+        missing (dup-key reconciliation J1, task.go:88-101), then record
+        the widened schema: the target's fields, then the delta's new
+        ones, each existing field keeping its type. A crash between the
+        file moves and that record leaves the target without one, so
+        commit.read_published reads it with mergeSchema and no column
+        is lost.
     The target exists when commit.read_published finds it, after
     `recover` has settled an interrupted publish: a copy killed before
     its commit point left no target, one killed after it a whole one.
+    `cfg.drop` acts in run_migration, which deletes every target before
+    the first copy (DropCollections, migrator.go:155-193); so includes
+    that share a target fill it in include order, each later one
+    topping up the earlier ones, with or without drop.
     """
     if cfg.source.startswith(("mongodb://", "mongodb+srv://")):
         # the reference's native source: dispatch through the
@@ -272,7 +282,7 @@ def copy_table(
         return CopyResult(include.namespace, include.target_namespace, 0,
                           skipped=True)
 
-    top_up = existing is not None and not cfg.drop
+    top_up = existing is not None
     if top_up:
         fs, hpath = _fs(spark, dst_path)
         if fs.getFileStatus(hpath).isFile():
@@ -281,6 +291,7 @@ def copy_table(
             raise ValueError(
                 f"cannot top up {dst_path}: it is one parquet file, not a "
                 f"directory; copy with drop to replace it")
+        target_fields = existing.schema.fields
         existing = existing.select(F.col(cfg.key).alias("__existing_key"))
         df = df.join(
             existing, df[cfg.key] == existing["__existing_key"], "left_anti"
@@ -329,6 +340,11 @@ def copy_table(
         _with_bloom(out.write).mode("overwrite").parquet(tmp)
         n = obs.get["rows"]
         _adopt_parquet_files(spark, tmp, dst_path, move=n > 0)
+        if n > 0:
+            known = {f.name for f in target_fields}
+            replace_schema(spark, dst_path, T.StructType(
+                target_fields
+                + [f for f in out.schema.fields if f.name not in known]))
     else:
         def write(stage: str) -> None:
             _with_bloom(out.write).parquet(stage)

@@ -147,8 +147,7 @@ def minhash_signature_df(df: DataFrame, text_col: str = "text",
 def band_keys(sig_df: DataFrame, id_col: str = "doc_id",
               bands: int = 4, rows_per_band: int = 4) -> DataFrame:
     """(id, band, bkey) rows: the LSH band keys of each signature —
-    the join/lookup unit for both batch candidate pairing and the
-    streaming dedup store."""
+    the join/lookup unit of batch candidate pairing."""
     return sig_df.select(
         F.col(id_col),
         F.explode(

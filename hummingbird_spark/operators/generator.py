@@ -96,13 +96,6 @@ def docgen(spark: SparkSession, total: int,
     )
 
 
-def datagen(spark: SparkSession, path: str, total: int) -> int:
-    """DataGen (sim.go:336-344): drop + bulk-load one table."""
-    df = docgen(spark, total)
-    df.write.mode("overwrite").parquet(path)
-    return total
-
-
 def datagen_multi(spark: SparkSession, root: str, total: int,
                   n_tables: int = 3) -> list[str]:
     """DataGenMulti (sim.go:347-398): round-robin seq across k tables.

@@ -24,12 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def broadcast_join(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Explicit broadcast-hash join for dimension tables (the engine
-    broadcasts automatically below the threshold; this pins it)."""
-    return big.join(F.broadcast(small), on, how)
-
-
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """Existence check (J1: CountDocuments({_id:{$in:ids}}) shape)."""
     return left.join(right, on, "left_semi")

@@ -465,62 +465,3 @@ def embedding_duplicate_clusters(df: DataFrame, threshold: float = 0.8,
         .withColumn("is_canonical", F.col(id_col) == F.col("cluster_id"))
     )
 
-
-def semdedup_prune(df: DataFrame, k: int = 8, iterations: int = 3,
-                   threshold: float = 0.8, vec_col: str = "embedding",
-                   id_col: str = "vec_id") -> DataFrame:
-    """SemDeDup as published (Abbas et al. 2023): k-means the corpus,
-    then search for semantic duplicates only WITHIN each cluster, and
-    from every duplicate pair keep the member farthest from its
-    centroid (the paper keeps low-centroid-similarity examples — the
-    most atypical — so pruning removes redundant typical points).
-    Returns (id, cluster, dist2, keep) for EVERY row: keep=False iff
-    some same-cluster partner with cosine >= threshold out-ranks it
-    (larger dist2 wins; dist2 ties keep the lower id).
-
-    This is the 100 TB shape for embedding dedup: the all-pairs frame
-    (`exact_near_duplicate_pairs`) moves n*n_blocks rows no matter
-    what, while the clustered form bounds candidates to sum(n_c^2) —
-    with k scaled so clusters stay ~1e5 rows, pair work drops by ~k
-    versus all-pairs at equal corpus size. The pair step is a
-    self-equi-join on the cluster key (AQE can skew-split a hot
-    cluster; no task ever materializes an n_c^2 block), the per-pair
-    score is the JVM-side HOF dot, and the prune verdict is one
-    distinct + left join on the loser set.
-
-    Determinism: the k-means trajectory is exact integer replay
-    (operators/cluster.py); pair cosines round to 6 dp before the
-    threshold compare; the keep rule uses the exact integer dist2.
-    The DuckDB oracle replays all of it bit-for-bit.
-    """
-    from hummingbird_spark.operators.cluster import kmeans_assign
-
-    assigned = kmeans_assign(df, k=k, iterations=iterations,
-                             vec_col=vec_col, id_col=id_col) \
-        .localCheckpoint(eager=False)  # pair join + verdict share the fit
-    vecs = df.select(F.col(id_col), F.col(vec_col))
-    j = assigned.join(vecs, id_col)
-    x = j.select(F.col(id_col).alias("a"), "cluster",
-                 F.col("dist2").alias("da"), F.col(vec_col).alias("va"))
-    y = j.select(F.col(id_col).alias("b"), "cluster",
-                 F.col("dist2").alias("db"), F.col(vec_col).alias("vb"))
-    losers = (
-        x.join(y, "cluster")
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6)
-                >= threshold)
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("a") > F.col("b"))),
-                F.col("a"),
-            ).otherwise(F.col("b")).alias(id_col)
-        )
-        .distinct()
-    )
-    return (
-        assigned.join(losers.withColumn("__lost", F.lit(True)),
-                      id_col, "left")
-        .select(id_col, "cluster", "dist2",
-                F.coalesce(~F.col("__lost"), F.lit(True)).alias("keep"))
-    )

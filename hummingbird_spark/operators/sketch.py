@@ -214,10 +214,6 @@ def hdr_quantiles_grouped(df: DataFrame, value_col: str,
     )
 
 
-#: HLL hash domain: 60-bit md5 prefix = 8 bucket bits + 52-bit w field
-_HLL_W_BITS = 52
-
-
 def hll_registers(df: DataFrame, value_col: str, group_cols: list,
                   m: int = 256) -> DataFrame:
     """(groups..., bucket, rho): HyperLogLog registers (Flajolet,

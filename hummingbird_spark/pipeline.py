@@ -98,13 +98,6 @@ def _ref(expr: Any) -> Column:
     return F.lit(expr)
 
 
-def _nary(fn, args, n=None):
-    cols = [_expr(a) for a in args]
-    if n is not None and len(cols) != n:
-        raise ValueError(f"expected {n} operands, got {len(cols)}")
-    return fn(cols)
-
-
 def _chain(op):
     from functools import reduce
 

@@ -1066,8 +1066,8 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NO input spread here (r12 re-adjudication of the r11 claim): the
     # interleaved A/B with the guard toggled in-process shows the
     # spread neutral-to-negative (nospread wins 2/3 rounds on min and
-    # median; plans/r12/doc_novelty_tg_{spread,nospread}.txt show the
-    # exchange it would add), and the r11 before/after dumps were
+    # median; the spread's physical plan shows the extra exchange it
+    # would add), and the r11 before/after dumps were
     # identical because the checkpoint hid the subtree — the claimed
     # win was never visible in the executed path.
     tg = (

@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from fnmatch import fnmatch
 
-from pyspark.sql import SparkSession
-
 SYSTEM_DBS = frozenset({"admin", "config", "local", "_neutrino"})
 
 
@@ -78,16 +76,3 @@ def expand_namespaces(
             out.append(ns)
     return out
 
-
-def list_catalog_namespaces(spark: SparkSession) -> list[str]:
-    """Catalog scan (S4+S5): every `db.table` visible to the session,
-    minus system namespaces."""
-    out: list[str] = []
-    for db in spark.catalog.listDatabases():
-        if db.name in SYSTEM_DBS:
-            continue
-        for t in spark.catalog.listTables(db.name):
-            ns = f"{db.name}.{t.name}"
-            if not is_system_namespace(ns):
-                out.append(ns)
-    return out

@@ -1,7 +1,6 @@
 """Streaming audio dedup: continuous ingestion filtered against a
-persisted fingerprint store — the audio-modality twin completing the
-matrix (text MinHash: streaming/dedup.py; image pHash:
-streaming/media_dedup.py; audio: here), with the verification shape
+persisted fingerprint store — the audio-modality twin of the image
+pHash stream (streaming/media_dedup.py), with the verification shape
 the fingerprint family dictates.
 
 A MinHash band collision already implies high Jaccard (drop
@@ -20,8 +19,7 @@ over the stream's life stops generating join work.
 
 Exactly-once: out/store appends guarded by the shared batch-id ledger
 (streaming/ledger.py); re-append on replay is the recoverable
-failure, loss is not. The store compacts every N applied batches
-(streaming/dedup.py discipline)."""
+failure, loss is not. The store compacts every N applied batches."""
 
 from __future__ import annotations
 

@@ -1,8 +1,8 @@
 """Streaming crawl ingestion: continuous (url, html) arrivals ->
 canonical-URL dedup against a persisted store -> domain blocklist ->
 main-text extraction -> curated append. The crawl-front-end twin of
-the modality dedup streams (text streaming/dedup.py, image
-streaming/media_dedup.py, audio streaming/audio_dedup.py): URL
+the modality dedup streams (image streaming/media_dedup.py, audio
+streaming/audio_dedup.py): URL
 identity is the cheapest dedup key a crawl has, and it runs BEFORE
 content hashing — a re-crawled page never reaches the expensive
 MinHash/pHash stages.

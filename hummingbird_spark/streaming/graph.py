@@ -128,8 +128,7 @@ def apply_link_graph_batch(
     rewritten through the verified compaction swap — the append-only
     store otherwise compounds one small file per batch per task, and
     it is semi-join-READ every batch (the classic streaming
-    small-file failure: scan cost grows with batch COUNT, not data;
-    same cure as streaming/dedup.py's band store)."""
+    small-file failure: scan cost grows with batch COUNT, not data)."""
     led = BatchLedger(edges_path)
     if led.seen(batch_id):
         return

@@ -1,10 +1,9 @@
 """Streaming perceptual image dedup: continuous ingestion filtered
-against a persisted pHash band store — the image-modality twin of
-streaming/dedup.py's MinHash filter, with one structural difference
-forced by the hash family's math.
+against a persisted pHash band store, with one structural difference
+from a MinHash band store forced by the hash family's math.
 
-A MinHash band collision already implies high Jaccard, so that filter
-may drop unverified store hits (the standard online trade). An 8-bit
+A MinHash band collision already implies high Jaccard, so a MinHash
+filter may drop unverified store hits (the standard online trade). An 8-bit
 pHash band collides BY CHANCE at ~1/256 per band pair — against a
 store of M images a newcomer sees ~8*M/256 random band hits, so
 unverified dropping would empty the stream once M reaches a few
@@ -13,9 +12,9 @@ is VERIFIED with one bit_count(XOR) <= max_hamming before dropping;
 the store stays tiny (8 rows x 16 bytes per accepted image) and the
 verify is part of the same equi-join, never an all-pairs pass.
 
-Exactly-once: out/store appends guarded by a batch-id ledger; same
-crash-window ordering argument as streaming/dedup.py (re-append on
-replay is recoverable, loss is not)."""
+Exactly-once: out/store appends guarded by a batch-id ledger; the
+shared crash-window ordering argument of streaming/ledger.py
+(re-append on replay is recoverable, loss is not)."""
 
 from __future__ import annotations
 
@@ -90,7 +89,7 @@ def start_streaming_phash_dedup(
     crash-window contract: streaming/ledger.py). compact_every: the
     band store appends one small file-set per batch and is re-READ
     every batch — rewrite it through the verified compaction swap
-    every N applied batches (the streaming/dedup.py discipline)."""
+    every N applied batches."""
     led = BatchLedger(store_path)
 
     stream = spark.readStream.schema(schema).parquet(source_dir)

@@ -83,13 +83,9 @@ SLOW_NODE_IDS = {
     "test_reservoir.py::test_rearrival_with_changed_weight_is_deterministic",
     "test_scd_properties.py::test_scd2_matches_reference_fold",
     "test_sketch_mixture.py::test_unimax_matches_greedy_waterfill",
-    "test_stateful_streaming.py::test_event_time_sessionization",
     "test_streaming_classifier_filter.py::test_trained_filter_gates_the_stream",
-    "test_streaming_composed.py::test_composed_pipeline_converges_with_batch_twins",
     "test_streaming_crawl.py::test_streaming_crawl_ingest",
-    "test_streaming_dedup.py::test_streaming_dedup_replay_is_noop",
     "test_streaming_frontier.py::test_streaming_frontier",
-    "test_streaming_joins.py::test_stream_interval_join_attribution",
     "test_streaming_link_graph.py::test_crash_window_double_apply_converges",
     "test_streaming_link_graph.py::test_postings_compaction_preserves_state",
     "test_streaming_link_graph.py::test_store_equals_from_scratch_after_every_batch",

@@ -92,6 +92,12 @@ def test_incremental_equals_batch_recompute(spark, tmp_path):
     for k, (n, s, _mn, _mx) in _actual(spark, rollup).items():
         assert abs(avgs[k] - s / n) < 1e-12
 
+    # a run with no new file changes nothing
+    before = _actual(spark, rollup)
+    q = start_continuous_rollup(spark, str(src), rollup, EVENT_SCHEMA)
+    q.awaitTermination(120)
+    assert _actual(spark, rollup) == before
+
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
     rollup = str(tmp_path / "rollup.parquet")

@@ -133,6 +133,45 @@ def test_recopy_tops_up_a_target_another_writer_left(spark, target_dir):
     assert len(out) == 10 and (out[1], out[2]) == ("x1", "x2")
 
 
+def test_top_up_records_the_widened_schema(spark, tmp_path):
+    """A top-up that adds a column publishes the widened schema record,
+    the schema a mergeSchema read infers, so a later read_published
+    runs no inference job."""
+    from hummingbird_spark.commit import read_published, recorded_schema
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    path = f"{dst}/c.parquet"
+    cfg = MigrationConfig(command="data-only", source=src, target=dst,
+                          key="_id", includes=[Include(namespace="c")])
+    spark.createDataFrame([(k, "a") for k in range(5)],
+                          "_id long, tag string").write.parquet(
+        f"{src}/c.parquet")
+    assert copy_table(spark, cfg, cfg.includes[0]).rows_copied == 5
+    spark.createDataFrame([(k, "b", k * 1.5) for k in range(10)],
+                          "_id long, tag string, extra double").write.mode(
+        "overwrite").parquet(f"{src}/c.parquet")
+    assert copy_table(spark, cfg, cfg.includes[0]).rows_copied == 5
+
+    recorded = recorded_schema(spark, path)
+    assert recorded is not None
+    assert recorded == spark.read.option(
+        "mergeSchema", "true").parquet(path).schema
+    assert recorded.names == ["_id", "tag", "extra"]
+
+    sc = spark.sparkContext
+    group = f"top-up-read-{tmp_path.name}"
+    sc.setJobGroup(group, "read_published after a top-up")
+    try:
+        got = read_published(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sorted(tuple(r) for r in got.collect()) == (
+        [(k, "a", None) for k in range(5)]
+        + [(k, "b", k * 1.5) for k in range(5, 10)])
+
+
 def test_resume_skips_completed(spark, target_dir):
     # resume.go:13-82 / splitter.go:33-35: completed namespaces skipped
     inc = Include(namespace="region")

@@ -1,7 +1,7 @@
-"""The trained quality classifier as the streaming curation
-pre-filter: weights fitted offline (quantized-GD logreg) ride into
-`start_streaming_dedup`'s pre_filter hook, so the always-on ingest
-path is filter-by-trained-model -> near-dedup -> append — the online
+"""The trained quality classifier as the streaming curation gate:
+weights fitted offline (quantized-GD logreg) gate each micro-batch of
+a file-source JSON stream before its survivors append, so the
+always-on ingest path is filter-by-trained-model -> append — the online
 form of the batch curate pipeline, with the model as a plain closure
 over B+1 integers (no state, broadcastable by construction)."""
 
@@ -17,7 +17,6 @@ from hummingbird_spark.operators.classifier import (
     score_hashed_logreg,
     train_hashed_logreg,
 )
-from hummingbird_spark.streaming.dedup import start_streaming_dedup
 
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -29,6 +28,20 @@ BAD = "zz9 qqx7 garbled j4k xx0 "
 
 SEED = [(i, (GOOD if i % 2 == 0 else BAD) * 6 + f"tail{i}",
          1 if i % 2 == 0 else 0) for i in range(80)]
+
+
+def _drain(spark, src, out, ckpt, gate):
+    """One availableNow run: every new batch is gated, then appended."""
+    def gate_and_append(batch_df, batch_id):
+        gate(batch_df).write.mode("append").parquet(out)
+
+    q = (
+        spark.readStream.schema(SCHEMA).json(src)
+        .writeStream.foreachBatch(gate_and_append)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
 
 
 def _write(src, name, rows):
@@ -52,26 +65,18 @@ def test_trained_filter_gates_the_stream(spark, tmp_path):
 
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
     _write(src, "0.json", [
         (101, GOOD * 5 + "alpha"),          # passes filter
         (102, BAD * 5 + "beta"),            # cut by the trained model
-        (103, GOOD * 5 + "alpha gamma"),    # near-dup of 101 -> deduped
+        (103, GOOD * 5 + "alpha gamma"),    # passes filter
     ])
-    q = start_streaming_dedup(
-        spark, src, out, store, SCHEMA, threshold=0.5,
-        checkpoint=ckpt, pre_filter=quality_filter)
-    q.awaitTermination(180)
+    _drain(spark, src, out, ckpt, quality_filter)
 
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {101}
-    # the cut doc's bands never entered the store: a later exact copy
-    # of it is judged on its own merits (and cut again by the filter)
+    assert got == {101, 103}
+    # a later exact copy of the cut doc, in a new batch, is cut again
     _write(src, "1.json", [(201, BAD * 5 + "beta")])
-    q = start_streaming_dedup(
-        spark, src, out, store, SCHEMA, threshold=0.5,
-        checkpoint=ckpt, pre_filter=quality_filter)
-    q.awaitTermination(180)
+    _drain(spark, src, out, ckpt, quality_filter)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {101}
+    assert got == {101, 103}

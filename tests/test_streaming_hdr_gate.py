@@ -1,9 +1,9 @@
 """The continuously-maintained HDR histogram as the streaming quality
-gate: the ingest pre_filter drops docs whose length falls outside the
+gate: each micro-batch drops docs whose length falls outside the
 maintained [p05, p95] band, and each accepted batch merges back into
 the histogram — the adaptive online form of a batch length-quantile
-filter, composed through the same pre_filter hook the trained
-classifier rides (streaming/dedup.py)."""
+filter. The stream is a plain file-source JSON read whose foreachBatch
+gates each batch and appends the survivors."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from hummingbird_spark.operators.sketch import (
     hdr_build,
     hdr_quantiles_from_hist,
 )
-from hummingbird_spark.streaming.dedup import start_streaming_dedup
 from hummingbird_spark.streaming.sketch import merge_hist_batch, read_hist
 
 SCHEMA = T.StructType([
@@ -60,7 +59,6 @@ def test_hdr_band_gates_the_stream(spark, tmp_path):
 
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
     os.makedirs(src)
     with open(os.path.join(src, "0.json"), "w") as fh:
         for row in [
@@ -71,9 +69,15 @@ def test_hdr_band_gates_the_stream(spark, tmp_path):
         ]:
             fh.write(json.dumps(row) + "\n")
 
-    q = start_streaming_dedup(
-        spark, src, out, store, SCHEMA, threshold=0.5,
-        checkpoint=str(tmp_path / "ckpt"), pre_filter=length_gate)
+    def gate_and_append(batch_df, batch_id):
+        length_gate(batch_df).write.mode("append").parquet(out)
+
+    q = (
+        spark.readStream.schema(SCHEMA).json(src)
+        .writeStream.foreachBatch(gate_and_append)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
     q.awaitTermination(180)
 
     got = {r.doc_id for r in spark.read.parquet(out).collect()}

@@ -16,7 +16,11 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from hummingbird_spark.functions.html import canonical_url, resolve_href
+from hummingbird_spark.functions.html import (
+    canonical_url,
+    resolve_href,
+    url_host,
+)
 
 _LABEL = st.from_regex(r"[a-z][a-z0-9-]{0,6}", fullmatch=True)
 # '.'/'..' excluded: a CLEAN url has no dot segments by definition —
@@ -118,3 +122,15 @@ def test_resolve_absolute_is_identity(spark, specs):
     )
     for r in out:
         assert r.r == r.u
+
+
+def test_canonical_url_keeps_idn_forms_distinct(spark):
+    """The documented default: the Unicode and punycode spellings of one
+    host are two canonical identities and two hosts."""
+    rows = spark.createDataFrame([
+        Row(u="https://münchen.example/p"),
+        Row(u="https://xn--mnchen-3ya.example/p"),
+    ]).select(canonical_url(F.col("u")).alias("c"),
+              url_host(F.col("u")).alias("h")).collect()
+    assert rows[0].c != rows[1].c
+    assert rows[0].h != rows[1].h
