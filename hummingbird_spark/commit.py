@@ -6,10 +6,12 @@ data in place publishes through this module.
   1. stage    `write(<path>.__stage_<token>)`, then `verify(stage)` if
               given. A failure drops the stage and leaves `path` alone.
   2. record   write `<path>.__commit`, listing the items to replace:
-              the whole path, or the named partition directories (a
-              named partition the stage does not hold is deleted —
-              it merged to empty). Writing the record is the commit
-              point.
+              the whole path, or the named items under it, partition
+              directories or files (a named item the stage does not
+              hold is deleted: it merged to empty). A stage names its
+              items itself when their names exist only after the
+              write (a top-up's new part files). Writing the record is
+              the commit point; with no item there is none to write.
   3. publish  per item, move the live item to `<path>.__aside_<token>`,
               then move the staged item in.
   4. clean    drop the aside, then the stage, then the record.
@@ -33,11 +35,13 @@ Small files (ledgers, cursors) go through the same API: `write_text`
 publishes one, `put_text` writes one into a stage, `read_text` reads
 one.
 
-Every parquet table the migration path publishes (the copy, the CDC
-sink, compaction, pipeline `$out`/`$merge`) carries a schema record:
-`put_schema` writes it into the stage, `replace_schema` replaces it
-after a top-up, `recorded_schema` parses it, and `read_published`
-reads the table by it. Its file name and encoding live here alone.
+Every parquet table the migration path publishes (the copy and its
+top-up, the CDC sink, compaction, pipeline `$out`/`$merge`) carries a
+schema record: `put_schema` writes it into the stage, beside the data
+files it describes, and they publish together; `recorded_schema`
+parses it, and `read_published` reads the table by it. Its file name
+and encoding live here alone, as does `widen`, the one rule by which
+a writer adds columns to a table's schema.
 """
 
 from __future__ import annotations
@@ -89,9 +93,13 @@ def _under(root: str, name: str) -> str:
 
 def publish(spark: SparkSession, path: str, write, partitions=None,
             verify=None):
-    """Replace `path`, or only its `partitions` directories, with what
+    """Replace `path`, or only its `partitions` items, with what
     `write(stage)` writes to a staging path; returns write's result.
-    `verify(stage)` may raise to abort before the commit point."""
+    `partitions` names directories or files under `path`, or is a
+    function of the stage that names them once `write` has run (their
+    names may exist only then); with no item to publish the stage is
+    dropped and `path` left alone. `verify(stage)` may raise to abort
+    before the commit point."""
     path = path.rstrip("/")
     recover(spark, path)
     fs, _ = _fs(spark, path)
@@ -102,11 +110,16 @@ def publish(spark: SparkSession, path: str, write, partitions=None,
         out = write(stage)
         if verify is not None:
             verify(stage)
+        if callable(partitions):
+            partitions = partitions(stage)
     except Exception:
         _mutate(fs, "delete", Path(stage), True)
         raise
     items = [("+" if fs.exists(Path(_under(stage, n))) else "-") + n
              for n in (["."] if partitions is None else partitions)]
+    if not items:
+        _mutate(fs, "delete", Path(stage), True)
+        return out
     _mutate(fs, "write", Path(path + _RECORD),
             "\n".join([token, *items, _END]))
     _roll_forward(fs, Path, path, token, items)
@@ -185,12 +198,14 @@ def put_schema(spark: SparkSession, stage: str,
     put_text(spark, f"{stage}/{SCHEMA_RECORD}", schema.json())
 
 
-def replace_schema(spark: SparkSession, path: str,
-                   schema: T.StructType) -> None:
-    """Replace the schema record of the live table at `path` by
-    `write_text`: a crash leaves the old record, none, or the new one
-    whole, never a torn one."""
-    write_text(spark, f"{path}/{SCHEMA_RECORD}", schema.json())
+def widen(a: T.StructType, b: T.StructType) -> T.StructType:
+    """The fields of `a`, then the fields of `b` that `a` lacks: a field
+    `a` holds keeps its type there, and `b` only adds. The one rule by
+    which a writer widens a table's schema (a copy's top-up, the CDC
+    sink, `$merge`); like parquet mergeSchema, it never narrows."""
+    known = set(a.names)
+    return T.StructType(a.fields + [f for f in b.fields
+                                    if f.name not in known])
 
 
 def recorded_schema(spark: SparkSession, path: str) -> T.StructType | None:
@@ -208,11 +223,9 @@ def read_published(spark: SparkSession, path: str) -> DataFrame | None:
     its publish recorded (recorded_schema), which spares the
     footer-reading job of schema inference; partition directories are
     still discovered and pruned. A table without the record (written by
-    another writer, or whose top-up stopped between its file moves and
-    its new record: see _adopt_parquet_files) unions its files'
-    schemas, so no column of any file is lost. This is the one rule by
-    which the migration path reads a table it may merge into, copy onto
-    or compact."""
+    another writer) unions its files' schemas, so no column of any file
+    is lost. This is the one rule by which the migration path reads a
+    table it may merge into, copy onto, compact or compare."""
     schema = recorded_schema(spark, path)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -233,25 +246,3 @@ def _holds_data(spark: SparkSession, path: str) -> bool:
         if not files.next().getPath().getName().startswith(("_", ".")):
             return True
     return False
-
-
-def _adopt_parquet_files(spark: SparkSession, tmp: str, dst: str,
-                         move: bool = True) -> None:
-    """Move the data files of a finished temp write into the live target
-    directory, then drop the temp dir: the append path, which adds files
-    and replaces none. Part filenames embed the writing task's UUID, so
-    renames cannot collide with existing files. Uses the Hadoop FS API
-    (rename is a metadata op on HDFS/local; on S3A the committer would
-    own this) — nothing passes through the driver. The adopted files
-    outdate the target's schema record, which is dropped first; the
-    caller records the widened schema after (replace_schema)."""
-    Path = _path_class(spark._jvm)
-    fs, tmp_p = _fs(spark, tmp)
-    if move:
-        dst_p = Path(dst)
-        _mutate(fs, "delete", Path(dst_p, SCHEMA_RECORD), False)
-        for status in fs.listStatus(tmp_p):
-            name = status.getPath().getName()
-            if name.endswith(".parquet"):
-                _mutate(fs, "rename", status.getPath(), Path(dst_p, name))
-    _mutate(fs, "delete", tmp_p, True)

@@ -88,21 +88,24 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
     """The `-compare` command (compare.go:13-31): per included namespace
     — with its filter, mask, limit, and rename applied to the source —
     verify the migrated target matches. Returns one CompareResult per
-    namespace, in include order. Both sides are read by `read_source`: a
-    target the copy published reads by its schema record, with no
-    schema-inference job. Up to `cfg.workers` namespaces build their
-    sides at once (`copy.side_by_side`: source read and inference, the
-    include's transform, target read), each in the caller's job group;
-    then one action compares them all. A namespace whose side cannot be
-    built raises, the first in include order, after every started one
-    has ended."""
+    namespace, in include order. The source is read by `read_source`,
+    each target by `commit.read_published`, the rule every migration
+    reader follows: by its schema record, with no schema-inference job,
+    or without one by the union of its files' schemas; a target with no
+    data file raises FileNotFoundError. Up to `cfg.workers` namespaces
+    build their sides at once (`copy.side_by_side`: source read and
+    inference, the include's transform, target read), each in the
+    caller's job group; then one action compares them all. A namespace
+    whose side cannot be built raises, the first in include order,
+    after every started one has ended."""
+    from hummingbird_spark.commit import read_published
     from hummingbird_spark.operators.copy import (
         _source_path,
-        _table_path,
         resolve_includes,
         side_by_side,
         transform_for_include,
     )
+    from hummingbird_spark.sources.catalog import table_path
     from hummingbird_spark.sources.tables import read_source
 
     includes = resolve_includes(spark, cfg)
@@ -112,8 +115,10 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
         src = transform_for_include(
             read_source(spark, _source_path(spark, cfg.source,
                                             inc.namespace)), inc)
-        tgt = read_source(spark, _table_path(cfg.target,
-                                             inc.target_namespace))
+        path = table_path(cfg.target, inc.target_namespace)
+        tgt = read_published(spark, path)
+        if tgt is None:
+            raise FileNotFoundError(f"no target table at {path}")
         return _row_counts(src, tgt, i)
 
     built = list(side_by_side(spark, cfg.workers, list(enumerate(includes)),

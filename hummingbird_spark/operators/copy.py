@@ -41,17 +41,17 @@ from dataclasses import dataclass, field
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from hummingbird_spark.commit import (
-    _adopt_parquet_files, _fs, publish, put_schema, read_published, recover,
-    replace_schema,
+    SCHEMA_RECORD, _fs, publish, put_schema, read_published, recover, widen,
 )
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.filters import mongo_filter_to_column
 from hummingbird_spark.functions.masks import mask_dataframe
 from hummingbird_spark.operators.split import partition_for_copy
-from hummingbird_spark.sources.catalog import expand_namespaces, split_namespace
+from hummingbird_spark.sources.catalog import (
+    expand_namespaces, split_namespace, table_path,
+)
 from hummingbird_spark.sources.tables import read_source
 
 
@@ -79,17 +79,10 @@ _SOURCE_EXTS = (".parquet", ".jsonl", ".jsonl.gz", ".ndjson", ".json",
                 ".csv", ".csv.gz", ".tsv", ".tsv.gz")
 
 
-def _table_path(root: str, namespace: str) -> str:
-    """namespace "db.coll" (or bare "coll") -> {root}/{coll}.parquet:
-    where the copy writes it."""
-    db, coll = split_namespace(namespace)
-    return f"{root.rstrip('/')}/{coll or db}.parquet"
-
-
 def _source_path(spark: SparkSession, root: str, namespace: str) -> str:
     """The source table of `namespace` under `root`: the first of
     _SOURCE_EXTS that exists, else the parquet path."""
-    base = _table_path(root, namespace)[: -len(".parquet")]
+    base = table_path(root, namespace)[: -len(".parquet")]
     for ext in _SOURCE_EXTS:
         fs, hpath = _fs(spark, base + ext)
         if fs.exists(hpath):
@@ -240,16 +233,16 @@ def copy_table(
 ) -> CopyResult:
     """Copy one namespace source->target. Modes:
       - no target: publish the copy with its schema record
-        (commit.publish)
       - resume + target exists: skip (completed-task skip, splitter.go:33-35)
-      - target exists: idempotent top-up — append only rows whose key is
-        missing (dup-key reconciliation J1, task.go:88-101), then record
-        the widened schema: the target's fields, then the delta's new
-        ones, each existing field keeping its type. A crash between the
-        file moves and that record leaves the target without one, so
-        commit.read_published reads it with mergeSchema and no column
-        is lost.
-    The target exists when commit.read_published finds it, after
+      - target exists: idempotent top-up — add only rows whose key is
+        missing (dup-key reconciliation J1, task.go:88-101), recorded
+        with the widened schema (commit.widen: the target's fields,
+        then the delta's new ones).
+    Both write one stage and publish it (commit.publish): a first copy
+    replaces the whole path; a top-up adds the stage's part files
+    beside the live ones and replaces the schema record, so a killed
+    top-up leaves the target as it was or wholly topped up. The target
+    exists when commit.read_published finds it, after
     `recover` has settled an interrupted publish: a copy killed before
     its commit point left no target, one killed after it a whole one.
     `cfg.drop` acts in run_migration, which deletes every target before
@@ -273,7 +266,7 @@ def copy_table(
     else:
         src_path = _source_path(spark, cfg.source, include.namespace)
         src_df = read_source(spark, src_path)
-    dst_path = _table_path(cfg.target, include.target_namespace)
+    dst_path = table_path(cfg.target, include.target_namespace)
     df = transform_for_include(src_df, include)
 
     recover(spark, dst_path)
@@ -291,7 +284,7 @@ def copy_table(
             raise ValueError(
                 f"cannot top up {dst_path}: it is one parquet file, not a "
                 f"directory; copy with drop to replace it")
-        target_fields = existing.schema.fields
+        target_schema = existing.schema
         existing = existing.select(F.col(cfg.key).alias("__existing_key"))
         df = df.join(
             existing, df[cfg.key] == existing["__existing_key"], "left_anti"
@@ -327,32 +320,29 @@ def copy_table(
     # read-back scan of the target
     obs = Observation()
     out = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    if top_up:
-        # Appending to the path the anti-join is also reading (self-read)
-        # is unsafe on plain parquet, but materializing the delta on the
-        # driver caps the top-up at driver memory. Instead write the
-        # delta to a sibling temp dir executor-side (the job finishes —
-        # and its reads of dst complete — before any file moves), then
-        # move the data files in: the plain-parquet equivalent of MERGE
-        # whenNotMatchedInsert (the append path of
-        # hummingbird_spark/commit.py).
-        tmp = dst_path + "__append_tmp"
-        _with_bloom(out.write).mode("overwrite").parquet(tmp)
-        n = obs.get["rows"]
-        _adopt_parquet_files(spark, tmp, dst_path, move=n > 0)
-        if n > 0:
-            known = {f.name for f in target_fields}
-            replace_schema(spark, dst_path, T.StructType(
-                target_fields
-                + [f for f in out.schema.fields if f.name not in known]))
-    else:
-        def write(stage: str) -> None:
-            _with_bloom(out.write).parquet(stage)
-            put_schema(spark, stage, out.schema)
+    schema = widen(target_schema, out.schema) if top_up else out.schema
 
-        publish(spark, dst_path, write)
-        n = obs.get["rows"]
-    return CopyResult(include.namespace, include.target_namespace, n)
+    def write(stage: str) -> None:
+        # the stage is a sibling of the target, so the top-up's
+        # anti-join reads the live target while the delta is written
+        _with_bloom(out.write).parquet(stage)
+        put_schema(spark, stage, schema)
+
+    def added(stage: str) -> list[str]:
+        """A top-up's items: the delta's part files, new beside the
+        live ones (their names embed the write's UUID), and the widened
+        schema record in place of the old one; none for an empty
+        delta. The plain-parquet MERGE whenNotMatchedInsert."""
+        if obs.get["rows"] == 0:
+            return []
+        fs, hpath = _fs(spark, stage)
+        return [name for name in (s.getPath().getName()
+                                  for s in fs.listStatus(hpath))
+                if not name.startswith(("_", "."))] + [SCHEMA_RECORD]
+
+    publish(spark, dst_path, write, partitions=added if top_up else None)
+    return CopyResult(include.namespace, include.target_namespace,
+                      obs.get["rows"])
 
 
 def run_migration(
@@ -383,8 +373,8 @@ def run_migration(
         # its uncopied tables absent, so `resume` recopies them instead
         # of skipping stale ones.
         for inc in expanded:
-            fs, hpath = _fs(spark, _table_path(cfg.target,
-                                               inc.target_namespace))
+            fs, hpath = _fs(spark, table_path(cfg.target,
+                                              inc.target_namespace))
             fs.delete(hpath, True)
 
     report, failure = MigrationReport(), None
@@ -393,7 +383,7 @@ def run_migration(
     copies = side_by_side(
         spark, cfg.workers, expanded,
         lambda inc: copy_table(spark, cfg, inc, resume=resume),
-        lane=lambda inc: _table_path(cfg.target, inc.target_namespace))
+        lane=lambda inc: table_path(cfg.target, inc.target_namespace))
     with closing(copies):
         for inc, done in copies:
             if tracker is not None:

@@ -84,7 +84,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hummingbird_spark.commit import (
-    publish, put_schema, read_published, recover,
+    publish, put_schema, read_published, recover, widen,
 )
 from hummingbird_spark.filters import mongo_filter_to_column
 
@@ -1730,10 +1730,7 @@ def _merge_into(spark, out: DataFrame, path: str, keys: list[str],
         return out if when_not == "insert" else out.limit(0)
     # union schema: target fields (their established types win for
     # shared names) + pipeline-only fields appended
-    tnames = {f.name for f in target.schema.fields}
-    union_fields = list(target.schema.fields) + [
-        f for f in out.schema.fields if f.name not in tnames
-    ]
+    union_fields = widen(target.schema, out.schema).fields
 
     def _align(frame: DataFrame) -> DataFrame:
         return frame.select(*[

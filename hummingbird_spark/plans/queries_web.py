@@ -1460,7 +1460,7 @@ ru AS (
           CASE WHEN path LIKE '%$'
                THEN substr(path, 1, length(path) - 1)
                ELSE path END,
-          '([\\.\+\?\(\)\[\]\{\}\^\$\|])', '\\\1', 'g'), '*', '.*')
+          '([\\.\\+\\?\\(\\)\\[\\]\\{\\}\\^\\$\\|])', '\\\1', 'g'), '*', '.*')
       || CASE WHEN path LIKE '%$' THEN '$' ELSE '' END
     END AS pattern
   FROM (

@@ -34,6 +34,13 @@ def split_namespace(namespace: str) -> tuple[str, str]:
     return db, coll
 
 
+def table_path(root: str, namespace: str) -> str:
+    """namespace "db.coll" (or bare "coll") -> {root}/{coll}.parquet:
+    the table a migration writes the namespace to, by copy and by CDC."""
+    db, coll = split_namespace(namespace)
+    return f"{root.rstrip('/')}/{coll or db}.parquet"
+
+
 def is_system_namespace(namespace: str) -> bool:
     """True for namespaces the engine never copies
     (mongo_utils.go:27,55: admin/config/local/_neutrino, system.*

@@ -51,7 +51,6 @@ Delta/Iceberg MERGE INTO, which prunes to matching files.
 
 from __future__ import annotations
 
-import json
 import os
 
 from dataclasses import dataclass
@@ -62,8 +61,9 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.commit import (
-    SCHEMA_RECORD, _fs, publish, put_schema, read_published, recover,
+    SCHEMA_RECORD, _fs, publish, put_schema, read_published, recover, widen,
 )
+from hummingbird_spark.sources.catalog import table_path
 from hummingbird_spark.streaming.oplog import (
     namespace_match_column,
     skip_oplog,
@@ -259,83 +259,47 @@ def _empty_target(spark: SparkSession, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
-def _py_to_spark_type(v) -> T.DataType:
-    if isinstance(v, bool):
-        return T.BooleanType()
-    if isinstance(v, int):
-        return T.LongType()
-    if isinstance(v, float):
-        return T.DoubleType()
-    return T.StringType()  # str / nested / mixed -> string passthrough
+# schema_of_variant's type of a JSON value -> the column type it
+# evolves to; DECIMAL covers a number with a fraction (variant keeps
+# 10.0 as DECIMAL(2,0)), so a whole-valued double stays a double
+_EVOLVED_TYPES = {"BOOLEAN": T.BooleanType(), "BIGINT": T.LongType(),
+                  "DECIMAL": T.DoubleType(), "DOUBLE": T.DoubleType()}
 
 
-def evolve_schema(
-    models: DataFrame, schema: T.StructType, sample: int = 200
-) -> T.StructType:
+def _evolved_type(variant_types: list[str]) -> T.DataType:
+    """The column type of a new field from the variant types of its
+    values: null values (VOID) say nothing; one known type is kept, and
+    anything else (a string, a nested value, a mix, no value but nulls)
+    is string, the documented escape hatch."""
+    found = {_EVOLVED_TYPES.get(t.split("(")[0], T.StringType())
+             for t in variant_types if t != "VOID"}
+    return found.pop() if len(found) == 1 else T.StringType()
+
+
+def evolve_schema(models: DataFrame, schema: T.StructType) -> T.StructType:
     """Schema evolution for the schemaless source (SURVEY §1.2): the
     reference copies BSON verbatim, so a document may carry fields the
     target has never seen. Scan the batch's models for JSON keys
-    outside `schema` and append them as nullable columns (type
-    inferred from a bounded driver-side sample of values; conflicting
-    or nested types degrade to string — the documented escape hatch).
+    outside `schema` and append them as nullable columns, in name
+    order, typed from every value the batch holds for them (see
+    _evolved_type).
 
-    Cost shape: one distinct-keys aggregation over the micro-batch
-    (bounded), plus `sample` rows collected for typing; never touches
-    the target table. Existing columns NEVER change type — evolution
-    is strictly additive, like parquet mergeSchema / Delta autoMerge."""
-    known = {f.name for f in schema.fields}
-    keys = (
-        models.select(F.explode(F.coalesce(
-            F.json_object_keys("doc"),
-            F.json_object_keys("set_json"),
-        )).alias("k"))
-        .filter(~F.col("k").isin(*known))
-        .distinct()
+    Cost shape: one aggregation over the micro-batch (bounded), the
+    distinct variant types of each new key, collected in one job; never
+    touches the target table. Existing columns NEVER change type —
+    evolution is strictly additive, like parquet mergeSchema / Delta
+    autoMerge."""
+    rows = (
+        models.select(F.explode(F.from_json(
+            F.coalesce("doc", "set_json"), _DOC)).alias("k", "v"))
+        .filter(~F.col("k").isin(*schema.names))
+        .groupBy("k")
+        .agg(F.collect_set(F.schema_of_variant("v")).alias("types"))
+        .collect()
     )
-    new_keys = [r.k for r in keys.collect()]
-    if not new_keys:
-        return schema
-    docs = [
-        r[0]
-        for r in models.select(F.coalesce("doc", "set_json"))
-        .filter(F.coalesce("doc", "set_json").isNotNull())
-        .limit(sample).collect()
-    ]
-    inferred: dict[str, T.DataType] = {}
-    for d in docs:
-        try:
-            obj = json.loads(d)
-        except (ValueError, TypeError):
-            continue
-        for k in new_keys:
-            if k in obj and obj[k] is not None:
-                t = _py_to_spark_type(obj[k])
-                prev = inferred.get(k)
-                if prev is None:
-                    inferred[k] = t
-                elif prev != t:
-                    inferred[k] = T.StringType()  # conflict -> string
-    fields = list(schema.fields) + [
-        T.StructField(k, inferred.get(k, T.StringType()), True)
-        for k in new_keys
-    ]
-    return T.StructType(fields)
-
-
-def _retain_target_columns(
-    schema: T.StructType, target: DataFrame
-) -> T.StructType:
-    """Union the declared schema with columns already present in the
-    target. A rewrite-style merge projects exactly `schema.fields`, so
-    without this a batch that doesn't mention a previously-evolved
-    field would silently drop that column from every row it rewrites —
-    data loss, not evolution. Retention is unconditional (not gated on
-    evolve=True): once a target has a column, no CDC batch may narrow
-    it away; deliberate column removal is a DDL operation, not a merge
-    side effect."""
-    known = {f.name for f in schema.fields}
-    extra = [f for f in target.schema.fields if f.name not in known]
-    return T.StructType(list(schema.fields) + extra) if extra else schema
+    return T.StructType(schema.fields + [
+        T.StructField(r.k, _evolved_type(r.types), True)
+        for r in sorted(rows)])
 
 
 def apply_cdc_batch(
@@ -369,7 +333,7 @@ def apply_cdc_batch(
     batch (schemaless-source parity — see evolve_schema); pre-existing
     target rows carry NULL for the new columns. Columns the target
     already carries are always retained, whatever this batch mentions
-    (see _retain_target_columns); the widening runs after retention, so
+    (commit.widen); the evolve widening runs after retention, so
     a field's established target type wins over this batch's inference.
 
     Each publish records the target's schema beside the data files
@@ -430,7 +394,13 @@ def _merge_batch(
             target = (target.filter(F.col("__bucket").isin(touched))
                       .drop("__bucket"))  # partition pruning on the scan
         if target is not None:
-            schema = _retain_target_columns(schema, target)
+            # retain every column the target has, whatever this batch
+            # mentions: the merge projects exactly `schema`, so a batch
+            # that does not name a previously-evolved field would drop
+            # it from every row it rewrites, data loss, not evolution.
+            # Unconditional (not gated on evolve): no CDC batch narrows
+            # a target; removing a column is DDL, not a merge side effect
+            schema = widen(schema, target.schema)
         if evolve:
             schema = evolve_schema(m.select("__m.*"), schema)
         if target is None:
@@ -664,10 +634,9 @@ def start_cdc_stream(
 
     def _merge(reduced: DataFrame, ns: str, batch_id: int,
                models_cached: bool) -> None:
-        coll = ns.split(".", 1)[-1]
         stats = _merge_batch(
-            spark, reduced, os.path.join(target_root, f"{coll}.parquet"),
-            key, schemas[ns], evolve, num_buckets, models_cached)
+            spark, reduced, table_path(target_root, ns), key, schemas[ns],
+            evolve, num_buckets, models_cached)
         if on_stats is not None and stats.total > 0:
             on_stats(ns, batch_id, stats)
 

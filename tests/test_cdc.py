@@ -577,6 +577,24 @@ def test_evolve_type_conflict_degrades_to_string(spark):
                 for f in out.fields)["mixed"] == "string"
 
 
+@pytest.mark.parametrize("at", [401, 777, 1500, 1999])
+def test_evolve_types_a_new_field_from_every_model(spark, tmp_path, at):
+    """2,000 inserts carry a new field `z`, an integer in every row but
+    the one keyed `at`, where it is a string: `z` evolves as a string,
+    whatever the row's place in the batch, so no value is written as
+    NULL."""
+    path = str(tmp_path / "t.parquet")
+    models = reduce_write_models(decode_write_models(_oplog_df(spark, [
+        _ev(k, "i", {"_id": k, "x": "a", "n": k,
+                     "z": f"s{k}" if k == at else k})
+        for k in range(2000)])))
+    apply_cdc_batch(spark, models, path, "_id", TARGET_SCHEMA, evolve=True)
+    got = spark.read.parquet(path)
+    assert dict(got.dtypes)["z"] == "string"
+    z = {r._id: r.z for r in got.select("_id", "z").collect()}
+    assert len(z) == 2000 and z[at] == f"s{at}" and z[at - 1] == str(at - 1)
+
+
 def test_evolve_whole_and_fractional_numbers_infer_double(spark):
     # a whole-valued double such as 10.0 stays a double through the fold
     from hummingbird_spark.streaming.cdc import evolve_schema
@@ -1102,7 +1120,7 @@ def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
 def test_stream_reads_each_event_once(spark, tmp_path, shape,
                                       monkeypatch):
     """Where a micro-batch's models are read more than once (evolve's
-    key scan and sample, the namespace listing of a two-target stream)
+    scan of new fields, the namespace listing of a two-target stream)
     they are cached, so the source is still scanned once per batch; a
     two-target batch caches its models once, not again per target."""
     from hummingbird_spark.streaming.cdc import read_cdc_target

@@ -85,6 +85,15 @@ CASES = {
             spark, path, lambda s: _put(s, {
                 "b=0/g": "new0", "b=3/g": "new3", "_schema.json": "new"}),
             partitions=["b=0", "b=1", "b=3", "_schema.json"])),
+    # a top-up: a part file added beside the live one, the record
+    # replaced; the stage names its items once written
+    "top_up": (
+        {"t/_SUCCESS": "", "t/part-0": "old", "t/_schema.json": "old"},
+        lambda spark, path: commit.publish(
+            spark, path, lambda s: _put(s, {
+                "_SUCCESS": "", "part-1": "new", "_schema.json": "new"}),
+            partitions=lambda s: sorted(
+                n for n in os.listdir(s) if n != "_SUCCESS"))),
     "text": ({"t": "1 2 "}, lambda spark, path: commit.write_text(
         spark, path, "1 2 3 ")),
 }
@@ -142,6 +151,22 @@ def test_verify_failure_leaves_live_path(spark, tmp_path, monkeypatch):
         _killed(monkeypatch, n, run)
         commit.recover(spark, path)
         assert _tree(root) == pre
+
+
+def test_publish_of_no_item_leaves_the_path(spark, tmp_path, monkeypatch):
+    """A stage that names no item (an empty top-up) publishes nothing:
+    the stage is dropped, no record is written, the path is as it was."""
+    _put(tmp_path, PRE)
+    pre = _tree(tmp_path)
+    ops = []
+    real = commit._mutate
+    monkeypatch.setattr(commit, "_mutate", lambda fs, op, *a: (
+        ops.append(op), real(fs, op, *a))[1])
+    commit.publish(spark, str(tmp_path / "t"),
+                   lambda s: _put(s, {"_SUCCESS": ""}),
+                   partitions=lambda s: [])
+    assert _tree(tmp_path) == pre
+    assert ops == ["delete"]
 
 
 def test_torn_record_rolls_back(spark, tmp_path):

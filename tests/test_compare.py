@@ -196,3 +196,35 @@ def test_compare_migration_job_count(spark, tmp_path):
     # exactly: the schema inference runs on worker threads, and a
     # thread that dropped the caller's job group would count fewer
     assert jobs == COMPARE_JOBS_THREE_NAMESPACES, jobs
+
+
+def test_compare_reads_a_mixed_width_target_by_its_files(spark, tmp_path):
+    """A target another writer left, with no schema record and part
+    files of two widths, reads as commit.read_published reads it: by
+    the union of its files' schemas, so the wider file's column is
+    compared, not lost. A target with no data file raises, naming its
+    path."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    rows = [(1, "x", None), (2, "y", None), (3, "z", 5), (4, "w", 6)]
+    spark.createDataFrame(rows, "_id long, a string, b long").write.parquet(
+        str(src / "c.parquet"))
+    os.makedirs(dst / "c.parquet")
+    pq.write_table(pa.table({"_id": [1, 2], "a": ["x", "y"]}),
+                   dst / "c.parquet" / "part-0.parquet")
+    pq.write_table(pa.table({"_id": [3, 4], "a": ["z", "w"], "b": [5, 6]}),
+                   dst / "c.parquet" / "part-1.parquet")
+    cfg = MigrationConfig(command="data-only", source=str(src),
+                          target=str(dst), key="_id",
+                          includes=[Include(namespace="c")])
+    (got,) = compare_migration(spark, cfg)
+    assert (got.source_count, got.target_count, got.missing_in_target,
+            got.extra_in_target) == (4, 4, 0, 0)
+
+    shutil.rmtree(dst / "c.parquet")
+    with pytest.raises(FileNotFoundError, match=f"{dst}/c.parquet"):
+        compare_migration(spark, cfg)

@@ -182,3 +182,73 @@ def test_resume_recopies_exactly_the_killed_copy(spark, tmp_path,
     assert [(r.namespace, r.equal) for r in compare_migration(spark, cfg)
             ] == [("a", True), ("b", True), ("c", True)]
     assert sorted(os.listdir(tgt_dir)) == [f"{n}.parquet" for n in names]
+
+
+class _Killed(Exception):
+    pass
+
+
+def test_every_kill_of_a_top_up_recovers(spark, tmp_path, monkeypatch):
+    """A top-up killed at each file-system step it takes (every call
+    through commit._mutate, the process dead from then on), then
+    recovered: the target holds its old rows or its old rows plus the
+    delta, its schema record is present and is the schema a mergeSchema
+    read of its files gives, and nothing is left beside it."""
+    import shutil
+
+    from hummingbird_spark import commit
+    from hummingbird_spark.operators.copy import copy_table
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(k, "a") for k in range(5)],
+                          "_id long, tag string").write.parquet(
+        f"{src}/c.parquet")
+    clean = str(tmp_path / "clean")
+    inc = Include(namespace="c")
+
+    def cfg(target):
+        return MigrationConfig(command="data-only", source=src,
+                               target=target, key="_id", includes=[inc])
+
+    copy_table(spark, cfg(clean), inc)
+    spark.createDataFrame([(k, "b", k * 1.5) for k in range(10)],
+                          "_id long, tag string, extra double").write.mode(
+        "overwrite").parquet(f"{src}/c.parquet")
+    old = {(k, "a") for k in range(5)}
+    new = ({(k, "a", None) for k in range(5)}
+           | {(k, "b", k * 1.5) for k in range(5, 10)})
+
+    real, outcomes = commit._mutate, []
+    for n in range(1, 40):
+        root = str(tmp_path / f"k{n}")
+        shutil.copytree(clean, root)
+        path = f"{root}/c.parquet"
+        calls = [0]
+
+        def seam(fs, op, *args):
+            calls[0] += 1
+            if calls[0] >= n:
+                raise _Killed()
+            return real(fs, op, *args)
+
+        monkeypatch.setattr(commit, "_mutate", seam)
+        try:
+            copy_table(spark, cfg(root), inc)
+            killed = False
+        except _Killed:
+            killed = True
+        finally:
+            monkeypatch.setattr(commit, "_mutate", real)
+        commit.recover(spark, path)
+        got = {tuple(r) for r in commit.read_published(spark, path).collect()}
+        assert got in (old, new), f"kill at mutation {n}"
+        assert commit.recorded_schema(spark, path) == spark.read.option(
+            "mergeSchema", "true").parquet(path).schema, n
+        assert os.listdir(root) == ["c.parquet"], n
+        if not killed:
+            assert got == new
+            break
+        outcomes.append(got == new)
+    # one commit point: kills before it roll back, kills after it forward
+    assert outcomes == sorted(outcomes)
+    assert False in outcomes and True in outcomes

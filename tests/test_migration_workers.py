@@ -41,13 +41,18 @@ def _rows(spark, path):
 class _Calls:
     """Records every copy: its namespace, thread and end, and how many
     copies ran at once at most. `hold` maps a namespace to seconds
-    it waits before copying; `barrier` makes every copy wait for the
-    others to start."""
+    it waits before copying; `after` maps a namespace to the namespaces
+    whose copies must end before it copies (an Event, waited on for at
+    most 60 s, so a copy that never comes cannot hang the test);
+    `barrier` makes every copy wait for the others to start."""
 
-    def __init__(self, monkeypatch, hold=None, barrier=None):
+    def __init__(self, monkeypatch, hold=None, barrier=None, after=None):
         self.real, self.hold, self.barrier = copy_table, hold or {}, barrier
+        self.after = {ns: (set(others), threading.Event())
+                      for ns, others in (after or {}).items()}
         self.lock = threading.Lock()
         self.runs, self.running, self.peak = [], 0, 0
+        self.ended = set()
         monkeypatch.setattr(copy_mod, "copy_table", self)
 
     def __call__(self, spark, cfg, inc, resume=False):
@@ -60,12 +65,18 @@ class _Calls:
         try:
             if self.barrier is not None:
                 self.barrier.wait()
+            if inc.namespace in self.after:
+                self.after[inc.namespace][1].wait(60)
             time.sleep(self.hold.get(inc.namespace, 0))
             return self.real(spark, cfg, inc, resume=resume)
         finally:
             with self.lock:
                 self.running -= 1
-            run["end"] = time.monotonic()
+                run["end"] = time.monotonic()
+                self.ended.add(inc.namespace)
+                for others, released in self.after.values():
+                    if others <= self.ended:
+                        released.set()
 
 
 class _Tracker:
@@ -93,14 +104,15 @@ class _Tracker:
 @pytest.mark.parametrize("workers", [1, 2])
 def test_results_and_tracker_calls_in_include_order(spark, tmp_path,
                                                     monkeypatch, workers):
-    """The first include is held back so the later ones finish first;
-    results and tracker calls still come in include order, all from the
-    calling thread, and no more than `workers` copies run at once."""
+    """With more than one worker the first include is held back until
+    the later ones have ended; results and tracker calls still come in
+    include order, all from the calling thread, and no more than
+    `workers` copies run at once."""
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     names = ["a", "b", "c", "d"]
     for n, name in enumerate(names):
         _write(spark, src, name, range(10 + n))
-    calls = _Calls(monkeypatch, hold={"a": 1.0})
+    calls = _Calls(monkeypatch, after={"a": "bcd"} if workers > 1 else None)
     tracker = _Tracker()
     report = run_migration(spark, _cfg(src, dst, names, workers=workers,
                                        drop=True), tracker=tracker)
