@@ -496,8 +496,8 @@ def main(argv: list[str] | None = None) -> int:
     crw.add_argument("--robots-agent", default="trainingbot")
     crw.add_argument("--allow-updates", action="store_true",
                      help="recrawl mode: refetched URLs land again; "
-                          "curated rows gain fetch_seq (read with "
-                          "read_curated_latest)")
+                          "curated rows gain fetch_seq (the newest "
+                          "fetch has the largest)")
     lkg = sub.add_parser("link-graph")
     lkg.add_argument("src", help="stream input dir (JSON files of "
                                  "doc_id + text rows)")

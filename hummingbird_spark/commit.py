@@ -40,8 +40,9 @@ top-up, the CDC sink, compaction, pipeline `$out`/`$merge`) carries a
 schema record: `put_schema` writes it into the stage, beside the data
 files it describes, and they publish together; `recorded_schema`
 parses it, and `read_published` reads the table by it. Its file name
-and encoding live here alone, as does `widen`, the one rule by which
-a writer adds columns to a table's schema.
+and encoding live here alone, as do `widen`, the one rule by which
+a writer adds columns to a table's schema, and `align`, which casts
+the rows a writer adds to the recorded types.
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _RECORD = ".__commit"
@@ -206,6 +208,19 @@ def widen(a: T.StructType, b: T.StructType) -> T.StructType:
     known = set(a.names)
     return T.StructType(a.fields + [f for f in b.fields
                                     if f.name not in known])
+
+
+def align(frame: DataFrame, schema: T.StructType) -> DataFrame:
+    """`frame` in the fields of `schema`, in its order and types: each
+    column cast to its field's type, a field `frame` lacks a typed NULL.
+    How a writer makes new rows agree with the schema it records (a
+    copy's top-up, `$merge`); a value the cast rejects fails the write,
+    so before the commit point."""
+    return frame.select(*[
+        (F.col(f.name).cast(f.dataType) if f.name in frame.columns
+         else F.lit(None).cast(f.dataType)).alias(f.name)
+        for f in schema.fields
+    ])
 
 
 def recorded_schema(spark: SparkSession, path: str) -> T.StructType | None:

@@ -78,7 +78,6 @@ class MigrationConfig:
     block: int = DEFAULT_BLOCK_SIZE
     workers: int = DEFAULT_WORKERS
     key: str = "_id"  # range-partition key (the reference hardwires _id)
-    verbose: bool = False
     # D2 index analogue on parquet: point-lookup data skipping via
     # parquet bloom filters on these columns (the reference copies the
     # source's indexes, index_copier.go:14-62; columnar targets get
@@ -109,10 +108,6 @@ class MigrationConfig:
     def is_data(self) -> bool:
         return self.command in ("all", "data", "data-only")
 
-    @property
-    def include_patterns(self) -> list[str]:
-        return [i.namespace for i in self.includes]
-
     @classmethod
     def from_dict(cls, doc: dict[str, Any]) -> "MigrationConfig":
         includes = [
@@ -135,7 +130,6 @@ class MigrationConfig:
             block=int(doc.get("block", DEFAULT_BLOCK_SIZE) or DEFAULT_BLOCK_SIZE),
             workers=int(doc.get("workers", DEFAULT_WORKERS) or DEFAULT_WORKERS),
             key=doc.get("key", "_id") or "_id",
-            verbose=bool(doc.get("verbose", False)),
             bloom_filter_cols=list(doc.get("bloom_filter_cols", []) or []),
             bloom_filter_ndv=int(doc.get("bloom_filter_ndv", 100_000)
                                  or 100_000),

@@ -260,17 +260,3 @@ def mongo_filter_to_column(filter_doc: dict | None) -> Column:
         else:
             conds.append(_field_predicate(key, spec))
     return reduce(lambda a, b: a & b, conds)
-
-
-def and_range(
-    pred: Column, key: str, low: Any = None, high: Any = None
-) -> Column:
-    """Conjoin an include filter with an inclusive key range — the
-    reference's range-scan conjunction (task.go:54-61: `{_id:{$gte:lo}},
-    {_id:{$lte:hi}}` appended to the include filter)."""
-    out = pred
-    if low is not None:
-        out = out & (F.col(key) >= F.lit(low))
-    if high is not None:
-        out = out & (F.col(key) <= F.lit(high))
-    return out

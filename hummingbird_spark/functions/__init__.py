@@ -6,13 +6,6 @@ from hummingbird_spark.functions.masks import (
     mask_dataframe,
     mask_value,
 )
-from hummingbird_spark.functions.scalars import (
-    extended_json,
-    redacted_uri,
-    to_float64,
-    to_int32,
-    to_int64,
-)
 
 __all__ = [
     "MASK_DEFAULT",
@@ -20,10 +13,5 @@ __all__ = [
     "MASK_HEX",
     "mask_value",
     "mask_dataframe",
-    "redacted_uri",
-    "to_float64",
-    "to_int32",
-    "to_int64",
-    "extended_json",
     "normalize_extended_json",
 ]

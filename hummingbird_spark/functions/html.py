@@ -336,7 +336,10 @@ def block_structs(html: Column) -> Column:
 
 def main_text_from(blocks: Column, min_chars: int = 10,
                    max_link_density: float = 0.34) -> Column:
-    """main_text() over an ALREADY-BOUND block_structs column.
+    """Kept-block text joined by newline, over an ALREADY-BOUND
+    block_structs column: a block survives when it is long enough AND
+    its anchor-text share is below the boilerplate threshold (nav bars
+    / tag clouds / footers are mostly links).
 
     Performance contract (the ngrams_from_tokens discipline): when a
     plan needs both the text and the stats, select block_structs(...)
@@ -353,19 +356,13 @@ def main_text_from(blocks: Column, min_chars: int = 10,
     return F.array_join(F.transform(kept, lambda s: s["text"]), "\n")
 
 
-def main_text(html: Column, min_chars: int = 10,
-              max_link_density: float = 0.34) -> Column:
-    """Kept-block text joined by newline: a block survives when it is
-    long enough AND its anchor-text share is below the boilerplate
-    threshold (nav bars / tag clouds / footers are mostly links)."""
-    return main_text_from(block_structs(html), min_chars,
-                          max_link_density)
-
-
 def block_stats_from(blocks: Column, min_chars: int = 10,
                      max_link_density: float = 0.34) -> Column:
-    """block_stats() over an ALREADY-BOUND block_structs column (see
-    main_text_from for the binding contract)."""
+    """struct(n_blocks, kept_blocks, kept_chars, dropped_link,
+    dropped_short) for the page — the per-document extraction audit —
+    over an ALREADY-BOUND block_structs column (see main_text_from for
+    the binding contract). Link-density drops are counted before length
+    drops (a short link-soup block counts as dropped_link)."""
     ld_bad = F.filter(
         blocks,
         lambda s: s["anchor_chars"] * 100
@@ -387,16 +384,6 @@ def block_stats_from(blocks: Column, min_chars: int = 10,
         (F.size(blocks) - F.size(kept) - F.size(ld_bad))
         .alias("dropped_short"),
     )
-
-
-def block_stats(html: Column, min_chars: int = 10,
-                max_link_density: float = 0.34) -> Column:
-    """struct(n_blocks, kept_blocks, kept_chars, dropped_link,
-    dropped_short) for the page — the per-document extraction audit.
-    Link-density drops are counted before length drops (a short
-    link-soup block counts as dropped_link)."""
-    return block_stats_from(block_structs(html), min_chars,
-                            max_link_density)
 
 
 # ---------------------------------------------------------------------------

@@ -4,15 +4,15 @@ the continuous rollup (streaming/rollup.py).
 The rollup admits only decomposable aggregates (SUM/COUNT/MIN/MAX);
 quantiles are not decomposable, but a histogram partial is: per
 (window, key) keep `bins` counts over a fixed [lo, hi) value range,
-merge partials by element-wise addition, and answer quantile reads by
-interpolating the cumulative distribution. Accuracy is bounded by the
-bin width ((hi-lo)/bins), the classic fixed-range tradeoff —
-TimescaleDB continuous aggregates, Druid and M3 make the same one
-(t-digest/DDSketch refine it; the merge algebra is identical).
+merge partials by element-wise addition; the cumulative distribution
+then places any quantile within one bin width ((hi-lo)/bins), the
+classic fixed-range tradeoff — TimescaleDB continuous aggregates, Druid
+and M3 make the same one (t-digest/DDSketch refine it; the merge
+algebra is identical).
 
 Everything here is pure Column expressions: the sketch builds as
-`bins` conditional SUMs (map-side combined, codegen'd), merges with
-zip_with, and reads with an array fold — no UDFs, no driver state.
+`bins` conditional SUMs (map-side combined, codegen'd) and merges with
+zip_with — no UDFs, no driver state.
 """
 
 from __future__ import annotations
@@ -49,38 +49,3 @@ def merge_sketches(a: Column, b: Column) -> Column:
     """Element-wise sum; null-safe (either side missing -> other side)."""
     return F.when(a.isNull(), b).when(b.isNull(), a) \
         .otherwise(F.zip_with(a, b, lambda x, y: x + y))
-
-
-def sketch_quantile(sketch: Column, q: float, lo: float, hi: float,
-                    bins: int = 32) -> Column:
-    """Approximate q-quantile from the sketch: walk the cumulative
-    counts to the bin containing the q-th value, interpolate linearly
-    within it. Error <= one bin width. Pure expression (O(bins^2)
-    terms — fine for bins <= 64)."""
-    span = (hi - lo) or 1.0
-    total = F.aggregate(sketch, F.lit(0).cast("long"), lambda a, x: a + x)
-    target = F.lit(float(q)) * total.cast("double")
-    cums = F.transform(
-        F.sequence(F.lit(1), F.lit(bins)),
-        lambda i: F.aggregate(
-            F.slice(sketch, 1, i.cast("int")),
-            F.lit(0).cast("long"), lambda a, x: a + x,
-        ),
-    )
-    # first 1-based bin whose cumulative count reaches the target
-    hit = F.array_min(F.filter(
-        F.sequence(F.lit(1), F.lit(bins)),
-        lambda i: F.element_at(cums, i.cast("int")).cast("double")
-        >= target,
-    ))
-    prev_cum = F.when(hit == 1, F.lit(0).cast("long")) \
-        .otherwise(F.element_at(cums, (hit - 1).cast("int")))
-    in_bin = F.element_at(sketch, hit.cast("int"))
-    frac = F.when(in_bin > 0,
-                  (target - prev_cum.cast("double")) / in_bin.cast("double")) \
-        .otherwise(F.lit(0.0))
-    frac = F.greatest(F.lit(0.0), F.least(frac, F.lit(1.0)))
-    return F.when(total == 0, F.lit(None).cast("double")).otherwise(
-        F.lit(lo) + ((hit - 1).cast("double") + frac)
-        / F.lit(float(bins)) * F.lit(span)
-    )

@@ -61,13 +61,6 @@ def ngrams_from_tokens(ws: Column, n: int = 3, sep: str = " ") -> Column:
         .otherwise(F.array_distinct(grams))
 
 
-def word_ngrams(col: Column, n: int = 3, sep: str = " ") -> Column:
-    """Word n-gram shingles from a text column. Convenience form for
-    one-shot use; hot paths should materialize `tokens()` into a column
-    and call `ngrams_from_tokens` (see its performance contract)."""
-    return ngrams_from_tokens(tokens(col), n, sep)
-
-
 # GPT-2-ish pre-tokenizer shape, restricted to constructs with identical
 # semantics in Java regex (Spark) and RE2 (DuckDB): letter runs, single
 # digits, punctuation runs.

@@ -161,26 +161,6 @@ def kmeans_assign(df: DataFrame, k: int = 8, iterations: int = 3,
         id_col, "cluster", "dist2")
 
 
-def kmeans_ivf_centroids(df: DataFrame, n_centroids: int = 16,
-                         iterations: int = 3,
-                         vec_col: str = "embedding",
-                         id_col: str = "vec_id"):
-    """Full-corpus k-means as the IVF coarse quantizer: returns the
-    fitted centroids de-quantized and unit-normalized, the shape
-    `similarity.ivf_topk(centroids=...)` / `ivf_assign` accept. The
-    sample-trained `train_ivf_centroids` is the FAISS-style default
-    (bounded driver work); this trades T extra corpus scans for
-    centroids fitted on everything — worth it when the clustering is
-    reused across many probes of the same corpus."""
-    import numpy as np
-
-    cent = np.asarray(kmeans_fit(df, n_centroids, iterations,
-                                 vec_col, id_col),
-                      dtype=np.float64) / SCALE
-    return cent / np.maximum(
-        np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-
-
 def kmeans_sizes(df: DataFrame, k: int = 8, iterations: int = 3,
                  vec_col: str = "embedding",
                  id_col: str = "vec_id") -> DataFrame:

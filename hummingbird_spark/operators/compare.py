@@ -77,22 +77,15 @@ def _compare_all(namespaces: list[str], counts: list[DataFrame]
             for i, ns in enumerate(namespaces)]
 
 
-def compare_tables(
-    source: DataFrame, target: DataFrame, namespace: str = ""
-) -> CompareResult:
-    """Full-fidelity multiset compare of two frames, in one action."""
-    return _compare_all([namespace], [_row_counts(source, target, 0)])[0]
-
-
 def compare_migration(spark, cfg) -> list[CompareResult]:
     """The `-compare` command (compare.go:13-31): per included namespace
     — with its filter, mask, limit, and rename applied to the source —
     verify the migrated target matches. Returns one CompareResult per
-    namespace, in include order. The source is read by `read_source`,
-    each target by `commit.read_published`, the rule every migration
-    reader follows: by its schema record, with no schema-inference job,
-    or without one by the union of its files' schemas; a target with no
-    data file raises FileNotFoundError. Up to `cfg.workers` namespaces
+    namespace, in include order. The source is read as the copy reads
+    it (`copy.read_include`), each target by `commit.read_published`,
+    the rule every migration reader follows: by its schema record, with
+    no schema-inference job, or without one by the union of its files'
+    schemas; a target with no data file raises FileNotFoundError. Up to `cfg.workers` namespaces
     build their sides at once (`copy.side_by_side`: source read and
     inference, the include's transform, target read), each in the
     caller's job group; then one action compares them all. A namespace
@@ -100,21 +93,15 @@ def compare_migration(spark, cfg) -> list[CompareResult]:
     after every started one has ended."""
     from hummingbird_spark.commit import read_published
     from hummingbird_spark.operators.copy import (
-        _source_path,
-        resolve_includes,
-        side_by_side,
-        transform_for_include,
+        read_include, resolve_includes, side_by_side,
     )
     from hummingbird_spark.sources.catalog import table_path
-    from hummingbird_spark.sources.tables import read_source
 
     includes = resolve_includes(spark, cfg)
 
     def counts(item):
         i, inc = item
-        src = transform_for_include(
-            read_source(spark, _source_path(spark, cfg.source,
-                                            inc.namespace)), inc)
+        src, _ = read_include(spark, cfg, inc)
         path = table_path(cfg.target, inc.target_namespace)
         tgt = read_published(spark, path)
         if tgt is None:

@@ -43,7 +43,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hummingbird_spark.commit import (
-    SCHEMA_RECORD, _fs, publish, put_schema, read_published, recover, widen,
+    SCHEMA_RECORD, _fs, align, publish, put_schema, read_published, recover,
+    widen,
 )
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
 from hummingbird_spark.filters import mongo_filter_to_column
@@ -171,6 +172,28 @@ def transform_for_include(df: DataFrame, include: Include) -> DataFrame:
     return out
 
 
+def read_include(spark: SparkSession, cfg: MigrationConfig,
+                 include: Include) -> tuple[DataFrame, str | None]:
+    """The source frame of `include`, transformed for it
+    (transform_for_include), and the path it was read from: None for a
+    MongoDB source. The one source reader of the copy and the compare."""
+    if cfg.source.startswith(("mongodb://", "mongodb+srv://")):
+        # the reference's native source: dispatch through the
+        # connector seam (sources/mongodb.py maps the config onto the
+        # public Spark MongoDB Connector's partitioner options; the
+        # include filter pushes down as a server-side $match there, so
+        # transform_for_include's re-apply is a no-op on those rows)
+        from hummingbird_spark.sources.mongodb import mongodb_read_options
+
+        src_df = read_source(spark, cfg.source, fmt="mongodb",
+                             **mongodb_read_options(cfg, include))
+        src_path = None   # no parquet footers to count from
+    else:
+        src_path = _source_path(spark, cfg.source, include.namespace)
+        src_df = read_source(spark, src_path)
+    return transform_for_include(src_df, include), src_path
+
+
 def side_by_side(spark: SparkSession, workers: int, items: list, fn,
                  lane=None):
     """Run fn(item) for every item on a pool of at most `workers` driver
@@ -237,7 +260,8 @@ def copy_table(
       - target exists: idempotent top-up — add only rows whose key is
         missing (dup-key reconciliation J1, task.go:88-101), recorded
         with the widened schema (commit.widen: the target's fields,
-        then the delta's new ones).
+        then the delta's new ones) and written in its types
+        (commit.align).
     Both write one stage and publish it (commit.publish): a first copy
     replaces the whole path; a top-up adds the stage's part files
     beside the live ones and replaces the schema record, so a killed
@@ -250,24 +274,8 @@ def copy_table(
     that share a target fill it in include order, each later one
     topping up the earlier ones, with or without drop.
     """
-    if cfg.source.startswith(("mongodb://", "mongodb+srv://")):
-        # the reference's native source: dispatch through the
-        # connector seam (sources/mongodb.py maps the config onto the
-        # public Spark MongoDB Connector's partitioner options; the
-        # include filter pushes down as a server-side $match there, so
-        # transform_for_include's re-apply is a no-op on those rows)
-        from hummingbird_spark.sources.mongodb import (
-            mongodb_read_options,
-        )
-
-        src_df = read_source(spark, cfg.source, fmt="mongodb",
-                             **mongodb_read_options(cfg, include))
-        src_path = None   # no parquet footers to count from
-    else:
-        src_path = _source_path(spark, cfg.source, include.namespace)
-        src_df = read_source(spark, src_path)
+    df, src_path = read_include(spark, cfg, include)
     dst_path = table_path(cfg.target, include.target_namespace)
-    df = transform_for_include(src_df, include)
 
     recover(spark, dst_path)
     existing = read_published(spark, dst_path)
@@ -289,6 +297,10 @@ def copy_table(
         df = df.join(
             existing, df[cfg.key] == existing["__existing_key"], "left_anti"
         )
+        # the delta in the types of the record it publishes under: a
+        # source column whose type changed is cast to the target's
+        # type, and a value the cast rejects fails the copy unpublished
+        df = align(df, widen(target_schema, df.schema))
 
     key_in_schema = cfg.key in df.columns
     if key_in_schema:
@@ -306,7 +318,7 @@ def copy_table(
         indexes; columnar targets get point-lookup skipping from
         footer blooms instead). ndv sizes the filter; the 1M default
         would bloat small files by orders of magnitude."""
-        for col in getattr(cfg, "bloom_filter_cols", []) or []:
+        for col in cfg.bloom_filter_cols:
             if col in df.columns:
                 writer = writer.option(
                     f"parquet.bloom.filter.enabled#{col}", "true"
@@ -320,13 +332,12 @@ def copy_table(
     # read-back scan of the target
     obs = Observation()
     out = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    schema = widen(target_schema, out.schema) if top_up else out.schema
 
     def write(stage: str) -> None:
         # the stage is a sibling of the target, so the top-up's
         # anti-join reads the live target while the delta is written
         _with_bloom(out.write).parquet(stage)
-        put_schema(spark, stage, schema)
+        put_schema(spark, stage, out.schema)
 
     def added(stage: str) -> list[str]:
         """A top-up's items: the delta's part files, new beside the

@@ -131,20 +131,3 @@ def contamination_report(
         )
         .orderBy(id_col)
     )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 8,
-    max_hits: int = 0,
-) -> DataFrame:
-    """Drop corpus docs with more than max_hits shared n-grams (0 =
-    any overlap drops). Left-anti join against the report — the filter
-    composes with the rest of the curation pipeline lazily."""
-    flagged = contamination_report(
-        corpus, benchmark, text_col, id_col, ngram
-    ).filter(F.col("n_hits") > max_hits).select(id_col)
-    return corpus.join(flagged, id_col, "left_anti")

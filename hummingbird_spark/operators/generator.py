@@ -3,8 +3,9 @@ G1-G3) — the engine's test-harness operators.
 
 Reference: DocGen (sim.go:305-333) emits an all-BSON-types document;
 DataGen/DataGenMulti (sim.go:336-398) bulk-load N docs into 1/k
-collections plus a multi-op transaction; Simulate (sim.go:58-302) drives
-a timed insert/update/delete/find workload at `oplogs_per_second`.
+collections plus a multi-op transaction (here the caller writes a
+`docgen` frame); Simulate (sim.go:58-302) drives a timed
+insert/update/delete/find workload at `oplogs_per_second`.
 
 Spark rebuild: `spark.range(n)` + column expressions — fully
 deterministic (the reference's random ObjectId/uuid/now() become
@@ -94,26 +95,6 @@ def docgen(spark: SparkSession, total: int,
         "array", "subdoc", "filler", "binary", "bin1", "bin2", "bin3",
         "uuid",
     )
-
-
-def datagen_multi(spark: SparkSession, root: str, total: int,
-                  n_tables: int = 3) -> list[str]:
-    """DataGenMulti (sim.go:347-398): round-robin seq across k tables.
-    The reference's companion transaction (insert 2 tagged docs, update
-    both, delete both) nets to zero surviving tagged rows — a single
-    atomic parquet write of the generated rows reproduces the final
-    state (per-table Delta commit in production)."""
-    df = docgen(spark, total).withColumn(
-        "__t", F.col("seq") % n_tables
-    )
-    paths = []
-    for t in range(n_tables):
-        p = f"{root}/datagen_{t}.parquet"
-        df.filter(F.col("__t") == t).drop("__t").write.mode(
-            "overwrite"
-        ).parquet(p)
-        paths.append(p)
-    return paths
 
 
 def simulate_workload_stream(

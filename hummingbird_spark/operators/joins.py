@@ -1,9 +1,8 @@
 """Join family (SURVEY §2.3 + north-star extensions).
 
 The reference needs only existence semi-joins and CDC key-matching
-(J1-J3); a general engine exposes the full family. Everything here is a
-thin, scale-conscious wrapper over df.join — plus the two operators
-Spark lacks natively:
+(J1-J3), which are plain df.join calls (`left_semi` / `left_anti`).
+This module adds the two operators Spark lacks natively:
 
   asof_join   — "most recent right row at or before each left row"
                 (backward as-of, the market-data / attribution join).
@@ -22,16 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """Existence check (J1: CountDocuments({_id:{$in:ids}}) shape)."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """Missing-rows check (J1 dup-key reconciliation, task.go:88-101)."""
-    return left.join(right, on, "left_anti")
 
 
 def asof_join(
@@ -164,15 +153,3 @@ def range_join(
         & (time_col <= high)
     )
     return left.join(right, cond, how)
-
-
-def shard_alignment(source_shards: list[str],
-                    target_shards: list[str]) -> dict[str, str]:
-    """J2 (config_copier.go:89-102): positional zip of source->target
-    shard names, wrapping when the target has fewer. Driver-side."""
-    if not target_shards:
-        return {}
-    return {
-        s: target_shards[i % len(target_shards)]
-        for i, s in enumerate(source_shards)
-    }

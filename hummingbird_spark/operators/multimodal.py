@@ -142,90 +142,6 @@ def decode_media(df: DataFrame) -> DataFrame:
     return df.mapInPandas(decode, FEATURE_SCHEMA)
 
 
-def media_stats(df: DataFrame) -> DataFrame:
-    """Metadata-only aggregation — never touches the binary column, so
-    the parquet scan prunes it (verify via ReadSchema in .explain)."""
-    return (
-        df.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length("data").cast("long")).alias("total_bytes"),
-            F.avg("meta.width").alias("avg_width"),
-        )
-        .orderBy("kind")
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: explode target frame indexes from
-    metadata (0, n, 2n, ...) so each (video, frame_idx) is a row the
-    decode UDF can process independently — the batch shape for
-    distributed frame extraction. The pixel decode itself is the stub."""
-    v = df.filter(F.col("kind") == "video")
-    idx = F.sequence(
-        F.lit(0),
-        F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-        F.lit(every_nth),
-    )
-    return v.select(
-        "media_id",
-        F.explode(idx).alias("frame_idx"),
-        "data", "meta",
-    )
-
-
-def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize transform: (media_id, kind, data, meta) -> same schema with
-    payload re-encoded at (width, height) and metadata updated — the
-    standard image-preprocessing stage of a multimodal training
-    pipeline, shaped for scale (Arrow batches in/out, binary never
-    row-at-a-time in Python).
-
-    Codec seam: with PIL installed this is Image.resize; here the
-    deterministic fallback re-encodes the HBMM header with the new
-    dimensions and resamples the synthetic payload to the target byte
-    length (sha256-extended), so sizes/metadata behave exactly like a
-    real resize and downstream stages are testable."""
-
-    def resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                data = bytes(r["data"])
-                if data[:4] != _MAGIC:
-                    raise NotImplementedError(
-                        "no codec available for non-HBMM payload "
-                        "(PIL/opencv not installed)"
-                    )
-                kind_b = data[4:5]
-                body_len = max(16, (width * height) // 64)
-                seed = hashlib.sha256(data + b"resize").digest()
-                body = (seed * (body_len // len(seed) + 1))[:body_len]
-                payload = _MAGIC + kind_b + struct.pack(
-                    "<HH", width, height
-                ) + body
-                meta = r["meta"]
-                if hasattr(meta, "asDict"):
-                    meta = meta.asDict()
-                meta = dict(meta)
-                meta["width"], meta["height"] = width, height
-                rows.append({
-                    "media_id": r["media_id"], "kind": r["kind"],
-                    "data": payload, "meta": meta,
-                })
-            yield pd.DataFrame(rows)
-
-    return df.select("media_id", "kind", "data", "meta").mapInPandas(
-        resize, MEDIA_SCHEMA
-    )
-
-
-def write_partitioned_by_kind(df: DataFrame, path: str) -> None:
-    """Modality-partitioned layout: per-kind pipelines read only their
-    partition (partition pruning at the source)."""
-    df.write.mode("overwrite").partitionBy("kind").parquet(path)
-
-
 AUDIO_WINDOW_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("window_idx", T.IntegerType()),
@@ -591,8 +507,7 @@ def video_frame_hashes(df: DataFrame,
                        id_col: str = "media_id") -> DataFrame:
     """(media_id, frame_idx, phash) — the 1->N Arrow batch shape of
     distributed frame hashing: each video payload explodes into one
-    integer-DCT pHash per frame (the frame_sample_plan analogue with
-    the decode+hash actually performed). Non-HBVI payloads raise the
+    integer-DCT pHash per frame. Non-HBVI payloads raise the
     actionable codec error (real containers need opencv)."""
     import numpy as np
 
@@ -1011,8 +926,7 @@ def audio_window_features(df: DataFrame,
     """Per-window audio features: each audio payload explodes into
     ceil(duration_ms / window_ms) rows of (media_id, window_idx,
     start_ms, rms, zero_crossings) — the 1->N Arrow batch shape of
-    distributed audio feature extraction (the frame_sample_plan
-    analogue for the time axis).
+    distributed audio feature extraction.
 
     Codec seam: with soundfile/librosa installed the kernel would
     decode PCM and compute real RMS/ZCR per window; the deterministic

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import json
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -143,9 +142,9 @@ def enforce_capped_from_properties(
     spark: SparkSession, path: str, order_col: str
 ) -> dict:
     """Read the D1 passthrough options (`mongo.option.capped/size/max`
-    in the sidecar written by sources.ddl.create_table) and enforce
-    them — the maintenance-job entry point for tables created from a
-    capped source collection."""
+    in the sidecar that sources/ddl.py describes) and enforce them —
+    the maintenance-job entry point for tables created from a capped
+    source collection."""
     props = read_table_properties(path)
     if not json.loads(props.get("mongo.option.capped", "false")):
         return {"path": path, "enforced": False, "dropped": 0,
@@ -157,19 +156,3 @@ def enforce_capped_from_properties(
         max_rows=int(json.loads(max_docs)) if max_docs else None,
         max_bytes=int(json.loads(max_size)) if max_size else None,
     )
-
-
-def retention_report(spark: SparkSession, path: str) -> dict:
-    """Current size vs caps (no enforcement) — the monitoring side."""
-    props = read_table_properties(path)
-    df = spark.read.parquet(path)
-    return {
-        "path": path,
-        "rows": df.count(),
-        "bytes": table_bytes(spark, path) if os.path.isdir(path) else None,
-        "capped": json.loads(props.get("mongo.option.capped", "false")),
-        "max_rows": json.loads(props["mongo.option.max"])
-        if "mongo.option.max" in props else None,
-        "max_bytes": json.loads(props["mongo.option.size"])
-        if "mongo.option.size" in props else None,
-    }

@@ -248,8 +248,7 @@ def hll_registers(df: DataFrame, value_col: str, group_cols: list,
 def hll_estimate_from_registers(regs: DataFrame, group_cols: list,
                                 m: int = 256) -> DataFrame:
     """Estimate extraction over an EXISTING (groups..., bucket, rho)
-    register frame — a fresh build, a cross-shard max-merge, or the
-    continuously maintained one (streaming/sketch.py::read_hll): the
+    register frame — a fresh build or a cross-shard max-merge: the
     max-semilattice algebra makes them interchangeable here."""
     alpha = 0.7213 / (1.0 + 1.079 / m)
     c2 = alpha * m * m * float(1 << 50)  # one Python-folded constant

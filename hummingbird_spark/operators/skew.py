@@ -1,14 +1,11 @@
-"""Skew- and locality-handling operators — the 100 TB toolkit the brief
-calls out explicitly (salting for skewed keys, bucketing for co-located
-joins). AQE's skew-join handles most join skew automatically; these are
-the explicit tools for aggregation skew and shuffle-free repeat joins.
+"""Skew handling — salting for skewed aggregation keys. AQE's skew-join
+handles most join skew automatically; this is the explicit tool for
+aggregation skew.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,43 +30,3 @@ def salted_agg(df: DataFrame, key: str, aggs: list, salt: int = 16,
         *(final_aggs or [F.sum(c).alias(c) for c in names])
     )
     return merged
-
-
-def write_bucketed(df: DataFrame, table: str, key: str,
-                   buckets: int = 32, sort_cols: list[str] | None = None
-                   ) -> None:
-    """Persist a table bucketed (and optionally sorted) by the join key.
-    Two tables bucketed the same way join WITHOUT a shuffle — the
-    pre-partitioning the reference achieves with shard routing
-    (data_copier.go:71-106) expressed as a storage layout."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a previous session may have left an orphaned managed-table
-    # location the in-memory catalog doesn't know about
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
-    shutil.rmtree(loc, ignore_errors=True)
-
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  key: str, how: str = "inner",
-                  force_sort_merge: bool = False) -> DataFrame:
-    """Join two co-bucketed tables: with matching bucket specs Spark
-    plans a sort-merge join with NO Exchange on either side (verify via
-    .explain — tested in test_skew.py).
-
-    force_sort_merge pins SMJ via the merge hint — useful to observe the
-    shuffle-free property when one side is small enough that the planner
-    would otherwise broadcast it (broadcast is fine too; the bucketing
-    win shows on two LARGE sides where broadcast isn't an option)."""
-    left = spark.table(left_table)
-    if force_sort_merge:
-        left = left.hint("merge")
-    return left.join(spark.table(right_table), key, how)

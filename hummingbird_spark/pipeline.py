@@ -84,7 +84,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hummingbird_spark.commit import (
-    publish, put_schema, read_published, recover, widen,
+    align, publish, put_schema, read_published, recover, widen,
 )
 from hummingbird_spark.filters import mongo_filter_to_column
 
@@ -1730,16 +1730,8 @@ def _merge_into(spark, out: DataFrame, path: str, keys: list[str],
         return out if when_not == "insert" else out.limit(0)
     # union schema: target fields (their established types win for
     # shared names) + pipeline-only fields appended
-    union_fields = widen(target.schema, out.schema).fields
-
-    def _align(frame: DataFrame) -> DataFrame:
-        return frame.select(*[
-            (F.col(f.name).cast(f.dataType) if f.name in frame.columns
-             else F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in union_fields
-        ])
-
-    target_a, out_a = _align(target), _align(out)
+    union = widen(target.schema, out.schema)
+    target_a, out_a = align(target, union), align(out, union)
     cond = None
     for k in keys:
         c = target_a[k].eqNullSafe(out_a[k])
@@ -1796,7 +1788,7 @@ def _merge_into(spark, out: DataFrame, path: str, keys: list[str],
             (F.when(matched, F.col(f"r.{f.name}"))
              .otherwise(F.col(f"t.{f.name}"))
              if f.name in produced else F.col(f"t.{f.name}")).alias(f.name)
-            for f in union_fields
+            for f in union.fields
         ])
     else:  # replace
         kept = target_a.join(out_a, cond, "left_anti")

@@ -7,7 +7,6 @@ from hummingbird_spark.sources.catalog import (
 from hummingbird_spark.sources.tables import (
     TABLES,
     load_table,
-    load_tables,
     read_source,
     register_views,
 )
@@ -15,7 +14,6 @@ from hummingbird_spark.sources.tables import (
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "read_source",
     "register_views",
     "split_namespace",

@@ -1,128 +1,25 @@
-"""DDL / metadata operators (SURVEY §2.11 D1-D4).
+"""DDL / metadata passthrough (SURVEY §2.11 D1).
 
-Reference behavior re-expressed for a Spark catalog:
-  D1 collection options (collation/capped/size/max) -> CREATE TABLE
-     TBLPROPERTIES passthrough (collection_creator.go:19-86)
-  D2 index copy -> no Spark analogue; recorded as table properties and
-     surfaced as layout hints (bucket/sort columns)
-     (index_copier.go:14-62)
-  D3 sharding config -> partitioning spec: shard key becomes the
-     partition/bucketing column, chunk boundaries become
-     repartitionByRange split points (config_copier.go:42-342)
-  D4 pre-flight data-exists check -> errorifexists semantics
-     (config_copier.go:114-130)
+The reference copies collection options (collation/capped/size/max,
+collection_creator.go:19-86) at create time. Plain parquet has no table
+catalog, so the options ride a `_table_properties.json` sidecar beside
+the data files: a JSON object of `mongo.option.<name>` -> the option's
+JSON-encoded value (the shape a lakehouse backend applies as
+TBLPROPERTIES). `operators/retention.py` reads it to enforce a capped
+source collection's caps.
 """
 
 from __future__ import annotations
 
 import json
-import os
-from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
-
-@dataclass
-class TableSpec:
-    """Everything the reference's ConfigCopier carries per namespace."""
-
-    namespace: str
-    options: dict = field(default_factory=dict)      # D1 passthrough
-    indexes: list[dict] = field(default_factory=list)  # D2 passthrough
-    shard_key: str | None = None                     # D3
-    chunk_bounds: list | None = None                 # D3 pre-split points
-
-    def table_properties(self) -> dict[str, str]:
-        props = {f"mongo.option.{k}": json.dumps(v)
-                 for k, v in self.options.items()}
-        if self.indexes:
-            props["mongo.indexes"] = json.dumps(self.indexes)
-        if self.shard_key:
-            props["mongo.shard_key"] = self.shard_key
-        if self.chunk_bounds is not None:
-            props["mongo.chunk_bounds"] = json.dumps(self.chunk_bounds)
-        return props
-
-    def layout_hints(self) -> dict:
-        """D2/D3 -> physical layout advice: partition on the shard key,
-        sort within partitions by the leading index columns."""
-        sort_cols = []
-        for idx in self.indexes:
-            keys = list(idx.get("key", {}).keys())
-            if keys:
-                sort_cols.append(keys[0])
-        return {
-            "partition_col": self.shard_key,
-            "sort_cols": sort_cols,
-            "num_partitions": (len(self.chunk_bounds) + 1
-                               if self.chunk_bounds else None),
-        }
-
-
-def create_table(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    spec: TableSpec,
-    mode: str = "errorifexists",
-) -> dict[str, str]:
-    """D1+D3+D4: write the (possibly empty) table with the spec's
-    layout — range-partitioned on the shard key at the chunk boundaries
-    (the reference's pre-split, config_copier.go:244-342) and sorted
-    within partitions by the index hint (D2's closest analogue).
-
-    mode='errorifexists' reproduces DoesDataExist's refusal (D4).
-    Properties are returned (and written as a sidecar JSON, since plain
-    parquet has no table catalog) so a lakehouse backend can apply them
-    as TBLPROPERTIES.
-    """
-    if mode == "errorifexists" and os.path.exists(
-        os.path.join(path, "_SUCCESS")
-    ):
-        raise FileExistsError(
-            f"data exists in {path} (use drop/overwrite)"  # D4
-        )
-
-    hints = spec.layout_hints()
-    out = df
-    write_mode = "overwrite" if mode != "errorifexists" else "error"
-    sort_cols = [c for c in hints["sort_cols"] if c in df.columns]
-
-    if (hints["partition_col"] and hints["partition_col"] in df.columns
-            and spec.chunk_bounds):
-        # honor the EXPLICIT pre-split points (config_copier.go:244-342)
-        # as a physical partition column: chunk id = #bounds <= key, one
-        # directory per chunk — the parquet analogue of Mongo's chunk
-        # routing, and reads get partition pruning per chunk for free.
-        # (repartitionByRange can NOT do this: its RangePartitioner picks
-        # count-balanced boundaries from a sample and ignores requested
-        # split points — verified empirically.)
-        key = hints["partition_col"]
-        bucket = F.lit(0)
-        for b in spec.chunk_bounds:
-            bucket = bucket + F.when(F.col(key) >= F.lit(b), 1).otherwise(0)
-        out = out.withColumn("__chunk", bucket)
-        if sort_cols:
-            out = out.repartition(F.col("__chunk")) \
-                .sortWithinPartitions(*sort_cols)
-        out.write.mode(write_mode).partitionBy("__chunk").parquet(path)
-    else:
-        if hints["partition_col"] and hints["partition_col"] in df.columns:
-            out = out.repartition(F.col(hints["partition_col"]))
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-        out.write.mode(write_mode).parquet(path)
-
-    props = spec.table_properties()
-    with open(os.path.join(path, "_table_properties.json"), "w") as f:
-        json.dump(props, f, indent=2, sort_keys=True)
-    return props
+from hummingbird_spark.commit import read_text
 
 
 def read_table_properties(path: str) -> dict[str, str]:
-    p = os.path.join(path, "_table_properties.json")
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
+    """The properties sidecar of the table at `path` (any Hadoop
+    filesystem), or {} when it has none."""
+    text = read_text(SparkSession.active(), f"{path}/_table_properties.json")
+    return json.loads(text) if text is not None else {}

@@ -101,55 +101,6 @@ def mongodb_read_options(
     return opts
 
 
-def mongodb_write_options(cfg: MigrationConfig,
-                          include: Include) -> dict[str, str]:
-    """Connector write options for one include: target URI + renamed
-    namespace, idempotent replace on the migration key (matches the
-    reference's upsert bulk writes, `task.go:88-101`)."""
-    db, coll = split_namespace(include.target_namespace)
-    return {
-        "connection.uri": cfg.target,
-        "database": db,
-        "collection": coll,
-        "operationType": "replace",
-        "idFieldList": cfg.key,
-    }
-
-
-def mongodb_stream_options(
-    cfg: MigrationConfig,
-    include: Include,
-    start_at_operation_time: int | None = None,
-) -> dict[str, str]:
-    """Structured-Streaming change-stream options (S6 tailable CDC
-    source): full-document lookup so downstream decode sees complete
-    replace docs, matching what `decode_write_models` expects from the
-    o/o2 surface.
-
-    `start_at_operation_time` (epoch seconds) maps the reference's
-    resume-from-timestamp tail (`oplog_utils.go:28-37` opens the oplog
-    cursor at `ts >= start`) onto the connector's startup mode: when
-    given, the stream starts at that cluster time instead of "latest".
-    Batch pacing (the reference's OplogBatchSize / 1 s max-await) is
-    Structured Streaming's trigger interval, not a connector option —
-    set it on the writeStream trigger."""
-    db, coll = split_namespace(include.namespace)
-    opts = {
-        "connection.uri": cfg.source,
-        "database": db,
-        "collection": coll,
-        "change.stream.publish.full.document.only": "true",
-        "change.stream.lookup.full.document": "updateLookup",
-    }
-    if start_at_operation_time is not None:
-        opts["change.stream.startup.mode"] = "timestamp"
-        opts["change.stream.startup.mode.timestamp.start.at."
-             "operation.time"] = str(int(start_at_operation_time))
-    else:
-        opts["change.stream.startup.mode"] = "latest"
-    return opts
-
-
 def _is_missing_datasource(e: Exception) -> bool:
     """True when `e` means "the mongodb data source isn't registered"
     (connector jar absent). Prefer the structured error class —

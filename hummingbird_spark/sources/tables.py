@@ -156,10 +156,6 @@ def _utc_ns(bound: str) -> int:
     return int(d.timestamp()) * 1_000_000_000
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql use."""
     for name in TABLES:

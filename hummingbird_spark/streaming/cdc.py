@@ -61,7 +61,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.commit import (
-    SCHEMA_RECORD, _fs, publish, put_schema, read_published, recover, widen,
+    SCHEMA_RECORD, publish, put_schema, read_published, recover, widen,
 )
 from hummingbird_spark.sources.catalog import table_path
 from hummingbird_spark.streaming.oplog import (
@@ -562,25 +562,6 @@ def apply_cdc_batch_bucketed(
     """`apply_cdc_batch` on the bucketed layout."""
     return apply_cdc_batch(spark, reduced, target_path, key, schema,
                            evolve=evolve, num_buckets=num_buckets)
-
-
-def read_cdc_target(
-    spark: SparkSession, target_path: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Read a CDC target of either layout as commit.read_published reads
-    it, hiding the bucketing layout column. A bucketed target whose
-    every bucket was emptied reads as empty with its recorded schema. A
-    target without the record reads with mergeSchema; if it holds no
-    data file at all, `schema` gives the empty table. A missing target
-    raises."""
-    df = read_published(spark, target_path)
-    if df is None:
-        fs, hpath = _fs(spark, target_path)
-        if schema is None or not fs.exists(hpath):
-            raise FileNotFoundError(f"no CDC target at {target_path}")
-        return _empty_target(spark, schema)
-    return df.drop("__bucket") if "__bucket" in df.columns else df
 
 
 def start_cdc_stream(

@@ -63,9 +63,8 @@ def crawl_ingest_batch_against_store(
     only schedules a refetch when a sitemap advertises a strictly
     newer lastmod, so the ingest trusts its scheduler; intra-batch
     dedup is kept). Pair with the streaming wrapper's update mode,
-    which versions curated rows with fetch_seq —
-    `read_curated_latest` resolves each canonical URL to its newest
-    fetch."""
+    which versions curated rows with fetch_seq: a canonical URL's
+    newest fetch is its row with the largest fetch_seq."""
     if robots is not None:
         from hummingbird_spark.operators.robots import (
             robots_rules,
@@ -116,23 +115,6 @@ def crawl_ingest_batch_against_store(
     return curated, new_store
 
 
-def read_curated_latest(spark: SparkSession,
-                        out_path: str) -> DataFrame:
-    """Update-mode curated store -> one row per canonical URL, the
-    NEWEST fetch winning (max fetch_seq). Map-side-partial
-    max(struct) — no window, hub-safe; same output columns as the
-    default-mode store plus fetch_seq."""
-    df = spark.read.parquet(out_path)
-    others = [c for c in df.columns
-              if c not in ("canonical_url", "fetch_seq")]
-    packed = df.groupBy("canonical_url").agg(
-        F.max(F.struct("fetch_seq", *others)).alias("w"))
-    return packed.select(
-        "canonical_url",
-        *[F.col(f"w.{c}").alias(c) for c in others],
-        F.col("w.fetch_seq").alias("fetch_seq"))
-
-
 def start_streaming_crawl_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -153,10 +135,9 @@ def start_streaming_crawl_ingest(
     re-read per batch so policy updates apply to the next tick.
 
     allow_updates (the recrawl-on-update loop): refetched URLs land
-    again, and curated rows carry a `fetch_seq` (the batch id) —
-    read the store through `read_curated_latest` to resolve each
-    canonical URL to its newest fetch. The default mode's curated
-    schema is unchanged."""
+    again, and curated rows carry a `fetch_seq` (the batch id): a
+    canonical URL's newest fetch is its row with the largest
+    fetch_seq. The default mode's curated schema is unchanged."""
     led = BatchLedger(store_path)
 
     stream = spark.readStream.schema(schema).parquet(source_dir)

@@ -41,7 +41,6 @@ _NS = r"(?:[A-Za-z0-9_-]+:)?"
 _LOC_RE = rf"(?is)<{_NS}loc>(.*?)</{_NS}loc>"
 _MOD_RE = rf"(?is)<{_NS}lastmod>(.*?)</{_NS}lastmod>"
 _URL_EL_RE = rf"(?is)<{_NS}url\b[^>]*>(.*?)</{_NS}url>"
-_SITEMAP_EL_RE = rf"(?is)<{_NS}sitemap\b[^>]*>(.*?)</{_NS}sitemap>"
 
 
 def sitemap_url_elements(xml: F.Column) -> F.Column:
@@ -68,8 +67,7 @@ def parse_sitemap_entries(sitemaps: DataFrame,
     """(.., sitemap_xml) -> (host, curl, lastmod) rows, canonicalized;
     host derives from each loc (a sitemap may list several hosts).
     Rows whose XML is a `<sitemapindex>` contribute no page entries
-    (their `<loc>`s are child-sitemap refs — `parse_sitemap_index_refs`
-    surfaces those for the scheduler to fetch)."""
+    (their `<loc>`s are child-sitemap refs, not pages)."""
     return (
         sitemaps.select(
             F.explode(sitemap_url_elements(F.col(xml_col))).alias("e"))
@@ -78,33 +76,6 @@ def parse_sitemap_entries(sitemaps: DataFrame,
                 F.col("e.mod").alias("lastmod"))
         .select(url_host(F.col("curl")).alias("host"), "curl",
                 "lastmod")
-    )
-
-
-def parse_sitemap_index_refs(sitemaps: DataFrame,
-                             xml_col: str = "sitemap_xml") -> DataFrame:
-    """`<sitemapindex>` rows -> (host, sitemap_curl, lastmod): the
-    child sitemaps an index points at — the one recursion level the
-    protocol allows (indexes may not nest). The scheduler treats
-    these as sitemap fetches; once a child's XML arrives as its own
-    row, its `<url>` entries flow through `parse_sitemap_entries`."""
-    els = F.regexp_extract_all(F.col(xml_col), F.lit(_SITEMAP_EL_RE),
-                               F.lit(1))
-    refs = F.transform(
-        els,
-        lambda e: F.struct(
-            F.regexp_extract(e, _LOC_RE, 1).alias("loc"),
-            F.nullif(F.regexp_extract(e, _MOD_RE, 1), F.lit(""))
-            .alias("mod"),
-        ),
-    )
-    return (
-        sitemaps.select(F.explode(refs).alias("e"))
-        .filter(F.col("e.loc") != "")
-        .select(canonical_url(F.col("e.loc")).alias("sitemap_curl"),
-                F.col("e.mod").alias("lastmod"))
-        .select(url_host(F.col("sitemap_curl")).alias("host"),
-                "sitemap_curl", "lastmod")
     )
 
 

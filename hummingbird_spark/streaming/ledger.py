@@ -27,11 +27,9 @@ commit.py), which owns the crash windows inside each.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
-from hummingbird_spark.commit import recover, write_text
+from hummingbird_spark.commit import read_text, recover, write_text
 
 
 class BatchLedger:
@@ -42,11 +40,9 @@ class BatchLedger:
         self.path = store_path + ".ledger"
 
     def applied(self) -> list[str]:
-        recover(SparkSession.active(), self.path)
-        if os.path.exists(self.path):
-            with open(self.path) as fh:
-                return fh.read().split()
-        return []
+        spark = SparkSession.active()
+        recover(spark, self.path)
+        return (read_text(spark, self.path) or "").split()
 
     def seen(self, batch_id: int | None) -> bool:
         """True when this batch was already applied (replay — skip).

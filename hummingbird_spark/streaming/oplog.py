@@ -13,10 +13,13 @@ so filtered events never reach the shuffle.
 
 from __future__ import annotations
 
+import fnmatch
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from hummingbird_spark.sources.catalog import split_namespace
 
 # command-document key -> how the affected namespace is derived
 # (oplog_utils.go:48-56): value is the collection name within the $cmd db.
@@ -49,22 +52,34 @@ _OPS = (f"IF(op = 'c', flatten(transform({_members('o')}, m -> IF(m.op = 'c',"
         " array(m)))), array(struct(op, ns, o, o2)))")
 
 
+def _glob_regex(glob: str) -> str:
+    """The anchored JVM regex of fnmatch's `glob` (Python's `\\Z` is the
+    JVM's `\\z`)."""
+    return "^" + fnmatch.translate(glob).removesuffix(r"\Z") + r"\z"
+
+
 def namespace_match_column(ns_col: Column, patterns: list[str] | None) -> Column:
-    """Column-level SkipNamespace (migrator.go:237-251): does the event's
-    namespace match any include pattern? Empty list -> match all.
-    Wildcards db.* / *.coll compile to anchored regexes evaluated
-    JVM-side (rlike) — no per-row Python."""
+    """Column form of `catalog.matches_namespace` (SkipNamespace,
+    migrator.go:237-251), the one include rule of the copy and the
+    stream: does the event's namespace match any include pattern? Empty
+    list -> match all. A pattern without glob characters is a plain
+    equality; a wildcard one matches the db part (before the first dot)
+    and the collection part (the rest) each by fnmatch's glob, compiled
+    to anchored regexes evaluated JVM-side (rlike) — no per-row Python."""
     if not patterns:
         return F.lit(True)
+    db = F.substring_index(ns_col, ".", 1)
+    coll = F.regexp_extract(ns_col, r"(?s)^[^.]*\.(.*)", 1)
     conds = []
     for p in patterns:
-        if p == "*" or p == "*.*":
+        if p == "*":
             conds.append(F.lit(True))
-        elif "*" in p:
-            regex = "^" + p.replace(".", r"\.").replace("*", "[^.]+") + "$"
-            conds.append(ns_col.rlike(regex))
-        else:
+        elif not any(c in p for c in "*?["):
             conds.append(ns_col == F.lit(p))
+        else:
+            pdb, pcoll = split_namespace(p)
+            conds.append(db.rlike(_glob_regex(pdb))
+                         & coll.rlike(_glob_regex(pcoll)))
     return reduce(lambda a, b: a | b, conds)
 
 

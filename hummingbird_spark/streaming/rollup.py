@@ -32,7 +32,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from hummingbird_spark.commit import publish, recover
 from hummingbird_spark.streaming.ledger import BatchLedger
@@ -52,9 +51,10 @@ def window_rollup_partials(
     Runs map-side combine + one small shuffle over the BATCH only.
 
     hist_range=(lo, hi): also keep a mergeable fixed-bin histogram
-    sketch of value_col (functions/sketch.py), which makes approximate
-    quantiles readable from the rollup — the non-decomposable
-    aggregate the SUM/COUNT algebra alone can't give you.
+    sketch of value_col (functions/sketch.py). Quantiles are not
+    decomposable, but this partial is: it merges by element-wise
+    addition, and its cumulative counts place any quantile within one
+    bin width.
 
     distinct_col: also keep a DataSketches HLL sketch (binary partial,
     hll_sketch_agg) so approximate COUNT DISTINCT of that column reads
@@ -175,115 +175,3 @@ def merge_rollup_batch(
 
     publish(spark, rollup_path, merged.write.parquet)
     led.record(batch_id)
-
-
-def start_continuous_rollup(
-    spark: SparkSession,
-    source_dir: str,
-    rollup_path: str,
-    schema,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    value_col: str = "value",
-    checkpoint: str | None = None,
-    hist_range: tuple[float, float] | None = None,
-    hist_bins: int = 32,
-    distinct_col: str | None = None,
-) -> StreamingQuery:
-    """File-source stream -> per-batch partials -> rollup merge. The
-    rollup is queryable (spark.read.parquet) while the stream runs.
-    hist_range/distinct_col thread through to the sketch columns."""
-    stream = spark.readStream.schema(schema).json(source_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        partials = window_rollup_partials(
-            batch_df, ts_col=ts_col, key_col=key_col,
-            window=window, value_col=value_col,
-            hist_range=hist_range, hist_bins=hist_bins,
-            distinct_col=distinct_col,
-        )
-        merge_rollup_batch(spark, partials, rollup_path, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation",
-                checkpoint or rollup_path + "._checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def refresh_rollup(
-    spark: SparkSession,
-    raw: DataFrame,
-    rollup_path: str,
-    window_start_min,
-    window_start_max,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    value_col: str = "value",
-    hist_range: tuple[float, float] | None = None,
-    hist_bins: int = 32,
-    distinct_col: str | None = None,
-) -> None:
-    """Recompute the rollup rows whose window_start falls in
-    [window_start_min, window_start_max) from the RAW data and swap
-    them in — the repair path (TimescaleDB refresh_continuous_
-    aggregate): late corrections, deletes, or a double-applied batch
-    break the merge's additive model, and the fix is re-deriving the
-    affected windows from source, never patching partials.
-
-    Only the raw rows of the affected range are scanned (pushdown
-    filter on ts); untouched rollup rows are carried over verbatim.
-    Idempotent by construction — no ledger interaction needed. Pass
-    the same sketch options the rollup was built with so the refreshed
-    rows carry matching columns."""
-    lo = F.lit(window_start_min).cast("timestamp")
-    hi = F.lit(window_start_max).cast("timestamp")
-    affected_raw = raw.filter(
-        (F.col(ts_col) >= lo) & (F.col(ts_col) < hi))
-    recomputed = window_rollup_partials(
-        affected_raw, ts_col=ts_col, key_col=key_col, window=window,
-        value_col=value_col, hist_range=hist_range,
-        hist_bins=hist_bins, distinct_col=distinct_col,
-    )
-    recover(spark, rollup_path)
-    cur = spark.read.parquet(rollup_path)
-    kept = cur.filter(
-        (F.col("window_start") < lo) | (F.col("window_start") >= hi))
-    merged = kept.unionByName(
-        recomputed.select(*cur.columns), allowMissingColumns=False)
-
-    publish(spark, rollup_path, merged.write.parquet)
-
-
-def read_rollup(spark: SparkSession, rollup_path: str,
-                hist_range: tuple[float, float] | None = None,
-                hist_bins: int = 32) -> DataFrame:
-    """The query surface: avg reconstructed from decomposable parts;
-    when the rollup carries a histogram sketch AND the caller supplies
-    the (lo, hi) range it was built with, p50/p95 read directly from
-    the merged sketch (error <= one bin width)."""
-    r = spark.read.parquet(rollup_path)
-    cols = [
-        "window_start", "key", "n_events", "sum_value",
-        "min_value", "max_value",
-        (F.col("sum_value") / F.col("n_events")).alias("avg_value"),
-    ]
-    if hist_range is not None and "hist" in r.columns:
-        from hummingbird_spark.functions.sketch import sketch_quantile
-
-        lo, hi = hist_range
-        cols += [
-            F.col("hist"),
-            sketch_quantile(F.col("hist"), 0.5, lo, hi, hist_bins)
-            .alias("p50_value"),
-            sketch_quantile(F.col("hist"), 0.95, lo, hi, hist_bins)
-            .alias("p95_value"),
-        ]
-    if "hll" in r.columns:
-        cols.append(
-            F.hll_sketch_estimate(F.col("hll")).alias("approx_distinct"))
-    return r.select(*cols)

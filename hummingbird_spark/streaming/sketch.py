@@ -33,16 +33,11 @@ def _merge_additive(
     path: str,
     keys: tuple,
     batch_id: int | None = None,
-    combine: str = "sum",
 ) -> None:
-    """Merge a batch's (*keys, cnt) partial counters into a persistent
-    counter table — the shared merge of every exactly-mergeable sketch:
-    combine='sum' for the purely-additive ones (CMS counters, HDR
-    histogram buckets), combine='max' for max-semilattice registers
-    (HLL rho values — max is idempotent/commutative/associative, so
-    the maintained registers are bit-identical to a from-scratch build
-    just like the additive case). Same ledger + publish discipline
-    as merge_rollup_batch (streaming/rollup.py); see
+    """Add a batch's (*keys, cnt) partial counters into a persistent
+    counter table — the shared merge of the purely-additive sketches
+    (CMS counters, HDR histogram buckets). Same ledger + publish
+    discipline as merge_rollup_batch (streaming/rollup.py); see
     streaming/ledger.py for the shared crash-window semantics and the
     single-driver assumption."""
     led = BatchLedger(path)
@@ -59,13 +54,8 @@ def _merge_additive(
         for c in keys:
             eq = cur[c] == p[f"__{c}"]
             cond = eq if cond is None else (cond & eq)
-        if combine == "max":
-            merged_cnt = F.greatest(
-                F.coalesce(cur["cnt"], F.lit(0)),
-                F.coalesce(p["__cnt"], F.lit(0)))
-        else:
-            merged_cnt = (F.coalesce(cur["cnt"], F.lit(0))
-                          + F.coalesce(p["__cnt"], F.lit(0)))
+        merged_cnt = (F.coalesce(cur["cnt"], F.lit(0))
+                      + F.coalesce(p["__cnt"], F.lit(0)))
         merged = cur.join(p, cond, "full_outer").select(
             *[F.coalesce(cur[c], p[f"__{c}"]).alias(c) for c in keys],
             merged_cnt.alias("cnt"),
@@ -102,8 +92,8 @@ def start_continuous_cms(
     checkpoint: str | None = None,
 ) -> StreamingQuery:
     """File-source JSON stream -> per-batch CMS partials -> additive
-    merge. The sketch is queryable (read_cms / cms_estimate) while the
-    stream runs."""
+    merge. The sketch is queryable (spark.read.parquet + cms_estimate)
+    while the stream runs."""
     from hummingbird_spark.operators.sketch import cms_build, token_counts
 
     stream = spark.readStream.schema(schema).json(source_dir)
@@ -120,10 +110,6 @@ def start_continuous_cms(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def read_cms(spark: SparkSession, sketch_path: str) -> DataFrame:
-    return spark.read.parquet(sketch_path)
 
 
 # --------------------------------------------------------------------------
@@ -179,67 +165,6 @@ def start_continuous_hdr(
 
 def read_hist(spark: SparkSession, hist_path: str) -> DataFrame:
     return spark.read.parquet(hist_path)
-
-
-# --------------------------------------------------------------------------
-# Continuous HLL: registers live in a max-semilattice (merge = max,
-# which is idempotent/commutative/associative), so continuous
-# maintenance is exact by algebra exactly like the additive sketches —
-# the maintained registers are bit-identical to a from-scratch build
-# over everything ingested, and cardinality estimates read from them
-# (operators/sketch.py::hll_estimate_from_registers) carry the full
-# 1.04/sqrt(m) guarantee at any point in the stream's life. Bonus of
-# idempotence: even a DOUBLE-applied batch could not corrupt this
-# state (the ledger still prevents it, but max-merge would forgive it).
-
-
-def merge_hll_batch(
-    spark: SparkSession,
-    partial_regs: DataFrame,
-    regs_path: str,
-    group_cols: list,
-    batch_id: int | None = None,
-) -> None:
-    """Max-merge a batch's (groups..., bucket, rho) registers into the
-    persistent register table (see _merge_additive)."""
-    _merge_additive(spark, partial_regs.withColumnRenamed("rho", "cnt"),
-                    regs_path, (*group_cols, "bucket"),
-                    batch_id=batch_id, combine="max")
-
-
-def start_continuous_hll(
-    spark: SparkSession,
-    source_dir: str,
-    regs_path: str,
-    schema,
-    value_col: str,
-    group_cols: list,
-    m: int = 256,
-    checkpoint: str | None = None,
-) -> StreamingQuery:
-    """File-source JSON stream -> per-batch HLL registers -> max
-    merge. Distinct-count estimates are queryable mid-stream via
-    read_hll + hll_estimate_from_registers."""
-    from hummingbird_spark.operators.sketch import hll_registers
-
-    stream = spark.readStream.schema(schema).json(source_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        merge_hll_batch(
-            spark, hll_registers(batch_df, value_col, group_cols, m),
-            regs_path, group_cols, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation",
-                checkpoint or regs_path + "._checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_hll(spark: SparkSession, regs_path: str) -> DataFrame:
-    return spark.read.parquet(regs_path).withColumnRenamed("cnt", "rho")
 
 
 # --------------------------------------------------------------------------

@@ -69,7 +69,6 @@ SLOW_NODE_IDS = {
     "test_frontier_delta.py::test_mirror_compacts_on_cadence",
     "test_frontier_delta.py::test_recrawl_on_update_requeues_strictly_newer",
     "test_frontier_delta.py::test_replay_and_crash_windows_converge",
-    "test_generator_multimodal.py::test_resize_media_roundtrip",
     "test_graph.py::test_graph_ops_match_reference_on_random_graphs",
     "test_graph.py::test_pagerank_partition_invariant",
     "test_hdr.py::test_bucket_mapping_invariants",

@@ -70,20 +70,6 @@ def test_ivf_recall_floor(spark, emb, query_vec):
     assert _recall_at_10(exact, approx) >= 0.8
 
 
-def test_ivf_recall_with_kmeans_centroids(spark, emb, query_vec):
-    """Full-corpus k-means as the IVF quantizer (kmeans_ivf_centroids)
-    must clear the same floor as the sample-trained default — the
-    wiring contract between cluster.py and similarity.py, plus a
-    quality guard on the integer-quantized fit."""
-    from hummingbird_spark.operators.cluster import kmeans_ivf_centroids
-
-    cent = kmeans_ivf_centroids(emb, n_centroids=16, iterations=3)
-    assert cent.shape == (16, 64)
-    exact = cosine_topk(emb, query_vec, k=10)
-    approx = ivf_topk(emb, query_vec, k=10, nprobe=6, centroids=cent)
-    assert _recall_at_10(exact, approx) >= 0.8
-
-
 def test_lsh_radius_widens_candidates(spark, emb, query_vec):
     """Monotonicity of the probe enumeration: radius 2 must examine a
     superset of radius 1's candidates (this is the property the

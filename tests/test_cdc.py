@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hummingbird_spark.commit import read_published
 from hummingbird_spark.streaming.cdc import (
     OPLOG_SCHEMA,
     apply_cdc_batch,
@@ -335,9 +336,7 @@ def test_apply_whole_valued_double_key(spark, tmp_path, num_buckets):
     JSON {"$numberDouble": "10.0"} — keys its row as
     CAST(_id AS STRING) does, "10.0": an insert of the key, a replace,
     a patch and a delete each act on the one row."""
-    from hummingbird_spark.streaming.cdc import (
-        apply_cdc_batch_bucketed, read_cdc_target,
-    )
+    from hummingbird_spark.streaming.cdc import apply_cdc_batch_bucketed
     path = str(tmp_path / "t.parquet")
     wrapped = {"_id": {"$numberDouble": "10.0"}}
 
@@ -350,8 +349,8 @@ def test_apply_whole_valued_double_key(spark, tmp_path, num_buckets):
                                      num_buckets=num_buckets)
         else:
             apply_cdc_batch(spark, models, path, "_id", DOUBLE_KEY_SCHEMA)
-        return sorted((r._id, r.x, r.n) for r in read_cdc_target(
-            spark, path, DOUBLE_KEY_SCHEMA).collect())
+        return sorted((r._id, r.x, r.n) for r in read_published(
+            spark, path).drop("__bucket").collect())
 
     assert batch([_ev(1, "i", {"_id": 10.0, "x": "a", "n": 1}),
                   _ev(2, "i", {"_id": 11, "x": "k", "n": 0})]) \
@@ -400,9 +399,8 @@ def test_stream_convergence_with_checkpoint_restart(spark, tmp_path,
                          includes=["db.c"], checkpoint=ckpt,
                          num_buckets=num_buckets)
     q.awaitTermination(120)
-    from hummingbird_spark.streaming.cdc import read_cdc_target
-    state = {r._id: r for r in
-             read_cdc_target(spark, f"{target_root}/c.parquet").collect()}
+    state = {r._id: r for r in read_published(
+        spark, f"{target_root}/c.parquet").drop("__bucket").collect()}
     assert set(state) == {1, 2, 3}
     assert state[3].x == "tx2"
 
@@ -416,8 +414,8 @@ def test_stream_convergence_with_checkpoint_restart(spark, tmp_path,
                           includes=["db.c"], checkpoint=ckpt,
                           num_buckets=num_buckets)
     q2.awaitTermination(120)
-    state = {r._id: r for r in
-             read_cdc_target(spark, f"{target_root}/c.parquet").collect()}
+    state = {r._id: r for r in read_published(
+        spark, f"{target_root}/c.parquet").drop("__bucket").collect()}
     assert set(state) == {1, 3, 4}
     assert state[1].x == "A" and state[1].n == 1
 
@@ -427,16 +425,14 @@ def test_stream_convergence_with_checkpoint_restart(spark, tmp_path,
 # ---------------------------------------------------------------------------
 
 def _apply_bucketed(spark, target_path, rows, num_buckets=8, evolve=False):
-    from hummingbird_spark.streaming.cdc import (
-        apply_cdc_batch_bucketed, read_cdc_target,
-    )
+    from hummingbird_spark.streaming.cdc import apply_cdc_batch_bucketed
     models = decode_write_models(_oplog_df(spark, rows))
     apply_cdc_batch_bucketed(
         spark, reduce_write_models(models), target_path, "_id",
         TARGET_SCHEMA, num_buckets=num_buckets, evolve=evolve,
     )
     return {r._id: r for r in
-            read_cdc_target(spark, target_path, TARGET_SCHEMA).collect()}
+            read_published(spark, target_path).drop("__bucket").collect()}
 
 
 def test_bucketed_apply_matches_flat(spark, tmp_path):
@@ -456,9 +452,9 @@ def test_bucketed_apply_matches_flat(spark, tmp_path):
         apply_cdc_batch(spark, reduce_write_models(models), flat, "_id",
                         TARGET_SCHEMA)
         _apply_bucketed(spark, bucketed, rows)
-    from hummingbird_spark.streaming.cdc import read_cdc_target
     a = {tuple(r) for r in spark.read.parquet(flat).collect()}
-    b = {tuple(r) for r in read_cdc_target(spark, bucketed).collect()}
+    b = {tuple(r) for r in
+         read_published(spark, bucketed).drop("__bucket").collect()}
     assert a == b and len(a) == 20
 
 
@@ -508,19 +504,16 @@ def test_bucketed_apply_clears_emptied_bucket(spark, tmp_path):
 
 
 def test_read_cdc_target_raises_on_corrupt_target(spark, tmp_path):
-    """Only an existing target with no data files reads as the empty
-    table; a truncated part file (or a missing target) must raise, not
-    read as empty."""
+    """Only a target with no data file (an existing one holding
+    `_SUCCESS` alone, or a missing one) reads as no table; a truncated
+    part file must raise, not read as empty."""
     import glob
-
-    from hummingbird_spark.streaming.cdc import read_cdc_target
 
     empty = tmp_path / "empty"
     empty.mkdir()
     (empty / "_SUCCESS").write_text("")
-    assert read_cdc_target(spark, str(empty), TARGET_SCHEMA).count() == 0
-    with pytest.raises(Exception):
-        read_cdc_target(spark, str(tmp_path / "missing"), TARGET_SCHEMA)
+    assert read_published(spark, str(empty)) is None
+    assert read_published(spark, str(tmp_path / "missing")) is None
 
     path = str(tmp_path / "t")
     spark.createDataFrame([(1, "a", 1)], TARGET_SCHEMA).write.parquet(path)
@@ -530,7 +523,7 @@ def test_read_cdc_target_raises_on_corrupt_target(spark, tmp_path):
     for crc in glob.glob(os.path.join(path, ".*.crc")):
         os.remove(crc)
     with pytest.raises(Exception):
-        read_cdc_target(spark, path, TARGET_SCHEMA).collect()
+        read_published(spark, path).collect()
 
 
 # --- schema evolution (schemaless-source parity, SURVEY §1.2) ---
@@ -670,9 +663,7 @@ def test_bucketed_apply_evolves_across_buckets(spark, tmp_path):
     rewritten, so old- and new-width files coexist; reads by the schema
     record, which holds the union, fill the gaps with NULL. Keys are
     spread so batch 2 touches a strict subset of buckets."""
-    from hummingbird_spark.streaming.cdc import (
-        apply_cdc_batch_bucketed, read_cdc_target,
-    )
+    from hummingbird_spark.streaming.cdc import apply_cdc_batch_bucketed
 
     path = str(tmp_path / "bt.parquet")
     b1 = reduce_write_models(decode_write_models(_oplog_df(spark, [
@@ -688,7 +679,8 @@ def test_bucketed_apply_evolves_across_buckets(spark, tmp_path):
     apply_cdc_batch_bucketed(spark, b2, path, "_id", TARGET_SCHEMA,
                              num_buckets=4, evolve=True)
 
-    got = {r._id: r for r in read_cdc_target(spark, path).collect()}
+    got = {r._id: r for r in
+           read_published(spark, path).drop("__bucket").collect()}
     assert set(got) == set(range(1, 9))
     assert got[1].grade == "A"
     for i in range(2, 9):
@@ -727,9 +719,8 @@ def test_stream_with_evolve_picks_up_new_fields(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    from hummingbird_spark.streaming.cdc import read_cdc_target
     got = {r._id: r for r in
-           read_cdc_target(spark, f"{target_root}/c.parquet").collect()}
+           read_published(spark, f"{target_root}/c.parquet").collect()}
     assert got[2].tag == "new"
     assert got[1].tag is None
 
@@ -995,11 +986,10 @@ BUCKETED_BATCH_JOBS = 7
 
 def test_bucketed_batch_reads_by_its_schema_record(spark, tmp_path):
     """Every bucketed publish records the target's schema beside the
-    bucket directories, and the next batch and read_cdc_target read by
+    bucket directories, and the next batch and read_published read by
     it: no schema-inference job, and a target whose every key was
     deleted still reads as empty, with its schema."""
     from hummingbird_spark.commit import SCHEMA_RECORD
-    from hummingbird_spark.streaming.cdc import read_cdc_target
 
     path = str(tmp_path / "bt.parquet")
 
@@ -1011,7 +1001,7 @@ def test_bucketed_batch_reads_by_its_schema_record(spark, tmp_path):
     def read():
         with open(os.path.join(path, SCHEMA_RECORD)) as fh:
             recorded = T.StructType.fromJson(json.load(fh))
-        got = read_cdc_target(spark, path)
+        got = read_published(spark, path).drop("__bucket")
         assert got.schema == recorded
         return got
 
@@ -1060,7 +1050,6 @@ def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
     cache — reading each event once. A batch that holds no model for
     the target (events of another namespace, or no-ops only) leaves the
     target's files as they were and reports no stats."""
-    from hummingbird_spark.streaming.cdc import read_cdc_target
 
     oplog_dir, root = str(tmp_path / "oplog"), str(tmp_path / "tgt")
     seen = []
@@ -1088,7 +1077,7 @@ def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
     assert [p["numInputRows"] for p in q.recentProgress
             if p["numInputRows"] > 0] == [len(batch)]
     state = {r._id: (r.x, r.n) for r in
-             read_cdc_target(spark, f"{root}/c.parquet").collect()}
+             read_published(spark, f"{root}/c.parquet").collect()}
     assert len(state) == 20 and state[1] == ("p", 1) and state[3][1] == 7
     assert [(ns, s.total) for ns, _, s in seen] == [("db.c", 20),
                                                     ("db.c", 4)]
@@ -1111,7 +1100,7 @@ def test_single_target_stream_batch_is_one_job_chain(spark, tmp_path):
             if p["numInputRows"] > 0] == [2]
     assert len(seen) == 2
     assert files() == published
-    assert {r._id: (r.x, r.n) for r in read_cdc_target(
+    assert {r._id: (r.x, r.n) for r in read_published(
         spark, f"{root}/c.parquet").collect()} == state
 
 
@@ -1123,7 +1112,6 @@ def test_stream_reads_each_event_once(spark, tmp_path, shape,
     scan of new fields, the namespace listing of a two-target stream)
     they are cached, so the source is still scanned once per batch; a
     two-target batch caches its models once, not again per target."""
-    from hummingbird_spark.streaming.cdc import read_cdc_target
 
     caches = []
     frame = type(spark.range(1))
@@ -1149,12 +1137,12 @@ def test_stream_reads_each_event_once(spark, tmp_path, shape,
             if p["numInputRows"] > 0] == [len(rows)]
     assert len(caches) == 1
     got = {r._id: r for r in
-           read_cdc_target(spark, f"{root}/c.parquet").collect()}
+           read_published(spark, f"{root}/c.parquet").collect()}
     assert sorted(got) == [1, 2] and got[2].x == "B"
     if evolve:
         assert got[2].tag == "t"
     if shape.startswith("two_targets"):
-        assert [r._id for r in read_cdc_target(
+        assert [r._id for r in read_published(
             spark, f"{root}/d.parquet").collect()] == [9]
 
 
@@ -1173,7 +1161,6 @@ def test_target_fields_named_like_model_columns(spark, tmp_path,
     """Target fields named `action`, `doc`, `ns`, `set_json`,
     `unset_json` or `key` merge like any other: an insert, a `$set`, a
     replace, an `$unset` and a delete each land on the right row."""
-    from hummingbird_spark.streaming.cdc import read_cdc_target
 
     path = str(tmp_path / "t.parquet")
     names = [f.name for f in MODEL_NAMES_SCHEMA.fields][1:]
@@ -1182,8 +1169,8 @@ def test_target_fields_named_like_model_columns(spark, tmp_path,
         apply_cdc_batch(spark, reduce_write_models(decode_write_models(
             _oplog_df(spark, rows))), path, "_id", MODEL_NAMES_SCHEMA,
             num_buckets=num_buckets)
-        return {r._id: r.asDict() for r in read_cdc_target(
-            spark, path, MODEL_NAMES_SCHEMA).collect()}
+        return {r._id: r.asDict() for r in read_published(
+            spark, path).drop("__bucket").collect()}
 
     state = batch([
         _ev(i, "i", {"_id": i, **{n: f"{n}{i}" for n in names}})
@@ -1216,17 +1203,15 @@ def test_apply_merges_into_a_target_another_writer_left(spark, tmp_path,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hummingbird_spark.streaming.cdc import read_cdc_target
-
     path = str(tmp_path / "items.parquet")
     pq.write_table(pa.table({"_id": [1, 2, 3], "x": ["a", "b", "c"],
                              "n": [1, 2, 3]}), path)
     apply_cdc_batch(spark, reduce_write_models(decode_write_models(
         _oplog_df(spark, [_ev(1, "i", {"_id": 4, "x": "d", "n": 4})]))),
         path, "_id", TARGET_SCHEMA, num_buckets=num_buckets)
-    assert sorted((r._id, r.x, r.n) for r in read_cdc_target(
-        spark, path).collect()) == [(1, "a", 1), (2, "b", 2), (3, "c", 3),
-                                    (4, "d", 4)]
+    assert sorted((r._id, r.x, r.n) for r in read_published(
+        spark, path).drop("__bucket").collect()) == [
+            (1, "a", 1), (2, "b", 2), (3, "c", 3), (4, "d", 4)]
 
 
 def test_apply_without_models_publishes_nothing(spark, tmp_path):
@@ -1252,15 +1237,14 @@ def test_apply_without_models_publishes_nothing(spark, tmp_path):
 def test_apply_onto_a_target_with_no_data_file(spark, tmp_path,
                                                num_buckets):
     """A target directory holding `_SUCCESS` alone is an empty target,
-    for the sink as for read_cdc_target."""
-    from hummingbird_spark.streaming.cdc import read_cdc_target
+    for the sink as for commit.read_published."""
 
     path = tmp_path / "t.parquet"
     path.mkdir()
     (path / "_SUCCESS").write_text("")
-    assert read_cdc_target(spark, str(path), TARGET_SCHEMA).count() == 0
+    assert read_published(spark, str(path)) is None
     apply_cdc_batch(spark, reduce_write_models(decode_write_models(
         _oplog_df(spark, [_ev(1, "i", {"_id": 1, "x": "a", "n": 1})]))),
         str(path), "_id", TARGET_SCHEMA, num_buckets=num_buckets)
-    assert [(r._id, r.x, r.n) for r in read_cdc_target(
-        spark, str(path)).collect()] == [(1, "a", 1)]
+    assert [(r._id, r.x, r.n) for r in read_published(
+        spark, str(path)).drop("__bucket").collect()] == [(1, "a", 1)]

@@ -24,12 +24,12 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from hummingbird_spark.commit import read_published
 from hummingbird_spark.streaming.cdc import (
     OPLOG_SCHEMA,
     apply_cdc_batch,
     apply_cdc_batch_bucketed,
     decode_write_models,
-    read_cdc_target,
     reduce_write_models,
     start_cdc_stream,
 )
@@ -93,7 +93,7 @@ def _seed_bucketed(spark, path, num_buckets):
 
 
 def _state(spark, path):
-    df = read_cdc_target(spark, path, TARGET_SCHEMA)
+    df = read_published(spark, path)
     return sorted(tuple(r) for r in
                   df.select("_id", "x", "n").collect())
 

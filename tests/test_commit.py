@@ -191,3 +191,14 @@ def test_only_the_commit_module_renames():
         if call.search(line)
     ]
     assert offenders == []
+
+
+def test_ledger_reads_back_at_a_file_uri(spark, tmp_path):
+    """A batch ledger is read through Hadoop as it is written, so at a
+    `file://` URI a recorded batch is seen, and a replay is skipped."""
+    from hummingbird_spark.streaming.ledger import BatchLedger
+
+    led = BatchLedger(f"file://{tmp_path}/store")
+    assert not led.seen(3)
+    led.record(3)
+    assert led.seen(3) and not led.seen(4)

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hummingbird_spark.commit import publish
+from hummingbird_spark.commit import publish, read_published
 from hummingbird_spark.operators.compact import (
     compact_table,
     parquet_file_count,
@@ -156,8 +156,7 @@ def test_compact_keeps_a_column_only_one_bucket_carries(spark, tmp_path):
     table's schema record, so the column and its value survive, and
     the rewrite keeps the record."""
     from hummingbird_spark.streaming.cdc import (
-        apply_cdc_batch_bucketed, decode_write_models, read_cdc_target,
-        reduce_write_models,
+        apply_cdc_batch_bucketed, decode_write_models, reduce_write_models,
     )
     from tests.test_cdc import TARGET_SCHEMA, _ev, _oplog_df
 
@@ -175,7 +174,8 @@ def test_compact_keeps_a_column_only_one_bucket_carries(spark, tmp_path):
     batch([_ev(100, "u", {"$set": {"grade": "A"}}, {"_id": 2})])
 
     compact_table(spark, path, partition_cols=["__bucket"])
-    got = {r._id: r for r in read_cdc_target(spark, path).collect()}
+    got = {r._id: r for r in
+           read_published(spark, path).drop("__bucket").collect()}
     assert set(got) == set(range(1, 9))
     assert got[2].grade == "A"
     assert all(got[i].grade is None for i in got if i != 2)

@@ -147,13 +147,21 @@ def test_crawl_loop_end_to_end(spark, tmp_path):
     assert left == [f"https://{HOST}/p/9"]
 
 
+def _curated_latest(spark, curated):
+    """One row per canonical URL of an update-mode curated store: its
+    newest fetch (the largest fetch_seq)."""
+    df = spark.read.parquet(curated)
+    newest = df.groupBy("canonical_url").agg(
+        F.max("fetch_seq").alias("fetch_seq"))
+    return df.join(newest, ["canonical_url", "fetch_seq"])
+
+
 def test_recrawl_loop_updates_curated(spark, tmp_path):
     """The recrawl-on-update loop composes: a sitemap advertising a
     STRICTLY newer lastmod re-queues a crawled URL out of the delta
     frontier, the update-mode ingest lands the refetch, and
-    read_curated_latest resolves the canonical URL to the NEW text —
-    then the next tick drains it again at the new version."""
-    from hummingbird_spark.streaming.crawl import read_curated_latest
+    the newest fetch of the canonical URL holds the NEW text — then the
+    next tick drains it again at the new version."""
     from hummingbird_spark.streaming.frontier_delta import (
         frontier_delta_batch,
         read_delta_frontier,
@@ -189,7 +197,7 @@ def test_recrawl_loop_updates_curated(spark, tmp_path):
         spark, pg_src, curated, crawled, PAGE_SCHEMA,
         allow_updates=True)
     assert q.awaitTermination(240)
-    v1 = read_curated_latest(spark, curated).collect()
+    v1 = _curated_latest(spark, curated).collect()
     assert len(v1) == 1 and "body text of page 0" in v1[0].text
 
     # tick 2: same version re-advertised -> drains (crawled at v1)
@@ -214,7 +222,7 @@ def test_recrawl_loop_updates_curated(spark, tmp_path):
         spark, pg_src, curated, crawled, PAGE_SCHEMA,
         allow_updates=True)
     assert q.awaitTermination(240)
-    latest = read_curated_latest(spark, curated).collect()
+    latest = _curated_latest(spark, curated).collect()
     assert len(latest) == 1
     assert "updated body text" in latest[0].text
     # full history retained underneath (two fetches)

@@ -62,10 +62,10 @@ def test_cdc_decode_with_ejson_wrappers(spark, tmp_path):
     into typed columns via apply_cdc_batch."""
     import datetime as dt
 
+    from hummingbird_spark.commit import read_published
     from hummingbird_spark.streaming.cdc import (
         apply_cdc_batch,
         decode_write_models,
-        read_cdc_target,
         reduce_write_models,
     )
 
@@ -95,7 +95,7 @@ def test_cdc_decode_with_ejson_wrappers(spark, tmp_path):
     ])
     path = str(tmp_path / "c.parquet")
     apply_cdc_batch(spark, reduced, path, "_id", schema)
-    got = read_cdc_target(spark, path).collect()
+    got = read_published(spark, path).collect()
     assert len(got) == 1
     r = got[0]
     assert (r._id, r.n, r.price, r.oid) == (

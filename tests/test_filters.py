@@ -13,7 +13,6 @@ from pyspark.sql import Row
 
 from hummingbird_spark.filters import (
     FilterError,
-    and_range,
     mongo_filter_to_column,
 )
 from hummingbird_spark.sources.catalog import (
@@ -112,13 +111,6 @@ def test_nested_dotted_path(spark):
     assert got == 1
 
 
-def test_and_range_conjunction(spark):
-    # task.go:54-61 — include filter ∧ _id range
-    df = spark.createDataFrame(ROWS)
-    pred = and_range(mongo_filter_to_column({"n": {"$gte": 5}}), "_id", 2, 3)
-    assert sorted(r._id for r in df.filter(pred).collect()) == [2, 3]
-
-
 def test_all_operator(spark):
     df = spark.createDataFrame([
         Row(_id=1, tags=["a", "b", "c"]),
@@ -170,6 +162,42 @@ def test_matches_namespace_wildcards():
     assert matches_namespace("db.coll", ["db.coll"])
     assert not matches_namespace("db.coll", ["other.*"])
     assert not matches_namespace("db.coll", ["db.x", "*.y"])
+
+
+# (namespace, pattern): the first three are the pairs the stream's
+# include filter once dropped while the copy took them
+NAMESPACE_CASES = [
+    ("db.a.b", "db.*"), ("db.system.js", "db.*"), ("db.a", "db.a*"),
+    ("db.coll", "db.*"), ("db.coll", "*.coll"), ("db.coll", "db.coll"),
+    ("db.coll", "other.*"), ("db.coll", "*"), ("db.coll", "*.*"),
+    ("db", "db.*"), ("db", "db"), ("db.a", "db"), ("dbx.a", "db.*"),
+    ("x.coll.sub", "*.coll"), ("x.coll.sub", "*.coll.*"),
+    ("db.ab", "db.a?"), ("db.abc", "db.a?"), ("db.b", "db.[ab]"),
+    ("db.c", "db.[!ab]"), ("d.b.c", "d*.c"), ("db.a", "d?.*"),
+    ("db.$cmd", "db.*"), ("a+b.c", "a+b.*"), ("db.x y", "db.x *"),
+    ("", "*.*"), ("db.a", ""), ("db.A", "db.a*"),
+]
+
+
+def test_namespace_column_matches_the_catalog_rule(spark):
+    """The stream's include filter (`namespace_match_column`) and the
+    copy's (`matches_namespace`) agree on every (namespace, pattern)
+    pair, and on the whole pattern list, evaluated in one Spark job."""
+    from pyspark.sql import functions as F
+
+    from hummingbird_spark.streaming.oplog import namespace_match_column
+
+    patterns = sorted({p for _, p in NAMESPACE_CASES})
+    ns, pattern = F.col("ns"), F.col("pattern")
+    one = F.when(F.lit(False), F.lit(False))
+    for p in patterns:
+        one = one.when(pattern == p, namespace_match_column(ns, [p]))
+    got = spark.createDataFrame(NAMESPACE_CASES, "ns string, pattern string") \
+        .select("ns", "pattern", one.alias("one"),
+                namespace_match_column(ns, patterns).alias("any")).collect()
+    assert [(r.ns, r.pattern, r.one, r.any) for r in got] == [
+        (n, p, matches_namespace(n, [p]), matches_namespace(n, patterns))
+        for n, p in NAMESPACE_CASES]
 
 
 def test_system_namespace_exclusion():

@@ -4,20 +4,15 @@ plumbing."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from hummingbird_spark.operators.generator import (
     RAINBOW,
-    datagen_multi,
     docgen,
     simulate_workload_stream,
 )
 from hummingbird_spark.operators.multimodal import (
     decode_media,
-    frame_sample_plan,
-    media_stats,
     synth_media,
-    write_partitioned_by_kind,
 )
 
 
@@ -47,14 +42,6 @@ def test_docgen_deterministic_and_ordered_ids(spark):
     assert all(len(i) == 24 for i in ids)
     uuids = {r.uuid for r in a}
     assert len(uuids) == 5             # unique per row (bson_reader_test.go:43-57)
-
-
-def test_datagen_multi_round_robin(spark, tmp_path):
-    paths = datagen_multi(spark, str(tmp_path), 9, n_tables=3)
-    counts = [spark.read.parquet(p).count() for p in paths]
-    assert counts == [3, 3, 3]
-    t0 = spark.read.parquet(paths[0]).select("seq").collect()
-    assert sorted(r.seq for r in t0) == [0, 3, 6]
 
 
 def test_simulator_stream_feeds_cdc(spark, tmp_path):
@@ -106,34 +93,6 @@ def test_synth_media_and_decode(spark):
     assert again == {k: v.feature for k, v in by_id.items()}
 
 
-def test_media_stats_prunes_and_counts(spark):
-    media = synth_media(spark, 30)
-    stats = {r.kind: r for r in media_stats(media).collect()}
-    assert set(stats) == {"image", "audio", "video"}
-    assert stats["image"].n == 10
-
-
-def test_frame_sample_plan(spark):
-    media = synth_media(spark, 9)   # 3 videos (ids 2,5,8), n_frames=30
-    frames = frame_sample_plan(media, every_nth=10).collect()
-    by_vid = {}
-    for r in frames:
-        by_vid.setdefault(r.media_id, []).append(r.frame_idx)
-    assert all(sorted(v) == [0, 10, 20] for v in by_vid.values())
-    assert len(by_vid) == 3
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    media = synth_media(spark, 30)
-    path = str(tmp_path / "media")
-    write_partitioned_by_kind(media, path)
-    back = spark.read.parquet(path).filter(F.col("kind") == "image")
-    assert back.count() == 10
-    # partition pruning: only the image partition is scanned
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "kind=image" in plan or "PartitionFilters" in plan
-
-
 def test_decode_raises_on_unknown_payload(spark):
     df = spark.createDataFrame(
         [(1, "image", b"NOTMAGIC-payload", None)],
@@ -141,26 +100,6 @@ def test_decode_raises_on_unknown_payload(spark):
     )
     with pytest.raises(Exception, match="codec|NotImplemented"):
         decode_media(df).collect()
-
-
-def test_resize_media_roundtrip(spark):
-    """resize -> decode roundtrip: new dimensions land in both payload
-    header and metadata; payload size tracks the target resolution."""
-    from hummingbird_spark.operators.multimodal import (
-        decode_media,
-        resize_media,
-        synth_media,
-    )
-
-    media = synth_media(spark, 12)
-    small = resize_media(media, 32, 24)
-    feats = {r.media_id: r for r in decode_media(small).collect()}
-    assert len(feats) == 12
-    assert all(r.width == 32 and r.height == 24 for r in feats.values())
-    meta = small.select("meta.width", "meta.height").distinct().collect()
-    assert [(m[0], m[1]) for m in meta] == [(32, 24)]
-    big = decode_media(resize_media(media, 640, 480)).first()
-    assert big.byte_len > feats[0].byte_len
 
 
 def test_audio_window_features(spark):

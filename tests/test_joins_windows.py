@@ -7,11 +7,7 @@ import datetime as dt
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from hummingbird_spark.operators.joins import (
-    asof_join,
-    range_join,
-    shard_alignment,
-)
+from hummingbird_spark.operators.joins import asof_join, range_join
 from hummingbird_spark.operators.windows import (
     session_window_agg,
     tumbling_window_agg,
@@ -120,15 +116,6 @@ def test_tumbling_and_session_windows(spark):
     assert (1, T(1), T(25), 2) in got     # ends last_ts + gap
     assert (1, T(40), T(55), 1) in got
     assert (2, T(2), T(17), 1) in got
-
-
-def test_shard_alignment_wraps():
-    # config_copier.go:89-102
-    assert shard_alignment(["s1", "s2", "s3"], ["t1", "t2"]) == {
-        "s1": "t1", "s2": "t2", "s3": "t1",
-    }
-    assert shard_alignment([], ["t1"]) == {}
-    assert shard_alignment(["s1"], []) == {}
 
 
 def test_asof_matches_pandas_merge_asof(spark):

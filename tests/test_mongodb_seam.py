@@ -2,12 +2,11 @@
 
 The sandbox has neither a MongoDB server nor the connector jar, so
 these tests pin the DISPATCH and CONFIG-MAPPING layers: MigrationConfig
--> connector options round-trips, the doc-count block -> partition-MB
+-> connector read options, the doc-count block -> partition-MB
 conversion, Mongo-side $match pushdown, and the clear failure mode when
 the jar is absent. The reference surface being mirrored:
 client_pool.go:26-68 (URI plumbing), splitter.go:51-108 (key-range
-partitioning -> SamplePartitioner), task.go:88-101 (upsert writes ->
-replace/idFieldList), oplog streaming (S6 -> change-stream options).
+partitioning -> SamplePartitioner).
 """
 
 from __future__ import annotations
@@ -22,8 +21,6 @@ from hummingbird_spark.sources.mongodb import (
     SHARDED_PARTITIONER,
     block_to_partition_mb,
     mongodb_read_options,
-    mongodb_stream_options,
-    mongodb_write_options,
 )
 
 
@@ -71,44 +68,6 @@ def test_read_options_sharded_uses_chunk_partitioner():
     opts = mongodb_read_options(cfg, cfg.includes[0], sharded=True)
     assert opts["partitioner"] == SHARDED_PARTITIONER
     assert "partitioner.options.partition.field" not in opts
-
-
-def test_write_options_use_target_namespace_and_upsert_key():
-    cfg = _cfg(key="order_id")
-    opts = mongodb_write_options(cfg, cfg.includes[0])
-    assert opts["connection.uri"] == "mongodb://dst:27017"
-    assert opts["database"] == "shop"
-    assert opts["collection"] == "orders_v2"  # the `to` rename
-    assert opts["operationType"] == "replace"
-    assert opts["idFieldList"] == "order_id"
-
-
-def test_stream_options_request_full_documents():
-    cfg = _cfg()
-    opts = mongodb_stream_options(cfg, cfg.includes[0])
-    assert opts["change.stream.lookup.full.document"] == "updateLookup"
-    assert opts["database"] == "shop" and opts["collection"] == "orders"
-
-
-def test_stream_options_startup_mode_matrix():
-    """Change-stream startup mapping (oplog_utils.go:28-37 opens the
-    oplog cursor at ts >= start): no timestamp -> latest; a timestamp
-    -> startup.mode=timestamp with the operation time pinned."""
-    cfg = _cfg()
-    latest = mongodb_stream_options(cfg, cfg.includes[0])
-    assert latest["change.stream.startup.mode"] == "latest"
-    assert "change.stream.startup.mode.timestamp.start.at." \
-           "operation.time" not in latest
-
-    at = mongodb_stream_options(cfg, cfg.includes[0],
-                                start_at_operation_time=1_700_000_000)
-    assert at["change.stream.startup.mode"] == "timestamp"
-    assert at["change.stream.startup.mode.timestamp.start.at."
-              "operation.time"] == "1700000000"
-    # the full-document contract holds in both modes
-    for opts in (latest, at):
-        assert opts["change.stream.publish.full.document.only"] == "true"
-        assert opts["change.stream.lookup.full.document"] == "updateLookup"
 
 
 def test_read_options_rejects_non_json_filter():
@@ -168,7 +127,9 @@ def test_live_mongodb_roundtrip(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, "b")], "_id long, v string")
     (df.write.format("mongodb")
-       .options(**mongodb_write_options(cfg, inc))
+       .options(**{"connection.uri": uri, "database": "hbtest",
+                   "collection": "roundtrip", "operationType": "replace",
+                   "idFieldList": "_id"})
        .mode("append").save())
     back = (spark.read.format("mongodb")
             .options(**mongodb_read_options(cfg, inc)).load())
@@ -205,3 +166,20 @@ def test_run_migration_dispatches_mongodb_source(spark, tmp_path):
     )
     with pytest.raises(RuntimeError, match="mongo-spark-connector"):
         run_migration(spark, cfg)
+
+
+def test_compare_migration_reads_the_mongodb_source(spark, tmp_path):
+    """compare_migration reads a mongodb:// source as the copy does,
+    through the connector seam: in the jar-less sandbox the same
+    actionable --packages error, not a file-system error about the
+    `mongodb` scheme."""
+    from hummingbird_spark.operators.compare import compare_migration
+
+    cfg = MigrationConfig(
+        command="data-only",
+        source="mongodb://localhost:27017",
+        target=str(tmp_path / "out"),
+        includes=[Include(namespace="shop.orders")],
+    )
+    with pytest.raises(RuntimeError, match="mongo-spark-connector"):
+        compare_migration(spark, cfg)

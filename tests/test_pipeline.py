@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hummingbird_spark.config import ConfigError, Include, MigrationConfig
-from hummingbird_spark.operators.compare import compare_tables
 from hummingbird_spark.operators.copy import copy_table, run_migration
 from tests.conftest import SF_SMOKE
 
@@ -172,6 +171,52 @@ def test_top_up_records_the_widened_schema(spark, tmp_path):
         + [(k, "b", k * 1.5) for k in range(5, 10)])
 
 
+def _top_up_from_strings(spark, tmp_path, value):
+    """A copy of `_id long, v long` rows, then a top-up of one row whose
+    source `v` is now the string `value`: (config, target path)."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    cfg = MigrationConfig(command="data-only", source=src, target=dst,
+                          key="_id", includes=[Include(namespace="c")])
+    spark.createDataFrame([(1, 1), (2, 2)], "_id long, v long") \
+        .write.parquet(f"{src}/c.parquet")
+    assert copy_table(spark, cfg, cfg.includes[0]).rows_copied == 2
+    spark.createDataFrame([(1, "1"), (3, value)], "_id long, v string") \
+        .write.mode("overwrite").parquet(f"{src}/c.parquet")
+    return cfg, f"{dst}/c.parquet"
+
+
+def test_top_up_writes_the_recorded_types(spark, tmp_path):
+    """A source column whose type changed (`long` in the target, now
+    `string`) is topped up in the target's type, so the part files agree
+    with the schema record and the target stays readable."""
+    from hummingbird_spark.commit import read_published, recorded_schema
+
+    cfg, path = _top_up_from_strings(spark, tmp_path, "7")
+    assert copy_table(spark, cfg, cfg.includes[0]).rows_copied == 1
+    assert recorded_schema(spark, path).simpleString() \
+        == "struct<_id:bigint,v:bigint>"
+    assert sorted(tuple(r) for r in read_published(spark, path).collect()) \
+        == [(1, 1), (2, 2), (3, 7)]
+
+
+def test_top_up_of_an_uncastable_value_leaves_the_target(spark, tmp_path):
+    """A source value the target's type rejects fails the top-up before
+    its commit point: the target's files and schema record are as they
+    were, and nothing is left beside it."""
+    from hummingbird_spark.commit import read_published, recorded_schema
+
+    cfg, path = _top_up_from_strings(spark, tmp_path, "abc")
+    files = sorted(os.listdir(path))
+    record = recorded_schema(spark, path)
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        copy_table(spark, cfg, cfg.includes[0])
+    assert sorted(os.listdir(path)) == files
+    assert recorded_schema(spark, path) == record
+    assert os.listdir(os.path.dirname(path)) == ["c.parquet"]
+    assert sorted(tuple(r) for r in read_published(spark, path).collect()) \
+        == [(1, 1), (2, 2)]
+
+
 def test_resume_skips_completed(spark, target_dir):
     # resume.go:13-82 / splitter.go:33-35: completed namespaces skipped
     inc = Include(namespace="region")
@@ -187,14 +232,14 @@ def test_compare_converged_and_diverged(spark, target_dir):
     run_migration(spark, cfg)
     src = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
     tgt = spark.read.parquet(f"{target_dir}/orders.parquet")
-    res = compare_tables(src, tgt, "orders")
-    assert res.equal and res.source_count == 1500
+    assert src.exceptAll(tgt).count() == tgt.exceptAll(src).count() == 0
+    assert src.count() == tgt.count() == 1500
 
     broken = tgt.filter(F.col("o_orderkey") % 100 != 0)
-    res2 = compare_tables(src, broken, "orders")
-    assert not res2.equal
-    assert res2.missing_in_target == src.count() - broken.count()
-    assert res2.extra_in_target == 0
+    missing = src.exceptAll(broken).count()
+    assert missing > 0
+    assert missing == src.count() - broken.count()
+    assert broken.exceptAll(src).count() == 0
 
 
 def test_compare_migration_with_includes(spark, target_dir):
@@ -260,6 +305,8 @@ def test_quickstart_config_parses():
     assert cfg.is_config and cfg.is_data
     assert cfg.includes[1].target_namespace == "testdb.counts"
     assert cfg.includes[2].limit == 1024
+    # a key the engine does not read (the reference's `verbose`) parses
+    assert MigrationConfig.from_dict({**doc, "verbose": True}) == cfg
 
 
 def test_copy_writes_bloom_filters(spark, tmp_path):

@@ -11,14 +11,30 @@ import pytest
 from pyspark.sql import functions as F
 
 from hummingbird_spark.commit import recover
+from hummingbird_spark.operators.compact import table_bytes
 from hummingbird_spark.operators.retention import (
     enforce_capped_from_properties,
     enforce_retention,
     keep_newest,
-    retention_report,
 )
-from hummingbird_spark.sources.ddl import TableSpec, create_table
+from hummingbird_spark.sources.ddl import read_table_properties
 from tests.conftest import InjectedCrash, crash_publish
+
+CAPPED = {"mongo.option.capped": "true", "mongo.option.max": "100",
+          "mongo.option.size": "10000000"}
+
+
+def _table_with_properties(spark, path, rows, props):
+    """A `seq` table of `rows` rows with the D1 properties sidecar."""
+    spark.range(rows).select(F.col("id").alias("seq")).write.parquet(path)
+    with open(f"{path}/_table_properties.json", "w") as fh:
+        json.dump(props, fh)
+
+
+def _caps(path):
+    props = read_table_properties(path)
+    return (json.loads(props.get("mongo.option.capped", "false")),
+            json.loads(props["mongo.option.max"]))
 
 
 def test_keep_newest_matches_sort_limit(spark):
@@ -67,9 +83,8 @@ def test_enforce_retention_bytes(spark, tmp_path):
         F.col("id").alias("seq"),
         F.concat(F.lit("x" * 50), F.col("id").cast("string")).alias("pad"),
     ).coalesce(1).write.parquet(path)
-    before = retention_report(spark, path)
     report = enforce_retention(
-        spark, path, "seq", max_bytes=before["bytes"] // 2
+        spark, path, "seq", max_bytes=table_bytes(spark, path) // 2
     )
     assert report["enforced"]
     after = spark.read.parquet(path)
@@ -81,37 +96,28 @@ def test_enforce_retention_bytes(spark, tmp_path):
 
 def test_capped_properties_roundtrip(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "from_props.parquet")
-    df = spark.range(500).select(F.col("id").alias("seq"))
-    spec = TableSpec(
-        namespace="db.capped",
-        options={"capped": True, "max": 100, "size": 10_000_000},
-    )
-    create_table(spark, df, path, spec, mode="overwrite")
+    _table_with_properties(spark, path, 500, CAPPED)
     report = enforce_capped_from_properties(spark, path, "seq")
     assert report["enforced"] and report["rows_after"] == 100
     assert spark.read.parquet(path).agg(F.min("seq")).first()[0] == 400
-    rep = retention_report(spark, path)
-    assert rep["capped"] is True and rep["max_rows"] == 100
+    assert _caps(path) == (True, 100)
 
     # kill a second table's enforcement right after the commit point:
     # the properties publish with the data, so recovery keeps them
     path2 = str(tmp_path / "killed.parquet")
-    create_table(spark, df, path2, spec, mode="overwrite")
+    _table_with_properties(spark, path2, 500, CAPPED)
     crash_publish(monkeypatch, after_commit=True)
     with pytest.raises(InjectedCrash):
         enforce_capped_from_properties(spark, path2, "seq")
     monkeypatch.undo()
     recover(spark, path2)
     assert spark.read.parquet(path2).agg(F.min("seq")).first()[0] == 400
-    rep = retention_report(spark, path2)
-    assert rep["capped"] is True and rep["max_rows"] == 100
+    assert _caps(path2) == (True, 100)
 
 
 def test_uncapped_table_is_left_alone(spark, tmp_path):
     path = str(tmp_path / "plain.parquet")
-    spec = TableSpec(namespace="db.plain")
-    create_table(spark, spark.range(50).select(
-        F.col("id").alias("seq")), path, spec, mode="overwrite")
+    _table_with_properties(spark, path, 50, {})
     report = enforce_capped_from_properties(spark, path, "seq")
     assert not report["enforced"]
     assert spark.read.parquet(path).count() == 50

@@ -176,57 +176,6 @@ def test_hll_registers_merge_and_partition_invariance(spark):
     assert e1 == e2
 
 
-def test_continuous_hll_bit_identical_and_replay(spark, tmp_path):
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import types as T
-
-    from hummingbird_spark.operators.sketch import (
-        hll_distinct,
-        hll_estimate_from_registers,
-        hll_registers,
-    )
-    from hummingbird_spark.streaming.sketch import (
-        read_hll,
-        start_continuous_hll,
-    )
-
-    schema = T.StructType([
-        T.StructField("g", T.StringType()),
-        T.StructField("v", T.StringType()),
-    ])
-    rows = [("g", f"v{i % 1300}") for i in range(3000)]
-    src = str(tmp_path / "in")
-    regs = str(tmp_path / "hll")
-    _os.makedirs(src)
-    for b in range(3):
-        with open(_os.path.join(src, f"{b}.json"), "w") as fh:
-            for g, v in rows[b * 1000:(b + 1) * 1000]:
-                fh.write(_json.dumps({"g": g, "v": v}) + "\n")
-
-    q = start_continuous_hll(spark, src, regs, schema, "v", ["g"])
-    q.awaitTermination(180)
-
-    df = spark.createDataFrame(rows, schema)
-    batch_regs = {(r.bucket, r.rho)
-                  for r in hll_registers(df, "v", ["g"]).collect()}
-    streamed = {(r.bucket, r.rho)
-                for r in read_hll(spark, regs).collect()}
-    assert streamed == batch_regs  # max-semilattice: bit-identical
-
-    est_stream = hll_estimate_from_registers(
-        read_hll(spark, regs), ["g"]).collect()[0].hll_est
-    est_batch = hll_distinct(df, "v", ["g"]).collect()[0].hll_est
-    assert est_stream == est_batch
-
-    q = start_continuous_hll(spark, src, regs, schema, "v", ["g"])
-    q.awaitTermination(180)
-    again = {(r.bucket, r.rho)
-             for r in read_hll(spark, regs).collect()}
-    assert again == batch_regs  # ledger: replay is a no-op
-
-
 def test_hll_overlap_screens_redundancy(spark):
     from hummingbird_spark.operators.sketch import (
         hll_pairwise_overlap,

@@ -1,14 +1,10 @@
-"""Salting and bucketing: semantic equivalence + physical-plan proof."""
+"""Salting: semantic equivalence with a plain groupBy."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hummingbird_spark.operators.skew import (
-    bucketed_join,
-    salted_agg,
-    write_bucketed,
-)
+from hummingbird_spark.operators.skew import salted_agg
 from tests.conftest import SF_SMOKE
 
 
@@ -53,41 +49,3 @@ def test_salted_agg_spreads_hot_key(spark):
         .select("__salt").distinct().count()
     )
     assert phase1 > 8
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet") \
-        .withColumnRenamed("l_orderkey", "o_orderkey")
-    write_bucketed(orders, "b_orders", "o_orderkey", buckets=8)
-    write_bucketed(lineitem, "b_lineitem", "o_orderkey", buckets=8)
-
-    joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey",
-                           force_sort_merge=True)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    # co-bucketed: the join happens without an Exchange on either side
-    assert "Exchange" not in plan, plan
-    assert "SortMergeJoin" in plan
-    assert joined.count() == 6000
-
-    # control: the same sort-merge join on plain parquet DOES shuffle
-    plain = orders.hint("merge").join(lineitem, "o_orderkey")
-    plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" in plain_plan
-
-
-def test_bucketed_groupby_has_no_shuffle(spark):
-    """Aggregation on the bucket key also skips the exchange: partial
-    and final aggregation collapse into one stage per bucket — the
-    second big win of paying the bucketed write once."""
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    write_bucketed(orders, "b_orders_agg", "o_orderkey", buckets=8)
-    agg = (
-        spark.table("b_orders_agg")
-        .groupBy("o_orderkey")
-        .agg(F.sum("o_totalprice").alias("total"))
-    )
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert agg.count() == orders.select("o_orderkey").distinct().count()
-    spark.sql("DROP TABLE IF EXISTS b_orders_agg")

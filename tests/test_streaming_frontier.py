@@ -146,13 +146,8 @@ def test_optional_lastmod_pairs_structurally(spark):
 
 def test_sitemap_index_refs_do_not_pollute_frontier(spark):
     """A <sitemapindex> row's <loc>s are CHILD SITEMAP refs, not
-    pages: parse_sitemap_entries must yield nothing for it, and
-    parse_sitemap_index_refs must surface the children (the one
-    recursion level the protocol allows)."""
-    from hummingbird_spark.streaming.frontier import (
-        parse_sitemap_entries,
-        parse_sitemap_index_refs,
-    )
+    pages: parse_sitemap_entries must yield nothing for it."""
+    from hummingbird_spark.streaming.frontier import parse_sitemap_entries
 
     index = ('<?xml version="1.0"?><sitemapindex>'
              '<sitemap><loc>https://a.example/sitemap-a.xml</loc>'
@@ -166,19 +161,13 @@ def test_sitemap_index_refs_do_not_pollute_frontier(spark):
                                 Row(sitemap_xml=child)])
     entries = {r.curl for r in parse_sitemap_entries(df).collect()}
     assert entries == {"https://a.example/p9"}
-    refs = {r.sitemap_curl: r.lastmod
-            for r in parse_sitemap_index_refs(df).collect()}
-    assert refs == {"https://a.example/sitemap-a.xml": "2026-02-01",
-                    "https://a.example/sitemap-b.xml": None}
 
 
 def test_namespace_prefixed_tags_parse(spark):
     """Real sitemaps emit <sm:url>/<sitemap:loc>-style prefixed tags
-    as freely as bare ones; both parsers must tolerate one prefix."""
-    from hummingbird_spark.streaming.frontier import (
-        parse_sitemap_entries,
-        parse_sitemap_index_refs,
-    )
+    as freely as bare ones; the parser must tolerate one prefix, and a
+    prefixed index row must still contribute no page entry."""
+    from hummingbird_spark.streaming.frontier import parse_sitemap_entries
 
     urlset = ('<?xml version="1.0"?><sm:urlset>'
               '<sm:url><sm:loc>https://a.example/p1</sm:loc>'
@@ -195,9 +184,6 @@ def test_namespace_prefixed_tags_parse(spark):
            for r in parse_sitemap_entries(df).collect()}
     assert got == {"https://a.example/p1": "2026-03-01",
                    "https://a.example/p2": None}
-    refs = {r.sitemap_curl
-            for r in parse_sitemap_index_refs(df).collect()}
-    assert refs == {"https://a.example/more.xml"}
 
 
 def test_schedule_time_robots_regate(spark):

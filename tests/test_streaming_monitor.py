@@ -32,7 +32,6 @@ from hummingbird_spark.streaming.reservoir import (
     start_continuous_reservoir,
 )
 from hummingbird_spark.streaming.sketch import (
-    read_cms,
     read_hist,
     read_topk,
     start_continuous_cms,
@@ -80,7 +79,7 @@ def _check_converged(spark, base, ingested):
          for r in ingested], SCHEMA)
 
     cms = {(r.row, r.bucket, r.cnt)
-           for r in read_cms(spark, f"{base}/cms").collect()}
+           for r in spark.read.parquet(f"{base}/cms").collect()}
     batch_cms = {(r.row, r.bucket, r.cnt)
                  for r in cms_build(token_counts(df), 4, 64).collect()}
     assert cms == batch_cms  # additive: bit-identical

@@ -18,7 +18,6 @@ from hummingbird_spark.operators.sketch import (
 )
 from hummingbird_spark.streaming.sketch import (
     merge_cms_batch,
-    read_cms,
     start_continuous_cms,
 )
 
@@ -62,12 +61,12 @@ def test_incremental_sketch_equals_batch_rebuild(spark, tmp_path):
 
     _write(src, "0.json", BATCH1)
     _run(spark, src, sketch, ckpt)
-    assert _counters(read_cms(spark, sketch)) == \
+    assert _counters(spark.read.parquet(sketch)) == \
         _counters(_batch_sketch(spark, BATCH1))
 
     _write(src, "1.json", BATCH2)
     _run(spark, src, sketch, ckpt)
-    assert _counters(read_cms(spark, sketch)) == \
+    assert _counters(spark.read.parquet(sketch)) == \
         _counters(_batch_sketch(spark, BATCH1 + BATCH2))
 
     # estimates served from the maintained sketch == batch path, and
@@ -77,7 +76,7 @@ def test_incremental_sketch_equals_batch_rebuild(spark, tmp_path):
     exact = {r.tok: r.cnt for r in token_counts(docs).collect()}
     probes = spark.createDataFrame([(t,) for t in exact], "tok string")
     est = {r.tok: r.cms_est
-           for r in cms_estimate(read_cms(spark, sketch), probes,
+           for r in cms_estimate(spark.read.parquet(sketch), probes,
                                  D, W).collect()}
     assert all(est[t] >= c for t, c in exact.items())
     batch_est = {r.tok: r.cms_est
@@ -92,9 +91,9 @@ def test_merge_replay_is_noop(spark, tmp_path):
     docs = spark.createDataFrame(BATCH1, "doc_id long, text string")
     partial = cms_build(token_counts(docs), D, W)
     merge_cms_batch(spark, partial, sketch, batch_id=0)
-    before = _counters(read_cms(spark, sketch))
+    before = _counters(spark.read.parquet(sketch))
     merge_cms_batch(spark, partial, sketch, batch_id=0)  # replay
-    assert _counters(read_cms(spark, sketch)) == before
+    assert _counters(spark.read.parquet(sketch)) == before
     merge_cms_batch(spark, partial, sketch, batch_id=1)  # new batch
-    assert _counters(read_cms(spark, sketch)) == \
+    assert _counters(spark.read.parquet(sketch)) == \
         {k: 2 * v for k, v in before.items()}

@@ -11,7 +11,11 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from hummingbird_spark.functions.html import block_stats, main_text
+from hummingbird_spark.functions.html import (
+    block_stats_from,
+    block_structs,
+    main_text_from,
+)
 from hummingbird_spark.sources.warc import (
     parse_warc_records,
     render_warc_record,
@@ -66,8 +70,9 @@ def test_block_counters_conserve_on_arbitrary_input(spark, texts):
     rows = [Row(i=i, h=t) for i, t in enumerate(texts)]
     out = (
         spark.createDataFrame(rows, "i long, h string")
-        .select(block_stats(F.col("h")).alias("st"),
-                F.length(main_text(F.col("h"))).alias("mc"))
+        .select(block_structs(F.col("h")).alias("b"))
+        .select(block_stats_from(F.col("b")).alias("st"),
+                F.length(main_text_from(F.col("b"))).alias("mc"))
         .collect()
     )
     for r in out:

@@ -15,10 +15,10 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from hummingbird_spark.functions.html import (
-    block_stats,
+    block_stats_from,
     block_structs,
     canonical_url,
-    main_text,
+    main_text_from,
     registered_domain,
     url_host,
 )
@@ -45,10 +45,14 @@ def _one(spark, html):
     return spark.range(1).select(F.lit(html).alias("h"))
 
 
+def _main_text(html, **kw):
+    return main_text_from(block_structs(html), **kw)
+
+
 class TestHtmlExtraction:
     def test_script_style_comment_removed(self, spark):
         row = _one(spark, PAGE).select(
-            main_text(F.col("h")).alias("mt")).head()
+            _main_text(F.col("h")).alias("mt")).head()
         assert "color: red" not in row.mt
         assert "track" not in row.mt
         assert "build 7" not in row.mt
@@ -57,8 +61,8 @@ class TestHtmlExtraction:
 
     def test_link_density_drops_nav_and_footer(self, spark):
         row = _one(spark, PAGE).select(
-            main_text(F.col("h")).alias("mt"),
-            block_stats(F.col("h")).alias("st")).head()
+            _main_text(F.col("h")).alias("mt"),
+            block_stats_from(block_structs(F.col("h"))).alias("st")).head()
         assert "Home" not in row.mt and "Privacy" not in row.mt
         assert row.mt.split("\n") == [
             "src3 report seven",
@@ -75,7 +79,7 @@ class TestHtmlExtraction:
         # literal "&amp;lt;" must render as "&lt;" text, not "<"
         row = _one(
             spark, "<p>x &amp;lt; y &amp; z &#39;q&#39; done here</p>"
-        ).select(main_text(F.col("h"), min_chars=1).alias("mt")).head()
+        ).select(_main_text(F.col("h"), min_chars=1).alias("mt")).head()
         assert row.mt == "x &lt; y & z 'q' done here"
 
     def test_numeric_entities_decode(self, spark):
@@ -85,7 +89,7 @@ class TestHtmlExtraction:
             spark,
             "<p>A&#x41; dash&#8212;here &#x1F600; "
             "literal &amp;#65; bad&#xD800;&#0;&#1114112;end</p>"
-        ).select(main_text(F.col("h"), min_chars=1).alias("mt")).head()
+        ).select(_main_text(F.col("h"), min_chars=1).alias("mt")).head()
         assert row.mt == ("AA dash—here \U0001F600 "
                           "literal &#65; badend")
 
@@ -96,7 +100,7 @@ class TestHtmlExtraction:
         # gets this wrong)
         row = _one(
             spark, "<p>q &#38;lt; r &#38;amp; s &#38;#65; end</p>"
-        ).select(main_text(F.col("h"), min_chars=1).alias("mt")).head()
+        ).select(_main_text(F.col("h"), min_chars=1).alias("mt")).head()
         assert row.mt == "q &lt; r &amp; s &#65; end"
 
     def test_legacy_and_w1252_forms(self, spark):
@@ -258,7 +262,7 @@ class TestHtmlExtraction:
         rows = spark.createDataFrame(
             [Row(h=""), Row(h="plain text no markup at all")]
         ).select(F.size(block_structs(F.col("h"))).alias("n"),
-                 main_text(F.col("h")).alias("mt")).collect()
+                 _main_text(F.col("h")).alias("mt")).collect()
         assert rows[0].n == 0 and rows[0].mt == ""
         assert rows[1].n == 1
         assert rows[1].mt == "plain text no markup at all"
@@ -349,7 +353,7 @@ class TestWarc:
         blob = self._blob(spark, [PAGE])
         parsed = parse_warc_records(blob, "blob")
         row = parsed.select(
-            main_text(F.col("body")).alias("mt")).head()
+            _main_text(F.col("body")).alias("mt")).head()
         assert "alpha beta gamma delta words here now" in row.mt
         assert "Privacy" not in row.mt
 
